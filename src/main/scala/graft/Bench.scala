@@ -25,27 +25,7 @@ object Bench {
       System.exit(reexecCurated(args))
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Partition-discovery strategy (round 17, guide §6): above this
-      // many paths Spark LISTS DIRECTORIES WITH A DISTRIBUTED JOB —
-      // right for object stores (S3/GCS list calls parallelize), wrong
-      // for a local filesystem, where the 256-bucket digest index paid
-      // a 0.6 s 256-task listing job per probe vs ~20 ms driver-side
-      // (measured, JobProfile). Local default: driver-side listing;
-      // on a cluster against an object store set
-      // SPARK_GRAFT_LIST_PARALLEL_THRESHOLD back to the Spark default
-      // (32) or lower. Parameterized so the scale-dependent value is a
-      // deployment choice, not a constant tuned to this box.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        sys.env.getOrElse("SPARK_GRAFT_LIST_PARALLEL_THRESHOLD", "4096"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-bench")
 
     // Warm-up: JIT + parquet footer caches + first-stage scheduling, so the
     // first timed query doesn't absorb session start-up. The avro sweep's
@@ -115,6 +95,11 @@ object Bench {
     // breaking the JSON line — always format with ROOT.
     def fmt3(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    // The full-results file is named by core count: a run on one core
+    // count must not overwrite the record of another (an 8-core run once
+    // replaced the 32-core record of the same round).
+    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_JSON",
+      s"bench/sweep_c${spark.conf.get("spark.sql.shuffle.partitions")}.json")
     val printed = new java.util.concurrent.atomic.AtomicBoolean(false)
     def emit(metric: String): Unit =
       if (printed.compareAndSet(false, true)) {
@@ -152,8 +137,6 @@ object Bench {
         // never ride the printed line — every BENCH_r*.json through
         // round 10 carried `parsed: null` because the line's head was
         // cut off. The committed file is the machine-readable record.
-        val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_JSON",
-          "bench/sweep_latest.json")
         try {
           val p = java.nio.file.Paths.get(out)
           if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
@@ -374,8 +357,9 @@ object Bench {
     // representatives against the sf0.001 sibling (if present) so the
     // EXACT first-in-sweep plans (fixture encode, decode, envelope
     // projection, global sort, noop write, LSH kernels, topk agg) JIT
-    // before timing starts. TimeQuery measured the first decode query at
-    // ~9 s cold vs ~2.7 s warm — shape-identical warmup closes that gap.
+    // before timing starts. A per-query re-time measured the first decode
+    // query at ~9 s cold vs ~2.7 s warm — shape-identical warmup closes
+    // that gap.
     val tiny = new java.io.File(
       new java.io.File(sfDir).getParentFile, "sf0.001")
     if (tiny.isDirectory) {

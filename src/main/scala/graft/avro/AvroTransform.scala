@@ -77,15 +77,17 @@ object AvroTransform {
         isKey = true, stripKey = cfg.stripKeyWireHeader))
 
   /** Introspection decoder: envelope fields as a typed struct column
-    * (null on tombstone). Used by verification queries that re-project the
-    * decoded message relationally instead of re-serializing to bytes.
-    * Native expression — no ScalaUDF encoder round-trip. */
+    * (null on tombstone, and on an undecodable body under PERMISSIVE).
+    * Used by verification queries that re-project the decoded message
+    * relationally instead of re-serializing to bytes. Native expression —
+    * no ScalaUDF encoder round-trip. */
   def decodedStruct(cfg: EngineConfig, provider: SchemaProvider)
       (c: Column): Column =
     org.apache.spark.sql.graftbridge.ColumnBridge.column(
       graft.plans.AvroDecodeStruct(
         org.apache.spark.sql.graftbridge.ColumnBridge.expression(c),
-        provider, cfg.schemaCapacity))
+        provider, cfg.schemaCapacity,
+        cfg.errorMode == ErrorMode.Permissive))
 
   /** Analysis-time BinaryType gate (`ConnectSchemaUtil.isBytesSchema` —
     * the reference checks the Connect schema per record and throws
@@ -183,7 +185,8 @@ object AvroTransform {
 
   /** Decoded envelope as queryable columns:
     * `origin_schema_id`, `origin_message`, `origin_schema` (null for
-    * tombstones / non-enabled topics). */
+    * tombstones / non-enabled topics, and for undecodable bodies under
+    * PERMISSIVE — counted like [[apply]]'s forwarded ones). */
   def decoded(df: DataFrame, cfg: EngineConfig,
       provider: SchemaProvider): DataFrame = {
     requireBinary(df, ValueCol, "value")

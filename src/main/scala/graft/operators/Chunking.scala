@@ -192,7 +192,6 @@ object Chunking {
         .pin()
     val totals = sharded.groupBy(col("shard")).agg(sum(col("n")).as("t"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    require(totals.nonEmpty, "empty input")
     val offs = (0 until nShards)
       .scanLeft(0L)((acc, sh) => acc + totals.getOrElse(sh, 0L))
       .dropRight(1)

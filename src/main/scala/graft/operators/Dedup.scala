@@ -147,7 +147,7 @@ object Dedup {
     // Pin the shingled view ONCE (round 18, §1.2): it feeds the band
     // derivation AND both sides of the verify join — un-pinned, the
     // shingle kernel re-tokenized the corpus three times per run
-    // (JobProfile: three full scans of the input exchange). Same
+    // (per-job profile: three full scans of the input exchange). Same
     // audit-contract as buildLshIndexBucketed's pinned `sh`: shingle
     // hashes only (~8 bytes/shingle), text never pinned.
     val sh = shingled.pin()
@@ -953,8 +953,8 @@ object Dedup {
     * and arithmetic (oracle-pinned — `dedup_bucketed_probe` answers to
     * the same full value oracle), but both index scans carry partition
     * filters. The two bucket lists cross the driver as ≤ nBuckets ints
-    * each — index bookkeeping, not data. Operating point (measured,
-    * `IndexProbeScale`): the pruning pays for its fixed bookkeeping
+    * each — index bookkeeping, not data. Operating point (measured
+    * on replicated indexes): the pruning pays for its fixed bookkeeping
     * (two driver jobs + per-bucket file opens) only once the index
     * dwarfs a node's per-trigger scan budget — below that, prefer the
     * flat [[lshProbeNearDup]]; the partition-filter plan contract is
@@ -1152,7 +1152,7 @@ object Dedup {
     * bucketed probe answers to the same full value oracle), but the
     * index scan carries a partition filter on the delta's digest
     * buckets (≤ nBuckets ints of driver bookkeeping). Operating point
-    * (measured, `IndexProbeScale`): the flat probe's cost grows with
+    * (measured on replicated indexes): the flat probe's cost grows with
     * the corpus (1.9× per 100× at harness scale) while this stays
     * flat, but the crossover needs an index past a node's per-trigger
     * scan budget — below that the flat anti-join is cheaper. */

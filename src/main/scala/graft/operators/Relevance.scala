@@ -12,7 +12,8 @@ import graft.functions.{TextFunctions => TF}
   * BM25 salient-term extraction (no reference counterpart — extension
   * surface, SURVEY.md §8).
   *
-  * 100 TB design (shapes verified with PlanAudit):
+  * 100 TB design (plan shapes pinned by the test
+  * `graft.plans.PlanContractSpec`):
   *   - the token explode is map-side only, and the (doc, term) aggregation
   *     partial-aggregates before its exchange;
   *   - document frequency is a skew-immune `groupBy(term)` partial

@@ -68,8 +68,8 @@ object Similarity {
     * no window, and — the 100 TB contract — the corpus is never shuffled.
     * On a real deployment the centroids would come from a periodic k-means
     * job and the assigned corpus would be WRITTEN partitioned by cell id,
-    * making every query a partition-pruned scan (see
-    * [[graft.tools.PlanAudit]] for the demonstrated plan shapes). */
+    * making every query a partition-pruned scan (the test
+    * `graft.plans.PlanContractSpec` pins the plan shapes). */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       nlist: Int = AutoNlist, nprobe: Int = 4,
       vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {

@@ -65,11 +65,16 @@ case class AvroDecodeEnvelope(
   * `(origin_schema_id int, origin_message string, origin_schema string)`
   * instead of re-serialized envelope bytes — the relational face of the
   * pipeline for queries over decoded fields. Native (no ScalaUDF encoder
-  * round-trip); null input → null struct (tombstone). */
+  * round-trip); null input → null struct (tombstone). PERMISSIVE turns an
+  * undecodable body into a null struct and counts it, as the byte
+  * envelope forwards the original bytes (`AvroTransform.java:188-191`);
+  * wire-format violations and registry lookup failures throw in both
+  * modes. */
 case class AvroDecodeStruct(
     child: Expression,
     provider: SchemaProvider,
-    capacity: Int) extends UnaryExpression {
+    capacity: Int,
+    permissive: Boolean) extends UnaryExpression {
 
   override def dataType: DataType =
     org.apache.spark.sql.types.StructType(Seq(
@@ -87,11 +92,17 @@ case class AvroDecodeStruct(
   override def nullSafeEval(input: Any): Any = {
     val framed = graft.avro.WireFormat.parse(input.asInstanceOf[Array[Byte]])
     val cached = state.cachedSchema(framed.schemaId)
-    val json = state.decodeToJson(cached, framed.schemaId, framed.body)
-    org.apache.spark.sql.catalyst.InternalRow(
-      framed.schemaId,
-      org.apache.spark.unsafe.types.UTF8String.fromString(json),
-      org.apache.spark.unsafe.types.UTF8String.fromString(cached.json))
+    try {
+      val json = state.decodeToJson(cached, framed.schemaId, framed.body)
+      org.apache.spark.sql.catalyst.InternalRow(
+        framed.schemaId,
+        org.apache.spark.unsafe.types.UTF8String.fromString(json),
+        org.apache.spark.unsafe.types.UTF8String.fromString(cached.json))
+    } catch {
+      case t: Throwable if permissive && DecodeKernel.isDecodeFailure(t) =>
+        state.swallowedErrors.increment()
+        null
+    }
   }
 
   override protected def doGenCode(ctx: CodegenContext,
@@ -100,7 +111,7 @@ case class AvroDecodeStruct(
       classOf[AvroDecodeStruct].getName)
     nullSafeCodeGen(ctx, ev, c =>
       s"${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) " +
-        s"$self.nullSafeEval($c);")
+        s"$self.nullSafeEval($c); ${ev.isNull} = ${ev.value} == null;")
   }
 
   override protected def withNewChildInternal(newChild: Expression)

@@ -3064,7 +3064,7 @@ object ExtensionQueries {
     // so overlap comes from genuinely shared shingles
     // spread (round 18): the shingle kernel rode the single-split scan —
     // one 0.48 s task shingling the whole table while 31 cores idled
-    // (JobProfile); the 32-way exchange moves raw text once and the
+    // (per-job profile); the 32-way exchange moves raw text once and the
     // kernel parallelizes, the same rule every other kernel-heavy
     // entry follows
     "corpus_source_sim" -> ((s, dir) =>
@@ -3474,7 +3474,7 @@ object ExtensionQueries {
     // recomputes the entire composition including training
     // (IvfPqCtesSql). Measured recall@5 at sf0.01: 68% vs 60% trained
     // raw-PQ / 48% untrained at the identical m×ksub code budget —
-    // residual encoding is what the composition buys (IvfPqProbe)
+    // residual encoding is what the composition buys (measured)
     "sim_topk_ivfpq" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       Similarity.ivfPqTopK(emb, emb.filter(col("vec_id") < 10), k = 5,
@@ -3577,7 +3577,7 @@ object ExtensionQueries {
     // probes read only their cells (PartitionFilters in the plan). Same
     // centroid rule + parameters as sim_topk_ivf ⇒ same oracle. The
     // built index is memoized per (sfDir, JVM), so REPEAT invocations
-    // (Verify + TimeQuery reps, a warm driver session) pay only the
+    // (Verify + SPARK_GRAFT_ONLY Bench reps, a warm driver session) pay only the
     // partition-pruned probe; a single-shot bench run still includes the
     // one-time build, which is the operator's amortized contract. The
     // cache self-heals: a reaped /tmp index rebuilds instead of probing
@@ -3610,7 +3610,7 @@ object ExtensionQueries {
       val emb = t(s, dir, "embeddings")
       // round 18: this entry was listed in Bench.indexBuilders but
       // REBUILT + RE-APPENDED its written index on every invocation
-      // (JobProfile: two 0.4-0.5 s single-task write jobs per rep) —
+      // (per-job profile: two 0.4-0.5 s single-task write jobs per rep) —
       // the one indexed query not following the memoized-artifact
       // protocol every other *_indexed/_probe entry uses. Build+append
       // once per (process, sfDir), self-healing a reaped /tmp path;
@@ -5169,7 +5169,7 @@ object ExtensionQueries {
           TF.intDivNonNeg(col("packed"), lit(packShift)).as("slice_wsum"))
         // round 18: this entry missed the round-17 pin pass — the
         // output sort's sample pass re-ran the whole mp4-walk +
-        // hex-fold kernel (JobProfile: two identical 0.5 s 32-task
+        // hex-fold kernel (per-job profile: two identical 0.5 s 32-task
         // jobs per run); pinned, the kernel runs once
         .pinLazy()
         .orderBy(col("doc_id"), col("sample_idx"))

@@ -21,7 +21,7 @@ object Q {
 
   /** Footer-schema cache (round 17): `spark.read.parquet` runs parquet
     * schema inference on EVERY call — measured 88 ms against 12 ms with
-    * an explicit schema (FloorProbe), a fixed cost every bench row paid
+    * an explicit schema, a fixed cost every bench row paid
     * 1-3× per rep. The schema of a testdata table is immutable within a
     * process, so infer once per (dir, table) and hand the reader the
     * explicit schema afterwards — the exact behavior a production

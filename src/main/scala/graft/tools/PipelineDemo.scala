@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions => TF}
@@ -28,10 +27,7 @@ import graft.operators.{Cdc, Chunking, Contamination, Dedup,
 object PipelineDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local("graft-pipeline-demo")
     spark.sparkContext.setLogLevel("ERROR")
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")

@@ -61,15 +61,9 @@ object ScaleProbe {
       case None => ProbeQueries
     }
     val customList = !relMode && mode.nonEmpty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val outRoot = s"${System.getProperty("java.io.tmpdir")}/graft_scale_" +
       ProcessHandle.current().pid()
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("graft-scale-probe")
 
     val dirs = factors.map { f =>
       val dir = s"$outRoot/x$f"
@@ -229,7 +223,7 @@ object ScaleProbe {
 
   /** Write the factor-`f` corpus (documents + embeddings) under `dir`
     * unless it already exists from an earlier run of this JVM. */
-  private[tools] def generate(spark: SparkSession, baseDir: String, dir: String,
+  private def generate(spark: SparkSession, baseDir: String, dir: String,
       factor: Int): Unit = {
     if (new java.io.File(s"$dir/documents.parquet").exists) return
     val docs = spark.read.parquet(s"$baseDir/documents.parquet")

@@ -15,6 +15,7 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 import graft.SparkFunSuite
+import graft.config.ErrorMode
 
 /** Robustness beyond the reference's own suite (SURVEY.md §5 item 3):
   * property-based round-trips (ScalaCheck generators, fixed seed for
@@ -154,6 +155,38 @@ class AvroRobustnessSpec extends SparkFunSuite {
     assert(envs.count(_.get("originSchemaId").asInt() == otherId) == 25)
     assert(envs.filter(_.get("originSchemaId").asInt() == otherId)
       .forall(_.get("originSchema").asText().contains("\"Other\"")))
+  }
+
+  test("decoded honours ErrorMode: PERMISSIVE nulls an undecodable body " +
+      "and counts it, FAILFAST fails the job, wire violations fail in both") {
+    val s = spark
+    import s.implicits._
+    val (provider, id) = Fixtures.registry()
+    def decodedRows(mode: ErrorMode, values: Array[Byte]*) =
+      AvroTransform.decoded(values.map(("TransformTest", _))
+          .toDF("topic", "value"), Fixtures.cfg(mode = mode), provider)
+        .select("origin_schema_id", "origin_message").collect()
+    def causes(t: Throwable): Seq[Throwable] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(10).toSeq
+
+    val good = WireFormat.frame(id, Fixtures.encodeFullName("fn", "ln"))
+    val truncated = WireFormat.frame(id, Array[Byte](0x02))
+    val before = AvroDecoderState.swallowedErrorCount(provider.cacheToken)
+    val rows = decodedRows(ErrorMode.Permissive, good, truncated, null)
+    assert(rows(0).getInt(0) == id && rows(0).getString(1).contains("fn"))
+    assert(rows(1).isNullAt(0) && rows(1).isNullAt(1),
+      "an undecodable body must give a null envelope under PERMISSIVE")
+    assert(rows(2).isNullAt(0) && rows(2).isNullAt(1))
+    assert(AvroDecoderState.swallowedErrorCount(provider.cacheToken) > before)
+
+    val failFast = intercept[Throwable](
+      decodedRows(ErrorMode.FailFast, truncated))
+    assert(causes(failFast).exists(DecodeKernel.isDecodeFailure))
+    for (mode <- Seq(ErrorMode.Permissive, ErrorMode.FailFast)) {
+      val e = intercept[Throwable](
+        decodedRows(mode, Array[Byte](0, 0, 0, 0, 1)))
+      assert(causes(e).exists(_.isInstanceOf[WireFormatException]))
+    }
   }
 
   test("schema LRU respects capacity (eviction + refetch still correct)") {

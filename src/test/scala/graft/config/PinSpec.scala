@@ -25,18 +25,14 @@ class PinSpec extends SparkFunSuite {
 
     val local = run()
 
-    val ckDir = java.nio.file.Files
-      .createTempDirectory("graft_pin_spec").toString
-    s.sparkContext.setCheckpointDir(ckDir)
-    s.conf.set("spark.graft.pin.reliable", "true")
-    try {
+    withReliablePins { ckDir =>
       val rel = run()
       assert(rel == local,
         "reliable pins must not change operator results")
       val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(ckDir))
         .filter(p => java.nio.file.Files.isRegularFile(p)).count()
       assert(wrote > 0, "reliable pin must write checkpoint files")
-    } finally s.conf.set("spark.graft.pin.reliable", "false")
+    }
   }
 
   test("pinLazy defers materialization until first use, both modes") {
@@ -45,8 +41,25 @@ class PinSpec extends SparkFunSuite {
     import graft.config.Pin._
     val base = (0L until 50L).toDF("v")
     assert(base.pinLazy().agg(sum($"v")).head().getLong(0) == 1225L)
-    s.conf.set("spark.graft.pin.reliable", "true")
-    try assert(base.pinLazy().agg(sum($"v")).head().getLong(0) == 1225L)
-    finally s.conf.set("spark.graft.pin.reliable", "false")
+    withReliablePins { _ =>
+      assert(base.pinLazy().agg(sum($"v")).head().getLong(0) == 1225L)
+    }
+  }
+
+  /** Runs `f` with reliable pins on and a fresh checkpoint dir (passed to
+    * `f`), then restores the session's pin mode and checkpoint dir, so
+    * each test runs the same alone or in any order. */
+  private def withReliablePins(f: String => Unit): Unit = {
+    val sc = spark.sparkContext
+    val prevDir = sc.getCheckpointDir
+    val ckDir = java.nio.file.Files
+      .createTempDirectory("graft_pin_spec").toString
+    sc.setCheckpointDir(ckDir)
+    spark.conf.set("spark.graft.pin.reliable", "true")
+    try f(ckDir)
+    finally {
+      spark.conf.set("spark.graft.pin.reliable", "false")
+      sc.setCheckpointDir(prevDir.orNull)
+    }
   }
 }

@@ -32,6 +32,15 @@ class FixedPackSpec extends SparkFunSuite {
     assert(out.toSeq == Seq((0L, 1L, 4L), (1L, 2L, 3L)))
   }
 
+  test("empty input packs to an empty frame on both shard paths") {
+    for (nShards <- Seq(1, 4)) {
+      assert(Chunking.fixedPack(docsOf(Nil), "text", "doc_id", seqLen = 4,
+        nShards = nShards).collect().isEmpty, s"nShards=$nShards")
+      assert(Chunking.fixedPackSpans(docsOf(Nil), "text", "doc_id",
+        seqLen = 4, nShards = nShards).collect().isEmpty, s"nShards=$nShards")
+    }
+  }
+
   test("result is independent of the shard count") {
     val docs = docsOf(Seq(3, 0, 7, 1, 4, 9, 2, 6, 5, 8))
     val a = Chunking.fixedPack(docs, "text", "doc_id", seqLen = 8,

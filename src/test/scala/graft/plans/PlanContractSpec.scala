@@ -9,8 +9,8 @@ import graft.operators.Similarity
 /** Plan-SHAPE contracts for the scale-critical operators: these pin the
   * 100 TB design claims (corpus never shuffled, assignments row-local,
   * top-k partial-aggregated) as CI assertions, so a refactor that silently
-  * reintroduces an exchange fails the suite, not just a manual PlanAudit
-  * run.
+  * reintroduces an exchange fails the suite, not just a manual
+  * `graft.tools.QueryProfile` run.
   *
   * Counting convention: with AQE, `executedPlan.toString` AFTER execution
   * prints the final adaptive plan per stage — we count Exchange operators
