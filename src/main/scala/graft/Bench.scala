@@ -240,7 +240,8 @@ object Bench {
       "corpus_export_tfrecord", "corpus_export_warczst_dict",
       "corpus_export_warczst_trained", "corpus_export_arrow_dict",
       "corpus_export_wet", "corpus_export_arrow_struct",
-      "corpus_export_arrow_map", "corpus_export_wat")
+      "corpus_export_arrow_map", "corpus_export_wat",
+      "sim_ivf_append_probe")
 
     // SPARK_GRAFT_ONLY=a,b,c restricts the sweep — for focused
     // re-timing (e.g. the round-11 avro_roundtrip_agg outlier hunt);

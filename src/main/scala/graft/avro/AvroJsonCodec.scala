@@ -1,39 +1,39 @@
 package graft.avro
 
-import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.LongAdder
 
 import org.apache.avro.Schema
-import org.apache.avro.generic.{GenericDatumReader, GenericDatumWriter}
-import org.apache.avro.io.{DecoderFactory, EncoderFactory}
 
-/** Per-executor decode state: schema-id → parsed schema LRU, plus per-thread
-  * cached `DatumReader`/`DatumWriter`s.
+/** Per-executor decode state: a schema-id → [[AvroDecoderState.CachedSchema]]
+  * LRU. Each entry holds the parsed writer schema, its JSON, the
+  * [[AvroTranscoder]] compiled from it and the ready-made value-envelope
+  * prefix, all built once when the id is first fetched; eviction and the
+  * single-flight miss path therefore cover the transcoder too.
   *
-  * Two-level cache design mirrors the reference —
+  * The cache mirrors the reference's
   * `SynchronizedCache(LRUCache(capacity))` over the registry client
   * (`/root/reference/src/main/java/com/ing/eventbus/connect/schema/converters/AvroTransform.java:108-109`,
-  * hit path `:259-261`, miss+fetch `:262-269`) — relocated from the single
-  * Connect task thread to each executor JVM (SURVEY.md §4.3 #2). The reader/
-  * writer cache is a pure-win improvement the reference lacks (it allocates a
-  * fresh `DatumReader`/`DatumWriter`/`JsonEncoder` per record,
-  * `AvroTransform.java:241-246`; SURVEY.md §4.1).
+  * hit path `:259-261`, miss+fetch `:262-269`), relocated from the single
+  * Connect task thread to each executor JVM (SURVEY.md §4.3 #2). The
+  * reference also builds a `DatumReader`, `DatumWriter` and `JsonEncoder`
+  * per record (`AvroTransform.java:241-246`; SURVEY.md §4.1); here the
+  * per-record work is one walk of the compiled transcoder.
   *
-  * Thread-safety: the schema LRU is a synchronized `LinkedHashMap` in access
-  * order; Avro `DatumReader`s are not guaranteed thread-safe, so they are
-  * cached per-thread (32 hot threads in local[32]; one per core on a real
-  * executor).
+  * Thread-safety: the LRU is a synchronized `LinkedHashMap` in access order
+  * behind a lock-free read mirror; a compiled transcoder is immutable and
+  * keeps its scratch buffer per thread.
   */
 final class AvroDecoderState(provider: SchemaProvider, capacity: Int) {
 
-  /** Parsed schema + its serialized JSON, both computed exactly once per
-    * (executor, id): `Schema.toString` rebuilds the whole schema JSON, so
-    * calling it per record (as the reference effectively does via
-    * `schema.toString()` in the envelope) would dominate the envelope
-    * cost. */
-  final case class CachedSchema(schema: Schema, json: String)
+  /** Everything derived from one writer schema, computed exactly once per
+    * (executor, id): the parsed schema, its serialized JSON (the reference
+    * calls `schema.toString()` per record in the envelope), the compiled
+    * transcoder and the value envelope's
+    * `{"originSchema":"<escaped>","originMessage":"` prefix. */
+  final case class CachedSchema(schema: Schema, json: String,
+      transcoder: AvroTranscoder, envelopePrefix: Array[Byte])
 
   // Canonical LRU (capacity semantics parity with the reference's
   // SynchronizedCache(LRUCache), `AvroTransform.java:108`) + a lock-free
@@ -101,7 +101,9 @@ final class AvroDecoderState(provider: SchemaProvider, capacity: Int) {
         throw new SchemaLookupException(s"Schema id $id not found in registry")
       }
       val parsed = new Schema.Parser().parse(json)
-      val entry = CachedSchema(parsed, parsed.toString)
+      val text = parsed.toString
+      val entry = CachedSchema(parsed, text, AvroTranscoder.compile(parsed),
+        AvroTranscoder.envelopePrefix(text))
       val winner = schemas.synchronized {
         val raced = schemas.get(key)
         if (raced != null) raced
@@ -120,54 +122,15 @@ final class AvroDecoderState(provider: SchemaProvider, capacity: Int) {
 
   def schemaById(id: Int): Schema = cachedSchema(id).schema
 
-  private final class ThreadState {
-    val readers = new java.util.LinkedHashMap[Integer,
-      GenericDatumReader[AnyRef]](16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[Integer,
-        GenericDatumReader[AnyRef]]): Boolean = size() > capacity
-    }
-    val writers = new java.util.LinkedHashMap[Integer,
-      GenericDatumWriter[AnyRef]](16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[Integer,
-        GenericDatumWriter[AnyRef]]): Boolean = size() > capacity
-    }
-  }
-
-  private val threadState =
-    ThreadLocal.withInitial[ThreadState](() => new ThreadState)
-
   /** Decode an Avro-binary body (writer schema = reader schema, no
-    * evolution — `AvroTransform.java:241-243`) and re-encode with Avro's
-    * own `JsonEncoder` (non-pretty, `:244-251`). Avro's JSON rendering
-    * (union wrapping, ISO-8859-1 bytes) is kept deliberately for parity
-    * with the golden output (`TransformTest.java:508`). */
-  def avroBinaryToJson(schemaId: Int, body: Array[Byte]): String =
-    decodeToJson(cachedSchema(schemaId), schemaId, body)
-
-  /** Fused decode with a pre-resolved schema entry — one cache lookup per
-    * record for the whole decode+envelope path. */
+    * evolution — `AvroTransform.java:241-243`) to the JSON Avro's own
+    * `JsonEncoder` writes (non-pretty, `:244-251`; union wrapping,
+    * ISO-8859-1 bytes), kept for parity with the golden output
+    * (`TransformTest.java:508`). `schemaId` is not needed: `cached`
+    * already holds the compiled schema. */
   def decodeToJson(cached: CachedSchema, schemaId: Int,
-      body: Array[Byte]): String = {
-    val schema = cached.schema
-    val ts = threadState.get()
-    var reader = ts.readers.get(Integer.valueOf(schemaId))
-    if (reader == null) {
-      reader = new GenericDatumReader[AnyRef](schema)
-      ts.readers.put(Integer.valueOf(schemaId), reader)
-    }
-    var writer = ts.writers.get(Integer.valueOf(schemaId))
-    if (writer == null) {
-      writer = new GenericDatumWriter[AnyRef](schema)
-      ts.writers.put(Integer.valueOf(schemaId), writer)
-    }
-    val datum = reader.read(null,
-      DecoderFactory.get().binaryDecoder(body, null))
-    val out = new ByteArrayOutputStream(body.length * 2 + 16)
-    val enc = EncoderFactory.get().jsonEncoder(schema, out, false)
-    writer.write(datum, enc)
-    enc.flush()
-    out.toString(UTF_8)
-  }
+      body: Array[Byte]): String =
+    new String(cached.transcoder.json(body, 0), UTF_8)
 }
 
 /** JVM-wide registry of decoder states, keyed by the provider's cache token:
@@ -212,13 +175,15 @@ object AvroDecoderState {
   }
 }
 
-/** JSON envelope construction (SURVEY.md §2.1 #10/#11).
-  *
-  * Built by direct string assembly (single pass, no intermediate JSON tree)
-  * with `org.json.JSONObject`-compatible escaping, so the value envelope is
-  * byte-identical to the reference's golden output
+/** JSON envelope construction (SURVEY.md §2.1 #10/#11) from a decoded
+  * JSON string, with `org.json.JSONObject`-compatible escaping, so the
+  * value envelope is byte-identical to the reference's golden output
   * (`TransformTest.java:508`): key order
   * `originSchema, originMessage, originSchemaId`.
+  *
+  * These are the envelopes' definition. [[DecodeKernel]] writes the same
+  * bytes in one pass with [[AvroTranscoder]], which applies [[escape]]
+  * while it decodes; `AvroTranscoderSpec` checks that the two agree.
   */
 object AvroEnvelope {
 

@@ -17,17 +17,17 @@ object DecodeKernel {
     case _ => false
   }
 
-  /** VALUE-side: wire-parse → decode → value envelope. Permissive mode
+  /** VALUE-side: header check → schema lookup → one transcoder pass that
+    * writes the value envelope, reading the body in place. Permissive mode
     * forwards original bytes on decode failure (`AvroTransform.java:188-191`);
     * wire violations always throw (`:173-177`). Null-safe at the caller. */
   def decodeValue(bytes: Array[Byte], state: AvroDecoderState,
       permissive: Boolean): Array[Byte] = {
-    val framed = WireFormat.parse(bytes)
-    val cached = state.cachedSchema(framed.schemaId)
-    try {
-      val json = state.decodeToJson(cached, framed.schemaId, framed.body)
-      AvroEnvelope.valueEnvelope(framed.schemaId, json, cached.json)
-    } catch {
+    val id = WireFormat.schemaId(bytes)
+    val cached = state.cachedSchema(id)
+    try cached.transcoder.valueEnvelope(bytes, WireFormat.HeaderLen,
+      cached.envelopePrefix, id)
+    catch {
       case t: Throwable if permissive && isDecodeFailure(t) =>
         state.swallowedErrors.increment()
         bytes
@@ -36,16 +36,15 @@ object DecodeKernel {
 
   /** KEY-side: fields inlined + originSchema injected
     * (`AvroTransform.java:224-229`); `strip=false` reproduces the
-    * unstripped-key reference bug (`:148`, SURVEY.md §7.4). */
+    * unstripped-key reference bug (`:148`, SURVEY.md §7.4) by decoding from
+    * the header's first byte. */
   def decodeKey(bytes: Array[Byte], state: AvroDecoderState,
       permissive: Boolean, strip: Boolean): Array[Byte] = {
-    val framed = WireFormat.parse(bytes)
-    val body = if (strip) framed.body else bytes
-    val cached = state.cachedSchema(framed.schemaId)
-    try {
-      val json = state.decodeToJson(cached, framed.schemaId, body)
-      AvroEnvelope.keyEnvelope(json, cached.json)
-    } catch {
+    val id = WireFormat.schemaId(bytes)
+    val cached = state.cachedSchema(id)
+    try cached.transcoder.keyEnvelope(bytes,
+      if (strip) WireFormat.HeaderLen else 0, cached.envelopePrefix)
+    catch {
       case t: Throwable if permissive && isDecodeFailure(t) =>
         state.swallowedErrors.increment()
         bytes

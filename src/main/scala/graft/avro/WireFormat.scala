@@ -36,9 +36,10 @@ object WireFormat {
     buf.array()
   }
 
-  /** Validate + split a framed payload. Mirrors the reference's checks:
+  /** Validate a framed payload's header and return its schema id; the body
+    * is `bytes` from [[HeaderLen]]. Mirrors the reference's checks:
     * length ≤ 5 (`:139-142`/`:173-177`) and magic byte (`:276`). */
-  def parse(bytes: Array[Byte]): Framed = {
+  def schemaId(bytes: Array[Byte]): Int = {
     if (bytes.length <= HeaderLen)
       throw new WireFormatException(
         s"Payload of ${bytes.length} bytes is too short for the Confluent " +
@@ -46,9 +47,14 @@ object WireFormat {
     if (bytes(0) != Magic)
       throw new WireFormatException(
         f"Unknown magic byte 0x${bytes(0)}%02x (expected 0x00)")
-    val id = ByteBuffer.wrap(bytes, 1, 4).getInt
-    Framed(id, java.util.Arrays.copyOfRange(bytes, HeaderLen, bytes.length))
+    ((bytes(1) & 0xff) << 24) | ((bytes(2) & 0xff) << 16) |
+      ((bytes(3) & 0xff) << 8) | (bytes(4) & 0xff)
   }
+
+  /** Validate + split a framed payload (the body is copied). */
+  def parse(bytes: Array[Byte]): Framed =
+    Framed(schemaId(bytes),
+      java.util.Arrays.copyOfRange(bytes, HeaderLen, bytes.length))
 
   /** Schema id (offset 1..4, big-endian) via built-ins only:
     * `conv(hex(substring(v, 2, 4)), 16, 10)`. Codegen-friendly; valid for

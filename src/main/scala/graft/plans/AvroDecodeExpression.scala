@@ -14,11 +14,11 @@ import graft.avro.{AvroDecoderState, DecodeKernel, SchemaProvider}
   * converters, no extra null boxing), and codegen embeds a direct virtual
   * call via [[doGenCode]] — the expression participates in whole-stage
   * codegen as a leaf call instead of forcing a fallback projection for the
-  * whole operator subtree. Executor-side state (schema LRU + per-thread
-  * datum readers) is resolved lazily from the JVM-wide registry keyed by
-  * the provider's cache token, exactly like the UDF path — the reference's
-  * two-level cache design (`AvroTransform.java:108-109`) relocated per
-  * executor.
+  * whole operator subtree. Executor-side state (the schema LRU with each
+  * schema's compiled transcoder) is resolved lazily from the JVM-wide
+  * registry keyed by the provider's cache token, exactly like the UDF
+  * path — the reference's two-level cache design
+  * (`AvroTransform.java:108-109`) relocated per executor.
   *
   * Null semantics: null input → null output (tombstone passthrough,
   * `AvroTransform.java:168-170`) via `UnaryExpression`'s default
@@ -90,13 +90,14 @@ case class AvroDecodeStruct(
     AvroDecoderState.forProvider(provider, capacity)
 
   override def nullSafeEval(input: Any): Any = {
-    val framed = graft.avro.WireFormat.parse(input.asInstanceOf[Array[Byte]])
-    val cached = state.cachedSchema(framed.schemaId)
+    val bytes = input.asInstanceOf[Array[Byte]]
+    val id = graft.avro.WireFormat.schemaId(bytes)
+    val cached = state.cachedSchema(id)
     try {
-      val json = state.decodeToJson(cached, framed.schemaId, framed.body)
+      val json = cached.transcoder.json(bytes, graft.avro.WireFormat.HeaderLen)
       org.apache.spark.sql.catalyst.InternalRow(
-        framed.schemaId,
-        org.apache.spark.unsafe.types.UTF8String.fromString(json),
+        id,
+        org.apache.spark.unsafe.types.UTF8String.fromBytes(json),
         org.apache.spark.unsafe.types.UTF8String.fromString(cached.json))
     } catch {
       case t: Throwable if permissive && DecodeKernel.isDecodeFailure(t) =>

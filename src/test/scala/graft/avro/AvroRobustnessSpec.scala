@@ -189,6 +189,46 @@ class AvroRobustnessSpec extends SparkFunSuite {
     }
   }
 
+  test("PERMISSIVE: a corrupt string length (2e9) or array count (5e8) " +
+      "passes the bytes through without allocating for it") {
+    val schemaJson =
+      """{"type":"record","name":"Corrupt","fields":[
+        |{"name":"id","type":"long"},{"name":"s","type":"string"},
+        |{"name":"xs","type":{"type":"array","items":"long"}}]}"""
+        .stripMargin.replace("\n", "")
+    val stub = new SchemaRegistryStub
+    val id = stub.registerValueSchema("corrupt", schemaJson)
+    val state = AvroDecoderState.forProvider(stub.toProvider, 100)
+    def body(write: org.apache.avro.io.Encoder => Unit): Array[Byte] = {
+      val out = new ByteArrayOutputStream()
+      val e = EncoderFactory.get().binaryEncoder(out, null)
+      write(e); e.flush()
+      WireFormat.frame(id, out.toByteArray)
+    }
+    val good = body { e =>
+      e.writeLong(7); e.writeString("ok"); e.writeArrayStart()
+      e.setItemCount(1); e.startItem(); e.writeLong(1); e.writeArrayEnd()
+    }
+    val hugeString = body { e => e.writeLong(7); e.writeLong(2000000000L) }
+    val hugeArray = body { e =>
+      e.writeLong(7); e.writeString("ok"); e.writeLong(500000000L)
+      e.writeLong(1); e.writeLong(2)
+    }
+    // warm the schema cache and the decode path before measuring
+    DecodeKernel.decodeValue(good, state, permissive = true)
+    val threads = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val self = Thread.currentThread().getId
+    val swallowed = state.swallowedErrors.sum()
+    val before = threads.getThreadAllocatedBytes(self)
+    val outs = Seq(hugeString, hugeArray).map(b =>
+      b -> DecodeKernel.decodeValue(b, state, permissive = true))
+    val allocated = threads.getThreadAllocatedBytes(self) - before
+    outs.foreach { case (in, out) => assert(out.sameElements(in)) }
+    assert(state.swallowedErrors.sum() == swallowed + 2)
+    assert(allocated < (16L << 20), s"allocated $allocated bytes")
+  }
+
   test("schema LRU respects capacity (eviction + refetch still correct)") {
     val stub = new SchemaRegistryStub
     val ids = (1 to 10).map { i =>
