@@ -1,5 +1,6 @@
 package graft.config
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, Dataset}
 
 /** Scale-aware lineage pin (round 18).
@@ -28,12 +29,44 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   * survives executor loss. The flag is read per call, so a session can
   * scope it around a fragile stage. Semantics are unchanged either
   * way: both forms materialize the same rows and truncate lineage;
-  * `unpersist()` on the result remains valid (a no-op for reliable
-  * checkpoints' files, which SparkContext cleans up).
+  * `unpersist()` on the result remains valid. Reliable checkpoint
+  * FILES, however, are deleted only when the application sets
+  * `spark.cleaner.referenceTracking.cleanCheckpoints=true` (default
+  * false; then the ContextCleaner removes them once the pinned relation
+  * is garbage-collected). Without it they stay in the checkpoint
+  * directory for the application's lifetime and beyond — iterative
+  * operators that pin per iteration write O(iterations × data).
+  *
+  * The first pin on a SparkContext logs the mode it chose, and the
+  * first reliable pin without `cleanCheckpoints` warns once that
+  * checkpoint files will accumulate.
   */
 object Pin {
-  private def reliable(df: Dataset[_]): Boolean =
-    df.sparkSession.conf.get("spark.graft.pin.reliable", "false").toBoolean
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** (SparkContext, mode) pairs already logged. */
+  private val logged = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkContext, java.util.Set[Boolean]]())
+
+  private def reliable(df: Dataset[_]): Boolean = {
+    val on =
+      df.sparkSession.conf.get("spark.graft.pin.reliable", "false").toBoolean
+    val sc = df.sparkSession.sparkContext
+    if (logged.computeIfAbsent(sc, _ => java.util.concurrent
+        .ConcurrentHashMap.newKeySet[Boolean]()).add(on)) {
+      log.info(s"graft pins use ${if (on) "reliable checkpoints in " +
+        sc.getCheckpointDir.getOrElse("<unset checkpoint dir>")
+        else "local checkpoints"} (spark.graft.pin.reliable=$on)")
+      if (on && !sc.getConf.getBoolean(
+          "spark.cleaner.referenceTracking.cleanCheckpoints", false))
+        log.warn("spark.graft.pin.reliable=true without " +
+          "spark.cleaner.referenceTracking.cleanCheckpoints=true: " +
+          "checkpoint files will accumulate in " +
+          sc.getCheckpointDir.getOrElse("the checkpoint directory") +
+          " until it is cleaned by hand")
+    }
+    on
+  }
 
   implicit final class PinOps(private val df: DataFrame) extends AnyVal {
     /** Eager pin: materialize now, truncate lineage. */

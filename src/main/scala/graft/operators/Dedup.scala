@@ -819,15 +819,7 @@ object Dedup {
     val dSh = delta.select(col(idCol).as("id"),
       TF.wordShingleHashes(col(textCol), index.shingleK).as("shingles"))
       .pin()
-    // the bucketed probe's broadcast-budget guard (round 13), same
-    // contract: an over-budget backfill delta demotes the broadcast
-    // hints to planner-chosen shuffle joins
-    val deltaSmall = {
-      val t = spark.sessionState.conf.autoBroadcastJoinThreshold
-      t > 0 && shingledDeltaBytes(dSh) <= t
-    }
-    def hinted(df: DataFrame): DataFrame =
-      if (deltaSmall) broadcast(df) else df
+    val hinted = deltaBroadcastHint(dSh)
     val dBands = bandRows(dSh, index.numHashes, index.bands)
       .select(col("bk"), col("id").as("b"))
     val cands = spark.read.parquet(s"${index.path}/bands")
@@ -874,20 +866,6 @@ object Dedup {
       pmod(hash(saltKey, lit(0x5a17)), lit(fpb)))
   }
 
-  /** Broadcast-budget guard (round 13): hint `broadcast(df)` only when
-    * the caller's measured byte estimate fits the session's
-    * `autoBroadcastJoinThreshold`; above it (or with broadcasts
-    * disabled via threshold -1) return the relation UNHINTED so the
-    * planner shuffles it. The probes' "delta small by contract"
-    * assumption is real for daily ingest but a backfill day violates
-    * it silently at the broadcast-size wall — this turns that wall
-    * into a planned shuffle join with identical semantics
-    * (oracle-pinned by the oversized-delta spec). */
-  private def broadcastIfUnder(df: DataFrame, estBytes: Long): DataFrame = {
-    val t = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    if (t > 0 && estBytes <= t) broadcast(df) else df
-  }
-
   /** Measured size proxy for a shingled delta (`id`, `shingles`): one
     * cheap job over the already-localCheckpointed rows — 8 bytes per
     * shingle hash plus a fixed per-row overhead that also covers the
@@ -898,6 +876,18 @@ object Dedup {
     val r = dSh.select(count(lit(1)).as("n"),
       coalesce(sum(size(col("shingles"))), lit(0L)).as("s")).head()
     r.getLong(0) * 512L + r.getLong(1) * 8L
+  }
+
+  /** Broadcast-budget guard (round 13), shared by the probes and the
+    * spec hook: measure the shingled delta once and hint `broadcast` only
+    * when it fits `autoBroadcastJoinThreshold`. A backfill day violates
+    * the "delta small by contract" assumption at the broadcast-size
+    * wall; above the threshold every delta-derived join (the candidates
+    * are delta-lower-bounded) becomes a planned shuffle join with
+    * identical semantics (oracle-pinned by the oversized-delta spec). */
+  private def deltaBroadcastHint(dSh: DataFrame): DataFrame => DataFrame = {
+    val t = dSh.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    if (t > 0 && shingledDeltaBytes(dSh) <= t) broadcast(_) else identity
   }
 
   /** Handle to a BUCKETED written LSH index (see
@@ -975,17 +965,7 @@ object Dedup {
     val dSh = delta.select(col(idCol).as("id"),
       TF.wordShingleHashes(col(textCol), index.shingleK).as("shingles"))
       .pin()
-    // broadcast-budget guard (round 13): measure the checkpointed
-    // delta once; an over-budget delta (backfill day) demotes ALL
-    // THREE delta-derived broadcasts to planner-chosen shuffle joins —
-    // cands is delta-lower-bounded (>= one row per matched delta doc),
-    // so the one measurement governs the trio
-    val deltaSmall = {
-      val t = spark.sessionState.conf.autoBroadcastJoinThreshold
-      t > 0 && shingledDeltaBytes(dSh) <= t
-    }
-    def hinted(df: DataFrame): DataFrame =
-      if (deltaSmall) broadcast(df) else df
+    val hinted = deltaBroadcastHint(dSh)
     // materialized: feeds the bucket collection AND the candidate join
     val dBands = bandRows(dSh, index.numHashes, index.bands)
       .select(col("bk"), col("id").as("b"))
@@ -1039,7 +1019,8 @@ object Dedup {
     * job — the plan-contract spec asserts the bands-side partition
     * pruning here, since the probe's FINAL plan now reads the pinned
     * candidate rows (`Scan ExistingRDD`) rather than re-running the
-    * bands join. Same construction, same pruning, no pin. */
+    * bands join. Same construction, same broadcast hint, same pruning,
+    * no pin. */
   private[graft] def lshProbeCandsPlan(index: LshIndexBucketed,
       delta: DataFrame, textCol: String, idCol: String): DataFrame = {
     val dSh = delta.select(col(idCol).as("id"),
@@ -1049,7 +1030,7 @@ object Dedup {
     val probeBuckets = dBands
       .select(pmod(hash(col("bk")), lit(index.nBuckets)).as("bucket"))
       .distinct().collect().map(_.getInt(0)).toSeq
-    bucketedCands(index, dBands, probeBuckets, identity)
+    bucketedCands(index, dBands, probeBuckets, deltaBroadcastHint(dSh))
   }
 
   /** Stage a delta's band keys and shingle sets under `root` MIRRORING

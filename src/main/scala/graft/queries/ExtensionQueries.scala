@@ -1,7 +1,5 @@
 package graft.queries
 
-import graft.config.Pin._
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -110,6 +108,9 @@ object ExtensionQueries {
       dir.replaceAll("[^A-Za-z0-9]", "_") + "_" +
       ProcessHandle.current().pid()
 
+  private val fixtureLocks =
+    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
   /** Memoize an on-disk fixture ATOMICALLY: build into a temp sibling,
     * then rename into place. A bare `if (!exists) write(path)` guard
     * treats the directory as complete the instant it exists — a crashed
@@ -123,8 +124,16 @@ object ExtensionQueries {
     * sees it) is written after the rename; an existing target WITHOUT
     * its marker is a stale partial artifact (a killed non-atomic move,
     * or a foreign writer at the same path) and is deleted and rebuilt
-    * instead of failing every later rep. */
-  private def memoizedFixture(path: String)(build: String => Unit): String = {
+    * instead of failing every later rep.
+    *
+    * Builders of the same path in one process are serialized on a
+    * per-path lock, and the missing-marker check runs only under it:
+    * unlocked, a second builder running between the first one's rename
+    * and its marker write saw a markerless target and deleted an
+    * artifact the first caller was about to read. */
+  private[graft] def memoizedFixture(path: String)(build: String => Unit)
+      : String = fixtureLocks.computeIfAbsent(path, _ => new Object)
+      .synchronized {
     val target = java.nio.file.Paths.get(path)
     val marker = java.nio.file.Paths.get(path + ".complete")
     if (java.nio.file.Files.exists(target) &&
@@ -141,10 +150,10 @@ object ExtensionQueries {
         try java.nio.file.Files.move(tmp, target,
           java.nio.file.StandardCopyOption.ATOMIC_MOVE)
         catch {
-          // concurrent winner already renamed a complete copy into place
+          // another process's winner already renamed a complete copy in
           case _: java.nio.file.FileAlreadyExistsException
             if java.nio.file.Files.exists(target) => ()
-          case e: java.nio.file.FileSystemException
+          case _: java.nio.file.FileSystemException
             if java.nio.file.Files.exists(target) => ()
         }
         // marker AFTER the move: a crash in between leaves a complete
@@ -170,7 +179,7 @@ object ExtensionQueries {
     * probe. */
   private def lshIndexFor(s: SparkSession, dir: String): Dedup.LshIndex = {
     def build(d: String) = Dedup.buildLshIndex(
-      spread(t(s, d, "documents")).select(col("doc_id"), col("text")),
+      t(s, d, "documents").select(col("doc_id"), col("text")),
       "text", "doc_id", tmpArtifact("graft_lsh_index", d))
     val cached = lshIndexCache.computeIfAbsent(dir, build(_))
     if (new java.io.File(s"${cached.path}/bands").exists) cached
@@ -189,53 +198,16 @@ object ExtensionQueries {
     else ivfPqIndexCache.compute(dir, (d, _) => build(d))
   }
 
-  /** Testdata-artifact correction: the driver's parquet is ONE row
-    * group per table, so it reads as a single input split and every
-    * per-row kernel (shingles, media decode, quantized folds) runs
-    * single-threaded until the first shuffle — a production many-file
-    * corpus parallelizes the scan for free. Kernel-heavy entries
-    * spread the scan first; the shuffle moves raw testdata once
-    * (hundreds of KB) and buys 32-way map work. Cheap scan-shaped
-    * queries skip it (an extra exchange would cost more than it
-    * saves). */
-  private def spread(df: DataFrame): DataFrame =
-    df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-
-  /** Why many queries below end `.pinLazy().orderBy(...)`
-    * (round 17; round 18 routed every pin through [[graft.config.Pin]]
-    * — one deployment switch, `spark.graft.pin.reliable`, swaps
-    * executor-local pins for cluster-fault-tolerant checkpoints — and
-    * made the query-level pins LAZY: same kernel-once guarantee, since
-    * the sort's sample pass is the materialization job; interleaved
-    * A/B measured neutral, 5.85 s = 5.85 s over the 8-query pin batch;
-    * and plan-dump tooling no longer executes kernels at construction,
-    * the round-17 advice item): a global output sort plans
-    * `Exchange rangepartitioning`, and executing that exchange runs its
-    * child TWICE — once for the range-boundary SAMPLE pass, once for
-    * the real partitioning. For a row-local kernel pipeline with no
-    * intermediate shuffle (decode/extract riding the scan — most of
-    * the mm_/text_/source_ families), the sample pass therefore re-runs
-    * the entire kernel; queries whose pipeline already contains a
-    * shuffle are protected by AQE (the sample reads the materialized
-    * shuffle output) and DON'T need this. Pinning the (small) result
-    * relation before the sort runs the kernel once — measured 0.54-0.88×
-    * per query, interleaved A/B at sf0.1 — and is the plan a production
-    * job wants too: the decode runs once, and only the result rows
-    * (audit-sized, not corpus-sized) hit the sort. Queries where the
-    * A/B showed the pin costing more than it saves (trivial kernels,
-    * arrow-export probes) deliberately do NOT carry it. */
-
-  /** documents ∪ documents-with-shifted-ids (adds exact twins) —
-    * spread: every consumer runs corpus-scale text kernels. */
+  /** documents ∪ documents-with-shifted-ids (adds exact twins). */
   private def docsUnion(s: SparkSession, dir: String): DataFrame = {
     val d = t(s, dir, "documents").select(col("doc_id"), col("text"),
       col("lang"), col("source"))
-    spread(d.unionAll(d.withColumn("doc_id", col("doc_id") + 1000000L)))
+    d.unionAll(d.withColumn("doc_id", col("doc_id") + 1000000L))
   }
 
   private def embUnion(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "embeddings")
-    spread(e.unionAll(e.withColumn("vec_id", col("vec_id") + 1000000L)))
+    e.unionAll(e.withColumn("vec_id", col("vec_id") + 1000000L))
   }
 
   private def le16b(x: org.apache.spark.sql.Column) = unhex(concat(
@@ -277,7 +249,7 @@ object ExtensionQueries {
 
   private def wavPcmFixture(s: SparkSession, dir: String): DataFrame =
     // blob hoisted into its own projection (mm_wav_meta discipline)
-    spread(t(s, dir, "documents"))
+    t(s, dir, "documents")
       .select(col("doc_id"), wavPcmBlob.as("blob"))
 
   /** 24-bit BMP fixture shared by mm_bmp_features / mm_bmp_patches /
@@ -375,7 +347,7 @@ object ExtensionQueries {
   }
 
   private def pngFixture(s: SparkSession, dir: String): DataFrame =
-    spread(t(s, dir, "documents"))
+    t(s, dir, "documents")
       .select(col("doc_id"), pngScan.as("scan"),
         (lit(3L) + col("doc_id") % 4L).as("w"),
         (lit(2L) + col("doc_id") % 3L).as("h"))
@@ -426,7 +398,7 @@ object ExtensionQueries {
   }
 
   private[graft] def gifFixture(s: SparkSession, dir: String): DataFrame =
-    spread(t(s, dir, "documents")).select(col("doc_id"), gifBlob.as("blob"))
+    t(s, dir, "documents").select(col("doc_id"), gifBlob.as("blob"))
 
   /** Baseline-JPEG fixture shared by mm_jpeg_features / mm_decode_audit
     * — the byte-primitive pattern applied to a DCT codec WITHOUT a DCT
@@ -474,7 +446,7 @@ object ExtensionQueries {
   }
 
   private[graft] def jpegFixture(s: SparkSession, dir: String): DataFrame =
-    spread(t(s, dir, "documents")).select(col("doc_id"), jpegBlob.as("blob"))
+    t(s, dir, "documents").select(col("doc_id"), jpegBlob.as("blob"))
 
   /** TIFF-JPEG fixture (round 14) — compression 7, the "new-style"
     * JPEG-in-TIFF of scanned-document corpora: TWO abbreviated
@@ -537,7 +509,7 @@ object ExtensionQueries {
 
   private[graft] def tiffJpegFixture(s: SparkSession,
       dir: String): DataFrame =
-    spread(t(s, dir, "documents"))
+    t(s, dir, "documents")
       .select(col("doc_id"), tiffJpegBlob.as("blob"))
 
   /** PROGRESSIVE-JPEG fixture (round 11) — [[jpegBlob]]'s DC-only
@@ -589,7 +561,7 @@ object ExtensionQueries {
 
   private[graft] def jpegProgFixture(s: SparkSession, dir: String)
       : DataFrame =
-    spread(t(s, dir, "documents"))
+    t(s, dir, "documents")
       .select(col("doc_id"), jpegProgBlob.as("blob"))
 
   /** Standard MSB-first CRC byte table, computed at plan-build time. */
@@ -782,7 +754,7 @@ object ExtensionQueries {
   }
 
   private[graft] def mp4Fixture(s: SparkSession, dir: String): DataFrame =
-    spread(t(s, dir, "documents")).select(col("doc_id"), mp4Blob.as("blob"))
+    t(s, dir, "documents").select(col("doc_id"), mp4Blob.as("blob"))
 
   /** WebP/VP8L fixture bit array (round 12) — a complete lossless
     * stream in closed form: 8×(4+d%4) pixels, no transforms, SIMPLE
@@ -965,7 +937,7 @@ object ExtensionQueries {
   }
 
   private[graft] def tiffFixture(s: SparkSession, dir: String): DataFrame =
-    spread(t(s, dir, "documents"))
+    t(s, dir, "documents")
       .select(col("doc_id"), tiffBlob.as("blob"))
 
   /** GZIP member fixture (round 12): FNAME header, closed-form mtime,
@@ -994,7 +966,7 @@ object ExtensionQueries {
   }
 
   private[graft] def gzipFixture(s: SparkSession, dir: String): DataFrame =
-    spread(t(s, dir, "documents"))
+    t(s, dir, "documents")
       .select(col("doc_id"), gzipBlob.as("blob"))
 
   /** One complete gzip member as binary: FNAME header, closed-form
@@ -1031,7 +1003,7 @@ object ExtensionQueries {
 
   private[graft] def gzipMultiFixture(s: SparkSession, dir: String)
       : DataFrame =
-    spread(t(s, dir, "documents"))
+    t(s, dir, "documents")
       .select(col("doc_id"), gzipMultiBlob.as("blob"))
 
   /** One ustar header with a CORRECT checksum, computed at plan-build
@@ -1079,7 +1051,7 @@ object ExtensionQueries {
   }
 
   private[graft] def tarFixture(s: SparkSession, dir: String): DataFrame =
-    spread(t(s, dir, "documents"))
+    t(s, dir, "documents")
       .select(col("doc_id"), tarBlob.as("blob"))
 
   private[graft] lazy val wdsBmpHeaders: Seq[Array[Byte]] =
@@ -1125,7 +1097,7 @@ object ExtensionQueries {
 
   private[graft] def webdatasetFixture(s: SparkSession, dir: String)
       : DataFrame =
-    spread(t(s, dir, "documents"))
+    t(s, dir, "documents")
       .select(col("doc_id"), webdatasetBlob.as("blob"))
 
   /** WARC fixture (round 12): one warcinfo record + 1+d%3 response
@@ -1165,7 +1137,7 @@ object ExtensionQueries {
     encode(array_join(warcRecordStrings, ""), "utf-8")
 
   private[graft] def warcFixture(s: SparkSession, dir: String): DataFrame =
-    spread(t(s, dir, "documents"))
+    t(s, dir, "documents")
       .select(col("doc_id"), warcBlob.as("blob"))
 
   /** `.warc.gz` fixture (round 13): the SAME records as [[warcBlob]],
@@ -1182,7 +1154,7 @@ object ExtensionQueries {
 
   private[graft] def warcGzFixture(s: SparkSession, dir: String)
       : DataFrame =
-    spread(t(s, dir, "documents"))
+    t(s, dir, "documents")
       .select(col("doc_id"), warcGzBlob.as("blob"))
 
   /** ZIP fixture (round 12, DEFLATE + real CRCs round 13): 2+d%3
@@ -1249,7 +1221,7 @@ object ExtensionQueries {
   }
 
   private[graft] def zipFixture(s: SparkSession, dir: String): DataFrame =
-    spread(t(s, dir, "documents"))
+    t(s, dir, "documents")
       .select(col("doc_id"), zipBlob.as("blob"))
 
   /** Zstandard frame fixture (round 13) — per doc an optional
@@ -1288,7 +1260,7 @@ object ExtensionQueries {
   }
 
   private[graft] def zstdFixture(s: SparkSession, dir: String): DataFrame =
-    spread(t(s, dir, "documents"))
+    t(s, dir, "documents")
       .select(col("doc_id"), zstdBlob.as("blob"))
 
   /** REAL libzstd frames (level 3, generated by
@@ -1312,7 +1284,7 @@ object ExtensionQueries {
 
   private[graft] def zstdCompressedFixture(s: SparkSession,
       dir: String): DataFrame =
-    spread(t(s, dir, "documents"))
+    t(s, dir, "documents")
       .select(col("doc_id"), unhex(element_at(
         array(ZstdGoldenHex.map(lit): _*),
         (pmod(col("doc_id"), lit(4L)) + 1L).cast("int"))).as("blob"))
@@ -1357,7 +1329,7 @@ object ExtensionQueries {
       "75653b00000000")
 
   private[graft] def lz4Fixture(s: SparkSession, dir: String): DataFrame =
-    spread(t(s, dir, "documents"))
+    t(s, dir, "documents")
       .select(col("doc_id"), unhex(element_at(
         array(Lz4GoldenHex.map(lit): _*),
         (pmod(col("doc_id"), lit(4L)) + 1L).cast("int"))).as("blob"))
@@ -1375,7 +1347,7 @@ object ExtensionQueries {
 
   private[graft] def snappyFixture(s: SparkSession,
       dir: String): DataFrame =
-    spread(t(s, dir, "documents"))
+    t(s, dir, "documents")
       .select(col("doc_id"), unhex(element_at(
         array(SnappyGoldenHex.map(lit): _*),
         (pmod(col("doc_id"), lit(4L)) + 1L).cast("int"))).as("blob"))
@@ -1429,7 +1401,7 @@ object ExtensionQueries {
 
   private[graft] def kafkaFixture(s: SparkSession,
       dir: String): DataFrame =
-    spread(t(s, dir, "documents"))
+    t(s, dir, "documents")
       .select(col("doc_id"), unhex(element_at(
         array(KafkaBatchHex.map(lit): _*),
         (pmod(col("doc_id"), lit(5L)) + 1L).cast("int"))).as("blob"))
@@ -1443,7 +1415,7 @@ object ExtensionQueries {
     val k = lit(2L) + d % 3L
     val blobHex = array_join(transform(sequence(lit(0L), k - 1L), j =>
       element_at(frames, (pmod(d + j, lit(4L)) + 1L).cast("int"))), "")
-    spread(t(s, dir, "documents"))
+    t(s, dir, "documents")
       .select(d, unhex(blobHex).as("blob"))
   }
 
@@ -1464,7 +1436,7 @@ object ExtensionQueries {
     * references it many times). */
   private[graft] def warcHtmlZstFixture(s: SparkSession,
       dir: String): DataFrame =
-    warcHtmlZstBlobs(spread(t(s, dir, "documents")))
+    warcHtmlZstBlobs(t(s, dir, "documents"))
 
   /** The fixture construction over ANY (doc_id, source, text) frame —
     * the capstone pipeline feeds group-duplicated pages through it. */
@@ -1594,7 +1566,7 @@ object ExtensionQueries {
     val d = col("doc_id")
     val r = pmod(d, lit(4L))
     def asc(c: org.apache.spark.sql.Column) = encode(c, "utf-8")
-    val base = spread(t(s, dir, "documents"))
+    val base = t(s, dir, "documents")
       .select(d, r.as("r"),
         substring(col("text"), 1, 30).as("s1"),
         substring(col("text"), 31, 30).as("s2"),
@@ -1689,7 +1661,7 @@ object ExtensionQueries {
     val rowsTail = "00000000" * 6 +
       (0 until 4).map(i => f"02${1}%04x$i%02x").mkString
     // ---- per-doc columns ----
-    val base = spread(t(s, dir, "documents"))
+    val base = t(s, dir, "documents")
       .select(d,
         substring(col("text"), 1, 30).as("l1"),
         substring(col("text"), 31, 18).as("l2"),
@@ -1818,7 +1790,7 @@ object ExtensionQueries {
     val blobHex = concat(lit(WarcZstDictHeadHex),
       array_join(transform(sequence(lit(0L), k - 1L), j =>
         element_at(frames, (pmod(d + j, lit(8L)) + 1L).cast("int"))), ""))
-    spread(t(s, dir, "documents"))
+    t(s, dir, "documents")
       .select(d, unhex(blobHex).as("blob"))
   }
 
@@ -1854,7 +1826,7 @@ object ExtensionQueries {
     val d = col("doc_id")
     val base = element_at(array(Bz2GoldenHex.map(lit): _*),
       (pmod(d, lit(4L)) + 1L).cast("int"))
-    spread(t(s, dir, "documents"))
+    t(s, dir, "documents")
       .select(d, unhex(concat(base,
         when(d % 2L === 0L, lit(Bz2TailHex)).otherwise(lit(""))))
         .as("blob"))
@@ -1931,7 +1903,7 @@ object ExtensionQueries {
     val d = col("doc_id")
     val base = element_at(array(XzGoldenHex.map(lit): _*),
       (pmod(d, lit(4L)) + 1L).cast("int"))
-    spread(t(s, dir, "documents"))
+    t(s, dir, "documents")
       .select(d, unhex(concat(base,
         when(d % 2L === 0L, lit(XzTailHex)).otherwise(lit(""))))
         .as("blob"))
@@ -2016,7 +1988,7 @@ object ExtensionQueries {
   private[graft] def xzX86Fixture(s: SparkSession,
       dir: String): DataFrame = {
     val d = col("doc_id")
-    spread(t(s, dir, "documents"))
+    t(s, dir, "documents")
       .select(d, unhex(element_at(array(XzX86Hex.map(lit): _*),
         (pmod(d, lit(3L)) + 1L).cast("int"))).as("blob"))
   }
@@ -2045,7 +2017,7 @@ object ExtensionQueries {
 
   private[graft] def tarXzFixture(s: SparkSession,
       dir: String): DataFrame =
-    spread(t(s, dir, "documents"))
+    t(s, dir, "documents")
       .select(col("doc_id"), unhex(element_at(
         array(TarXzHex.map(lit): _*),
         (pmod(col("doc_id"), lit(2L)) + 1L).cast("int"))).as("blob"))
@@ -2488,7 +2460,7 @@ object ExtensionQueries {
 
   private def tarTwinFixture(s: SparkSession, dir: String,
       hexes: Seq[String]): DataFrame =
-    spread(t(s, dir, "documents"))
+    t(s, dir, "documents")
       .select(col("doc_id"), unhex(element_at(
         array(hexes.map(lit): _*),
         (pmod(col("doc_id"), lit(2L)) + 1L).cast("int"))).as("blob"))
@@ -2498,7 +2470,7 @@ object ExtensionQueries {
       .otherwise(lit(WikiXmlHex)))
 
   private[graft] def wikiFixture(s: SparkSession, dir: String): DataFrame =
-    spread(t(s, dir, "documents"))
+    t(s, dir, "documents")
       .select(col("doc_id"), wikiBlob.as("blob"))
 
   /** ID3v2.3-tagged MP3 fixture (round 12, UTF-16 round 13):
@@ -2539,7 +2511,7 @@ object ExtensionQueries {
 
   private[graft] def mp3Id3Fixture(s: SparkSession, dir: String)
       : DataFrame =
-    spread(t(s, dir, "documents"))
+    t(s, dir, "documents")
       .select(col("doc_id"), mp3Id3Blob.as("blob"))
 
   /** EXIF-bearing JPEG fixture (round 12): [[jpegBlob]] with an APP1
@@ -2604,7 +2576,7 @@ object ExtensionQueries {
   }
 
   private[graft] def oggFixture(s: SparkSession, dir: String): DataFrame =
-    spread(t(s, dir, "documents"))
+    t(s, dir, "documents")
       .select(col("doc_id"), oggBlob.as("blob"))
 
   /** AVIF fixture (round 12): ftyp(avif | avis on odd docs) + meta
@@ -2640,7 +2612,7 @@ object ExtensionQueries {
   }
 
   private[graft] def avifFixture(s: SparkSession, dir: String): DataFrame =
-    spread(t(s, dir, "documents"))
+    t(s, dir, "documents")
       .select(col("doc_id"), avifBlob.as("blob"))
 
   /** APNG fixture (round 12): IHDR + acTL(k frames, d%6 plays) + k
@@ -2671,7 +2643,7 @@ object ExtensionQueries {
 
   private[graft] def pngMetaFixture(s: SparkSession, dir: String)
       : DataFrame =
-    spread(t(s, dir, "documents"))
+    t(s, dir, "documents")
       .select(col("doc_id"),
         when(col("doc_id") % 2 === 0, pngScan).as("__png_scan"))
       .select(col("doc_id"),
@@ -2713,7 +2685,7 @@ object ExtensionQueries {
 
   private[graft] def gifMetaFixture(s: SparkSession, dir: String)
       : DataFrame =
-    spread(t(s, dir, "documents"))
+    t(s, dir, "documents")
       .select(col("doc_id"),
         when(col("doc_id") % 2 === 0, col("doc_id")).as("__still"))
       .select(col("doc_id"),
@@ -2760,7 +2732,7 @@ object ExtensionQueries {
 
   private[graft] def webpMetaFixture(s: SparkSession, dir: String)
       : DataFrame =
-    spread(t(s, dir, "documents"))
+    t(s, dir, "documents")
       .select(col("doc_id"),
         when(col("doc_id") % 2 === 0, webpBits).as("__bits"))
       .select(col("doc_id"),
@@ -2768,7 +2740,7 @@ object ExtensionQueries {
           .otherwise(webpAnimBlob).as("blob"))
 
   private[graft] def webpFixture(s: SparkSession, dir: String): DataFrame =
-    spread(t(s, dir, "documents"))
+    t(s, dir, "documents")
       .select(col("doc_id"), webpBits.as("__bits"))
       .select(col("doc_id"), webpAssemble(col("__bits")).as("blob"))
 
@@ -2789,7 +2761,7 @@ object ExtensionQueries {
   private[graft] def mp4FixtureWithData(s: SparkSession, dir: String)
       : DataFrame = {
     val dataLit = lit(mp4DataRegion)
-    spread(t(s, dir, "documents"))
+    t(s, dir, "documents")
       .select(col("doc_id"), mp4Blob.as("hdr"))
       .select(col("doc_id"), concat(col("hdr"),
         dataLit.substr((octet_length(col("hdr")) + 1).cast("int"),
@@ -2825,10 +2797,10 @@ object ExtensionQueries {
   }
 
   private[graft] def mp3Fixture(s: SparkSession, dir: String): DataFrame =
-    spread(t(s, dir, "documents")).select(col("doc_id"), mp3Blob.as("blob"))
+    t(s, dir, "documents").select(col("doc_id"), mp3Blob.as("blob"))
 
   private[graft] def flacFixture(s: SparkSession, dir: String): DataFrame =
-    spread(t(s, dir, "documents"))
+    t(s, dir, "documents")
       .select(col("doc_id"), flacFrameVals.as("__fv"))
       .select(col("doc_id"), flacBlob(col("__fv")).as("blob"))
 
@@ -2890,7 +2862,7 @@ object ExtensionQueries {
     // index) and every odd doc is an update (survives); the delta also
     // carries one within-batch duplicate pair per odd doc's twin
     "dedup_incremental" -> ((s, dir) => {
-      val docs = spread(t(s, dir, "documents"))
+      val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val delta1 = docs.select((col("doc_id") + 1000000L).as("doc_id"),
         when(col("doc_id") % 2 === 0, col("text"))
@@ -2907,10 +2879,10 @@ object ExtensionQueries {
     // anti-join scans only the delta's digest buckets instead of the
     // corpus-scaled index; identical output by the same oracle
     "dedup_incremental_bucketed" -> ((s, dir) => {
-      val docs = spread(t(s, dir, "documents"))
+      val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       def build(d: String) = Dedup.buildDigestIndexBucketed(
-        spread(t(s, d, "documents")).select(col("doc_id"), col("text")),
+        t(s, d, "documents").select(col("doc_id"), col("text")),
         "text", tmpArtifact("graft_digest_index", d))
       val cached = digestIndexCache.computeIfAbsent(dir, build(_))
       val index =
@@ -2935,7 +2907,7 @@ object ExtensionQueries {
     // index is memoized per (sfDir, JVM) and self-heals a reaped /tmp
     // path (same contract as sim_topk_ivf_indexed).
     "dedup_incremental_near" -> ((s, dir) => {
-      val docs = spread(t(s, dir, "documents"))
+      val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val index = lshIndexFor(s, dir)
       val delta = docs.select((col("doc_id") + 1000000L).as("doc_id"),
@@ -2951,10 +2923,10 @@ object ExtensionQueries {
     // same full value oracle; the plan spec pins non-empty
     // PartitionFilters on BOTH index scans
     "dedup_bucketed_probe" -> ((s, dir) => {
-      val docs = spread(t(s, dir, "documents"))
+      val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       def build(d: String) = Dedup.buildLshIndexBucketed(
-        spread(t(s, d, "documents")).select(col("doc_id"), col("text")),
+        t(s, d, "documents").select(col("doc_id"), col("text")),
         "text", "doc_id", tmpArtifact("graft_lsh_bucketed", d))
       val cached = bucketedLshCache.computeIfAbsent(dir, build(_))
       val index =
@@ -2976,7 +2948,7 @@ object ExtensionQueries {
     // identical index) and post-append PartitionFilters contracts are
     // spec-pinned
     "dedup_bucketed_append_probe" -> ((s, dir) => {
-      val docs = spread(t(s, dir, "documents"))
+      val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val path = memoizedFixture(tmpArtifact("graft_lsh_bapp", dir)) {
         tmp =>
@@ -2999,7 +2971,7 @@ object ExtensionQueries {
     // same delta — identical output to dedup_incremental_bucketed by
     // the same oracle
     "dedup_incremental_bucketed_append" -> ((s, dir) => {
-      val docs = spread(t(s, dir, "documents"))
+      val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val path = memoizedFixture(tmpArtifact("graft_digest_bapp", dir)) {
         tmp =>
@@ -3025,7 +2997,7 @@ object ExtensionQueries {
     // uncompacted probe's full value oracle; the spec additionally pins
     // the file-count reduction
     "dedup_compacted_probe" -> ((s, dir) => {
-      val docs = spread(t(s, dir, "documents"))
+      val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       def build(d: String) = Dedup.compactLshIndex(s, lshIndexFor(s, d),
         tmpArtifact("graft_lsh_compact", d), filesPerRelation = 1)
@@ -3048,7 +3020,7 @@ object ExtensionQueries {
     // construction; the oracle recomputes the exact position-set
     // membership, so even a false positive would match).
     "dedup_bloom" -> ((s, dir) => {
-      val docs = spread(t(s, dir, "documents"))
+      val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val delta = docs.select((col("doc_id") + 1000000L).as("doc_id"),
         when(col("doc_id") % 2 === 0, col("text"))
@@ -3062,13 +3034,8 @@ object ExtensionQueries {
     // between sources — the "how much does crawl A repeat crawl B"
     // pre-mixing report. Sources share boilerplate-free synthetic text,
     // so overlap comes from genuinely shared shingles
-    // spread (round 18): the shingle kernel rode the single-split scan —
-    // one 0.48 s task shingling the whole table while 31 cores idled
-    // (per-job profile); the 32-way exchange moves raw text once and the
-    // kernel parallelizes, the same rule every other kernel-heavy
-    // entry follows
     "corpus_source_sim" -> ((s, dir) =>
-      Sketches.groupShingleJaccard(spread(t(s, dir, "documents")), "source",
+      Sketches.groupShingleJaccard(t(s, dir, "documents"), "source",
           "text", shingleK = 3)
         .orderBy(col("g_a"), col("g_b"))),
 
@@ -3166,7 +3133,6 @@ object ExtensionQueries {
         "text", "doc_id")
         .select(col("doc_id"), col("n_lines"), col("n_removed"),
           col("clean_sha"))
-        .pinLazy()
         .orderBy(col("doc_id"))),
 
     // ---- sampling / corpus mixing ----
@@ -3651,7 +3617,6 @@ object ExtensionQueries {
           TF.tokenCount(col("text")).as("n_tokens"),
           TF.punctCount(col("text")).as("n_punct"),
           TF.digitCount(col("text")).as("n_digits"))
-        .pinLazy()
         .orderBy(col("doc_id"))),
 
     "text_profile" -> ((s, dir) =>
@@ -3666,7 +3631,6 @@ object ExtensionQueries {
           TF.qualityScoreFromSignals(col("sig")).as("quality"),
           col("sig.n_subwords").as("n_subwords"),
           TF.stopwordRatioFromSignals(col("sig")).as("stopword_ratio"))
-        .pinLazy()
         .orderBy(col("doc_id"))),
 
     // corpus-LM surprisal quality score: add-1 unigram LM over the top-256
@@ -3704,7 +3668,6 @@ object ExtensionQueries {
         .select(col("doc_id"), col("sc.n_toks").as("n_toks"),
           col("sc.w_sum").as("w_sum"), col("sc.score_ppk").as("score_ppk"),
           (col("sc.score_ppk") >= 1000000L).as("keep"))
-        .pinLazy()
         .orderBy(col("doc_id"))),
 
     // URL decomposition over synthesized provenance URLs: host /
@@ -3741,7 +3704,7 @@ object ExtensionQueries {
         substring(col("text"), 31, 18),
         lit(" &amp; closing words</p><footer><a>Terms</a> " +
           "<a>Privacy</a></footer><script>var x = 1 + 2;</script>"))
-      spread(t(s, dir, "documents"))
+      t(s, dir, "documents")
         .select(col("doc_id"), html.as("html"))
         // Generate barrier: one kernel eval feeds all three fields
         // (a bare alias would be CollapseProject-inlined per field)
@@ -3780,7 +3743,7 @@ object ExtensionQueries {
             lit(s".example/maps/m$i.xml</loc></sitemap>"))
         }: _*),
         lit("</sitemapindex>"))
-      spread(t(s, dir, "documents"))
+      t(s, dir, "documents")
         .select(d, when(even, urlset).otherwise(smIndex).as("xml"),
           when(even, lit("urlset")).otherwise(lit("sitemapindex"))
             .as("kind"))
@@ -3804,7 +3767,7 @@ object ExtensionQueries {
     "frontier_urls" -> ((s, dir) => {
       val d = col("doc_id")
       val b = (d - pmod(d, lit(2L))) // announced page set: even base
-      val urls = spread(t(s, dir, "documents"))
+      val urls = t(s, dir, "documents")
         .select(d, b.as("b"))
         .select(col("b"), explode(array(lit(0), lit(1), lit(2)))
           .as("i"))
@@ -3852,7 +3815,7 @@ object ExtensionQueries {
           lit("?a=1&utm_campaign")))
         .otherwise(concat(
           lit("HTTPS://SRC.example.com/doc-"), b, lit("?&a=1")))
-      spread(t(s, dir, "documents"))
+      t(s, dir, "documents")
         .select(d, TF.urlCanonical(url).as("canon"))
         .groupBy(col("canon"))
         .agg(min(col("doc_id")).as("survivor_id"),
@@ -3885,7 +3848,7 @@ object ExtensionQueries {
         .when(r === 2, concat(
           when(even, lit("/g/x-")).otherwise(lit("/open/x-")), d))
         .otherwise(concat(lit("/any/"), d))
-      spread(t(s, dir, "documents"))
+      t(s, dir, "documents")
         .select(d, robots.as("robots"), agent.as("agent"),
           path.as("path"))
         .select(col("doc_id"), col("path"), explode(array(
@@ -3985,7 +3948,6 @@ object ExtensionQueries {
         .select(col("doc_id"), TF.cleanText(col("s")).as("clean"),
           length(col("s")).as("n_chars_raw"))
         .withColumn("n_chars_clean", length(col("clean")))
-        .pinLazy()
         .orderBy(col("doc_id"))),
 
     // markup extraction: the corpus is plain text, so the query builds a
@@ -4004,7 +3966,6 @@ object ExtensionQueries {
         .select(col("doc_id"), TF.stripMarkup(html).as("clean"),
           regexp_count(html, lit(TF.TagPattern)).as("n_tags"),
           (TF.stripMarkup(html) === plain).as("roundtrip_ok"))
-        .pinLazy()
         .orderBy(col("doc_id"))
     }),
 
@@ -4029,7 +3990,7 @@ object ExtensionQueries {
         "A &amp; B &lt;tag&gt; and {{cite web|url=x}} ref<ref>x</ref>.")
       val wt = element_at(array(samples.map(lit): _*),
         (pmod(col("doc_id"), lit(6L)) + 1L).cast("int"))
-      spread(t(s, dir, "documents"))
+      t(s, dir, "documents")
         .select(col("doc_id"), TF.wikitextStrip(wt).as("clean"))
         .orderBy(col("doc_id"))
     }),
@@ -4063,7 +4024,6 @@ object ExtensionQueries {
         .select(col("doc_id"),
           TF.fingerprintPoly(col("text")).as("fingerprint"),
           length(TF.normalize(col("text"))).as("n_norm_chars"))
-        .pinLazy()
         .orderBy(col("doc_id"))),
 
     // PII scrub (training-data scrubbing): the synthetic corpus carries no
@@ -4092,7 +4052,6 @@ object ExtensionQueries {
           col("c.n_email").as("n_email"),
           col("c.n_phone").as("n_phone"),
           col("c.n_ip").as("n_ip"))
-        .pinLazy()
         .orderBy(col("doc_id"))
     }),
 
@@ -4142,7 +4101,6 @@ object ExtensionQueries {
     "text_chunks_window" -> ((s, dir) =>
       Chunking.tokenWindows(t(s, dir, "documents"), "text", "doc_id",
           window = 32, stride = 24)
-        .pinLazy()
         .orderBy(col("doc_id"), col("chunk_id"))),
 
     // greedy in-order sequence packing into 256-token budgets across 8
@@ -4319,7 +4277,6 @@ object ExtensionQueries {
           datediff(col("od"), lit(java.sql.Date.valueOf("1970-01-01")))
             .cast("long").as("od_days"),
           aggregate(col("keys"), lit(0L), (a, x) => a + x).as("keys_sum"))
-        .pinLazy()
         .orderBy(col("o_orderkey"))
     }),
 
@@ -4332,7 +4289,6 @@ object ExtensionQueries {
           "source STRING, n_chars LONG").json(path)
         .select(col("doc_id"), length(col("text")).as("text_len"),
           sha2(col("text"), 256).as("text_sha"), col("lang"), col("source"))
-        .pinLazy()
         .orderBy(col("doc_id"))
     }),
 
@@ -4373,7 +4329,6 @@ object ExtensionQueries {
       s.read.orc(path)
         .select(col("doc_id"), length(col("text")).as("text_len"),
           sha2(col("text"), 256).as("text_sha"), col("lang"), col("source"))
-        .pinLazy()
         .orderBy(col("doc_id"))
     }),
 
@@ -4404,9 +4359,7 @@ object ExtensionQueries {
     // full value multiset — one array-percentile buffer computes the
     // identical interpolated values; sha/countDistinct hoisted so each
     // is computed once and the derived columns project from the
-    // aggregate row (0.37 → 0.31 s). A spread() of the scan was
-    // measured WORSE (0.40 s) — the sha+tokenize kernel is too cheap
-    // to pay for an exchange of the raw text.
+    // aggregate row (0.37 → 0.31 s).
     "corpus_report" -> ((s, dir) =>
       t(s, dir, "documents")
         .select(sha2(col("text"), 256).as("sha"),
@@ -4492,7 +4445,7 @@ object ExtensionQueries {
     // iterations in HUGEINT with identical truncation rules.
     "emb_dominant_dir" -> ((s, dir) =>
       graft.operators.Embeddings.dominantDirection(
-          spread(t(s, dir, "embeddings")), "embedding", iters = 2)
+          t(s, dir, "embeddings"), "embedding", iters = 2)
         .orderBy(col("pos"))),
 
     // the removal audit: project out the dominant direction row-locally
@@ -4500,7 +4453,7 @@ object ExtensionQueries {
     // quantized norms — the full all-but-the-top pipeline cost (two
     // training scans + one audit scan)
     "emb_deproject" -> ((s, dir) => {
-      val emb = spread(t(s, dir, "embeddings"))
+      val emb = t(s, dir, "embeddings")
       val d = graft.operators.Embeddings.dominantDirection(
           emb, "embedding", iters = 2)
         .orderBy(col("pos")).collect().map(_.getLong(1))
@@ -4516,7 +4469,7 @@ object ExtensionQueries {
     // iterations + the truncated-division deflation) in HUGEINT.
     "emb_top_dirs" -> ((s, dir) =>
       graft.operators.Embeddings.topDirections(
-          spread(t(s, dir, "embeddings")), "embedding", k = 2, iters = 2)
+          t(s, dir, "embeddings"), "embedding", k = 2, iters = 2)
         .orderBy(col("k"), col("pos"))),
 
     // the COMPLETE all-but-the-top pipeline (round 10): train the top-2
@@ -4524,7 +4477,7 @@ object ExtensionQueries {
     // per-level coefficients + before/after norms; the oracle replays
     // training AND both sequential removals end-to-end in HUGEINT
     "emb_deproject_topk" -> ((s, dir) => {
-      val emb = spread(t(s, dir, "embeddings"))
+      val emb = t(s, dir, "embeddings")
       val byK = graft.operators.Embeddings.topDirections(
           emb, "embedding", k = 2, iters = 2)
         .collect().groupBy(_.getInt(0)).toSeq.sortBy(_._1)
@@ -4545,7 +4498,7 @@ object ExtensionQueries {
       // indexes, so a repeat invocation times the PROBE alone (Bench's
       // _probe pass relies on this).
       def build(d: String) = InvertedIndex.build(
-        spread(t(s, d, "documents")), "text", "doc_id",
+        t(s, d, "documents"), "text", "doc_id",
         s"${System.getProperty("java.io.tmpdir")}/graft_term_index_" +
           Integer.toHexString(d.hashCode) + "_" +
           ProcessHandle.current().pid(),
@@ -4563,7 +4516,7 @@ object ExtensionQueries {
     // aggregate over the pruned postings — no per-term self-join)
     "text_index_and" -> ((s, dir) => {
       def build(d: String) = InvertedIndex.build(
-        spread(t(s, d, "documents")), "text", "doc_id",
+        t(s, d, "documents"), "text", "doc_id",
         s"${System.getProperty("java.io.tmpdir")}/graft_term_index_" +
           Integer.toHexString(d.hashCode) + "_" +
           ProcessHandle.current().pid(),
@@ -4650,9 +4603,6 @@ object ExtensionQueries {
     // lexical more-like-this: corpus ranked against each query doc by
     // shared-term overlap in integer fixed point (query-vocab-bounded
     // broadcast — see Retrieval scaladoc for the 100 TB shape)
-    // round 18: spread() of the corpus side was measured WORSE here
-    // (0.93 -> 1.07 s) — the MLT kernel doesn't pay for an exchange
-    // of the raw text at this shape; left on the single-split scan
     "sim_mlt_lexical" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       Retrieval.moreLikeThis(docs, docs.filter(col("doc_id") < 10),
@@ -4667,9 +4617,6 @@ object ExtensionQueries {
     "sim_hybrid_rrf" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val emb = t(s, dir, "embeddings")
-      // round 18: spread() of both corpus-side kernels was measured
-      // WORSE (1.16 -> 1.67 s) — the exchanges cost more than the
-      // single-task kernels; left on the single-split scans
       val lex = Retrieval.moreLikeThis(docs,
           docs.filter(col("doc_id") < 10), "text", "doc_id", k = 20)
         .select(col("query_id"), col("doc_id").as("id"), col("rank"))
@@ -4708,7 +4655,6 @@ object ExtensionQueries {
             .otherwise((col("bg.n_bigrams") - col("bg.n_distinct_bg"))
               .cast("double") / col("bg.n_bigrams").cast("double")),
             lit(0.0)).as("dup_bigram_frac"))
-        .pinLazy()
         .orderBy(col("doc_id"))
     }),
 
@@ -4725,7 +4671,6 @@ object ExtensionQueries {
           when(col("sig.n_norm_toks") === 0, lit(0.0))
             .otherwise(col("sig.lang_ev_score").cast("double") /
               col("sig.n_norm_toks").cast("double")).as("marker_ratio"))
-        .pinLazy()
         .orderBy(col("doc_id"))),
 
     // end-to-end keep/drop decision (C4/Gopher-style): quality score +
@@ -4742,7 +4687,6 @@ object ExtensionQueries {
         .withColumn("keep",
           col("quality") >= 0.95 && col("lang_pred") === "en" &&
             col("distinct_ratio") >= 0.5)
-        .pinLazy()
         .orderBy(col("doc_id"))),
 
     // duplicate word-n-gram UNION coverage (the Gopher repetition rules
@@ -4766,7 +4710,6 @@ object ExtensionQueries {
           when(col("c5.n_tokens") === 0, lit(0.0))
             .otherwise(col("c5.covered").cast("double") /
               col("c5.n_tokens").cast("double")).as("dup5_frac"))
-        .pinLazy()
         .orderBy(col("doc_id"))),
 
     // Gopher structural rule battery: NAMED per-rule booleans with
@@ -4775,7 +4718,6 @@ object ExtensionQueries {
     "text_gopher_rules" -> ((s, dir) =>
       QualityRules.gopherRules(t(s, dir, "documents"), "text", "doc_id",
           minWords = 20, maxWords = 5000)
-        .pinLazy()
         .orderBy(col("doc_id"))),
 
     // the eyeball report next to the counts: the 3 smallest-id documents
@@ -4808,7 +4750,7 @@ object ExtensionQueries {
     // row-local replace chains (codegen'd, zero shuffle); the oracle
     // runs the SAME table through SQL replace, generated from one list
     "text_bpe_tokens" -> ((s, dir) =>
-      spread(t(s, dir, "documents"))
+      t(s, dir, "documents")
         .select(col("doc_id"), TF.normTokens(col("text")).as("toks"))
         .select(col("doc_id"),
           length(concat_ws("", col("toks"))).as("n_chars"),
@@ -4830,7 +4772,7 @@ object ExtensionQueries {
       val aug = concat(col("text"), element_at(
         array(sfx.map(lit): _*),
         (pmod(col("doc_id"), lit(sfx.length.toLong)) + 1L).cast("int")))
-      spread(t(s, dir, "documents"))
+      t(s, dir, "documents")
         .select(col("doc_id"), aug.as("s_txt"))
         .select(col("doc_id"), TF.byteBpeStats(col("s_txt")).as("b"))
         .select(col("doc_id"), col("b.n_bytes").as("n_bytes"),
@@ -4848,7 +4790,7 @@ object ExtensionQueries {
     // 256-char prefix bounds DP work and keeps the piece count under
     // the 1024 tie-break modulus.
     "text_unigram_score" -> ((s, dir) =>
-      spread(t(s, dir, "documents"))
+      t(s, dir, "documents")
         .select(col("doc_id"),
           TF.unigramScore(lower(substring(col("text"), 1, 256)))
             .as("u"))
@@ -4863,7 +4805,7 @@ object ExtensionQueries {
     // spec-pinned). Oracle: a recursive CTE stepping by the longest
     // CASE match, generated from the same vocabulary constant.
     "text_greedy_segment" -> ((s, dir) =>
-      spread(t(s, dir, "documents"))
+      t(s, dir, "documents")
         .select(col("doc_id"),
           TF.greedySegment(lower(substring(col("text"), 1, 256)))
             .as("w"))
@@ -4951,7 +4893,6 @@ object ExtensionQueries {
           Multimodal.mediaDims(col("blob")).as("dims"))
         .select(col("doc_id"), col("kind"),
           col("dims.width").as("width"), col("dims.height").as("height"))
-        .pinLazy()
         .orderBy(col("doc_id"))
     }),
 
@@ -5003,7 +4944,6 @@ object ExtensionQueries {
           col("m.bits_per_sample").as("bits_per_sample"),
           col("m.n_frames").as("n_frames"),
           col("m.duration_ms").as("duration_ms"))
-        .pinLazy()
         .orderBy(col("doc_id"))
     }),
 
@@ -5027,7 +4967,6 @@ object ExtensionQueries {
         .toDF()
         .select(col("doc_id"), col("chunk_index"), col("offset"),
           sha2(col("chunk"), 256).as("chunk_sha"))
-        .pinLazy()
         .orderBy(col("doc_id"), col("chunk_index"))),
 
     // REAL audio decode (closes the round-6 "decode is a stub" gap): each
@@ -5066,7 +5005,6 @@ object ExtensionQueries {
                 .as("__webp_bits"))
             .select(col("doc_id"), blob.as("blob")), "doc_id")
         .toDF()
-        .pinLazy()
         .orderBy(col("doc_id"))
     }),
 
@@ -5074,7 +5012,7 @@ object ExtensionQueries {
     // docs FLAC — one per-channel profile relation out, kind attached
     "mm_audio_any" -> ((s, dir) => {
       Multimodal.extractAnyAudioFeatures(
-          spread(t(s, dir, "documents")).select(col("doc_id"),
+          t(s, dir, "documents").select(col("doc_id"),
               when(col("doc_id") % 2 === 0, flacFrameVals).as("__fv"))
             .select(col("doc_id"),
               when(col("doc_id") % 2 === 1, wavPcmBlob)
@@ -5163,11 +5101,6 @@ object ExtensionQueries {
           col("size"),
           pmod(col("packed"), lit(packShift)).as("slice_sum"),
           TF.intDivNonNeg(col("packed"), lit(packShift)).as("slice_wsum"))
-        // round 18: this entry missed the round-17 pin pass — the
-        // output sort's sample pass re-ran the whole mp4-walk +
-        // hex-fold kernel (per-job profile: two identical 0.5 s 32-task
-        // jobs per run); pinned, the kernel runs once
-        .pinLazy()
         .orderBy(col("doc_id"), col("sample_idx"))
     }),
 
@@ -5304,7 +5237,7 @@ object ExtensionQueries {
     "source_zstd_encode" -> ((s, dir) => {
       val enc = graft.plans.MediaExprs.zstdCompressCol(
         encode(col("text"), "UTF-8"))
-      spread(t(s, dir, "documents"))
+      t(s, dir, "documents")
         .select(col("doc_id"),
           graft.plans.MediaExprs.zstdDecompressCol(enc).as("rt"))
         .select(col("doc_id"),
@@ -5322,7 +5255,7 @@ object ExtensionQueries {
     "source_lz4_encode" -> ((s, dir) => {
       val enc = graft.plans.MediaExprs.lz4CompressCol(
         encode(col("text"), "UTF-8"))
-      spread(t(s, dir, "documents"))
+      t(s, dir, "documents")
         .select(col("doc_id"),
           graft.plans.MediaExprs.lz4DecompressCol(enc).as("rt"))
         .select(col("doc_id"),
@@ -5370,7 +5303,7 @@ object ExtensionQueries {
           (0 until 5 + v).map(e => (e.toString.getBytes, ev(e))),
           codec = 1)
       }
-      val fixture = spread(t(s, dir, "documents"))
+      val fixture = t(s, dir, "documents")
         .select(col("doc_id"), element_at(
           array(variants.map(lit): _*),
           (pmod(col("doc_id"), lit(4L)) + 1L).cast("int")).as("blob"))
@@ -5489,7 +5422,7 @@ object ExtensionQueries {
       val d = col("doc_id")
       val r = pmod(d, lit(4L))
       def asc(c: org.apache.spark.sql.Column) = encode(c, "utf-8")
-      val base = spread(t(s, dir, "documents"))
+      val base = t(s, dir, "documents")
         .select(d, substring(col("text"), 1, 24).as("w"))
       val htmlCafe = concat(lit("<p>"), col("w"),
         lit(" café</p>"))
@@ -5523,7 +5456,7 @@ object ExtensionQueries {
       val crlf = "\r\n"
       val html = concat(lit("<p>"), substring(col("text"), 1, 40),
         lit("</p>"))
-      val base = spread(t(s, dir, "documents"))
+      val base = t(s, dir, "documents")
         .select(d, encode(html, "utf-8").as("payload"))
         .select(d, col("payload"),
           when(d % 2 === 0, graft.plans.MediaExprs
@@ -5569,7 +5502,7 @@ object ExtensionQueries {
     // oracle replays the closed-form pixel arithmetic
     "mm_warc_images" -> ((s, dir) => {
       val fixture = warcResponseZstBlobs(
-        spread(t(s, dir, "documents"))
+        t(s, dir, "documents")
           .select(col("doc_id"), bmpBlob.as("payload")),
         "image/bmp")
       fixture.select(explode(graft.plans.MediaExprs
@@ -5602,7 +5535,7 @@ object ExtensionQueries {
       val base = t(s, dir, "documents")
         .select(col("doc_id").as("b_id"), col("text").as("b_text"),
           col("source").as("b_source"))
-      val grouped = spread(t(s, dir, "documents"))
+      val grouped = t(s, dir, "documents")
         .select(col("doc_id"),
           (col("doc_id") - pmod(col("doc_id"), lit(3L))).as("b_id"))
         .join(broadcast(base), "b_id")
@@ -5632,7 +5565,7 @@ object ExtensionQueries {
       val base = t(s, dir, "documents")
         .select(col("doc_id").as("b_id"), col("text").as("b_text"),
           col("source").as("b_source"))
-      val grouped = spread(t(s, dir, "documents"))
+      val grouped = t(s, dir, "documents")
         .select(col("doc_id"),
           (col("doc_id") - pmod(col("doc_id"), lit(3L))).as("b_id"))
         .join(broadcast(base), "b_id")
@@ -5679,7 +5612,7 @@ object ExtensionQueries {
       val base = t(s, dir, "documents")
         .select(col("doc_id").as("b_id"), col("text").as("b_text"),
           col("source").as("b_source"))
-      val grouped = spread(t(s, dir, "documents"))
+      val grouped = t(s, dir, "documents")
         .select(col("doc_id"),
           (col("doc_id") - pmod(col("doc_id"), lit(3L))).as("b_id"))
         .join(broadcast(base), "b_id")
@@ -5758,7 +5691,7 @@ object ExtensionQueries {
         contentB, helvB,
         when(r === 1, infoUtf16).otherwise(infoPlain)),
         broken = r === 3, trailerExtra = "/Info 6 0 R ")
-      val hoisted = spread(t(s, dir, "documents"))
+      val hoisted = t(s, dir, "documents")
         .select(d, col("text"))
         .select(d, classicWithInfo.as("classic"))
       val blobs = hoisted.select(col("doc_id"),
@@ -5831,7 +5764,7 @@ object ExtensionQueries {
           lead(col("off"), 1).over(Window.orderBy("off")),
           lit(WikiMsDumpLen)))
       val idx2 = idx.join(ends, "off")
-      val docs = spread(t(s, dir, "documents")).select(col("doc_id"),
+      val docs = t(s, dir, "documents").select(col("doc_id"),
         (lit(1L) + pmod(col("doc_id"), lit(5L))).as("target"))
       docs.join(broadcast(idx2), col("target") === col("page_id"))
         .select(col("doc_id"), col("target"), col("off"),
@@ -5873,7 +5806,7 @@ object ExtensionQueries {
       val spec = Spec(Seq(Field(1, "a", PVarint), Field(2, "b", PSint),
         Field(3, "s", PString), Field(4, "d", PDouble),
         Field(5, "xs", PPackedVarint)))
-      spread(t(s, dir, "documents"))
+      t(s, dir, "documents")
         .select(d, graft.plans.ProtoExprs.protoDecodeCol(
           unhex(msgHex), spec).as("m"))
         .select(col("doc_id"), col("m.a").as("a"), col("m.b").as("b"),
@@ -5901,7 +5834,7 @@ object ExtensionQueries {
           (0 until 5 + v).map(e => (e.toString.getBytes, ev(e))),
           codec = 1)
       }
-      val fixture = spread(t(s, dir, "documents"))
+      val fixture = t(s, dir, "documents")
         .select(col("doc_id"), element_at(
           array(variants.map(lit): _*),
           (pmod(col("doc_id"), lit(4L)) + 1L).cast("int")).as("blob"))
@@ -5961,7 +5894,7 @@ object ExtensionQueries {
         lit("1f8b0800" + "00000000" + "0003" + "01"),
         le16h(pl), le16h(lit(65535L) - pl), hex(payload),
         le32h(crc32(payload)), le32h(pl)))
-      val fixture = spread(t(s, dir, "documents"))
+      val fixture = t(s, dir, "documents")
         .select(d, blob.as("blob"))
       Multimodal.extractGzipMembers(fixture, "doc_id").toDF()
         .select(col("doc_id"),
@@ -5999,7 +5932,7 @@ object ExtensionQueries {
         addLine(1, 0, 2), rmLine(1, 1, 0),  // v1: +f2, -f0
         addLine(2, 0, 3), addLine(2, 1, 0), // v2: +f3, f0 RE-ADDED
         rmLine(3, 0, 3))                    // v3: -f3
-      val lines = spread(t(s, dir, "documents"))
+      val lines = t(s, dir, "documents")
         .select(d, explode(log).as("a"))
         .select(col("doc_id"), col("a.version").as("version"),
           col("a.seq").as("seq"), col("a.line").as("line"))
@@ -6043,7 +5976,7 @@ object ExtensionQueries {
     // validity bitmaps honoured; templates rotate a two-batch and a
     // one-batch REAL pyarrow stream by doc
     "source_arrow_rows" -> ((s, dir) => {
-      val fixture = spread(t(s, dir, "documents"))
+      val fixture = t(s, dir, "documents")
         .select(col("doc_id"), unhex(element_at(
           array(ArrowStreamHex.map(lit): _*),
           (pmod(col("doc_id"), lit(2L)) + 1L).cast("int"))).as("blob"))
@@ -6064,7 +5997,7 @@ object ExtensionQueries {
     // indices, and per-buffer zstd / LZ4-frame decompression through
     // the repo's own golden-pinned decoders
     "source_arrow_dict" -> ((s, dir) => {
-      val fixture = spread(t(s, dir, "documents"))
+      val fixture = t(s, dir, "documents")
         .select(col("doc_id"), unhex(element_at(
           array(ArrowDictHex.map(lit): _*),
           (pmod(col("doc_id"), lit(2L)) + 1L).cast("int"))).as("blob"))
@@ -6083,7 +6016,7 @@ object ExtensionQueries {
     // node/buffer cursor walk, float32 exact-widened), reduced to
     // closed-form scalars for the gate
     "source_arrow_list" -> ((s, dir) => {
-      val fixture = spread(t(s, dir, "documents"))
+      val fixture = t(s, dir, "documents")
         .select(col("doc_id"), unhex(element_at(
           array(ArrowListHex.map(lit): _*),
           (pmod(col("doc_id"), lit(2L)) + 1L).cast("int"))).as("blob"))
@@ -6110,7 +6043,7 @@ object ExtensionQueries {
     // scalars for the gate: entry count (null map distinct from empty
     // map), joined keys, value sum
     "source_arrow_map" -> ((s, dir) => {
-      val fixture = spread(t(s, dir, "documents"))
+      val fixture = t(s, dir, "documents")
         .select(col("doc_id"), unhex(element_at(
           array(ArrowMapHex.map(lit): _*),
           (pmod(col("doc_id"), lit(2L)) + 1L).cast("int"))).as("blob"))
@@ -6150,7 +6083,7 @@ object ExtensionQueries {
         lit("62" + "6f6b"),                // "ok":
         when(d % 2L === 0L, lit("f5")).otherwise(lit("f4")),
         lit("64" + "6e6f7465"), lit("f6")) // "note": null
-      spread(t(s, dir, "documents"))
+      t(s, dir, "documents")
         .select(d, graft.plans.MediaExprs.cborToJsonCol(unhex(blobHex))
           .as("json"))
         .select(col("doc_id"), col("json"),
@@ -6172,7 +6105,7 @@ object ExtensionQueries {
           blob(blob.length - 1) = (blob(blob.length - 1) ^ 1).toByte
         blob
       }
-      val fixture = spread(t(s, dir, "documents"))
+      val fixture = t(s, dir, "documents")
         .select(col("doc_id"), element_at(
           array(variants.map(lit): _*),
           (pmod(col("doc_id"), lit(4L)) + 1L).cast("int")).as("blob"))
@@ -6195,7 +6128,7 @@ object ExtensionQueries {
             ("label", Seq(e.toLong, v.toLong)),
             ("score", Seq(e * 0.5f, 1.25f)))))
       }
-      val fixture = spread(t(s, dir, "documents"))
+      val fixture = t(s, dir, "documents")
         .select(col("doc_id"), element_at(
           array(variants.map(lit): _*),
           (pmod(col("doc_id"), lit(4L)) + 1L).cast("int")).as("blob"))
@@ -6263,7 +6196,7 @@ object ExtensionQueries {
     // JPEGs (even docs) report no-EXIF/0 rather than erroring
     "mm_exif_orientation" -> ((s, dir) =>
       Multimodal.extractExifMeta(
-        spread(t(s, dir, "documents")).select(col("doc_id"),
+        t(s, dir, "documents").select(col("doc_id"),
           when(col("doc_id") % 2 === 1, jpegExifBlob)
             .otherwise(jpegBlob).as("blob")), "doc_id")
         .toDF()
@@ -6379,7 +6312,6 @@ object ExtensionQueries {
           t(s, dir, "documents").select(col("doc_id"), blob.as("blob")),
           "doc_id")
         .toDF()
-        .pinLazy()
         .orderBy(col("doc_id"), col("channel"))
     }),
 
@@ -6404,7 +6336,6 @@ object ExtensionQueries {
     "mm_bmp_features" -> ((s, dir) =>
       Multimodal.extractImageFeatures(bmpFixture(s, dir), "doc_id")
         .toDF()
-        .pinLazy()
         .orderBy(col("doc_id"))),
 
     // REAL compressed-image decode (round 9): PNGs whose IDAT inflates
@@ -6463,7 +6394,6 @@ object ExtensionQueries {
       Multimodal.extractImagePatches(bmpFixture(s, dir), "doc_id",
           patch = 2)
         .toDF()
-        .pinLazy()
         .orderBy(col("doc_id"), col("patch_y"), col("patch_x"))),
 
     // sentence-aligned chunks at a 200-char budget: chunk assignment is
@@ -6491,7 +6421,6 @@ object ExtensionQueries {
           when(col("n_sentences") === 0L, lit(0.0))
             .otherwise(col("total_chars").cast("double") /
               col("n_sentences").cast("double")))
-        .pinLazy()
         .orderBy(col("doc_id"))),
 
     // FLAC STREAMINFO: planted bit-packed fields (sample rate split
@@ -6530,7 +6459,6 @@ object ExtensionQueries {
           col("m.bits_per_sample").as("bits_per_sample"),
           col("m.total_samples").as("total_samples"),
           col("m.duration_ms").as("duration_ms"))
-        .pinLazy()
         .orderBy(col("doc_id"))
     }),
 
@@ -6574,7 +6502,6 @@ object ExtensionQueries {
               when(col("doc_id") % 6 === 2, pngScan).as("__png_scan"))
             .select(col("doc_id"), blob.as("blob")), "doc_id")
         .toDF()
-        .pinLazy()
         .orderBy(col("doc_id"))
     }),
 
@@ -6709,7 +6636,6 @@ object ExtensionQueries {
         .select(col("doc_id"), col("card"),
           TF.luhnValid(col("card")).as("luhn_valid"),
           length(col("card")).as("n_digits"))
-        .pinLazy()
         .orderBy(col("doc_id"), col("card"))
     }),
 
@@ -6775,7 +6701,7 @@ object ExtensionQueries {
       val path = memoizedFixture(
           tmpArtifact("graft_warczst_export", dir)) { d =>
         graft.sources.ZstdSeekable.writeWarcZstShards(
-          spread(t(s, dir, "documents"))
+          t(s, dir, "documents")
             .select(col("doc_id"), col("text")), d)
       }
       val frames = graft.sources.ZstdSeekable
@@ -6791,7 +6717,6 @@ object ExtensionQueries {
             "WARC-Target-URI: http://corpus\\.local/doc/(\\d+)", 1)
             .cast("long").as("doc_id"),
           after.substr(lit(1), length(after) - 4).as("text"))
-        .pinLazy()
         .orderBy(col("doc_id"))
     }),
 
@@ -6819,7 +6744,7 @@ object ExtensionQueries {
           lit("\",\"n_chars\":"), col("n_chars"),
           lit(",\"lang\":\""), col("lang"), lit("\"}"))
         graft.sources.ZstdSeekable.writeWarcZstShards(
-          spread(t(s, dir, "documents"))
+          t(s, dir, "documents")
             .select(col("doc_id"), wat.as("wat")), d,
           textCol = "wat", recType = "metadata")
       }
@@ -6842,7 +6767,6 @@ object ExtensionQueries {
           get_json_object(col("payload"), "$.n_chars").cast("long")
             .as("n_chars"),
           get_json_object(col("payload"), "$.lang").as("lang"))
-        .pinLazy()
         .orderBy(col("doc_id"))
     }),
 
@@ -6854,7 +6778,7 @@ object ExtensionQueries {
         val html = concat(lit("<div class=\"doc\"><h1>"), col("source"),
           lit("</h1><p>"), esc, lit("</p><br/></div>"))
         graft.sources.ZstdSeekable.writeWarcZstShards(
-          spread(t(s, dir, "documents"))
+          t(s, dir, "documents")
             .select(col("doc_id"), html.as("html"))
             .select(col("doc_id"), TF.stripMarkup(col("html"))
               .as("clean")), d,
@@ -6874,7 +6798,6 @@ object ExtensionQueries {
           regexp_extract(col("rec"), "WARC-Type: ([a-z]+)", 1)
             .as("rec_type"),
           after.substr(lit(1), length(after) - 4).as("clean"))
-        .pinLazy()
         .orderBy(col("doc_id"))
     }),
 
@@ -6890,7 +6813,7 @@ object ExtensionQueries {
       val path = memoizedFixture(
           tmpArtifact("graft_warczstd_export", dir)) { d =>
         graft.sources.ZstdSeekable.writeWarcZstShards(
-          spread(t(s, dir, "documents"))
+          t(s, dir, "documents")
             .select(col("doc_id"), col("text")), d,
           dict = graft.sources.ZstdSeekable.WarcDict)
       }
@@ -6906,7 +6829,6 @@ object ExtensionQueries {
             "WARC-Target-URI: http://corpus\\.local/doc/(\\d+)", 1)
             .cast("long").as("doc_id"),
           after.substr(lit(1), length(after) - 4).as("text"))
-        .pinLazy()
         .orderBy(col("doc_id"))
     }),
 
@@ -6919,7 +6841,7 @@ object ExtensionQueries {
     "corpus_export_warczst_trained" -> ((s, dir) => {
       val path = memoizedFixture(
           tmpArtifact("graft_warczstt_export", dir)) { d =>
-        val docs = spread(t(s, dir, "documents"))
+        val docs = t(s, dir, "documents")
           .select(col("doc_id"), col("text"))
         val trained = graft.operators.ZstdDictTrain
           .trainRawDict(docs, "text", gram = 16, k = 256,
@@ -6939,7 +6861,6 @@ object ExtensionQueries {
             "WARC-Target-URI: http://corpus\\.local/doc/(\\d+)", 1)
             .cast("long").as("doc_id"),
           after.substr(lit(1), length(after) - 4).as("text"))
-        .pinLazy()
         .orderBy(col("doc_id"))
     }),
 
@@ -6953,7 +6874,7 @@ object ExtensionQueries {
       val path = memoizedFixture(
           tmpArtifact("graft_warcgz_export", dir)) { d =>
         graft.sources.WarcGz.writeWarcGzShards(
-          spread(t(s, dir, "documents"))
+          t(s, dir, "documents")
             .select(col("doc_id"), col("text")), d)
       }
       val members = graft.sources.WarcGz
@@ -6968,7 +6889,6 @@ object ExtensionQueries {
             "WARC-Target-URI: http://corpus\\.local/doc/(\\d+)", 1)
             .cast("long").as("doc_id"),
           after.substr(lit(1), length(after) - 4).as("text"))
-        .pinLazy()
         .orderBy(col("doc_id"))
     }),
 
@@ -6981,7 +6901,7 @@ object ExtensionQueries {
       val path = memoizedFixture(
           tmpArtifact("graft_arrow_export", dir)) { d =>
         graft.sources.ArrowShards.writeArrowShards(
-          spread(t(s, dir, "documents"))
+          t(s, dir, "documents")
             .select(col("doc_id"), col("text"), col("n_chars")), d,
           batchRows = 256)
       }
@@ -6991,7 +6911,6 @@ object ExtensionQueries {
             "n_chars" -> "long"))).as("r"))
         .select(col("r.doc_id").as("doc_id"), col("r.text").as("text"),
           col("r.n_chars").as("n_chars"))
-        .pinLazy()
         .orderBy(col("doc_id"))
     }),
 
@@ -7006,7 +6925,7 @@ object ExtensionQueries {
       val path = memoizedFixture(
           tmpArtifact("graft_arrow_dict_export", dir)) { d =>
         graft.sources.ArrowShards.writeArrowShards(
-          spread(t(s, dir, "documents"))
+          t(s, dir, "documents")
             .select(col("doc_id"), col("source"), col("text")), d,
           batchRows = 256, codec = "zstd", dictCols = Set("source"))
       }
@@ -7027,7 +6946,7 @@ object ExtensionQueries {
       val path = memoizedFixture(
           tmpArtifact("graft_arrow_struct_export", dir)) { d =>
         graft.sources.ArrowShards.writeArrowShards(
-          spread(t(s, dir, "documents"))
+          t(s, dir, "documents")
             .select(col("doc_id"),
               struct(col("source").as("source"),
                 col("n_chars").as("n_chars")).as("meta")), d,
@@ -7051,7 +6970,7 @@ object ExtensionQueries {
       val path = memoizedFixture(
           tmpArtifact("graft_arrow_map_export", dir)) { d =>
         graft.sources.ArrowShards.writeArrowShards(
-          spread(t(s, dir, "documents"))
+          t(s, dir, "documents")
             .select(col("doc_id"),
               map(lit("lang"), col("lang"),
                 lit("source"), col("source")).as("props")), d,
@@ -7078,7 +6997,7 @@ object ExtensionQueries {
       val path = memoizedFixture(
           tmpArtifact("graft_arrow_emb_export", dir)) { d =>
         graft.sources.ArrowShards.writeArrowShards(
-          spread(t(s, dir, "embeddings"))
+          t(s, dir, "embeddings")
             .select(col("vec_id"), col("embedding"), col("label")), d,
           batchRows = 256)
       }
@@ -7102,7 +7021,7 @@ object ExtensionQueries {
       val path = memoizedFixture(
           tmpArtifact("graft_tfrecord_export", dir)) { d =>
         graft.sources.TfRecordShards.writeExampleShards(
-          spread(t(s, dir, "documents"))
+          t(s, dir, "documents")
             .select(col("doc_id"), col("text"), col("n_chars")), d)
       }
       val recs = graft.operators.Multimodal.extractTfRecords(

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.plans.KernelPlacement
+
 /** Shared helpers for the driver-checked query set.
   *
   * Determinism contract with the DuckDB oracle (BASELINE.md): float
@@ -19,23 +21,28 @@ import org.apache.spark.sql.types.DecimalType
 object Q {
   type QueryFn = (SparkSession, String) => DataFrame
 
-  /** Footer-schema cache (round 17): `spark.read.parquet` runs parquet
+  /** Footer cache (round 17): `spark.read.parquet` runs parquet
     * schema inference on EVERY call — measured 88 ms against 12 ms with
     * an explicit schema, a fixed cost every bench row paid
     * 1-3× per rep. The schema of a testdata table is immutable within a
-    * process, so infer once per (dir, table) and hand the reader the
-    * explicit schema afterwards — the exact behavior a production
-    * catalog (metastore/Iceberg manifest) provides at scale; no data or
-    * results are cached. */
-  private val schemaCache =
+    * process, so infer once per path and hand the reader the explicit
+    * schema afterwards — the exact behavior a production catalog
+    * (metastore/Iceberg manifest) provides at scale; no data or results
+    * are cached. The table's parquet row-group total is read from the
+    * same footers once and recorded on the scan for
+    * [[graft.plans.KernelPlacement]], which `t` installs on the session. */
+  private val footerCache =
     new java.util.concurrent.ConcurrentHashMap[String,
-      org.apache.spark.sql.types.StructType]
+      (org.apache.spark.sql.types.StructType, Int)]
 
   def t(s: SparkSession, dir: String, name: String): DataFrame = {
+    KernelPlacement.setup(s)
     val path = s"$dir/$name.parquet"
-    val sch = schemaCache.computeIfAbsent(path,
-      p => s.read.parquet(p).schema)
-    s.read.schema(sch).parquet(path)
+    val (sch, groups) = footerCache.computeIfAbsent(path, p =>
+      (s.read.parquet(p).schema,
+        KernelPlacement.rowGroups(p, s.sparkContext.hadoopConfiguration)))
+    s.read.schema(sch).option(KernelPlacement.RowGroupsKey, groups)
+      .parquet(path)
   }
 
   /** The events table with `ts` normalized to TimestampType.

@@ -109,6 +109,9 @@ object AvroEventCorpus {
       tombstoneEvery: Int,
       corruptEvery: Int,
       frameKey: Boolean): DataFrame = {
+    // the testdata's events.parquet is ONE row group; KernelPlacement
+    // spreads its scan beneath the encode kernel below, so the cached
+    // corpus arrives partition-parallel, as a Kafka source would
     val events = graft.queries.Q.events(spark, sfDir)
     // native typed encode (graft.plans.AvroEncodeFixed) — byte-identical
     // to the GenericDatumWriter reference encode in [[encodeEventBody]]
@@ -138,11 +141,6 @@ object AvroEventCorpus {
         col("ts").as("timestamp"),
         array(struct(lit("origin").as("key"),
           lit("graft").cast("binary").as("value"))).as("headers"))
-      // the driver's events.parquet is ONE row group → one input split,
-      // so the cached corpus (and every decode query over it) would run
-      // single-threaded; a real Kafka source arrives partition-parallel
-      // — spread the fixture the same way before it persists
-      .repartition(spark.sparkContext.defaultParallelism)
   }
 
   /** Register the event schema in a fresh stub registry; returns
