@@ -16,9 +16,13 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * ([[graft.GraftSession]]), headless: the drill-down behind a `Bench`
   * row. Per query, one untimed warm run (JIT, parquet footers, memoized
   * fixtures), then one timed run that prints
-  *   - every job of the run with its wall time, stage and task counts and
-  *     input / shuffle-read / shuffle-write bytes (gaps between jobs are
-  *     driver-side time);
+  *   - every job of the run, from the start of construction, labeled with
+  *     the phase it started in (construct / plan / exec), with its wall
+  *     time, stage and task counts and input / shuffle-read /
+  *     shuffle-write bytes (gaps between jobs are driver-side time). A
+  *     query that runs jobs while it is built (driver collects, the
+  *     child stages of a lazy `localCheckpoint` sort guard) shows them as
+  *     construct jobs;
   *   - the construct / plan / execute split in ms: building the DataFrame
   *     (including any driver collects it makes), analysis + optimization +
   *     physical planning, and the noop write `Bench` times (which plans
@@ -32,10 +36,11 @@ import org.apache.spark.sql.util.QueryExecutionListener
   */
 object QueryProfile {
 
-  /** Local property that tags the timed run's jobs. */
+  /** Local property that tags the timed run's jobs with their phase. */
   private val Tag = "graft.profile"
 
-  private final class Job(val start: Long, val desc: String) {
+  private final class Job(val start: Long, val phase: String,
+      val desc: String) {
     var end = -1L
     var stages = 0
     var tasks = 0
@@ -59,8 +64,8 @@ object QueryProfile {
 
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
       val props = Option(e.properties)
-      if (props.exists(_.getProperty(Tag) != null)) {
-        val j = new Job(e.time, props.flatMap(p =>
+      props.flatMap(p => Option(p.getProperty(Tag))).foreach { phase =>
+        val j = new Job(e.time, phase, props.flatMap(p =>
           Option(p.getProperty("spark.job.description"))).getOrElse(""))
         jobs(e.jobId) = j
         e.stageIds.foreach(stageJob(_) = j)
@@ -118,16 +123,18 @@ object QueryProfile {
         noop(fn(spark, sfDir))
         ListenerBridge.drain(sc)
         rec.reset()
-        sc.setLocalProperty(Tag, name)
+        sc.setLocalProperty(Tag, "construct")
         val (tCons, tPlan, tExec) = try {
           var t0 = System.nanoTime()
           val df = fn(spark, sfDir)
           val tCons = ms(t0)
+          sc.setLocalProperty(Tag, "plan")
           t0 = System.nanoTime()
           df.queryExecution.executedPlan
           val tPlan = ms(t0)
           ListenerBridge.drain(sc)
           rec.recording = true
+          sc.setLocalProperty(Tag, "exec")
           t0 = System.nanoTime()
           noop(df)
           (tCons, tPlan, ms(t0))
@@ -137,14 +144,17 @@ object QueryProfile {
 
         val (jobs, executions) =
           rec.synchronized((rec.jobs.toSeq, rec.executions.toSeq))
+        val perPhase = Seq("construct", "plan", "exec").map(ph =>
+          s"${jobs.count(_._2.phase == ph)} $ph").mkString(", ")
         println(f"[profile] $name total ${tCons + tPlan + tExec}%.1f ms: " +
           f"construct=$tCons%.1f plan=$tPlan%.1f exec=$tExec%.1f " +
-          s"(${jobs.size} jobs)")
+          s"(${jobs.size} jobs: $perPhase)")
         var acc = 0L
         jobs.foreach { case (id, j) =>
           val dur = if (j.end >= 0) j.end - j.start else 0L
           acc += dur
-          println(f"[profile]   job $id%-5d ${dur / 1e3}%7.3f s  " +
+          println(f"[profile]   job $id%-5d ${j.phase}%-9s " +
+            f"${dur / 1e3}%7.3f s  " +
             f"stages=${j.stages}%-3d tasks=${j.tasks}%-5d " +
             f"in=${j.inputB >> 10}%8dKiB sr=${j.shufRB >> 10}%6dKiB " +
             f"sw=${j.shufWB >> 10}%6dKiB  ${j.desc.take(60)}")
