@@ -133,9 +133,11 @@ final class AvroDecoderState(provider: SchemaProvider, capacity: Int) {
     new String(cached.transcoder.json(body, 0), UTF_8)
 }
 
-/** JVM-wide registry of decoder states, keyed by the provider's cache token:
-  * every task on an executor shares one schema LRU per pipeline, exactly one
-  * network fetch per new schema id per executor.
+/** JVM-wide registry of decoder states, keyed by the provider's cache token
+  * and the schema capacity: every task on an executor shares one schema LRU
+  * per pipeline, exactly one network fetch per new schema id per executor,
+  * and two pipelines on one registry with different `schema.capacity`
+  * values each get an LRU of their own size.
   *
   * BOUNDED (access-ordered LRU, [[AvroDecoderState.MaxStates]] entries): a
   * long-lived driver/executor JVM that keeps constructing pipelines must
@@ -147,31 +149,39 @@ final class AvroDecoderState(provider: SchemaProvider, capacity: Int) {
 object AvroDecoderState {
   val MaxStates = 64
   private val states =
-    new java.util.LinkedHashMap[String, AvroDecoderState](16, 0.75f, true) {
+    new java.util.LinkedHashMap[(String, Int), AvroDecoderState](16, 0.75f,
+        true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[String, AvroDecoderState]): Boolean =
+          e: java.util.Map.Entry[(String, Int), AvroDecoderState]): Boolean =
         size() > MaxStates
     }
 
   def forProvider(provider: SchemaProvider, capacity: Int): AvroDecoderState =
     states.synchronized {
-      var s = states.get(provider.cacheToken)
+      val key = (provider.cacheToken, capacity)
+      var s = states.get(key)
       if (s == null) {
         s = new AvroDecoderState(provider, capacity)
-        states.put(provider.cacheToken, s)
+        states.put(key, s)
       }
       s
     }
 
-  /** Test/metrics hooks. */
+  /** The states of one cache token, whatever their capacity. */
+  private def statesOf(cacheToken: String): Seq[AvroDecoderState] = {
+    val out = Seq.newBuilder[AvroDecoderState]
+    states.forEach((k, s) => if (k._1 == cacheToken) out += s)
+    out.result()
+  }
+
+  /** Test/metrics hooks, summed over the token's states. */
   def swallowedErrorCount(cacheToken: String): Long = states.synchronized {
-    val s = states.get(cacheToken)
-    if (s == null) 0L else s.swallowedErrors.sum()
+    statesOf(cacheToken).map(_.swallowedErrors.sum()).sum
   }
 
   def cacheStats(cacheToken: String): (Long, Long) = states.synchronized {
-    val s = states.get(cacheToken)
-    if (s == null) (0L, 0L) else (s.cacheHits.sum(), s.cacheMisses.sum())
+    val ss = statesOf(cacheToken)
+    (ss.map(_.cacheHits.sum()).sum, ss.map(_.cacheMisses.sum()).sum)
   }
 }
 

@@ -33,8 +33,8 @@ package graft.operators
   * (replacement and delta batches both honoured; signed int
   * 8/16/32/64 indices — pyarrow's default encoding for categorical
   * strings). BODY COMPRESSION (per-buffer LZ4-frame or zstd, the two
-  * codecs the Arrow spec defines) decompresses through this repo's
-  * own golden-pinned decoders ([[Lz4Snappy]], [[ZstdDecode]]).
+  * codecs the Arrow spec defines) decompresses through
+  * [[Lz4Snappy]] and [[ZstdDecode]] (libzstd).
   * Anything else — unions, maps, unsigned ints, half floats — is
   * DECLINED honestly (empty), never misread.
   *

@@ -12,8 +12,8 @@ package graft.operators
   * zigzag-varint; the records section is compressed as a whole with
   * the codec in the attributes bits — none/gzip/snappy/lz4/zstd, all
   * of which this package now decodes natively (JDK Inflater for gzip;
-  * [[Lz4Snappy]] and [[ZstdDecode]], both golden-pinned, for the
-  * rest; snappy accepts BOTH raw blocks and the xerial-framed layout
+  * the golden-pinned [[Lz4Snappy]] and libzstd's [[ZstdDecode]] for
+  * the rest; snappy accepts BOTH raw blocks and the xerial-framed layout
   * real producers emit). The CRC-32C over attributes..end is verified
   * with the JDK's own `java.util.zip.CRC32C` — a corrupt batch is
   * FLAGGED (`crc_ok=false`) with its records withheld (they cannot be

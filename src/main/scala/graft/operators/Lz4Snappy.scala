@@ -3,11 +3,11 @@ package graft.operators
 /** Pure-JVM LZ4 (block + frame, spec v1.6.2) and Snappy (raw block
   * format) decompression — round 13.
   *
-  * With zstd ([[ZstdDecode]]), gzip/DEFLATE (JDK `Inflater`), and these
-  * two, the engine reads every general-purpose codec a data platform
-  * actually meets: LZ4 and Snappy are Kafka's and Parquet's default
-  * compression codecs, so Kafka message batches and foreign Parquet
-  * pages stop being opaque at the byte level.
+  * With zstd ([[ZstdDecode]], libzstd), gzip/DEFLATE (JDK
+  * `Inflater`), and these two, the engine reads every general-purpose
+  * codec a data platform actually meets: LZ4 and Snappy are Kafka's
+  * and Parquet's default compression codecs, so Kafka message batches
+  * and foreign Parquet pages stop being opaque at the byte level.
   *
   * Validation follows the zstd discipline: golden vectors from REAL
   * reference encoders (pyarrow's bundled lz4/snappy via

@@ -3960,7 +3960,7 @@ object Multimodal {
                     case ok => ok
                   }
                 else if (cenc == "zstd")
-                  // RFC 8878 in HTTP (round 16) — the in-repo decoder
+                  // RFC 8878 in HTTP (round 16), decoded by libzstd
                   ZstdDecode.decompress(transport).orNull
                 else if (cenc.isEmpty || cenc == "identity") transport
                 else null // unsupported coding (br, …): PERMISSIVE row
@@ -4289,7 +4289,7 @@ object Multimodal {
     checks_ok: Boolean, compressed_len: Long)
 
   /** Batch multi-stream XZ walk (native array-kernel expression, one
-    * output row per stream member; golden-pinned decoder). */
+    * output row per stream member; tukaani xz decodes each stream). */
   def extractXzMembers(df: DataFrame, idCol: String,
       blobCol: String = "blob"): Dataset[XzMemberRow] = {
     val spark = df.sparkSession
@@ -4443,8 +4443,9 @@ object Multimodal {
     * frame carries a Content_Checksum, VERIFY it (low 32 bits of
     * XXH64(content, seed 0) — Spark's own XXH64, matching RFC 8878
     * §4.1; the empty-input vector 0xEF46DB3751D8E999 is spec-pinned);
-    * frames with Compressed blocks report metadata with NULL content —
-    * the honest FSE/Huffman codec boundary. Structural violations —
+    * frames with Compressed blocks are decoded by libzstd
+    * ([[ZstdDecode.decodeFrame]]); one that fails to decode keeps its
+    * metadata row with NULL content. Structural violations —
     * bad magic, set Reserved_bit, Reserved block type, any truncation
     * — return an EMPTY listing (fail loud, the WARC-walk rule). */
   private[graft] def zstdFramesJvm(b: Array[Byte]): IndexedSeq[(String,
@@ -4572,8 +4573,8 @@ object Multimodal {
         // structural (fail loud) — sizes are the walk's whole product
         if (allStored && contentSize >= 0 &&
           contentSize != content.size()) return empty
-        // Compressed blocks: run the FULL decoder (round 13 —
-        // [[ZstdDecode]], golden-pinned against libzstd). Success
+        // Compressed blocks: libzstd decodes the frame
+        // ([[ZstdDecode.decodeFrame]]). Success
         // yields the content (the frame's own checksum verified inside
         // when present); failure keeps the metadata row with NULL
         // content — the walk's framing is sound either way.
@@ -4669,8 +4670,8 @@ object Multimodal {
     * per the IIPC WARC/1.1 zstd annex a leading `0x184D2A5D` skippable
     * frame may carry a dictionary, raw or itself zstd-compressed, that
     * every record frame references): decompress via
-    * [[ZstdDecode.decompressDictAware]] (golden-pinned against libzstd,
-    * dictionary harvest included) and run the standard WARC record walk
+    * [[ZstdDecode.decompressDictAware]] (libzstd, with the in-band
+    * dictionary harvest) and run the standard WARC record walk
     * over the result, the exact [[warcGzRecordsJvm]] discipline on the
     * newer wire format. Frames whose dictionary is missing or wrong,
     * any structural violation, or a checksum mismatch fail the whole

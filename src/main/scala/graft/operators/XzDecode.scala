@@ -1,851 +1,107 @@
 package graft.operators
 
-/** Pure-JVM XZ / LZMA decompression — round 13.
+import org.tukaani.xz.{BasicArrayCache, SingleXZInputStream}
+
+/** XZ decompression over tukaani xz, the decoder Spark ships.
   *
-  * Completes the archive-codec suite (gzip, bzip2, zstd, lz4, snappy →
-  * + xz): research corpora and software dumps ship as `.tar.xz` /
-  * `.jsonl.xz`, and the legacy `.lzma` (LZMA_Alone) container still
-  * appears in older archives. Implements, from the public xz file
-  * format spec and the LZMA specification:
+  * `.tar.xz` / `.jsonl.xz` corpora and software dumps are concatenated
+  * XZ streams. The library decodes each stream — LZMA2 with the Delta
+  * and BCJ filter chains, block and index verification, every check
+  * type — and this object walks the concatenation: stream padding
+  * between streams, per-member metadata (check type, block count from
+  * the stream index, compressed length) and the 64 MiB output cap.
   *
-  *  - the XZ container: stream header/footer (magic, stream-flags
-  *    CRC32, backward-size cross-check), block headers (VLI sizes,
-  *    filter chains, header CRC32), block padding, the index (record
-  *    count + per-block unpadded/uncompressed sizes, verified against
-  *    the walked blocks), stream padding, multi-stream concatenation;
-  *  - integrity checks: None, CRC32 (JDK), CRC64 (ECMA-182 reflected,
-  *    own table), SHA-256 (JDK MessageDigest) — per block AND the
-  *    structural CRC32s;
-  *  - filters: LZMA2 (0x21), Delta (0x03), and the BCJ branch
-  *    converters filtered binaries ship under (round 14): x86 (0x04,
-  *    the stateful mask machine), ARM (0x07), ARM-Thumb (0x08), IA64 (0x06),
-  *    PowerPC (0x05), SPARC (0x09) — chains applied in reverse encode
-  *    order — the full Bra.c family as of round 15;
-  *  - LZMA2 chunk layer: uncompressed chunks, dictionary/state/props
-  *    resets, per-chunk unpacked/compressed size accounting;
-  *  - the LZMA range decoder itself: 11-bit adaptive probabilities,
-  *    the 12-state machine, lc/lp literal contexts with matched-byte
-  *    decoding, rep-distance history, bit-tree + direct + reverse
-  *    align distance decoding, end-of-stream marker (dist 2^32-1);
-  *  - LZMA_Alone (.lzma): 13-byte header (packed props, dict size,
-  *    known-or-unknown uncompressed size), EOS-marker termination.
-  *
-  * Validation: GOLDEN VECTORS from real liblzma (CPython's stdlib
-  * binding, `tools/gen_xz_vectors.py`, committed under
-  * `src/test/resources/xz/`) — presets 0/6/9 and 9|EXTREME, all four
-  * check types, a delta-filter chain, multi-block and multi-stream
-  * layouts, and LZMA_Alone — decoder vs reference encoder, so
-  * encoder/decoder bug cancellation is impossible by construction.
-  *
-  * Row-local byte arithmetic throughout; corrupt/truncated input
-  * returns None (PERMISSIVE), never throws, and every output byte is
-  * under a block check, so no corruption decodes to silently wrong
-  * bytes.
+  * Corrupt or truncated input returns empty/None and never throws;
+  * only the library's `IOException`s are caught. Every decoded byte
+  * is under its block check. The committed liblzma golden vectors
+  * (`XzGoldenSpec`) pin the decoded bytes.
   */
 object XzDecode {
 
   /** Hard cap on regenerated output (decompression-bomb guard). */
   private val MaxOutput = 1 << 26 // 64 MiB
 
+  /** The library's memory limit (KiB): room for a 64 MiB LZMA2
+    * dictionary; a stream declaring a larger one is declined. */
+  private val MemoryLimitKiB = (MaxOutput >> 10) + 1024
+
   /** One decoded XZ stream of a concatenated blob: check-type name,
     * block count, decoded bytes, check verdict (always true on Some —
-    * the walk fails loud), compressed length incl. padding. */
+    * the walk fails loud), compressed length (stream padding
+    * excluded). */
   final case class Member(check: String, nBlocks: Int,
     content: Array[Byte], checksOk: Boolean, compressedLen: Int)
 
-  // ---- CRC64 (ECMA-182, reflected — xz's default check) -------------
-
-  private val Crc64Table: Array[Long] = Array.tabulate(256) { i =>
-    var c = i.toLong
-    var k = 0
-    while (k < 8) {
-      c = if ((c & 1L) != 0L) (c >>> 1) ^ 0xC96C5795D7870F42L
-      else c >>> 1
-      k += 1
-    }
-    c
-  }
-
-  private[operators] def crc64(b: Array[Byte], off: Int, len: Int): Long = {
-    var c = ~0L
-    var i = off
-    while (i < off + len) {
-      c = (c >>> 8) ^ Crc64Table(((c ^ b(i)) & 0xff).toInt)
-      i += 1
-    }
-    ~c
-  }
-
-  private def crc32(b: Array[Byte], off: Int, len: Int): Long = {
-    val c = new java.util.zip.CRC32()
-    c.update(b, off, len)
-    c.getValue
-  }
-
-  // ---- LZMA range decoder --------------------------------------------
-
-  /** Probability model sizes (LZMA spec). */
-  private val NumStates = 12
-  private val NumPosStatesMax = 16
-
-  /** One LZMA decoder over a shared output buffer (the dictionary IS
-    * the output — bounded by MaxOutput, so no circular window needed).
-    * Probability arrays live here; LZMA2 state resets re-instantiate.
-    */
-  private final class LzmaState(var lc: Int, var lp: Int, var pb: Int) {
-    val isMatch = Array.fill(NumStates << 4)(1024)
-    val isRep = Array.fill(NumStates)(1024)
-    val isRepG0 = Array.fill(NumStates)(1024)
-    val isRepG1 = Array.fill(NumStates)(1024)
-    val isRepG2 = Array.fill(NumStates)(1024)
-    val isRep0Long = Array.fill(NumStates << 4)(1024)
-    val posSlot = Array.fill(4 * 64)(1024)
-    val specPos = Array.fill(115)(1024)
-    val align = Array.fill(16)(1024)
-    // length coders: [choice, choice2, low 16*8, mid 16*8, high 256]
-    val lenCoder = Array.fill(2 + 16 * 8 + 16 * 8 + 256)(1024)
-    val repLenCoder = Array.fill(2 + 16 * 8 + 16 * 8 + 256)(1024)
-    val literal = Array.fill(0x300 << (lc + lp))(1024)
-    var state = 0
-    var rep0 = 0
-    var rep1 = 0
-    var rep2 = 0
-    var rep3 = 0
-  }
-
-  /** Decodes one LZMA-coded region from `in[inPos, inEnd)` into
-    * `out[outPos, …)`, producing exactly `limit` bytes (or fewer if an
-    * EOS marker arrives and `allowEos`); positions for pos-state /
-    * literal context are relative to `dictStart`. Returns
-    * (newOutPos, consumedEnd, sawEos) or null on corruption. */
-  private final class RangeDec(in: Array[Byte], var pos: Int,
-      val end: Int) {
-    var range: Int = -1 // 0xFFFFFFFF
-    var code: Int = 0
-    var valid: Boolean = {
-      if (pos + 5 > end || in(pos) != 0) false
-      else {
-        var i = 1
-        while (i < 5) { code = (code << 8) | (in(pos + i) & 0xff); i += 1 }
-        pos += 5
-        true
-      }
-    }
-    @inline def normalize(): Unit =
-      if ((range & 0xFF000000) == 0) {
-        range <<= 8
-        code = (code << 8) | (if (pos < end) { val b = in(pos) & 0xff;
-          pos += 1; b } else { valid = false; 0 })
-      }
-    @inline def bit(probs: Array[Int], i: Int): Int = {
-      val p = probs(i)
-      val bound = (range >>> 11) * p
-      if (java.lang.Integer.compareUnsigned(code, bound) < 0) {
-        range = bound
-        probs(i) = p + ((2048 - p) >> 5)
-        normalize()
-        0
-      } else {
-        range -= bound
-        code -= bound
-        probs(i) = p - (p >> 5)
-        normalize()
-        1
-      }
-    }
-    def bitTree(probs: Array[Int], off: Int, nBits: Int): Int = {
-      var m = 1
-      var i = 0
-      while (i < nBits) { m = (m << 1) | bit(probs, off + m); i += 1 }
-      m - (1 << nBits)
-    }
-    def bitTreeReverse(probs: Array[Int], off: Int, nBits: Int): Int = {
-      var m = 1
-      var sym = 0
-      var i = 0
-      while (i < nBits) {
-        val b = bit(probs, off + m)
-        m = (m << 1) | b
-        sym |= b << i
-        i += 1
-      }
-      sym
-    }
-    def direct(nBits: Int): Int = {
-      var res = 0
-      var i = 0
-      while (i < nBits) {
-        range >>>= 1
-        code -= range
-        val t = 0 - (code >>> 31)
-        code += range & t
-        if (code == range) valid = false // spec: corruption guard
-        normalize()
-        res = (res << 1) + t + 1
-        i += 1
-      }
-      res
-    }
-    def finished: Boolean = code == 0
-  }
-
-  /** len = 2 + tree-decoded value (LZMA length coder layout). */
-  private def decodeLen(rc: RangeDec, c: Array[Int], posState: Int): Int =
-    if (rc.bit(c, 0) == 0) 2 + rc.bitTree(c, 2 + (posState << 3), 3)
-    else if (rc.bit(c, 1) == 0)
-      2 + 8 + rc.bitTree(c, 2 + 128 + (posState << 3), 3)
-    else 2 + 16 + rc.bitTree(c, 2 + 256, 8)
-
-  /** Core LZMA symbol loop. Returns the new output position, or -1 on
-    * corruption; `eosSeen(0)` flags the marker. Distances are UNSIGNED
-    * 32-bit (the EOS marker is 0xFFFFFFFF == -1 as Int) — every use
-    * goes through `compareUnsigned` against the bytes available since
-    * `dictStart`. */
-  private def lzmaRun(rc: RangeDec, st: LzmaState, out: Array[Byte],
-      outPos0: Int, limit: Int, dictStart: Int, allowEos: Boolean,
-      eosSeen: Array[Boolean]): Int = {
-    var outPos = outPos0
-    val pbMask = (1 << st.pb) - 1
-    val lpMask = (1 << st.lp) - 1
-    @inline def distOk(dist: Int): Boolean =
-      java.lang.Integer.compareUnsigned(dist, outPos - dictStart) < 0
-    while (outPos < limit) {
-      if (!rc.valid) return -1
-      val posState = (outPos - dictStart) & pbMask
-      if (rc.bit(st.isMatch, (st.state << 4) + posState) == 0) {
-        // literal
-        val prev = if (outPos > dictStart) out(outPos - 1) & 0xff else 0
-        val litState =
-          ((((outPos - dictStart) & lpMask) << st.lc) +
-            (prev >>> (8 - st.lc))) * 0x300
-        var sym = 1
-        if (st.state >= 7) {
-          if (!distOk(st.rep0)) return -1
-          var matchByte = out(outPos - st.rep0 - 1) & 0xff
-          var break = false
-          while (!break && sym < 0x100) {
-            val matchBit = (matchByte >> 7) & 1
-            matchByte <<= 1
-            val b = rc.bit(st.literal,
-              litState + ((1 + matchBit) << 8) + sym)
-            sym = (sym << 1) | b
-            if (matchBit != b) break = true
-          }
-        }
-        while (sym < 0x100)
-          sym = (sym << 1) | rc.bit(st.literal, litState + sym)
-        out(outPos) = (sym & 0xff).toByte
-        outPos += 1
-        st.state = if (st.state < 4) 0
-        else if (st.state < 10) st.state - 3 else st.state - 6
-      } else {
-        var len = 0
-        if (rc.bit(st.isRep, st.state) == 0) {
-          // match: new distance
-          st.rep3 = st.rep2; st.rep2 = st.rep1; st.rep1 = st.rep0
-          len = decodeLen(rc, st.lenCoder, posState)
-          val lenToPos = math.min(len - 2, 3)
-          val slot = rc.bitTree(st.posSlot, lenToPos << 6, 6)
-          if (slot < 4) st.rep0 = slot
-          else {
-            val numDirect = (slot >> 1) - 1
-            var dist = (2 | (slot & 1)) << numDirect
-            if (slot < 14)
-              dist += rc.bitTreeReverse(st.specPos,
-                dist - slot, numDirect)
-            else {
-              dist += rc.direct(numDirect - 4) << 4
-              dist += rc.bitTreeReverse(st.align, 0, 4)
-            }
-            st.rep0 = dist
-          }
-          if (st.rep0 == -1) { // 0xFFFFFFFF: end-of-stream marker
-            if (!allowEos) return -1
-            eosSeen(0) = true
-            return outPos
-          }
-          st.state = if (st.state < 7) 7 else 10
-        } else {
-          // rep match
-          if (rc.bit(st.isRepG0, st.state) == 0) {
-            if (rc.bit(st.isRep0Long,
-                (st.state << 4) + posState) == 0) {
-              // short rep: one byte at rep0
-              st.state = if (st.state < 7) 9 else 11
-              if (!distOk(st.rep0)) return -1
-              out(outPos) = out(outPos - st.rep0 - 1)
-              outPos += 1
-              len = -1 // handled
-            }
-          } else {
-            val dist =
-              if (rc.bit(st.isRepG1, st.state) == 0) st.rep1
-              else if (rc.bit(st.isRepG2, st.state) == 0) {
-                val d = st.rep2; st.rep2 = st.rep1; d
-              } else {
-                val d = st.rep3; st.rep3 = st.rep2; st.rep2 = st.rep1; d
-              }
-            st.rep1 = st.rep0
-            st.rep0 = dist
-          }
-          if (len == 0) {
-            len = decodeLen(rc, st.repLenCoder, posState)
-            st.state = if (st.state < 7) 8 else 11
-          }
-        }
-        if (len > 0) {
-          if (outPos + len > limit) return -1 // over-long match
-          if (!distOk(st.rep0)) return -1
-          val from = outPos - st.rep0 - 1
-          var i = 0
-          while (i < len) {
-            out(outPos + i) = out(from + i)
-            i += 1
-          }
-          outPos += len
-        }
-      }
-    }
-    outPos
-  }
-
-  // ---- LZMA2 chunk layer ---------------------------------------------
-
-  /** Growable output buffer (LZMA2 chunk sizes are declared, so
-    * capacity is ensured per chunk; `max` is the bomb guard). */
-  private final class Grow(val max: Int) {
-    var a = new Array[Byte](64 * 1024)
-    var pos = 0
-    def ensure(n: Int): Boolean = {
-      if (pos + n > max) return false
-      if (pos + n > a.length) {
-        var cap = a.length
-        while (cap < pos + n) cap = math.min(max, cap * 2)
-        a = java.util.Arrays.copyOf(a, cap)
-      }
-      true
-    }
-  }
-
-  /** Decodes an LZMA2 stream from `in[off, end)` into `g`; returns
-    * consumed byte count, or -1 on corruption. LZMA2 reset semantics:
-    * ctrl bits 5-6 = 0 none / 1 state / 2 state+props / 3
-    * state+props+dict; the first chunk (and the one after an
-    * uncompressed chunk) must reset state, and props survive
-    * uncompressed chunks. */
-  private def lzma2Run(in: Array[Byte], off: Int, end: Int,
-      g: Grow): Int = {
-    var p = off
-    var dictStart = g.pos
-    var st: LzmaState = null
-    var lc0 = -1
-    var lp0 = -1
-    var pb0 = -1
-    var needDictReset = true
-    while (p < end) {
-      val ctrl = in(p) & 0xff
-      p += 1
-      if (ctrl == 0x00) return p - off // end of LZMA2
-      else if (ctrl <= 0x02) {
-        // uncompressed chunk (0x01 resets dict, 0x02 keeps it)
-        if (ctrl == 0x01) { dictStart = g.pos; needDictReset = false }
-        else if (needDictReset) return -1
-        if (p + 2 > end) return -1
-        val sz = (((in(p) & 0xff) << 8) | (in(p + 1) & 0xff)) + 1
-        p += 2
-        if (p + sz > end || !g.ensure(sz)) return -1
-        System.arraycopy(in, p, g.a, g.pos, sz)
-        p += sz
-        g.pos += sz
-        st = null // the next LZMA chunk must reset state (props kept)
-      } else if (ctrl >= 0x80) {
-        if (p + 4 > end) return -1
-        val unpacked = (((ctrl & 0x1f) << 16) | ((in(p) & 0xff) << 8) |
-          (in(p + 1) & 0xff)) + 1
-        val packed = (((in(p + 2) & 0xff) << 8) |
-          (in(p + 3) & 0xff)) + 1
-        p += 4
-        val reset = (ctrl >> 5) & 0x3
-        if (reset >= 2) {
-          if (p >= end) return -1
-          val props = in(p) & 0xff
-          p += 1
-          if (props >= 225) return -1
-          lc0 = props % 9
-          lp0 = (props / 9) % 5
-          pb0 = props / 45
-          if (lc0 + lp0 > 4) return -1
-          st = new LzmaState(lc0, lp0, pb0)
-        } else if (reset == 1) {
-          if (lc0 < 0) return -1
-          st = new LzmaState(lc0, lp0, pb0)
-        } else if (st == null) return -1 // reset 0 needs live state
-        if (reset == 3) { dictStart = g.pos; needDictReset = false }
-        else if (needDictReset) return -1
-        if (p + packed > end || !g.ensure(unpacked)) return -1
-        val rc = new RangeDec(in, p, p + packed)
-        if (!rc.valid) return -1
-        val got = lzmaRun(rc, st, g.a, g.pos, g.pos + unpacked,
-          dictStart, allowEos = false, new Array[Boolean](1))
-        if (got != g.pos + unpacked || !rc.valid) return -1
-        if (rc.pos != p + packed || !rc.finished) return -1
-        p += packed
-        g.pos = got
-      } else return -1
-    }
-    -1 // ran out of input before the 0x00 terminator
-  }
-
-  // ---- Delta filter (id 0x03) ----------------------------------------
-
-  private def deltaDecode(out: Array[Byte], off: Int, len: Int,
-      dist: Int): Unit = {
-    var i = off + dist
-    while (i < off + len) {
-      out(i) = (out(i) + out(i - dist)).toByte
-      i += 1
-    }
-  }
-
-  // ---- BCJ x86 filter (id 0x04) ---------------------------------------
-
-  /** The x86 branch-converter (BCJ) decode pass — the filter x86
-    * binaries ship under (`xz --x86`): relative CALL/JMP (E8/E9)
-    * 32-bit displacements were made absolute at encode time; this
-    * reverses them. Single-shot whole-block form of the public
-    * LZMA-SDK / xz-utils `x86_Convert` state machine (`mask` tracks
-    * recently-rejected candidate positions so overlapping E8 bytes
-    * inside a displacement don't double-convert — golden-pinned
-    * against liblzma, where any drift in this subtle loop shows up as
-    * a byte mismatch). `ip0` is the filter's start-offset property
-    * (default 0). All arithmetic is 32-bit wrapping. */
-  private def bcjX86Decode(buf: Array[Byte], off: Int, len: Int,
-      ip0: Int): Unit = {
-    @inline def test(v: Int): Boolean = v == 0 || v == 0xff
-    if (len < 5) return
-    val size = len - 4
-    val ip = ip0 + 5
-    var mask = 0
-    var pos = 0
-    var done = false
-    while (!done) {
-      var p = pos
-      while (p < size && (buf(off + p) & 0xfe) != 0xe8) p += 1
-      val d = p - pos
-      pos = p
-      if (p >= size) done = true
-      else {
-        var skip = false
-        if (d > 2) mask = 0
-        else {
-          mask >>= d
-          if (mask != 0 && (mask > 4 || mask == 3 ||
-            test(buf(off + p + (mask >> 1) + 1) & 0xff))) {
-            mask = (mask >> 1) | 4
-            pos += 1
-            skip = true
-          }
-        }
-        if (!skip) {
-          if (test(buf(off + p + 4) & 0xff)) {
-            var v = ((buf(off + p + 4) & 0xff) << 24) |
-              ((buf(off + p + 3) & 0xff) << 16) |
-              ((buf(off + p + 2) & 0xff) << 8) |
-              (buf(off + p + 1) & 0xff)
-            val cur = ip + pos // wrapping u32
-            pos += 5
-            v -= cur // decode direction
-            if (mask != 0) {
-              val sh = (mask & 6) << 2
-              if (test((v >>> sh) & 0xff)) {
-                v ^= (0x100 << sh) - 1
-                v -= cur
-              }
-              mask = 0
-            }
-            buf(off + p + 1) = v.toByte
-            buf(off + p + 2) = (v >>> 8).toByte
-            buf(off + p + 3) = (v >>> 16).toByte
-            buf(off + p + 4) = (0 - ((v >>> 24) & 1)).toByte
-          } else {
-            mask = (mask >> 1) | 4
-            pos += 1
-          }
-        }
-      }
-    }
-  }
-
-  // ---- BCJ ARM / ARM-Thumb / PowerPC / SPARC (ids 0x07/0x08/0x05/0x09)
-
-  /** The remaining SIMPLE branch converters (public LZMA-SDK `Bra.c`
-    * algorithms — stateless per block, unlike x86's mask machine):
-    * each rewrites absolute branch targets back to relative at its
-    * architecture's instruction alignment. Golden-pinned against
-    * liblzma per architecture. IA64 (0x06) stays declined — its
-    * 41-bit instruction-slot rewrite is the one BCJ liblzma itself
-    * rarely sees in the wild. */
-  private def bcjArmDecode(buf: Array[Byte], off: Int, len: Int,
-      ip0: Int): Unit = {
-    val ip = ip0 + 8
-    var i = 0
-    while (i + 4 <= len) {
-      if ((buf(off + i + 3) & 0xff) == 0xeb) { // BL
-        var v = ((buf(off + i + 2) & 0xff) << 16) |
-          ((buf(off + i + 1) & 0xff) << 8) | (buf(off + i) & 0xff)
-        v <<= 2
-        v -= ip + i
-        v >>>= 2
-        buf(off + i + 2) = (v >>> 16).toByte
-        buf(off + i + 1) = (v >>> 8).toByte
-        buf(off + i) = v.toByte
-      }
-      i += 4
-    }
-  }
-
-  private def bcjArmThumbDecode(buf: Array[Byte], off: Int, len: Int,
-      ip0: Int): Unit = {
-    val ip = ip0 + 4
-    var i = 0
-    while (i + 4 <= len) {
-      if ((buf(off + i + 1) & 0xf8) == 0xf0 &&
-        (buf(off + i + 3) & 0xf8) == 0xf8) { // BL pair
-        var v = ((buf(off + i + 1) & 0x07) << 19) |
-          ((buf(off + i) & 0xff) << 11) |
-          ((buf(off + i + 3) & 0x07) << 8) | (buf(off + i + 2) & 0xff)
-        v <<= 1
-        v -= ip + i
-        v >>>= 1
-        buf(off + i + 1) = (0xf0 | ((v >>> 19) & 0x07)).toByte
-        buf(off + i) = (v >>> 11).toByte
-        buf(off + i + 3) = (0xf8 | ((v >>> 8) & 0x07)).toByte
-        buf(off + i + 2) = v.toByte
-        i += 2
-      }
-      i += 2
-    }
-  }
-
-  private def bcjPpcDecode(buf: Array[Byte], off: Int, len: Int,
-      ip0: Int): Unit = {
-    var i = 0
-    while (i + 4 <= len) {
-      if ((buf(off + i) & 0xfc) == 0x48 &&
-        (buf(off + i + 3) & 0x03) == 0x01) { // bl (big-endian)
-        var v = ((buf(off + i) & 0x03) << 24) |
-          ((buf(off + i + 1) & 0xff) << 16) |
-          ((buf(off + i + 2) & 0xff) << 8) | (buf(off + i + 3) & 0xfc)
-        v -= ip0 + i
-        buf(off + i) = (0x48 | ((v >>> 24) & 0x03)).toByte
-        buf(off + i + 1) = (v >>> 16).toByte
-        buf(off + i + 2) = (v >>> 8).toByte
-        buf(off + i + 3) = ((buf(off + i + 3) & 0x03) | (v & 0xfc)).toByte
-      }
-      i += 4
-    }
-  }
-
-  private def bcjSparcDecode(buf: Array[Byte], off: Int, len: Int,
-      ip0: Int): Unit = {
-    var i = 0
-    while (i + 4 <= len) {
-      val b0 = buf(off + i) & 0xff
-      val b1 = buf(off + i + 1) & 0xff
-      // call with all-zero or all-one high bits (Bra.c's exact gate)
-      if ((b0 == 0x40 && (b1 & 0xc0) == 0x00) ||
-        (b0 == 0x7f && (b1 & 0xc0) == 0xc0)) {
-        var v = (b0 << 24) | (b1 << 16) |
-          ((buf(off + i + 2) & 0xff) << 8) | (buf(off + i + 3) & 0xff)
-        v <<= 2
-        v -= ip0 + i
-        v >>>= 2
-        v = ((0x40000000 - (v & 0x400000)) | 0x40000000 |
-          (v & 0x3fffff))
-        buf(off + i) = (v >>> 24).toByte
-        buf(off + i + 1) = (v >>> 16).toByte
-        buf(off + i + 2) = (v >>> 8).toByte
-        buf(off + i + 3) = v.toByte
-      }
-      i += 4
-    }
-  }
-
-  /** BCJ IA64 (0x06, round 15) — completes the Bra.c family: 16-byte
-    * bundles, the 5-bit template selecting which 41-bit instruction
-    * slots the branch table marks; a slot rewrites when its opcode
-    * field is 5 and bits 9-11 are clear (the exact fire condition was
-    * EMPIRICALLY pinned against liblzma's raw filter output — encode
-    * mine vs theirs byte-identical over 3000 bundles, decode
-    * inverting; the golden .xz vector re-checks it every run). imm20
-    * + the bit-36 sign carry a 4-bit-shifted absolute target made
-    * relative again. */
-  private def bcjIa64Decode(buf: Array[Byte], off: Int, len: Int,
-      ip0: Int): Unit = {
-    var i = 0
-    while (i + 16 <= len) {
-      val mask = Ia64BranchTable(buf(off + i) & 0x1f)
-      var slot = 0
-      var bitPos = 5
-      while (slot < 3) {
-        if (((mask >> slot) & 1) != 0) {
-          val bytePos = bitPos >> 3
-          val bitRes = bitPos & 7
-          var instruction = 0L
-          var j = 0
-          while (j < 6) {
-            instruction |=
-              (buf(off + i + bytePos + j) & 0xffL) << (8 * j)
-            j += 1
-          }
-          val instNorm = instruction >>> bitRes
-          if (((instNorm >>> 37) & 0xfL) == 5L &&
-            ((instNorm >>> 9) & 0x7L) == 0L) {
-            var src = ((instNorm >>> 13) & 0xfffffL).toInt
-            src |= (((instNorm >>> 36) & 1L) << 20).toInt
-            src <<= 4
-            val dest = (src - (ip0 + i)) >>> 4
-            var n = instNorm & ~(0x8fffffL << 13)
-            n |= (dest & 0xfffff).toLong << 13
-            n |= ((dest >>> 20) & 1).toLong << 36
-            var outw = instruction & ((1L << bitRes) - 1)
-            outw |= n << bitRes
-            j = 0
-            while (j < 6) {
-              buf(off + i + bytePos + j) =
-                ((outw >>> (8 * j)) & 0xff).toByte
-              j += 1
-            }
-          }
-        }
-        slot += 1
-        bitPos += 41
-      }
-      i += 16
-    }
-  }
-
-  private val Ia64BranchTable: Array[Int] = Array(
-    0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0,
-    4, 4, 6, 6, 0, 0, 7, 7, 4, 4, 0, 0, 4, 4, 0, 0)
-
-  // ---- XZ container ----------------------------------------------------
-
-  private def vli(b: Array[Byte], pos0: Int, end: Int): (Long, Int) = {
-    var v = 0L
-    var p = pos0
-    var i = 0
-    while (p < end && i < 9) {
-      val x = b(p) & 0xff
-      v |= (x & 0x7fL) << (7 * i)
-      p += 1
-      if ((x & 0x80) == 0) {
-        if (i > 0 && x == 0) return (-1L, p) // non-minimal encoding
-        return (v, p)
-      }
-      i += 1
-    }
-    (-1L, p)
-  }
-
   private val CheckNames = Map(0 -> "none", 1 -> "crc32", 4 -> "crc64",
     10 -> "sha256")
-  private val CheckSizes = Map(0 -> 0, 1 -> 4, 4 -> 8, 10 -> 32)
 
-  /** Decodes one XZ stream starting at `off`; None on any violation
-    * (including any failed check — loud by construction). */
-  private def decodeStream(b: Array[Byte], off: Int): Option[Member] = {
-    // stream header: magic(6) flags(2) crc32(4)
-    if (off + 12 > b.length) return None
-    val magic = Array[Byte](0xfd.toByte, '7', 'z', 'X', 'Z', 0)
-    var i = 0
-    while (i < 6) { if (b(off + i) != magic(i)) return None; i += 1 }
-    if (b(off + 6) != 0) return None
-    val checkType = b(off + 7) & 0xff
-    if (!CheckNames.contains(checkType)) return None
-    def le32(p: Int): Long =
-      (b(p) & 0xffL) | ((b(p + 1) & 0xffL) << 8) |
-        ((b(p + 2) & 0xffL) << 16) | ((b(p + 3) & 0xffL) << 24)
-    if (crc32(b, off + 6, 2) != le32(off + 8)) return None
-    val checkSize = CheckSizes(checkType)
+  private def le32(b: Array[Byte], p: Int): Long =
+    (b(p) & 0xffL) | ((b(p + 1) & 0xffL) << 8) |
+      ((b(p + 2) & 0xffL) << 16) | ((b(p + 3) & 0xffL) << 24)
 
-    val out = new java.io.ByteArrayOutputStream()
-    // walked block records for index verification
-    val records = Vector.newBuilder[(Long, Long)]
-    var nBlocks = 0
-    var p = off + 12
-    var indexStart = -1
-    while (indexStart < 0) {
-      if (p >= b.length) return None
-      val first = b(p) & 0xff
-      if (first == 0x00) indexStart = p // index indicator
-      else {
-        // block
-        val blockStart = p
-        val headerSize = (first + 1) * 4
-        if (p + headerSize > b.length) return None
-        if (crc32(b, p, headerSize - 4) != le32(p + headerSize - 4))
-          return None
-        val flags = b(p + 1) & 0xff
-        val nFilters = (flags & 0x03) + 1
-        if ((flags & 0x3c) != 0) return None // reserved bits
-        var q = p + 2
-        var declaredComp = -1L
-        var declaredUncomp = -1L
-        if ((flags & 0x40) != 0) {
-          val (v, q2) = vli(b, q, p + headerSize); q = q2
-          if (v < 0) return None
-          declaredComp = v
-        }
-        if ((flags & 0x80) != 0) {
-          val (v, q2) = vli(b, q, p + headerSize); q = q2
-          if (v < 0) return None
-          declaredUncomp = v
-        }
-        // filter chain: collect (id, prop). Block headers list filters
-        // in ENCODE order with LZMA2 last; decode applies LZMA2 first
-        // then the rest in reverse. Supported pre-filters: Delta
-        // (0x03, prop = distance) and BCJ x86 (0x04, prop = start
-        // offset); anything else declined.
-        var sawLzma2 = false
-        val chain = scala.collection.mutable.ListBuffer.empty[(Long, Int)]
-        var f = 0
-        while (f < nFilters) {
-          val (fid, q2) = vli(b, q, p + headerSize); q = q2
-          val (psz, q3) = vli(b, q, p + headerSize); q = q3
-          if (fid < 0 || psz < 0 || q + psz > p + headerSize) return None
-          if (fid == 0x21L) {
-            if (psz != 1 || f != nFilters - 1) return None
-            sawLzma2 = true // dict size byte ignored (we keep all out)
-          } else if (fid == 0x03L) {
-            if (psz != 1 || sawLzma2) return None
-            chain += ((fid, (b(q) & 0xff) + 1))
-          } else if (fid == 0x04L || fid == 0x05L || fid == 0x06L ||
-            fid == 0x07L || fid == 0x08L || fid == 0x09L) {
-            // BCJ (x86/PPC/IA64/ARM/ARM-Thumb/SPARC): props absent
-            // (start offset 0) or a LE32 start offset
-            if (sawLzma2 || (psz != 0 && psz != 4)) return None
-            val ip = if (psz == 0) 0
-              else ((b(q) & 0xff) | ((b(q + 1) & 0xff) << 8) |
-                ((b(q + 2) & 0xff) << 16) | ((b(q + 3) & 0xff) << 24))
-            chain += ((fid, ip))
-          } else return None // unknown filters: declined
-          q += psz.toInt
-          f += 1
-        }
-        if (!sawLzma2) return None
-        // header padding must be zero
-        while (q < p + headerSize - 4) {
-          if (b(q) != 0) return None
-          q += 1
-        }
-        // compressed data: LZMA2 chunks end with a 0x00 control byte
-        val dataStart = p + headerSize
-        val outStart = out.size()
-        if (declaredUncomp > MaxOutput - outStart) return None
-        val g = new Grow(MaxOutput - outStart)
-        val consumed = lzma2Run(b, dataStart, b.length, g)
-        if (consumed < 0) return None
-        val produced = g.pos
-        val buf = g.a
-        if (declaredUncomp >= 0 && produced != declaredUncomp)
-          return None
-        if (declaredComp >= 0 && consumed != declaredComp) return None
-        chain.reverse.foreach {
-          case (0x03L, dist) => deltaDecode(buf, 0, produced, dist)
-          case (0x04L, ip) => bcjX86Decode(buf, 0, produced, ip)
-          case (0x05L, ip) => bcjPpcDecode(buf, 0, produced, ip)
-          case (0x06L, ip) => bcjIa64Decode(buf, 0, produced, ip)
-          case (0x07L, ip) => bcjArmDecode(buf, 0, produced, ip)
-          case (0x08L, ip) => bcjArmThumbDecode(buf, 0, produced, ip)
-          case (0x09L, ip) => bcjSparcDecode(buf, 0, produced, ip)
-          case _ => return None
-        }
-        // block padding to 4 bytes, then the check
-        var r = dataStart + consumed
-        while (((r - blockStart) & 3) != 0) {
-          if (r >= b.length || b(r) != 0) return None
-          r += 1
-        }
-        if (r + checkSize > b.length) return None
-        checkType match {
-          case 0 => ()
-          case 1 =>
-            if (crc32(buf, 0, produced) != le32(r)) return None
-          case 4 =>
-            var v = 0L
-            var k = 0
-            while (k < 8) { v |= (b(r + k) & 0xffL) << (8 * k); k += 1 }
-            if (crc64(buf, 0, produced) != v) return None
-          case 10 =>
-            val md = java.security.MessageDigest.getInstance("SHA-256")
-            md.update(buf, 0, produced)
-            if (!java.util.Arrays.equals(md.digest(),
-              java.util.Arrays.copyOfRange(b, r, r + 32))) return None
-        }
-        out.write(buf, 0, produced)
-        nBlocks += 1
-        val unpadded = (dataStart + consumed - blockStart) + checkSize
-        records += ((unpadded.toLong, produced.toLong))
-        p = r + checkSize
-      }
+  /** The record count of the index of the (verified) stream ending at
+    * `end`: the footer's backward size locates the index, whose
+    * indicator byte is followed by the count as a VLI. */
+  private def indexRecordCount(b: Array[Byte], end: Int): Int = {
+    val indexSize = (le32(b, end - 8) + 1) * 4
+    var p = (end - 12 - indexSize).toInt + 1
+    var n = 0L
+    var shift = 0
+    var more = true
+    while (more) {
+      val x = b(p) & 0xff
+      n |= (x & 0x7fL) << shift
+      shift += 7
+      p += 1
+      more = (x & 0x80) != 0
     }
-    // index: indicator(1) count(VLI) records... padding crc32
-    var q = indexStart + 1
-    val (cnt, q2) = vli(b, q, b.length); q = q2
-    if (cnt != nBlocks) return None
-    val recs = records.result()
-    var k = 0
-    while (k < cnt) {
-      val (u1, qa) = vli(b, q, b.length); q = qa
-      val (u2, qb) = vli(b, q, b.length); q = qb
-      if (u1 != recs(k)._1 || u2 != recs(k)._2) return None
-      k += 1
+    n.toInt
+  }
+
+  /** Decodes the XZ stream starting at `off`; None when it would
+    * regenerate more than `cap` bytes. Corruption throws the library's
+    * `IOException`s. */
+  private def streamAt(b: Array[Byte], off: Int, cap: Int)
+      : Option[Member] = {
+    val src = new java.io.ByteArrayInputStream(b, off, b.length - off)
+    val in = new SingleXZInputStream(src, MemoryLimitKiB, true,
+      BasicArrayCache.getInstance())
+    val content = try ZstdDecode.readCapped(in, cap) finally in.close()
+    content.map { c =>
+      val end = b.length - src.available()
+      Member(CheckNames(in.getCheckType),
+        indexRecordCount(b, end), c, checksOk = true, end - off)
     }
-    while (((q - indexStart) & 3) != 0) {
-      if (q >= b.length || b(q) != 0) return None
-      q += 1
-    }
-    if (q + 4 > b.length) return None
-    if (crc32(b, indexStart, q - indexStart) != le32(q)) return None
-    q += 4
-    val indexSize = q - indexStart
-    // stream footer: crc32(4) backwardSize(4) flags(2) "YZ"
-    if (q + 12 > b.length) return None
-    if (crc32(b, q + 4, 6) != le32(q)) return None
-    if (le32(q + 4) != indexSize / 4 - 1) return None
-    if (b(q + 8) != 0 || (b(q + 9) & 0xff) != checkType) return None
-    if (b(q + 10) != 'Y' || b(q + 11) != 'Z') return None
-    Some(Member(CheckNames(checkType), nBlocks, out.toByteArray,
-      checksOk = true, q + 12 - off))
   }
 
   /** All members of a concatenated multi-stream blob; stream padding
     * (4-byte-aligned zeros) between streams is skipped per spec.
     * Empty on the first corrupt member or non-xz input. */
   def membersJvm(b: Array[Byte]): IndexedSeq[Member] = {
+    if (b == null) return Vector.empty
     val out = Vector.newBuilder[Member]
     var off = 0
-    var total = 0L
+    var total = 0
     var any = false
-    while (off + 12 <= b.length) {
-      // stream padding: four zero bytes at a time
-      if (b(off) == 0) {
-        if (off + 4 > b.length || b(off + 1) != 0 || b(off + 2) != 0 ||
-          b(off + 3) != 0) return if (any) out.result() else Vector.empty
-        off += 4
-      } else if (b(off) == 0xfd.toByte) {
-        decodeStream(b, off) match {
-          case Some(m) =>
-            total += m.content.length
-            if (total > MaxOutput) return Vector.empty
-            out += m
-            any = true
-            off += m.compressedLen
-          case None => return Vector.empty
-        }
-      } else return if (any) out.result() else Vector.empty
-    }
+    try {
+      while (off + 12 <= b.length) {
+        // stream padding: four zero bytes at a time
+        if (b(off) == 0) {
+          if (off + 4 > b.length || b(off + 1) != 0 || b(off + 2) != 0 ||
+            b(off + 3) != 0) return if (any) out.result() else Vector.empty
+          off += 4
+        } else if (b(off) == 0xfd.toByte) {
+          streamAt(b, off, MaxOutput - total) match {
+            case Some(m) =>
+              total += m.content.length
+              out += m
+              any = true
+              off += m.compressedLen
+            case None => return Vector.empty
+          }
+        } else return if (any) out.result() else Vector.empty
+      }
+    } catch { case _: java.io.IOException => return Vector.empty }
     if (!any) Vector.empty else out.result()
   }
 
@@ -853,72 +109,15 @@ object XzDecode {
   def decompress(b: Array[Byte]): Option[Array[Byte]] = {
     val ms = membersJvm(b)
     if (ms.isEmpty) None
+    else if (ms.length == 1) Some(ms.head.content)
     else {
-      val n = ms.map(_.content.length.toLong).sum
-      if (n > MaxOutput) None
-      else {
-        val out = new Array[Byte](n.toInt)
-        var p = 0
-        ms.foreach { m =>
-          System.arraycopy(m.content, 0, out, p, m.content.length)
-          p += m.content.length
-        }
-        Some(out)
+      val out = new Array[Byte](ms.map(_.content.length).sum)
+      var p = 0
+      ms.foreach { m =>
+        System.arraycopy(m.content, 0, out, p, m.content.length)
+        p += m.content.length
       }
+      Some(out)
     }
-  }
-
-  /** Legacy LZMA_Alone (`.lzma`): 13-byte header — packed props,
-    * LE32 dict size, LE64 uncompressed size (all-FF = unknown → the
-    * stream ends with an EOS marker). */
-  def decompressAlone(b: Array[Byte]): Option[Array[Byte]] = {
-    if (b.length < 18) return None
-    val props = b(0) & 0xff
-    if (props >= 225) return None
-    val lc = props % 9
-    val lp = (props / 9) % 5
-    val pb = props / 45
-    if (lc + lp > 4) return None
-    var size = 0L
-    var unknown = true
-    var i = 0
-    while (i < 8) {
-      size |= (b(5 + i) & 0xffL) << (8 * i)
-      i += 1
-    }
-    if (size != -1L) {
-      unknown = false
-      if (size < 0 || size > MaxOutput) return None
-    }
-    // Unknown-size streams have no ratio ceiling (LZMA compresses
-    // runs of zeros far beyond 300:1) — retry with a doubling buffer
-    // up to MaxOutput; each restart redoes the decode, so total work
-    // is < 2x the final pass. Known-size streams decode once.
-    var cap =
-      if (unknown)
-        math.min(MaxOutput.toLong,
-          math.max(1L << 16, b.length.toLong * 300)).toInt
-      else size.toInt
-    while (true) {
-      val out = new Array[Byte](cap)
-      val st = new LzmaState(lc, lp, pb)
-      val rc = new RangeDec(b, 13, b.length)
-      if (!rc.valid) return None
-      val eos = new Array[Boolean](1)
-      val got = lzmaRun(rc, st, out, 0, cap, 0, allowEos = true, eos)
-      if (unknown && !eos(0) && cap < MaxOutput &&
-        (got == cap || got < 0)) {
-        // hit the capacity ceiling (a match crossing the limit
-        // returns -1) — grow and redecode
-        cap = math.min(MaxOutput.toLong, cap * 2L).toInt
-      } else {
-        if (got < 0 || !rc.valid) return None
-        if (!unknown && got != size) return None
-        if (unknown && !eos(0)) return None
-        if (!rc.finished) return None
-        return Some(java.util.Arrays.copyOf(out, got))
-      }
-    }
-    None
   }
 }

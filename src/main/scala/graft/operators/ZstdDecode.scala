@@ -1,882 +1,149 @@
 package graft.operators
 
-/** Pure-JVM Zstandard decompression (RFC 8878) — round 13.
+import com.github.luben.zstd.{Zstd, ZstdDecompressCtx, ZstdException,
+  ZstdInputStreamNoFinalizer}
+
+/** Zstandard decompression (RFC 8878) over libzstd, through the
+  * zstd-jni binding Spark ships.
   *
-  * Completes the archive story [[Multimodal.zstdFramesJvm]] opened: the
-  * frame walk reads headers and block-length chains without entropy
-  * decoding; this decoder handles the Compressed blocks themselves —
-  * FSE (tANS) table descriptions and state machines, Huffman literals
-  * (1- and 4-stream, direct and FSE-compressed weight descriptions,
-  * treeless repeats), the interleaved backwards sequence bitstream,
-  * repeated-offset history, and cross-block state (window, Huffman
-  * table, FSE tables, offsets). Dictionaries (RFC 8878 §5, round 14)
-  * are fully supported: structured dicts (entropy-table preload +
-  * rep-offset seed + content window prefix), raw-content dicts, the
-  * out-of-band `zstd -D` layout ([[decompress(b,dict)*]]), and the
-  * IIPC `.warc.zst` in-band layout where a leading `0x184D2A5D`
-  * skippable frame carries the dictionary, raw or itself
-  * zstd-compressed ([[decompressDictAware]]). A dict-referencing frame
-  * with no (or the wrong) dictionary is still declined honestly.
+  * What stays here is the byte-aligned stream walk libzstd does not
+  * expose: concatenated frames, skippable frames, and the IIPC
+  * `.warc.zst` layout whose leading `0x184D2A5D` skippable frame
+  * carries the dictionary, raw or itself zstd-compressed
+  * ([[decompressDictAware]]). libzstd decodes each frame and verifies
+  * its content size and checksum. Dictionaries (RFC 8878 §5) are
+  * structured (`zstd --train`) or raw-content, supplied out-of-band
+  * ([[decompress(b,dict)*]], the `zstd -D` layout) or harvested
+  * in-band; a frame declaring a dictionary it was not given, or given
+  * the wrong one, is declined.
   *
-  * Validation: unlike the VP8L decoder (spec-only — no reference
-  * encoder in the sandbox), every path here is pinned against GOLDEN
-  * VECTORS produced by real libzstd (`tools/gen_zstd_vectors.py`,
-  * committed under `src/test/resources/zstd/`): compression levels 1,
-  * 3, 9, and 19 over repetitive, structured, and incompressible
-  * inputs, multi-block streams past the 128 KiB window, RLE and
-  * treeless literal blocks — decoder-vs-reference-encoder, so
-  * encoder/decoder bug cancellation (the byte-primitive-oracle trap)
-  * is impossible by construction.
-  *
-  * Everything is row-local byte arithmetic: no allocation beyond the
-  * output buffer and the (≤ 4 KiB) decode tables, no Spark types — the
-  * kernel slots into the same native-expression plumbing as every
-  * other decoder in this package. All reads are bounds-checked; any
-  * violation returns None (PERMISSIVE — a corrupt stream must never
-  * yield silently wrong bytes).
+  * Contract: malformed input returns None and never throws — only
+  * libzstd's decode errors (`ZstdException`, `IOException`) are
+  * caught, so a native library that fails to load fails the query
+  * instead of nulling every row. Output is capped at 64 MiB per call:
+  * a frame declaring more is declined before allocation, and a frame
+  * of unknown size is read as a stream that stops at the cap. The
+  * committed libzstd golden vectors (`ZstdGoldenSpec`,
+  * `ZstdDictGoldenSpec`) pin the decoded bytes.
   */
 object ZstdDecode {
 
   /** Hard cap on regenerated output (decompression-bomb guard). */
   private val MaxOutput = 1 << 26 // 64 MiB
 
-  /** Test-only path-coverage hook (null in production — one null check
-    * per structural branch): the golden spec installs a collector and
-    * asserts the libzstd vectors really exercise every entropy path
-    * (FSE-compressed and direct Huffman weights, 1- and 4-stream
-    * literals, treeless repeats, RLE/raw literals, predefined / FSE /
-    * RLE / repeat sequence tables, raw/RLE/compressed blocks) —
-    * "passes on goldens" is only meaningful if the goldens cover the
-    * decoder. */
-  private[operators] var pathHook: String => Unit = null
-  @inline private def touch(p: String): Unit =
-    if (pathHook != null) pathHook(p)
+  private val FrameMagic = 0xfd2fb528L
+  private val DictMagic = 0xec30a437L
 
-  // ---- backwards bitstream (§3.1.1.3.2.1.1) -------------------------
+  private def u32(b: Array[Byte], p: Int): Long =
+    (b(p) & 0xffL) | ((b(p + 1) & 0xffL) << 8) |
+      ((b(p + 2) & 0xffL) << 16) | ((b(p + 3) & 0xffL) << 24)
 
-  /** zstd's entropy payloads are little-endian bit sequences read
-    * BACKWARDS from a 1-bit sentinel at the top of the last byte. Bit
-    * `i` of the stream is bit `i & 7` of byte `i >> 3`; reads peel `n`
-    * bits off the current top. Reading past the beginning pads with
-    * zeros and raises the `overflowed` flag — FSE weight interleaving
-    * legitimately reads 0-bit updates at the tail, so exhaustion is a
-    * state the caller inspects, not an error here. */
-  private final class BackBits(b: Array[Byte], off: Int, len: Int) {
-    var pos: Int = { // total usable bits: sentinel bit itself excluded
-      if (len <= 0) -1
-      else {
-        val last = b(off + len - 1) & 0xff
-        if (last == 0) -1
-        else (len - 1) * 8 + highBit(last)
-      }
-    }
-    def bad: Boolean = pos < 0
-    var overflowed = false
-    def read(n: Int): Long = {
-      if (n == 0) return 0L
-      pos -= n
-      var v = 0L
-      var i = 0
-      while (i < n) {
-        val bit = pos + i
-        if (bit >= 0)
-          v |= (((b(off + (bit >> 3)) >> (bit & 7)) & 1).toLong << i)
-        else overflowed = true
-        i += 1
-      }
-      v
-    }
-    def bitsLeft: Int = pos
-  }
-
-  // ---- FSE (§4.1) ---------------------------------------------------
-
-  /** One FSE decode table: per state — symbol, bit width of the state
-    * refill, and the refill baseline. `private[operators]`: the encoder
-    * ([[ZstdEncode]]) walks the SAME tables backwards — symbol ranges
-    * partition the state space, so (symbol, next-state) uniquely names
-    * the decode cell to emit. One table, two directions, no drift. */
-  private[operators] final class FseTable(val accuracyLog: Int,
-      val symbol: Array[Int], val nbBits: Array[Int],
-      val baseline: Array[Int])
-
-  private def highBit(v: Int): Int = 31 - Integer.numberOfLeadingZeros(v)
-
-  /** Build the decode table from normalized counts (§4.1.1): -1-count
-    * symbols fill from the table top with full-log reads; positive
-    * counts spread with the (5/8·size + 3) step; per-cell bits/baseline
-    * from the symbol's cumulative next-state counter. */
-  private[operators] def fseBuild(norm: Array[Int], accuracyLog: Int)
-      : Option[FseTable] = {
-    val size = 1 << accuracyLog
-    val symbol = new Array[Int](size)
-    val nbBits = new Array[Int](size)
-    val baseline = new Array[Int](size)
-    var highThreshold = size - 1
-    val symbolNext = new Array[Int](norm.length)
-    var s = 0
-    while (s < norm.length) {
-      if (norm(s) == -1) {
-        symbol(highThreshold) = s
-        highThreshold -= 1
-        symbolNext(s) = 1
-      } else symbolNext(s) = norm(s)
-      s += 1
-    }
-    val step = (size >> 1) + (size >> 3) + 3
-    val mask = size - 1
-    var pos = 0
-    s = 0
-    while (s < norm.length) {
-      var i = 0
-      while (i < norm(s)) {
-        symbol(pos) = s
-        pos = (pos + step) & mask
-        while (pos > highThreshold) pos = (pos + step) & mask
-        i += 1
-      }
-      s += 1
-    }
-    if (pos != 0) return None // table must close exactly
-    var u = 0
-    while (u < size) {
-      val sym = symbol(u)
-      val nextState = symbolNext(sym)
-      symbolNext(sym) += 1
-      val nb = accuracyLog - highBit(nextState)
-      nbBits(u) = nb
-      baseline(u) = (nextState << nb) - size
-      u += 1
-    }
-    Some(new FseTable(accuracyLog, symbol, nbBits, baseline))
-  }
-
-  /** Forward little-endian bit reader for FSE table DESCRIPTIONS
-    * (§4.1.1 reads those forward, unlike the data streams). */
-  private final class FwdBits(b: Array[Byte], var byteOff: Int,
-      val end: Int) {
-    var bitOff = 0
-    def read(n: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < n) {
-        val p = byteOff + ((bitOff + i) >> 3)
-        if (p >= end) return -1
-        v |= (((b(p) >> ((bitOff + i) & 7)) & 1) << i)
-        i += 1
-      }
-      bitOff += n
-      byteOff += bitOff >> 3
-      bitOff &= 7
-      v
-    }
-    def consumedBytes(start: Int): Int =
-      byteOff - start + (if (bitOff > 0) 1 else 0)
-  }
-
-  /** Read an FSE table description (§4.1.1): 4-bit accuracy log (+5),
-    * then the threshold-coded normalized counts with the -1 low-prob
-    * form and the 2-bit zero-repeat extension. Returns (table, bytes
-    * consumed). */
-  private def fseReadTable(b: Array[Byte], off: Int, end: Int,
-      maxLog: Int, maxSymbol: Int): Option[(FseTable, Int)] = {
-    val in = new FwdBits(b, off, end)
-    val al = in.read(4)
-    if (al < 0) return None
-    val accuracyLog = al + 5
-    if (accuracyLog > maxLog) return None
-    var remaining = (1 << accuracyLog) + 1
-    var threshold = 1 << accuracyLog
-    var nbBitsRead = accuracyLog + 1
-    val norm = new Array[Int](maxSymbol + 1)
-    var charnum = 0
-    while (remaining > 1 && charnum <= maxSymbol) {
-      // peek nbBitsRead bits; small values consume one less
-      val save = (in.byteOff, in.bitOff)
-      var count = in.read(nbBitsRead)
-      if (count < 0) return None
-      val max = (2 * threshold - 1) - remaining
-      if ((count & (threshold - 1)) < max) {
-        // small form: rewind one bit
-        count &= threshold - 1
-        in.byteOff = save._1; in.bitOff = save._2
-        in.read(nbBitsRead - 1)
-      } else {
-        if (count >= threshold) count -= max
-      }
-      count -= 1 // -1..remaining-1; -1 = less-than-one probability
-      remaining -= (if (count < 0) 1 else count)
-      if (remaining < 0) return None
-      norm(charnum) = count
-      charnum += 1
-      if (count == 0) {
-        var rep = in.read(2)
-        if (rep < 0) return None
-        charnum += rep
-        while (rep == 3) {
-          rep = in.read(2)
-          if (rep < 0) return None
-          charnum += rep
-        }
-        if (charnum > maxSymbol + 1) return None
-      }
-      while (remaining < threshold) {
-        nbBitsRead -= 1
-        threshold >>= 1
-      }
-    }
-    if (remaining != 1) return None
-    fseBuild(norm, accuracyLog).map(t => (t, in.consumedBytes(off)))
-  }
-
-  // ---- Huffman literals (§4.2) --------------------------------------
-
-  /** Huffman decode table: 2^maxBits cells of (symbol, codeLen). */
-  private final class HufTable(val maxBits: Int, val symbol: Array[Int],
-      val bits: Array[Int])
-
-  /** Build the canonical table from weights (§4.2.1): bit length =
-    * maxBits + 1 - weight; the LAST weight is implied (completes the
-    * 2^w-1 sum to a power of two); longest codes fill the table from
-    * index 0 upward, symbols ascending within a length. */
-  private def hufBuild(weights: Array[Int], numSymbols: Int)
-      : Option[HufTable] = {
+  /** All of `in`, or None when it yields more than `cap` bytes. Reads
+    * chunks of 8 KiB doubling to 1 MiB and assembles them only on
+    * success, so a stream past the cap costs about `cap` bytes of
+    * allocation and a small one little more than its size. */
+  private[operators] def readCapped(in: java.io.InputStream,
+      cap: Int): Option[Array[Byte]] = {
+    val chunks = Vector.newBuilder[Array[Byte]]
     var total = 0L
-    var s = 0
-    while (s < numSymbols) {
-      if (weights(s) > 11) return None
-      if (weights(s) > 0) total += (1L << (weights(s) - 1))
-      s += 1
+    var size = 1 << 13
+    var full = true
+    while (full) {
+      val c = new Array[Byte](size)
+      val n = in.readNBytes(c, 0, c.length)
+      total += n
+      if (total > cap) return None
+      chunks += c
+      full = n == c.length
+      size = math.min(size * 2, 1 << 20)
     }
-    if (total == 0) return None
-    val maxBits = highBit(total.toInt) + 1
-    if (maxBits > 11) return None
-    val leftover = (1L << maxBits) - total
-    // leftover must be a power of two — it IS the last symbol's weight
-    if (leftover <= 0 || (leftover & (leftover - 1)) != 0) return None
-    val lastWeight = highBit(leftover.toInt) + 1
-    val w = java.util.Arrays.copyOf(weights, numSymbols + 1)
-    w(numSymbols) = lastWeight
-    val n = numSymbols + 1
-    val size = 1 << maxBits
-    val symbol = new Array[Int](size)
-    val bits = new Array[Int](size)
-    var pos = 0
-    var weight = 1
-    while (weight <= maxBits) { // longest codes (smallest weights) first
-      val len = maxBits + 1 - weight
-      var sym = 0
-      while (sym < n) {
-        if (w(sym) == weight) {
-          val span = 1 << (maxBits - len)
-          if (pos + span > size) return None
-          var i = 0
-          while (i < span) {
-            symbol(pos + i) = sym
-            bits(pos + i) = len
-            i += 1
-          }
-          pos += span
-        }
-        sym += 1
-      }
-      weight += 1
+    val out = new Array[Byte](total.toInt)
+    var p = 0
+    chunks.result().foreach { c =>
+      val n = math.min(c.length, out.length - p)
+      System.arraycopy(c, 0, out, p, n)
+      p += n
     }
-    if (pos != size) return None
-    Some(new HufTable(maxBits, symbol, bits))
+    Some(out)
   }
-
-  /** Read a Huffman tree description (§4.2.1): header < 128 → that
-    * many bytes of FSE-compressed weights (two interleaved states over
-    * a backwards stream, accuracy ≤ 6); ≥ 128 → (header - 127) direct
-    * 4-bit weights. Returns (table, bytes consumed incl. header). */
-  private def hufReadTable(b: Array[Byte], off: Int, end: Int)
-      : Option[(HufTable, Int)] = {
-    if (off >= end) return None
-    val hb = b(off) & 0xff
-    if (hb >= 128) {
-      touch("weights-direct")
-      val num = hb - 127
-      val nBytes = (num + 1) / 2
-      if (off + 1 + nBytes > end) return None
-      val weights = new Array[Int](num)
-      var i = 0
-      while (i < num) {
-        val byte = b(off + 1 + (i >> 1)) & 0xff
-        weights(i) = if ((i & 1) == 0) byte >> 4 else byte & 0xf
-        i += 1
-      }
-      hufBuild(weights, num).map(t => (t, 1 + nBytes))
-    } else {
-      touch("weights-fse")
-      val compSize = hb
-      if (off + 1 + compSize > end) return None
-      val ft = fseReadTable(b, off + 1, off + 1 + compSize, 6, 255) match {
-        case Some((t, consumed)) => (t, consumed)
-        case None => return None
-      }
-      val (table, hdrBytes) = ft
-      val streamOff = off + 1 + hdrBytes
-      val streamLen = compSize - hdrBytes
-      val in = new BackBits(b, streamOff, streamLen)
-      if (in.bad) return None
-      var s1 = in.read(table.accuracyLog).toInt
-      var s2 = in.read(table.accuracyLog).toInt
-      if (in.overflowed) return None
-      val weights = new Array[Int](255)
-      var n = 0
-      var done = false
-      while (!done && n < 255) {
-        weights(n) = table.symbol(s1); n += 1
-        if (in.bitsLeft < table.nbBits(s1)) {
-          if (n < 255) { weights(n) = table.symbol(s2); n += 1 }
-          done = true
-        } else {
-          s1 = table.baseline(s1) + in.read(table.nbBits(s1)).toInt
-          if (n < 255) {
-            weights(n) = table.symbol(s2); n += 1
-            if (in.bitsLeft < table.nbBits(s2)) {
-              if (n < 255) { weights(n) = table.symbol(s1); n += 1 }
-              done = true
-            } else
-              s2 = table.baseline(s2) + in.read(table.nbBits(s2)).toInt
-          }
-        }
-      }
-      if (!done) return None // 255 weights without exhausting = corrupt
-      hufBuild(weights, n).map(t => (t, 1 + compSize))
-    }
-  }
-
-  /** Decode `count` literals from one backwards Huffman stream. */
-  private def hufDecodeStream(table: HufTable, b: Array[Byte], off: Int,
-      len: Int, out: Array[Byte], outOff: Int, count: Int): Boolean = {
-    val in = new BackBits(b, off, len)
-    if (in.bad) return false
-    var state = in.read(table.maxBits).toInt
-    var i = 0
-    while (i < count) {
-      out(outOff + i) = table.symbol(state).toByte
-      val used = table.bits(state)
-      // refill: shift out the consumed code bits, pull in fresh ones
-      val fresh = in.read(used).toInt
-      state = ((state << used) | fresh) & ((1 << table.maxBits) - 1)
-      i += 1
-      if (in.pos < -table.maxBits) return false // ran far past start
-    }
-    true
-  }
-
-  // ---- sequence code tables (§3.1.1.3.2.1) --------------------------
-
-  private[operators] val LlBase = Array(0, 1, 2, 3, 4, 5, 6, 7, 8, 9,
-    10, 11, 12,
-    13, 14, 15, 16, 18, 20, 22, 24, 28, 32, 40, 48, 64, 128, 256, 512,
-    1024, 2048, 4096, 8192, 16384, 32768, 65536)
-  private[operators] val LlExtra = Array(0, 0, 0, 0, 0, 0, 0, 0, 0, 0,
-    0, 0, 0, 0,
-    0, 0, 1, 1, 1, 1, 2, 2, 3, 3, 4, 6, 7, 8, 9, 10, 11, 12, 13, 14,
-    15, 16)
-  private[operators] val MlBase = Array(3, 4, 5, 6, 7, 8, 9, 10, 11,
-    12, 13, 14,
-    15, 16, 17, 18, 19, 20, 21, 22, 23, 24, 25, 26, 27, 28, 29, 30, 31,
-    32, 33, 34, 35, 37, 39, 41, 43, 47, 51, 59, 67, 83, 99, 131, 259,
-    515, 1027, 2051, 4099, 8195, 16387, 32771, 65539)
-  private[operators] val MlExtra = Array(0, 0, 0, 0, 0, 0, 0, 0, 0, 0,
-    0, 0, 0, 0,
-    0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 1, 1, 1, 1,
-    2, 2, 3, 3, 4, 4, 5, 7, 8, 9, 10, 11, 12, 13, 14, 15, 16)
-
-  /** RFC 8878 predefined distributions (mode 0). */
-  private val LlDefaultNorm = Array(4, 3, 2, 2, 2, 2, 2, 2, 2, 2, 2, 2,
-    2, 1, 1, 1, 2, 2, 2, 2, 2, 2, 2, 2, 2, 3, 2, 1, 1, 1, 1, 1, -1, -1,
-    -1, -1)
-  private val MlDefaultNorm = Array(1, 4, 3, 2, 2, 2, 2, 2, 2, 1, 1, 1,
-    1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1,
-    1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, -1, -1, -1, -1, -1, -1, -1)
-  private val OfDefaultNorm = Array(1, 1, 1, 1, 1, 1, 2, 2, 2, 1, 1, 1,
-    1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, -1, -1, -1, -1, -1)
-
-  private[operators] lazy val LlDefault = fseBuild(LlDefaultNorm, 6).get
-  private[operators] lazy val MlDefault = fseBuild(MlDefaultNorm, 6).get
-  private[operators] lazy val OfDefault = fseBuild(OfDefaultNorm, 5).get
-
-  /** An RLE "table": one symbol, zero-bit updates. */
-  private[operators] def rleTable(sym: Int): FseTable =
-    new FseTable(0, Array(sym), Array(0), Array(0))
 
   // ---- dictionaries (RFC 8878 §5) ------------------------------------
 
-  /** A parsed zstd dictionary: entropy-table preload + rep-offset
-    * history + the content window prefix. `id == 0` for raw-content
-    * dictionaries (no structure — the whole blob is prefix). */
+  /** A zstd dictionary: structured (`id` from its header, entropy
+    * tables validated by libzstd) or raw-content (`id == 0`, the whole
+    * blob is window prefix). */
   final class ZDict private[ZstdDecode] (val id: Long,
-      private[ZstdDecode] val huf: HufTable,
-      private[ZstdDecode] val ofT: FseTable,
-      private[ZstdDecode] val mlT: FseTable,
-      private[ZstdDecode] val llT: FseTable,
-      private[ZstdDecode] val rep: Array[Long],
-      private[ZstdDecode] val content: Array[Byte])
+      private[ZstdDecode] val bytes: Array[Byte])
 
-  /** Parse a dictionary blob (RFC 8878 §5): magic `0xEC30A437`, LE32
-    * dictionary id, entropy tables (Huffman literals table, then the
-    * OF / ML / LL FSE tables, the same descriptions compressed blocks
-    * carry), three LE32 recent offsets (each non-zero and ≤ content
-    * size), then the content window prefix. A blob WITHOUT the magic
-    * is a raw-content dictionary: all of it is prefix, entropy state
-    * starts fresh (`{1,4,8}` offsets), id 0. */
-  def parseDict(b: Array[Byte]): Option[ZDict] = {
-    if (b == null || b.length == 0) return None
-    if (b.length.toLong > MaxOutput) return None
-    def u32(p: Int): Long =
-      (b(p) & 0xffL) | ((b(p + 1) & 0xffL) << 8) |
-        ((b(p + 2) & 0xffL) << 16) | ((b(p + 3) & 0xffL) << 24)
-    if (b.length < 8 || u32(0) != 0xec30a437L) {
-      touch("dict-raw-content")
-      return Some(new ZDict(0L, null, null, null, null,
-        Array(1L, 4L, 8L), b))
+  /** The dictionary a blob's header declares: magic `0xEC30A437` +
+    * LE32 non-zero id is structured, a blob without the magic is
+    * raw-content. Its tables are checked when libzstd loads it. */
+  private def dictHeader(b: Array[Byte]): Option[ZDict] =
+    if (b == null || b.length == 0 || b.length > MaxOutput) None
+    else if (b.length < 8 || u32(b, 0) != DictMagic) Some(new ZDict(0L, b))
+    else Some(new ZDict(u32(b, 4), b))
+      .filter(_.id != 0L) // structured dicts carry a real id
+
+  /** Parse a dictionary blob: magic `0xEC30A437` + LE32 non-zero id +
+    * entropy tables + rep offsets + content is a structured dictionary,
+    * accepted only when libzstd loads it; a blob without the magic is
+    * a raw-content dictionary. */
+  def parseDict(b: Array[Byte]): Option[ZDict] =
+    dictHeader(b).filter { d =>
+      val ctx = new ZstdDecompressCtx()
+      try { ctx.loadDict(d.bytes); true }
+      catch { case _: ZstdException => false }
+      finally ctx.close()
     }
-    touch("dict-structured")
-    val id = u32(4)
-    if (id == 0L) return None // structured dicts carry a real id
-    var p = 8
-    val huf = hufReadTable(b, p, b.length) match {
-      case Some((t, c)) => p += c; t
-      case None => return None
+
+  // ---- frames ----------------------------------------------------------
+
+  /** Decode the zstd frame at `off` with `ctx` (and `dict`, already
+    * loaded into `ctx`); (content, bytes consumed). None when `off`
+    * holds no zstd frame or the frame would regenerate more than
+    * `cap` bytes; corrupt frames throw libzstd's errors. */
+  private def frameAt(ctx: ZstdDecompressCtx, dict: ZDict,
+      b: Array[Byte], off: Int, cap: Int): Option[(Array[Byte], Int)] = {
+    if (off + 4 > b.length || u32(b, off) != FrameMagic) return None
+    val len = Zstd.findFrameCompressedSize(b, off, b.length - off).toInt
+    val size = Zstd.getFrameContentSize(b, off, len)
+    if (size < -1L || size > cap) return None // -1: size not declared
+    if (size >= 0L) {
+      val out = new Array[Byte](size.toInt)
+      if (ctx.decompressByteArray(out, 0, out.length, b, off, len) !=
+        out.length) return None
+      return Some((out, len))
     }
-    val of = fseReadTable(b, p, b.length, 8, 31) match {
-      case Some((t, c)) => p += c; t
-      case None => return None
-    }
-    val ml = fseReadTable(b, p, b.length, 9, 52) match {
-      case Some((t, c)) => p += c; t
-      case None => return None
-    }
-    val ll = fseReadTable(b, p, b.length, 9, 35) match {
-      case Some((t, c)) => p += c; t
-      case None => return None
-    }
-    if (p + 12 > b.length) return None
-    val rep = Array(u32(p), u32(p + 4), u32(p + 8))
-    p += 12
-    val content = java.util.Arrays.copyOfRange(b, p, b.length)
-    var i = 0
-    while (i < 3) {
-      if (rep(i) == 0L || rep(i) > content.length) return None
-      i += 1
-    }
-    Some(new ZDict(id, huf, of, ml, ll, rep, content))
+    // Size not declared (streaming writers): one call into a buffer of
+    // 16x the frame fits a typical record; a frame that outgrows it is
+    // read as a stream that stops at the cap (setting up a stream
+    // costs ~20x the one call on a 40-byte record frame).
+    val guess = math.min(cap.toLong, math.max(4096L, 16L * len)).toInt
+    val out = new Array[Byte](guess)
+    val n =
+      try ctx.decompressByteArray(out, 0, guess, b, off, len)
+      catch {
+        case e: ZstdException
+            if e.getErrorCode == Zstd.errDstSizeTooSmall() => -1
+      }
+    if (n >= 0) return Some((java.util.Arrays.copyOf(out, n), len))
+    val in = new ZstdInputStreamNoFinalizer(
+      new java.io.ByteArrayInputStream(b, off, len))
+    try {
+      if (dict != null) in.setDict(dict.bytes)
+      readCapped(in, cap).map(c => (c, len))
+    } finally in.close()
   }
-
-  // ---- per-frame decode state ---------------------------------------
-
-  private final class FrameState {
-    var huf: HufTable = null // carried for treeless literal blocks
-    var llT: FseTable = null // carried for repeat (mode 3) sequences
-    var mlT: FseTable = null
-    var ofT: FseTable = null
-    val rep = Array(1L, 4L, 8L) // repeated-offset history
-  }
-
-  private final class Out(cap: Long) {
-    val buf = new java.io.ByteArrayOutputStream()
-    private var arr = new Array[Byte](1 << 16)
-    private var n = 0
-    def size: Int = n
-    def byteAt(i: Int): Byte = arr(i)
-    def append(b: Array[Byte], off: Int, len: Int): Boolean = {
-      if (n.toLong + len > cap) return false
-      ensure(n + len)
-      System.arraycopy(b, off, arr, n, len)
-      n += len
-      true
-    }
-    def appendByte(v: Byte): Boolean = {
-      if (n.toLong + 1 > cap) return false
-      ensure(n + 1)
-      arr(n) = v
-      n += 1
-      true
-    }
-    /** Match copy — may self-overlap (the RLE-extension semantics). */
-    def copyMatch(offset: Int, len: Int): Boolean = {
-      if (offset <= 0 || offset > n) return false
-      if (n.toLong + len > cap) return false
-      ensure(n + len)
-      var i = 0
-      var src = n - offset
-      while (i < len) {
-        arr(n + i) = arr(src)
-        src += 1
-        i += 1
-      }
-      n += len
-      true
-    }
-    private def ensure(need: Int): Unit =
-      if (need > arr.length) {
-        var cap2 = arr.length.toLong * 2
-        while (cap2 < need) cap2 *= 2
-        arr = java.util.Arrays.copyOf(arr,
-          math.min(cap2, Int.MaxValue.toLong).toInt)
-      }
-    def result: Array[Byte] = java.util.Arrays.copyOf(arr, n)
-    /** Result minus the first `from` bytes — strips a dictionary
-      * content prefix seeded as match-copy history. */
-    def resultFrom(from: Int): Array[Byte] =
-      java.util.Arrays.copyOfRange(arr, from, n)
-  }
-
-  // ---- literals section (§3.1.1.3.1) --------------------------------
-
-  /** Decode a block's literals; returns (literals bytes, bytes of the
-    * block consumed by the section). */
-  private def decodeLiterals(b: Array[Byte], off: Int, end: Int,
-      st: FrameState): Option[(Array[Byte], Int)] = {
-    if (off >= end) return None
-    val b0 = b(off) & 0xff
-    val ltype = b0 & 3
-    val sf = (b0 >> 2) & 3
-    if (ltype <= 1) { // Raw / RLE
-      val (regen, hdr) = sf match {
-        case 0 | 2 => (b0 >> 3, 1)
-        case 1 =>
-          if (off + 2 > end) return None
-          ((b0 >> 4) | ((b(off + 1) & 0xff) << 4), 2)
-        case _ =>
-          if (off + 3 > end) return None
-          ((b0 >> 4) | ((b(off + 1) & 0xff) << 4) |
-            ((b(off + 2) & 0xff) << 12), 3)
-      }
-      if (regen > MaxOutput) return None
-      if (ltype == 0) { // Raw
-        touch("lit-raw")
-        if (off + hdr + regen > end) return None
-        val lit = java.util.Arrays.copyOfRange(b, off + hdr,
-          off + hdr + regen)
-        Some((lit, hdr + regen))
-      } else { // RLE
-        touch("lit-rle")
-        if (off + hdr + 1 > end) return None
-        val lit = new Array[Byte](regen)
-        java.util.Arrays.fill(lit, b(off + hdr))
-        Some((lit, hdr + 1))
-      }
-    } else { // Compressed (2) / Treeless (3)
-      val (regen, comp, hdr, fourStreams) = sf match {
-        case 0 | 1 =>
-          if (off + 3 > end) return None
-          val v = b0 | ((b(off + 1) & 0xff) << 8) |
-            ((b(off + 2) & 0xff) << 16)
-          (((v >> 4) & 0x3ff), ((v >> 14) & 0x3ff), 3, sf == 1)
-        case 2 =>
-          if (off + 4 > end) return None
-          val v = b0.toLong | ((b(off + 1) & 0xffL) << 8) |
-            ((b(off + 2) & 0xffL) << 16) | ((b(off + 3) & 0xffL) << 24)
-          ((((v >> 4) & 0x3fff).toInt, ((v >> 18) & 0x3fff).toInt, 4,
-            true))
-        case _ =>
-          if (off + 5 > end) return None
-          val v = b0.toLong | ((b(off + 1) & 0xffL) << 8) |
-            ((b(off + 2) & 0xffL) << 16) | ((b(off + 3) & 0xffL) << 24) |
-            ((b(off + 4) & 0xffL) << 32)
-          ((((v >> 4) & 0x3ffff).toInt, ((v >> 22) & 0x3ffff).toInt, 5,
-            true))
-      }
-      if (regen > MaxOutput) return None
-      if (off + hdr + comp > end) return None
-      var p = off + hdr
-      val sectionEnd = off + hdr + comp
-      var table = st.huf
-      if (ltype == 2) {
-        touch("lit-compressed")
-        val ht = hufReadTable(b, p, sectionEnd) match {
-          case Some(x) => x
-          case None => return None
-        }
-        table = ht._1
-        st.huf = table
-        p += ht._2
-      }
-      if (ltype == 3) touch("lit-treeless")
-      if (table == null) return None // treeless with no prior table
-      val lit = new Array[Byte](regen)
-      if (!fourStreams) {
-        touch("huf-1stream")
-        if (!hufDecodeStream(table, b, p, sectionEnd - p, lit, 0, regen))
-          return None
-      } else {
-        touch("huf-4stream")
-        if (p + 6 > sectionEnd) return None
-        def u16(q: Int): Int = (b(q) & 0xff) | ((b(q + 1) & 0xff) << 8)
-        val s1 = u16(p); val s2 = u16(p + 2); val s3 = u16(p + 4)
-        val dataOff = p + 6
-        val total = sectionEnd - dataOff
-        val s4 = total - s1 - s2 - s3
-        if (s4 <= 0) return None
-        val per = (regen + 3) / 4
-        val last = regen - 3 * per
-        if (last < 0) return None
-        val offs = Array(dataOff, dataOff + s1, dataOff + s1 + s2,
-          dataOff + s1 + s2 + s3)
-        val lens = Array(s1, s2, s3, s4)
-        val cnts = Array(per, per, per, last)
-        var i = 0
-        while (i < 4) {
-          if (!hufDecodeStream(table, b, offs(i), lens(i), lit, i * per,
-            cnts(i))) return None
-          i += 1
-        }
-      }
-      Some((lit, hdr + comp))
-    }
-  }
-
-  // ---- sequences section (§3.1.1.3.2) -------------------------------
-
-  /** Resolve one mode's decode table (predefined / RLE / FSE / repeat).
-    * Returns (table, bytes consumed). */
-  private def seqTable(b: Array[Byte], off: Int, end: Int, mode: Int,
-      default: FseTable, maxLog: Int, maxSymbol: Int, prev: FseTable)
-      : Option[(FseTable, Int)] = mode match {
-    case 0 => touch("seq-predefined"); Some((default, 0))
-    case 1 =>
-      if (off >= end) return None
-      val sym = b(off) & 0xff
-      if (sym > maxSymbol) None
-      else { touch("seq-rle"); Some((rleTable(sym), 1)) }
-    case 2 => touch("seq-fse"); fseReadTable(b, off, end, maxLog, maxSymbol)
-    case _ =>
-      if (prev == null) None else { touch("seq-repeat"); Some((prev, 0)) }
-  }
-
-  /** Decode and execute a compressed block's sequences over the shared
-    * output (§3.1.1.3.2.1.1 bitstream order; §3.1.1.4 offset codes;
-    * §3.1.1.5 execution). */
-  private def decodeSequences(b: Array[Byte], off: Int, end: Int,
-      lit: Array[Byte], st: FrameState, out: Out): Boolean = {
-    if (off >= end) return false
-    var p = off
-    val b0 = b(p) & 0xff
-    var nbSeq = 0
-    if (b0 < 128) { nbSeq = b0; p += 1 }
-    else if (b0 < 255) {
-      if (p + 2 > end) return false
-      nbSeq = ((b0 - 128) << 8) + (b(p + 1) & 0xff)
-      p += 2
-    } else {
-      if (p + 3 > end) return false
-      nbSeq = (b(p + 1) & 0xff) + ((b(p + 2) & 0xff) << 8) + 0x7f00
-      p += 3
-    }
-    if (nbSeq == 0)
-      return lit.isEmpty || out.append(lit, 0, lit.length)
-    if (p >= end) return false
-    val modes = b(p) & 0xff
-    if ((modes & 3) != 0) return false // reserved bits
-    p += 1
-    val llMode = (modes >> 6) & 3
-    val ofMode = (modes >> 4) & 3
-    val mlMode = (modes >> 2) & 3
-    val ll = seqTable(b, p, end, llMode, LlDefault, 9, 35, st.llT) match {
-      case Some((t, c)) => p += c; t
-      case None => return false
-    }
-    val of = seqTable(b, p, end, ofMode, OfDefault, 8, 31, st.ofT) match {
-      case Some((t, c)) => p += c; t
-      case None => return false
-    }
-    val ml = seqTable(b, p, end, mlMode, MlDefault, 9, 52, st.mlT) match {
-      case Some((t, c)) => p += c; t
-      case None => return false
-    }
-    st.llT = ll; st.ofT = of; st.mlT = ml
-    val in = new BackBits(b, p, end - p)
-    if (in.bad) return false
-    var llState = in.read(ll.accuracyLog).toInt
-    var ofState = in.read(of.accuracyLog).toInt
-    var mlState = in.read(ml.accuracyLog).toInt
-    if (in.overflowed) return false
-    var litPos = 0
-    var seq = 0
-    while (seq < nbSeq) {
-      val ofCode = of.symbol(ofState)
-      if (ofCode > 31) return false
-      val offValue =
-        if (ofCode == 0) 1L
-        else (1L << ofCode) + in.read(ofCode)
-      val mlCode = ml.symbol(mlState)
-      val matchLen = MlBase(mlCode) + in.read(MlExtra(mlCode)).toInt
-      val llCode = ll.symbol(llState)
-      val litLen = LlBase(llCode) + in.read(LlExtra(llCode)).toInt
-      if (in.overflowed) return false
-      // offset resolution with the repeated-offset history
-      var offset = 0L
-      if (offValue > 3) {
-        offset = offValue - 3
-        st.rep(2) = st.rep(1); st.rep(1) = st.rep(0); st.rep(0) = offset
-      } else {
-        var idx = offValue.toInt
-        if (litLen == 0) idx += 1
-        idx match {
-          case 1 => offset = st.rep(0)
-          case 2 =>
-            offset = st.rep(1)
-            st.rep(1) = st.rep(0); st.rep(0) = offset
-          case 3 =>
-            offset = st.rep(2)
-            st.rep(2) = st.rep(1); st.rep(1) = st.rep(0)
-            st.rep(0) = offset
-          case _ =>
-            offset = st.rep(0) - 1
-            if (offset <= 0) return false
-            st.rep(2) = st.rep(1); st.rep(1) = st.rep(0)
-            st.rep(0) = offset
-        }
-      }
-      if (litPos + litLen > lit.length) return false
-      if (!out.append(lit, litPos, litLen)) return false
-      litPos += litLen
-      if (offset > Int.MaxValue) return false
-      if (!out.copyMatch(offset.toInt, matchLen)) return false
-      seq += 1
-      if (seq < nbSeq) { // last sequence leaves states unread
-        llState = ll.baseline(llState) + in.read(ll.nbBits(llState)).toInt
-        mlState = ml.baseline(mlState) + in.read(ml.nbBits(mlState)).toInt
-        ofState = of.baseline(ofState) + in.read(of.nbBits(ofState)).toInt
-        if (in.overflowed) return false
-      }
-    }
-    // trailing literals after the last sequence
-    if (litPos < lit.length) {
-      if (!out.append(lit, litPos, lit.length - litPos)) return false
-    }
-    true
-  }
-
-  // ---- frame decode --------------------------------------------------
 
   /** Decode ONE zstd frame starting at `off`; returns (content, bytes
-    * consumed). Skippable frames and dictionary frames return None —
-    * route those through the metadata walk. */
-  def decodeFrame(b: Array[Byte], off: Int): Option[(Array[Byte], Int)] =
-    decodeFrame(b, off, null)
-
-  /** Dictionary-aware frame decode: `dict` seeds the entropy tables,
-    * the rep-offset history, and the match window (its content is a
-    * prefix the frame's offsets may reach into — RFC 8878 §5). A frame
-    * declaring a `dict_id` decodes only when `dict` matches (a
-    * raw-content dict, id 0, serves any declared id — the id lives
-    * outside raw blobs by definition); with no dict supplied it is
-    * declined exactly as before. */
-  def decodeFrame(b: Array[Byte], off: Int,
-      dict: ZDict): Option[(Array[Byte], Int)] = {
-    if (b == null || off + 5 > b.length) return None
-    def u32(p: Int): Long =
-      (b(p) & 0xffL) | ((b(p + 1) & 0xffL) << 8) |
-        ((b(p + 2) & 0xffL) << 16) | ((b(p + 3) & 0xffL) << 24)
-    if (u32(off) != 0xfd2fb528L) return None
-    val desc = b(off + 4) & 0xff
-    if ((desc & 0x08) != 0) return None
-    val fcsFlag = (desc >> 6) & 3
-    val singleSegment = (desc & 0x20) != 0
-    val hasChecksum = (desc & 0x04) != 0
-    val didFlag = desc & 3
-    var p = off + 5
-    if (!singleSegment) {
-      if (p >= b.length) return None
-      p += 1 // window descriptor (bounds enforced by MaxOutput)
-    }
-    val didLen = didFlag match { case 0 => 0; case 1 => 1; case 2 => 2
-      case _ => 4 }
-    if (p + didLen > b.length) return None
-    var dictId = 0L
-    var i = 0
-    while (i < didLen) { dictId |= (b(p + i) & 0xffL) << (8 * i); i += 1 }
-    if (dictId != 0L) {
-      // external dictionary — decode only with the matching one
-      if (dict == null) return None
-      if (dict.id != 0L && dict.id != dictId) return None
-      touch("frame-dict")
-    }
-    p += didLen
-    val fcsLen = fcsFlag match {
-      case 0 => if (singleSegment) 1 else 0
-      case 1 => 2; case 2 => 4; case _ => 8
-    }
-    if (p + fcsLen > b.length) return None
-    var contentSize = -1L
-    if (fcsLen > 0) {
-      contentSize = 0L
-      i = 0
-      while (i < fcsLen) {
-        contentSize |= (b(p + i) & 0xffL) << (8 * i); i += 1
-      }
-      if (fcsLen == 2) contentSize += 256L
-    }
-    p += fcsLen
-    if (contentSize > MaxOutput) return None
-    val st = new FrameState
-    // dictionary preload: entropy tables serve the first blocks'
-    // repeat/treeless modes; the content seeds the match window as an
-    // already-emitted prefix (stripped from the result)
-    val prefix = if (dict == null) 0 else {
-      st.huf = dict.huf
-      st.llT = dict.llT; st.mlT = dict.mlT; st.ofT = dict.ofT
-      st.rep(0) = dict.rep(0); st.rep(1) = dict.rep(1)
-      st.rep(2) = dict.rep(2)
-      dict.content.length
-    }
-    val out = new Out(MaxOutput.toLong + prefix)
-    if (prefix > 0 && !out.append(dict.content, 0, prefix)) return None
-    var last = false
-    while (!last) {
-      if (p + 3 > b.length) return None
-      val hdr = (b(p) & 0xffL) | ((b(p + 1) & 0xffL) << 8) |
-        ((b(p + 2) & 0xffL) << 16)
-      p += 3
-      last = (hdr & 1L) != 0
-      val btype = ((hdr >> 1) & 3L).toInt
-      val bsize = (hdr >> 3).toInt
-      btype match {
-        case 0 =>
-          touch("block-raw")
-          if (p + bsize > b.length) return None
-          if (!out.append(b, p, bsize)) return None
-          p += bsize
-        case 1 =>
-          touch("block-rle")
-          if (p >= b.length) return None
-          val run = new Array[Byte](bsize)
-          java.util.Arrays.fill(run, b(p))
-          if (!out.append(run, 0, bsize)) return None
-          p += 1
-        case 2 =>
-          touch("block-compressed")
-          if (p + bsize > b.length) return None
-          val blockEnd = p + bsize
-          val lits = decodeLiterals(b, p, blockEnd, st) match {
-            case Some((l, consumed)) => p += consumed; l
-            case None => return None
-          }
-          if (!decodeSequences(b, p, blockEnd, lits, st, out)) return None
-          p = blockEnd
-        case _ => return None
-      }
-    }
-    if (contentSize >= 0 && contentSize != out.size - prefix) return None
-    if (hasChecksum) {
-      if (p + 4 > b.length) return None
-      val c = out.resultFrom(prefix) // checksum covers frame content only
-      val h = org.apache.spark.sql.catalyst.expressions.XXH64
-        .hashUnsafeBytes(c,
-          org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET,
-          c.length, 0L)
-      if ((h & 0xffffffffL) != u32(p)) return None
-      p += 4
-      return Some((c, p - off))
-    }
-    Some((out.resultFrom(prefix), p - off))
+    * consumed). Skippable frames and frames that need a dictionary
+    * return None — route those through the metadata walk. */
+  def decodeFrame(b: Array[Byte], off: Int): Option[(Array[Byte], Int)] = {
+    if (b == null || off < 0) return None
+    val ctx = new ZstdDecompressCtx()
+    try frameAt(ctx, null, b, off, MaxOutput)
+    catch { case _: ZstdException | _: java.io.IOException => None }
+    finally ctx.close()
   }
 
   /** Decode a whole (possibly multi-frame, possibly skippable-frame-
@@ -902,48 +169,60 @@ object ZstdDecode {
   private def decompressImpl(b: Array[Byte], dict0: ZDict,
       harvest: Boolean): Option[Array[Byte]] = {
     if (b == null || b.length < 4) return None
-    def u32(p: Int): Long =
-      (b(p) & 0xffL) | ((b(p + 1) & 0xffL) << 8) |
-        ((b(p + 2) & 0xffL) << 16) | ((b(p + 3) & 0xffL) << 24)
-    val out = new java.io.ByteArrayOutputStream()
-    var dict = dict0
-    var p = 0
-    while (p < b.length) {
-      if (p + 4 > b.length) return None
-      val magic = u32(p)
-      if ((magic & 0xfffffff0L) == 0x184d2a50L) {
-        if (p + 8 > b.length) return None
-        val n = u32(p + 4)
-        if (p + 8 + n > b.length) return None
-        if (harvest && magic == 0x184d2a5dL) {
-          // the WARC-zstd dictionary frame: payload is the dictionary,
-          // raw or itself a (dictionary-less) zstd frame
-          touch("dict-harvest")
-          val payload = java.util.Arrays.copyOfRange(b, p + 8,
-            p + 8 + n.toInt)
-          val raw =
-            if (payload.length >= 4 &&
-              (payload(0) & 0xff) == 0x28 && (payload(1) & 0xff) == 0xb5 &&
-              (payload(2) & 0xff) == 0x2f && (payload(3) & 0xff) == 0xfd)
-              decompress(payload) match {
-                case Some(d) => d
-                case None => return None // corrupt wrapped dictionary
-              }
-            else payload
-          dict = parseDict(raw) match {
-            case Some(d) => d
-            case None => return None // a dict frame must parse
+    val ctx = new ZstdDecompressCtx()
+    try {
+      var dict = dict0
+      if (dict != null) ctx.loadDict(dict.bytes)
+      val parts = Vector.newBuilder[Array[Byte]]
+      var total = 0
+      var p = 0
+      while (p < b.length) {
+        if (p + 4 > b.length) return None
+        val magic = u32(b, p)
+        if ((magic & 0xfffffff0L) == 0x184d2a50L) {
+          if (p + 8 > b.length) return None
+          val n = u32(b, p + 4)
+          if (p + 8 + n > b.length) return None
+          if (harvest && magic == 0x184d2a5dL) {
+            // the WARC-zstd dictionary frame: payload is the dictionary,
+            // raw or itself a (dictionary-less) zstd frame
+            val payload = java.util.Arrays.copyOfRange(b, p + 8,
+              p + 8 + n.toInt)
+            val raw =
+              if (payload.length >= 4 && u32(payload, 0) == FrameMagic)
+                decompress(payload) match {
+                  case Some(d) => d
+                  case None => return None // corrupt wrapped dictionary
+                }
+              else payload
+            // a dict frame must parse; libzstd's load checks its tables
+            dict = dictHeader(raw) match {
+              case Some(d) => d
+              case None => return None
+            }
+            ctx.loadDict(dict.bytes)
           }
+          p += (8 + n).toInt
+        } else frameAt(ctx, dict, b, p, MaxOutput - total) match {
+          case Some((c, consumed)) =>
+            parts += c
+            total += c.length
+            p += consumed
+          case None => return None
         }
-        p += (8 + n).toInt
-      } else decodeFrame(b, p, dict) match {
-        case Some((c, consumed)) =>
-          if (out.size().toLong + c.length > MaxOutput) return None
-          out.write(c)
-          p += consumed
-        case None => return None
       }
-    }
-    Some(out.toByteArray)
+      val all = parts.result()
+      if (all.length == 1) Some(all.head)
+      else {
+        val out = new Array[Byte](total)
+        var q = 0
+        all.foreach { c =>
+          System.arraycopy(c, 0, out, q, c.length)
+          q += c.length
+        }
+        Some(out)
+      }
+    } catch { case _: ZstdException | _: java.io.IOException => None }
+    finally ctx.close()
   }
 }

@@ -579,10 +579,9 @@ object MediaArrayKernel {
           r.value, r.nHeaders, UTF8String.fromString(r.codec))
       }.toArray[Any])
 
-  /** Column-at-rest zstd compression (round 14, [[graft.operators
-    * .ZstdEncode]]): one RFC 8878 frame — greedy LZ + predefined-FSE
-    * sequences, raw-block fallback, content size + checksum. NULL when
-    * the input exceeds the 64 MiB frame guard. */
+  /** Column-at-rest zstd compression ([[graft.operators.ZstdEncode]],
+    * libzstd): one RFC 8878 frame with content size + checksum. NULL
+    * when the input exceeds the 64 MiB frame guard. */
   def zstdCompress(b: Array[Byte]): Array[Byte] =
     if (b.length > (1 << 26)) null
     else graft.operators.ZstdEncode.compress(b)
@@ -943,8 +942,8 @@ case class Bz2Members(child: Expression) extends MediaArrayExpression {
 /** `xz_members(blob)` -> one struct per stream of a concatenated
   * multi-stream `.xz` blob, fully decoded with every container CRC32
   * and the per-block check (CRC32/CRC64/SHA-256/none) verified
-  * (golden-pinned against liblzma); structural violations yield an
-  * empty array. */
+  * (tukaani xz; liblzma golden vectors pin the bytes); structural
+  * violations yield an empty array. */
 case class XzMembers(child: Expression) extends MediaArrayExpression {
   override protected def structSchema: StructType =
     MediaArrayKernel.xzMemberSchema

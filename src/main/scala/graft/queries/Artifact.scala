@@ -5,8 +5,10 @@ import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
 /** The one owner of the sweep's on-disk artifacts: written indexes,
-  * export round trips and source fixtures that a query builds under
-  * `java.io.tmpdir` and then reads.
+  * export round trips and source fixtures that a query builds and then
+  * reads. Every artifact path lies under [[root]], one directory per
+  * process in `java.io.tmpdir`, which a JVM shutdown hook deletes, so a
+  * process that exits normally leaves nothing behind.
   *
   * An artifact is built once per (process, name, sf dir) and rebuilt if
   * its files vanish, so repeat invocations (Bench reps, Verify, a warm
@@ -18,11 +20,10 @@ import java.util.concurrent.atomic.AtomicLong
   * readers of `<path>/...` never see it. Otherwise, under a per-path
   * lock, any leftover target and marker are deleted, `build(path)` runs
   * in place, the marker is written and [[builds]] moves. Same-path
-  * callers wait on the lock, so none reads a partial artifact; the pid
-  * in every path keeps concurrent processes apart. A fresh process
-  * always rebuilds, even over a complete artifact at a reused pid's
-  * path. A build that throws, or whose marker cannot be written, leaves
-  * no handle, so the next call rebuilds.
+  * callers wait on the lock, so none reads a partial artifact; the
+  * per-process root keeps concurrent processes apart. A build that
+  * throws, or whose marker cannot be written, leaves no handle, so the
+  * next call rebuilds.
   *
   * Bench reads [[builds]] around each rep: a rep during which it moved
   * built something, and is billed to `fixtures`, not to the query. */
@@ -34,11 +35,19 @@ object Artifact {
   /** Completed builds in this process. */
   def builds: Long = completed.get
 
-  /** The pid-scoped temp path of artifact `name` for sf dir `dir`. */
+  /** This process's artifact directory, made on first use and deleted
+    * by a shutdown hook. */
+  lazy val root: Path = {
+    val r = Files.createTempDirectory(
+      s"graft_${ProcessHandle.current().pid()}_")
+    Runtime.getRuntime.addShutdownHook(
+      new Thread(() => deleteRecursively(r), "graft-artifact-cleanup"))
+    r
+  }
+
+  /** The path of artifact `name` for sf dir `dir`, under [[root]]. */
   def path(name: String, dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_${name}_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_") + "_" +
-      ProcessHandle.current().pid()
+    root.resolve(name + "_" + dir.replaceAll("[^A-Za-z0-9]", "_")).toString
 
   def memoized[A](name: String, dir: String)(build: String => A): A = {
     val p = path(name, dir)

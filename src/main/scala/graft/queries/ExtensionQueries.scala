@@ -1127,8 +1127,8 @@ object ExtensionQueries {
   /** REAL libzstd frames (level 3, generated by
     * `tools/gen_zstd_vectors.py`'s codec — golden templates, NOT
     * hand-built): four closed-form plaintexts whose decoded bytes the
-    * oracle replays exactly, so `source_zstd_compressed` pins the full
-    * FSE/Huffman decode path against reference-encoder output inside
+    * oracle replays exactly, so `source_zstd_compressed` checks the
+    * frame walk and the decode of reference-encoder output inside
     * the driver's correctness gate, not just in specs. */
   private val ZstdGoldenHex: Seq[String] = Seq(
     // repeat('alpha ', 40) — 240 bytes -> 22
@@ -4976,11 +4976,8 @@ object ExtensionQueries {
         .orderBy(col("doc_id"), col("frame_idx"))),
 
     // FULL ZSTD DECODE (round 13) — REAL libzstd frames (golden
-    // templates, level 3: FSE-described sequences + Huffman literals)
-    // through the frame walk's ZstdDecode path; the oracle replays the
-    // decoded plaintext and every header field, so the FSE/Huffman
-    // machinery answers to the driver's correctness gate, not just to
-    // the 50-vector golden spec
+    // templates, level 3) through the frame walk's ZstdDecode path; the
+    // oracle replays the decoded plaintext and every header field
     "source_zstd_compressed" -> ((s, dir) =>
       Multimodal.extractZstdFrames(zstdCompressedFixture(s, dir),
           "doc_id")
@@ -4988,12 +4985,11 @@ object ExtensionQueries {
         .orderBy(col("doc_id"), col("frame_idx"))),
 
     // ZSTD ENCODE (round 14) — the WRITE half: every document body
-    // through graft_zstd_compress (greedy LZ + predefined-FSE
-    // sequences, ZstdEncode) then back through the libzstd-golden-
-    // pinned decoder, in one codegen'd projection. The decoder anchors
-    // the wire format, so a malformed frame can't cancel out — it
-    // NULLs and breaks the identity. n_bytes pins that the hop
-    // round-trips BYTES, not just displayable text.
+    // through graft_zstd_compress (ZstdEncode, libzstd) then back
+    // through graft_zstd_decompress, in one codegen'd projection; a
+    // frame that fails to decode NULLs and breaks the identity.
+    // n_bytes pins that the hop round-trips BYTES, not just
+    // displayable text.
     "source_zstd_encode" -> ((s, dir) => {
       val enc = graft.plans.MediaExprs.zstdCompressCol(
         encode(col("text"), "UTF-8"))
@@ -5033,7 +5029,7 @@ object ExtensionQueries {
         .orderBy(col("doc_id"))),
 
     // ... and the records themselves, the compressed sections routed
-    // through the golden-pinned codec decoders; values are binary by
+    // through the codec decoders; values are binary by
     // contract (Avro bodies survive) — decoded to UTF-8 here because
     // THIS fixture's values are text
     "source_kafka_records" -> ((s, dir) =>
@@ -5754,7 +5750,7 @@ object ExtensionQueries {
     // default categorical layout: DictionaryBatch replay (delta +
     // replacement), index→value resolution with validity over the
     // indices, and per-buffer zstd / LZ4-frame decompression through
-    // the repo's own golden-pinned decoders
+    // ZstdDecode (libzstd) and the golden-pinned Lz4Snappy
     "source_arrow_dict" -> ((s, dir) => {
       val fixture = t(s, dir, "documents")
         .select(col("doc_id"), unhex(element_at(

@@ -103,8 +103,7 @@ object ZstdSeekable {
     * record per row, one zstd frame per record, one seek-tabled shard
     * file per non-empty partition (executor-side streaming — rows
     * never materialize on the driver). Frames are genuinely COMPRESSED
-    * by default (round 14, [[graft.operators.ZstdEncode]] — greedy LZ
-    * + predefined-FSE sequences, CLI-verified); `compress = false`
+    * by default ([[graft.operators.ZstdEncode]], libzstd); `compress = false`
     * keeps the stored-frame shape ([[rawFrame]]). Any zstd/WARC tool
     * reads the shards either way; [[readFrames]] splits them per frame
     * group. */

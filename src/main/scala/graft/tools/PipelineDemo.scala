@@ -265,8 +265,7 @@ object PipelineDemo {
     val massKept = deproj.agg(sum(col("norm2q_after")).cast("double") /
       sum(col("norm2q_before")).cast("double")).head().getDouble(0)
     val ivfpq = graft.operators.Similarity.buildIvfPqIndex(cleanEmb,
-      s"${System.getProperty("java.io.tmpdir")}/graft_demo_ivfpq_" +
-        ProcessHandle.current().pid(),
+      graft.queries.Artifact.path("demo_ivfpq", sfDir),
       nlist = 8, m = 4, ksub = 8, iters = 1)
     val nIdxHits = graft.operators.Similarity.ivfPqTopKIndexed(ivfpq,
       cleanEmb.filter(col("vec_id") < 3), k = 5, nprobe = 3).count()

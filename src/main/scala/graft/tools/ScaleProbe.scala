@@ -61,8 +61,7 @@ object ScaleProbe {
       case None => ProbeQueries
     }
     val customList = !relMode && mode.nonEmpty
-    val outRoot = s"${System.getProperty("java.io.tmpdir")}/graft_scale_" +
-      ProcessHandle.current().pid()
+    val outRoot = graft.queries.Artifact.path("scale", baseDir)
     val spark = graft.GraftSession.local("graft-scale-probe")
 
     val dirs = factors.map { f =>

@@ -245,6 +245,27 @@ class AvroRobustnessSpec extends SparkFunSuite {
     }
   }
 
+  test("forProvider keys decoder states by (token, capacity): a second " +
+      "pipeline on the same registry with a smaller schema.capacity gets " +
+      "its own LRU") {
+    val stub = new SchemaRegistryStub
+    val ids = Seq("capKeyA", "capKeyB").map { n =>
+      stub.registerValueSchema(n,
+        s"""{"type":"record","name":"$n","fields":[{"name":"v","type":"long"}]}""")
+    }
+    val provider = stub.toProvider
+    val wide = AvroDecoderState.forProvider(provider, 100)
+    val narrow = AvroDecoderState.forProvider(provider, 1)
+    assert(AvroDecoderState.forProvider(provider, 100) eq wide)
+    (0 until 5).foreach(_ => ids.foreach(wide.schemaById))
+    assert(wide.cacheMisses.sum() == 2)
+    // capacity 1: alternating two ids evicts on every lookup
+    (0 until 5).foreach(_ => ids.foreach(narrow.schemaById))
+    assert(narrow.cacheMisses.sum() == 10)
+    // the token's stats sum over both capacities' states
+    assert(AvroDecoderState.cacheStats(provider.cacheToken) == ((8L, 12L)))
+  }
+
   test("HTTP registry provider: fetch, 404 → None, multi-URL failover " +
       "(AvroTransform.java:267 parity)") {
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)

@@ -9,9 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * encoder/decoder bug cancellation is impossible here. Presets 0/6
   * and 9|EXTREME exercise different match finders and dict sizes;
   * separate vectors cover all four check types, a delta+LZMA2 filter
-  * chain, a two-block stream (liblzma-verified splice), a two-stream
-  * blob with stream padding, and the legacy LZMA_Alone format with
-  * its end-of-stream marker. */
+  * chain, the BCJ filters, a two-block stream (liblzma-verified
+  * splice) and a two-stream blob with stream padding. */
 class XzGoldenSpec extends AnyFunSuite {
 
   private def vector(name: String): Array[Byte] = {
@@ -99,19 +98,6 @@ class XzGoldenSpec extends AnyFunSuite {
       ("first stream " * 50 + "second stream " * 30).getBytes))
     val sd = XzDecode.decompress(vector("seq_smalldict.xz"))
     assert(sd.isDefined && java.util.Arrays.equals(sd.get, plain("seq")))
-  }
-
-  test("legacy LZMA_Alone (.lzma): unknown-size streams end on the " +
-      "EOS marker; empty and 1-byte inputs round-trip") {
-    for (name <- Seq("rep", "mix", "tiny", "empty")) {
-      val got = XzDecode.decompressAlone(vector(s"$name.lzma"))
-      assert(got.isDefined, s"$name.lzma failed")
-      assert(java.util.Arrays.equals(got.get, plain(name)),
-        s"$name.lzma decoded wrong bytes")
-    }
-    // .lzma blobs are NOT xz streams and vice versa
-    assert(XzDecode.decompress(vector("rep.lzma")).isEmpty)
-    assert(XzDecode.decompressAlone(vector("rep_p6.xz")).isEmpty)
   }
 
   /** Byte-identical twin of the generator's `x86ish`. */
@@ -245,15 +231,6 @@ class XzGoldenSpec extends AnyFunSuite {
     }
   }
 
-  test("unknown-size stream beyond 300:1 ratio (8 MB of zeros, " +
-      "~6500:1) decodes via the doubling output buffer — a ratio " +
-      "pre-size heuristic falsely rejects it (r13 advisory)") {
-    val got = XzDecode.decompressAlone(vector("zeros.lzma"))
-    assert(got.isDefined, "high-ratio zeros.lzma was rejected")
-    assert(got.get.length == (8 << 20))
-    assert(got.get.forall(_ == 0))
-  }
-
   test("truncation, garbage, and seeded byte-flips never throw; " +
       "corruptions fail loud (every output byte is under a block " +
       "check), never yield wrong bytes silently") {
@@ -264,6 +241,8 @@ class XzGoldenSpec extends AnyFunSuite {
         s"truncation at $cut must fail")
     }
     assert(XzDecode.decompress("garbage not xz at all".getBytes).isEmpty)
+    // a legacy LZMA_Alone blob is not an xz stream
+    assert(XzDecode.decompress(vector("rep.lzma")).isEmpty)
     assert(XzDecode.decompress(Array.empty[Byte]).isEmpty)
     val rnd = new scala.util.Random(1234)
     var survived = 0

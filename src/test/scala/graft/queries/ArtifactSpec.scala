@@ -7,14 +7,16 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[Artifact.memoized]]: one build per (process, name, dir) under
-  * concurrent first use, and a rebuild whenever the handle, the target
-  * or its completion marker is missing. */
+  * concurrent first use, a rebuild whenever the handle, the target or
+  * its completion marker is missing, and no artifact left on disk once
+  * the process exits. */
 class ArtifactSpec extends AnyFunSuite {
 
-  /** A name no other test (or earlier run of this one) has used. */
+  /** A name no other test (or earlier run of this one) has used, and
+    * an sf dir name (only its text goes into the path). */
   private def fresh(): (String, String) = {
     val name = "spec_" + java.util.UUID.randomUUID().toString.take(8)
-    (name, Files.createTempDirectory("graft_artifact_sf").toString)
+    (name, s"/graft_artifact_sf/$name")
   }
 
   private def writeParts(p: String): String = {
@@ -102,7 +104,7 @@ class ArtifactSpec extends AnyFunSuite {
       "rebuilt") {
     val (name, dir) = fresh()
     val path = Artifact.path(name, dir)
-    // what an earlier process with the same pid left behind
+    // a complete artifact this process holds no handle for
     writeParts(path)
     Files.write(Paths.get(path, "stale"), "old".getBytes("UTF-8"))
     Files.write(Paths.get(path + ".complete"), Array.empty[Byte])
@@ -134,5 +136,34 @@ class ArtifactSpec extends AnyFunSuite {
     assert(n.get == 1)
     assert(Files.isRegularFile(Paths.get(path + ".complete")))
     assert(Artifact.builds == before + 1)
+  }
+
+  test("a process that memoizes an artifact and exits leaves no " +
+      "directory behind") {
+    val java = Paths.get(System.getProperty("java.home"), "bin", "java")
+    val proc = new ProcessBuilder(java.toString, "-Xmx64m", "-cp",
+      System.getProperty("java.class.path"),
+      "graft.queries.ArtifactExitProbe")
+      .redirectErrorStream(true).start()
+    val out = new String(proc.getInputStream.readAllBytes(), "UTF-8")
+    assert(proc.waitFor(60, TimeUnit.SECONDS) && proc.exitValue == 0, out)
+    val Array(root, path, built) = out.trim.linesIterator.toSeq.last
+      .split('\t')
+    assert(built == "true", out)
+    assert(Paths.get(path).startsWith(Paths.get(root)), out)
+    assert(!Files.exists(Paths.get(root)), s"$root outlived its process")
+  }
+}
+
+/** The process the exit test forks: memoizes one artifact, prints the
+  * artifact root, its path and whether its files exist, and exits. */
+object ArtifactExitProbe {
+  def main(args: Array[String]): Unit = {
+    val p = Artifact.memoized("exit_probe", "/graft_exit_sf") { p =>
+      Files.createDirectories(Paths.get(p))
+      Files.write(Paths.get(p, "part-0"), "a".getBytes("UTF-8"))
+      p
+    }
+    println(s"${Artifact.root}\t$p\t${Files.exists(Paths.get(p, "part-0"))}")
   }
 }
