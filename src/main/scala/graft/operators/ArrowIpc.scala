@@ -34,7 +34,8 @@ package graft.operators
   * 8/16/32/64 indices — pyarrow's default encoding for categorical
   * strings). BODY COMPRESSION (per-buffer LZ4-frame or zstd, the two
   * codecs the Arrow spec defines) decompresses through
-  * [[Lz4Snappy]] and [[ZstdDecode]] (libzstd).
+  * [[Lz4Snappy]] and [[ZstdDecode]] (libzstd), each buffer under the
+  * 64 MiB [[CodecCap]].
   * Anything else — unions, maps, unsigned ints, half floats — is
   * DECLINED honestly (empty), never misread.
   *
@@ -47,7 +48,6 @@ package graft.operators
 object ArrowIpc {
 
   private val MaxRows = 1 << 24
-  private val MaxBufferBytes = 1 << 26 // 64 MiB per decompressed buffer
 
   /** One decoded cell value: null | Long | Double | String |
     * Boolean. A decoded batch is rows × columns. */
@@ -397,7 +397,7 @@ object ArrowIpc {
       while (k < 8) { want |= (blob(at + k) & 0xffL) << (8 * k); k += 1 }
       if (want == -1L) // stored uncompressed (incompressible buffer)
         return new BufView(blob, at + 8, n - 8)
-      if (want < 0 || want > MaxBufferBytes) return null
+      if (want < 0 || want > CodecCap.MaxBytes) return null
       val comp = java.util.Arrays.copyOfRange(blob, at + 8, at + n)
       val plain = (if (codec == 0) Lz4Snappy.lz4Decompress(comp)
         else ZstdDecode.decompress(comp)).orNull

@@ -1,376 +1,74 @@
 package graft.operators
 
-import java.io.ByteArrayOutputStream
+import org.apache.commons.compress.compressors.bzip2.BZip2CompressorInputStream
 
-/** Pure-JVM bzip2 decompression — round 13.
+/** bzip2 decompression over commons-compress, the decoder Spark ships.
   *
-  * The remaining archive codec after gzip/zstd/lz4/snappy: Wikipedia
-  * database dumps ship as MULTI-STREAM `.xml.bz2` (one independent
-  * bzip2 stream per page batch, concatenated — the layout
+  * Wikipedia database dumps ship as MULTI-STREAM `.xml.bz2` (one
+  * independent bzip2 stream per page batch, concatenated — the layout
   * `pages-articles-multistream.xml.bz2` is named for), and older
   * Common Crawl / Internet Archive corpora use `.bz2` throughout. The
-  * format (Burrows–Wheeler, not LZ77): per stream a `BZh<level>`
-  * header, then bit-packed blocks — block CRC, BWT origin pointer,
-  * two-level symbol-presence map, 2–6 canonical Huffman tables with
-  * MTF+unary-coded selectors switching every 50 symbols, delta-coded
-  * code lengths, then the symbol stream itself: RUNA/RUNB zero-run
-  * codes + move-to-front values + EOB. Decoding inverts each layer:
-  * Huffman → RLE2(RUNA/RUNB) → MTF → inverse BWT (counting sort +
-  * successor vector) → RLE1 (4 equal bytes + count) → bytes, then
-  * verifies the per-block CRC and the stream-footer combined CRC
-  * (bzip2's CRC-32 is the MSB-first, non-reflected variant of the
-  * IEEE polynomial — NOT `java.util.zip.CRC32`).
+  * library decodes each stream and verifies every block CRC and the
+  * stream's combined CRC; this object walks the concatenation and
+  * reports per-member metadata (level, block count, compressed length)
+  * under the 64 MiB output cap ([[CodecCap]]).
   *
-  * Validation: pinned against GOLDEN VECTORS from a real reference
-  * encoder (CPython's libbz2 binding, `tools/gen_bz2_vectors.py`,
-  * committed under `src/test/resources/bz2/`) at levels 1 and 9 over
-  * the same plaintext recipe set as the zstd goldens — decoder vs
-  * reference encoder, so encoder/decoder bug cancellation is
-  * impossible by construction.
+  * The block count is the number of 48-bit block magics
+  * (`0x314159265359`) at any bit offset within the member, counted the
+  * way `bzip2recover` finds blocks: blocks are bit-aligned, so their
+  * boundaries are otherwise known only by entropy-decoding them.
+  * Huffman data can produce the pattern by chance, about once per 2^48
+  * bit offsets, which would overcount by one.
   *
-  * Deliberate boundary: the deprecated `randomized` block flag
-  * (bzip2 ≤ 0.9.0's worst-case escape hatch, never emitted by any
-  * modern encoder) is DECLINED (None), not misdecoded.
-  *
-  * Everything is row-local byte arithmetic — no Spark types; the
-  * kernel slots into the same native-expression plumbing as the other
-  * decoders in this package. All reads are bounds-checked; corrupt or
-  * truncated streams return None (PERMISSIVE), never throw, never
-  * yield silently wrong bytes (CRC-verified).
+  * Corrupt or truncated input returns empty/None and never throws; only
+  * the library's `IOException`s are caught. Blocks with the deprecated
+  * `randomized` flag (bzip2 ≤ 0.9.0) decode, under their block CRC. The
+  * committed libbz2 golden vectors (`Bzip2GoldenSpec`) pin the decoded
+  * bytes.
   */
 object Bzip2Decode {
 
-  /** Hard cap on regenerated output (decompression-bomb guard). */
-  private val MaxOutput = 1 << 26 // 64 MiB
-
   /** One decoded stream member of a concatenated (multi-stream) blob:
     * level digit (1-9), block count, decoded bytes, CRC verdict
-    * (per-block CRCs AND the footer's combined CRC), compressed byte
+    * (always true on Some — the walk fails loud), compressed byte
     * length of this member (byte-aligned). */
   final case class Member(level: Int, nBlocks: Int,
     content: Array[Byte], crcOk: Boolean, compressedLen: Int)
 
-  // ---- MSB-first bit reader ----------------------------------------
-
-  /** bzip2 streams are big-endian bit sequences with NO byte alignment
-    * between fields or blocks; only stream boundaries are byte-
-    * aligned. Reads return -1 (as Long) on exhaustion. */
-  private final class Bits(b: Array[Byte], startByte: Int) {
-    var pos: Long = startByte.toLong * 8
-    private val end: Long = b.length.toLong * 8
-    def exhausted: Boolean = pos >= end
-    /** n ≤ 32 bits, MSB first; -1 on overrun. */
-    def get(n: Int): Long = {
-      if (pos + n > end) { pos = end; return -1L }
-      var v = 0L
-      var i = 0
-      while (i < n) {
-        val p = pos + i
-        v = (v << 1) | ((b((p >> 3).toInt) >> (7 - (p & 7).toInt)) & 1)
-        i += 1
-      }
-      pos += n
-      v
-    }
-    def bit(): Int = get(1).toInt
-  }
-
-  // ---- bzip2 CRC-32 (MSB-first, non-reflected) ----------------------
-
-  private val CrcTable: Array[Int] = Array.tabulate(256) { i =>
-    var c = i << 24
-    var k = 0
-    while (k < 8) {
-      c = if ((c & 0x80000000) != 0) (c << 1) ^ 0x04c11db7 else c << 1
-      k += 1
-    }
-    c
-  }
-
-  private def crcInit: Int = 0xffffffff
-  @inline private def crcUpd(crc: Int, byte: Byte): Int =
-    (crc << 8) ^ CrcTable(((crc >>> 24) ^ (byte & 0xff)) & 0xff)
-  private def crcFinal(crc: Int): Int = ~crc
-
-  // ---- Huffman (canonical, bzip2 table layout) ----------------------
-
-  /** Canonical decode tables for one group: symbols sorted by
-    * (length, alphabet index); `firstCode(l)`/`offset(l)` index into
-    * `perm`. */
-  private final class Huff(lens: Array[Int], alphaSize: Int) {
-    val minLen: Int = lens.min
-    val maxLen: Int = lens.max
-    val count = new Array[Int](maxLen + 2)
-    lens.foreach(l => count(l) += 1)
-    val firstCode = new Array[Int](maxLen + 2)
-    val offset = new Array[Int](maxLen + 2)
-    val perm = new Array[Int](alphaSize)
-    val ok: Boolean = {
-      var code = 0
-      var off = 0
-      var l = minLen
-      var valid = maxLen <= 23
-      while (l <= maxLen && valid) {
-        firstCode(l) = code
-        offset(l) = off
-        code += count(l)
-        off += count(l)
-        valid = code <= (1 << l)
-        code <<= 1
-        l += 1
-      }
-      var i = 0
-      val idx = new Array[Int](maxLen + 2)
-      System.arraycopy(offset, 0, idx, 0, offset.length)
-      while (i < alphaSize) {
-        val l = lens(i)
-        perm(idx(l)) = i
-        idx(l) += 1
-        i += 1
-      }
-      valid
-    }
-    /** Decode one symbol; -1 on overrun/garbage. */
-    def decode(in: Bits): Int = {
-      var l = minLen
-      var v = in.get(minLen).toInt
-      if (v < 0) return -1
-      while (l <= maxLen) {
-        val k = v - firstCode(l)
-        if (k >= 0 && k < count(l)) return perm(offset(l) + k)
-        val b = in.bit()
-        if (b < 0) return -1
-        v = (v << 1) | b
-        l += 1
-      }
-      -1
-    }
-  }
-
-  // ---- one block -----------------------------------------------------
-
-  /** Decodes one block body (after the 48-bit block magic) into `out`;
-    * returns the stored block CRC on success, None on any structural
-    * violation. `limit` = 100000 * level (max BWT buffer). */
-  private def decodeBlock(in: Bits, limit: Int,
-      out: ByteArrayOutputStream): Option[Int] = {
-    val storedCrc = in.get(32)
-    if (storedCrc < 0) return None
-    val randomized = in.bit()
-    if (randomized != 0) return None // deprecated flag — declined
-    val origPtr = in.get(24).toInt
-    if (origPtr < 0) return None
-
-    // two-level symbol presence map
-    val used16 = in.get(16).toInt
-    if (used16 < 0) return None
-    val usedSym = new Array[Int](256)
-    var nUsed = 0
-    var i = 0
-    while (i < 16) {
-      if ((used16 & (0x8000 >> i)) != 0) {
-        val bits16 = in.get(16).toInt
-        if (bits16 < 0) return None
-        var j = 0
-        while (j < 16) {
-          if ((bits16 & (0x8000 >> j)) != 0) {
-            usedSym(nUsed) = i * 16 + j
-            nUsed += 1
-          }
-          j += 1
-        }
-      }
-      i += 1
-    }
-    if (nUsed == 0) return None
-    val alphaSize = nUsed + 2 // RUNA, RUNB, MTF 1..nUsed-1, EOB
-
-    val nGroups = in.get(3).toInt
-    if (nGroups < 2 || nGroups > 6) return None
-    val nSelectors = in.get(15).toInt
-    if (nSelectors < 1) return None
-
-    // selectors: unary counts, MTF over the group list
-    val selMtf = Array.tabulate(nGroups)(identity)
-    val selectors = new Array[Int](nSelectors)
-    i = 0
-    while (i < nSelectors) {
-      var j = 0
-      var b = in.bit()
-      while (b == 1) { j += 1; if (j >= nGroups) return None; b = in.bit() }
-      if (b < 0) return None
-      val v = selMtf(j)
-      while (j > 0) { selMtf(j) = selMtf(j - 1); j -= 1 }
-      selMtf(0) = v
-      selectors(i) = v
-      i += 1
-    }
-
-    // per-group delta-coded lengths → canonical tables
-    val groups = new Array[Huff](nGroups)
-    var g = 0
-    while (g < nGroups) {
-      val lens = new Array[Int](alphaSize)
-      var l = in.get(5).toInt
-      if (l < 0) return None
-      var s = 0
-      while (s < alphaSize) {
-        var more = in.bit()
-        while (more == 1) {
-          val dir = in.bit()
-          if (dir < 0) return None
-          l += (if (dir == 0) 1 else -1)
-          if (l < 1 || l > 20) return None
-          more = in.bit()
-        }
-        if (more < 0) return None
-        lens(s) = l
-        s += 1
-      }
-      val h = new Huff(lens, alphaSize)
-      if (!h.ok) return None
-      groups(g) = h
-      g += 1
-    }
-
-    // symbol stream: RLE2 + MTF → BWT buffer
-    val eob = alphaSize - 1
-    val mtf = new Array[Int](256)
-    i = 0; while (i < nUsed) { mtf(i) = usedSym(i); i += 1 }
-    val bwt = new Array[Byte](limit)
-    val counts = new Array[Int](256)
-    var n = 0
-    var selIdx = 0
-    var groupPos = 0
-    var cur: Huff = null
-    var run = 0
-    var runBit = 0
-    var done = false
-    while (!done) {
-      if (groupPos == 0) {
-        if (selIdx >= nSelectors) return None
-        cur = groups(selectors(selIdx))
-        selIdx += 1
-        groupPos = 50
-      }
-      groupPos -= 1
-      val sym = cur.decode(in)
-      if (sym < 0) return None
-      if (sym <= 1) { // RUNA / RUNB
-        // runBit > 24 can only arise from a hostile stream (a
-        // conforming run is < 2^21 at level 9); past 30 the shift
-        // would wrap negative and slip the limit guard into a
-        // throwing Arrays.fill — cap it hard
-        if (runBit > 24) return None
-        run += (sym + 1) << runBit
-        runBit += 1
-        if (run > limit) return None
-      } else {
-        if (run > 0) { // flush the zero-run: copies of the MTF front
-          if (n + run > limit) return None
-          val v = mtf(0).toByte
-          counts(mtf(0)) += run
-          java.util.Arrays.fill(bwt, n, n + run, v)
-          n += run
-          run = 0; runBit = 0
-        }
-        if (sym == eob) done = true
-        else {
-          val j = sym - 1 // MTF index 1..nUsed-1
-          if (j >= nUsed) return None
-          val v = mtf(j)
-          var k = j
-          while (k > 0) { mtf(k) = mtf(k - 1); k -= 1 }
-          mtf(0) = v
-          if (n >= limit) return None
-          bwt(n) = v.toByte
-          counts(v) += 1
-          n += 1
-        }
-      }
-    }
-    if (origPtr >= n) return None
-
-    // inverse BWT: counting sort + successor vector
-    val cftab = new Array[Int](257)
-    i = 0
-    while (i < 256) { cftab(i + 1) = cftab(i) + counts(i); i += 1 }
-    val next = new Array[Int](n)
-    i = 0
-    while (i < n) {
-      val v = bwt(i) & 0xff
-      next(cftab(v)) = i
-      cftab(v) += 1
-      i += 1
-    }
-
-    // RLE1 decode + CRC over the final bytes
-    var crc = crcInit
-    var p = next(origPtr)
-    var emitted = 0
-    var runByte = -1
-    var runLen = 0
-    while (emitted < n) {
-      val v = bwt(p) & 0xff
-      p = next(p)
-      emitted += 1
-      if (runLen == 4) { // v is a repeat count of runByte (0..255)
-        if (out.size() + v > MaxOutput) return None
-        var k = 0
-        while (k < v) { out.write(runByte); crc = crcUpd(crc, runByte.toByte); k += 1 }
-        runLen = 0; runByte = -1
-      } else {
-        if (v == runByte) runLen += 1
-        else { runByte = v; runLen = 1 }
-        if (out.size() >= MaxOutput) return None
-        out.write(v)
-        crc = crcUpd(crc, v.toByte)
-      }
-    }
-    if (runLen == 4) return None // dangling run with no count byte
-    val got = crcFinal(crc)
-    if (got != storedCrc.toInt) return None
-    Some(storedCrc.toInt)
-  }
-
-  // ---- one stream ----------------------------------------------------
-
   private val BlockMagic = 0x314159265359L
-  private val FooterMagic = 0x177245385090L
 
-  /** Decodes one stream starting at byte `off`; None on any violation
-    * (including CRC mismatch — `Member.crcOk` is therefore always true
-    * on Some; the field exists for the walk schema's contract). */
-  private def decodeStream(b: Array[Byte], off: Int): Option[Member] = {
-    if (off + 4 > b.length) return None
-    if (b(off) != 'B' || b(off + 1) != 'Z' || b(off + 2) != 'h') return None
-    val level = b(off + 3) - '0'
-    if (level < 1 || level > 9) return None
-    val in = new Bits(b, off + 4)
-    val out = new ByteArrayOutputStream()
-    var nBlocks = 0
-    var combined = 0
-    while (true) {
-      val magic = in.get(48)
-      if (magic < 0) return None
-      if (magic == BlockMagic) {
-        decodeBlock(in, 100000 * level, out) match {
-          case Some(blockCrc) =>
-            nBlocks += 1
-            combined = ((combined << 1) | (combined >>> 31)) ^ blockCrc
-          case None => return None
-        }
-      } else if (magic == FooterMagic) {
-        val streamCrc = in.get(32)
-        if (streamCrc < 0) return None
-        val crcOk = streamCrc.toInt == combined
-        if (!crcOk) return None
-        val usedBytes = (((in.pos + 7) >> 3) - off).toInt
-        return Some(Member(level, nBlocks, out.toByteArray, crcOk = true,
-          usedBytes))
-      } else return None
+  /** Block magics at any bit offset of `b[from, until)`. */
+  private def countBlocks(b: Array[Byte], from: Int, until: Int): Int = {
+    var window = 0L
+    var bits = 0L
+    var n = 0
+    var p = from
+    while (p < until) {
+      window = (window << 8) | (b(p) & 0xff)
+      bits += 8
+      var s = 7 // the windows ending at each of the byte's 8 bits
+      while (s >= 0) {
+        if (bits - s >= 48 && ((window >>> s) & 0xffffffffffffL) ==
+          BlockMagic) n += 1
+        s -= 1
+      }
+      p += 1
     }
-    None // unreachable
+    n
+  }
+
+  /** Decodes the bzip2 stream starting at `off`; None when it would
+    * regenerate more than `cap` bytes. Corruption throws the library's
+    * `IOException`s. */
+  private def memberAt(b: Array[Byte], off: Int, cap: Int)
+      : Option[Member] = {
+    val in = new BZip2CompressorInputStream(
+      new java.io.ByteArrayInputStream(b, off, b.length - off), false)
+    try CodecCap.readCapped(in, cap).map { c =>
+      val len = in.getCompressedCount.toInt
+      Member(b(off + 3) - '0', countBlocks(b, off + 4, off + len), c,
+        crcOk = true, len)
+    } finally in.close()
   }
 
   /** All members of a concatenated multi-stream blob (the Wikipedia
@@ -382,18 +80,19 @@ object Bzip2Decode {
   def membersJvm(b: Array[Byte]): IndexedSeq[Member] = {
     val out = Vector.newBuilder[Member]
     var off = 0
-    var total = 0L
-    while (off + 4 <= b.length && b(off) == 'B' && b(off + 1) == 'Z' &&
-        b(off + 2) == 'h') {
-      decodeStream(b, off) match {
-        case Some(m) =>
-          total += m.content.length
-          if (total > MaxOutput) return Vector.empty
-          out += m
-          off += m.compressedLen
-        case None => return Vector.empty
+    var total = 0
+    try {
+      while (off + 4 <= b.length && b(off) == 'B' && b(off + 1) == 'Z' &&
+          b(off + 2) == 'h') {
+        memberAt(b, off, CodecCap.MaxBytes - total) match {
+          case Some(m) =>
+            total += m.content.length
+            out += m
+            off += m.compressedLen
+          case None => return Vector.empty
+        }
       }
-    }
+    } catch { case _: java.io.IOException => return Vector.empty }
     if (off == 0) Vector.empty else out.result()
   }
 
@@ -405,9 +104,7 @@ object Bzip2Decode {
     if (ms.isEmpty) None
     else if (ms.length == 1) Some(ms.head.content)
     else {
-      val n = ms.map(_.content.length.toLong).sum
-      if (n > MaxOutput) return None
-      val out = new Array[Byte](n.toInt)
+      val out = new Array[Byte](ms.map(_.content.length).sum)
       var p = 0
       ms.foreach { m =>
         System.arraycopy(m.content, 0, out, p, m.content.length)

@@ -1,6 +1,6 @@
 package graft.operators
 
-/** Pure-JVM Kafka RecordBatch v2 (magic 2) segment reader — round 13.
+/** Kafka RecordBatch v2 (magic 2) segment reader.
   *
   * The reference engine is a Kafka Connect transform: it sees records
   * only after a broker and a consumer framework have unpacked them.
@@ -11,12 +11,13 @@ package graft.operators
   * broker. Batch headers are big-endian; record fields are
   * zigzag-varint; the records section is compressed as a whole with
   * the codec in the attributes bits — none/gzip/snappy/lz4/zstd, all
-  * of which this package now decodes natively (JDK Inflater for gzip;
-  * the golden-pinned [[Lz4Snappy]] and libzstd's [[ZstdDecode]] for
-  * the rest; snappy accepts BOTH raw blocks and the xerial-framed layout
-  * real producers emit). The CRC-32C over attributes..end is verified
-  * with the JDK's own `java.util.zip.CRC32C` — a corrupt batch is
-  * FLAGGED (`crc_ok=false`) with its records withheld (they cannot be
+  * of which this package decodes (JDK Inflater for gzip, [[Lz4Snappy]]
+  * for lz4 frames and snappy blocks, libzstd's [[ZstdDecode]] for zstd;
+  * snappy accepts BOTH raw blocks and the xerial-framed layout real
+  * producers emit), each under the 64 MiB [[CodecCap]]. The CRC-32C
+  * over attributes..end is verified with the JDK's own
+  * `java.util.zip.CRC32C` — a corrupt batch is FLAGGED
+  * (`crc_ok=false`) with its records withheld (they cannot be
   * trusted), while the walk continues via the length field, which sits
   * OUTSIDE the CRC span by design.
   *
@@ -26,8 +27,6 @@ package graft.operators
   * transactional/control batches.
   */
 object KafkaSegment {
-
-  private val MaxOutput = 1 << 26 // 64 MiB decompression-bomb guard
 
   /** Per-batch metadata row (minus doc_id). */
   final case class Batch(baseOffset: Long, recordsCount: Long,
@@ -89,21 +88,13 @@ object KafkaSegment {
     try {
       val in = new java.util.zip.GZIPInputStream(
         new java.io.ByteArrayInputStream(b, off, len))
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) {
-        out.write(buf, 0, n)
-        if (out.size() > MaxOutput) return None
-        n = in.read(buf)
-      }
-      Some(out.toByteArray)
+      try CodecCap.readCapped(in) finally in.close()
     } catch { case _: java.io.IOException => None }
 
   /** Xerial-framed snappy (what real Kafka producers emit via
     * snappy-java): magic `82 53 4e 41 50 50 59 00` + two int32s +
     * [int32 chunk length, raw snappy block]*. Raw blocks route through
-    * the golden-pinned [[Lz4Snappy.snappyDecompress]]. */
+    * [[Lz4Snappy.snappyDecompress]]. */
   private def snappyAny(b: Array[Byte], off: Int, len: Int)
       : Option[Array[Byte]] = {
     val XerialMagic = Array[Byte](-126, 'S', 'N', 'A', 'P', 'P', 'Y', 0)
@@ -119,7 +110,8 @@ object KafkaSegment {
         Lz4Snappy.snappyDecompress(
           java.util.Arrays.copyOfRange(b, p, p + n)) match {
           case Some(c) =>
-            if (out.size().toLong + c.length > MaxOutput) return None
+            if (out.size().toLong + c.length > CodecCap.MaxBytes)
+              return None
             out.write(c)
           case None => return None
         }

@@ -1,7 +1,12 @@
 package graft.operators
 
-/** Pure-JVM LZ4 (block + frame, spec v1.6.2) and Snappy (raw block
-  * format) decompression — round 13.
+import io.airlift.compress.MalformedInputException
+import io.airlift.compress.snappy.SnappyDecompressor
+import net.jpountz.lz4.LZ4Factory
+import net.jpountz.xxhash.{XXHash32, XXHashFactory}
+
+/** LZ4 (block + frame, spec v1.6.2) and Snappy (raw block format)
+  * decompression, and the LZ4 frame encoder.
   *
   * With zstd ([[ZstdDecode]], libzstd), gzip/DEFLATE (JDK
   * `Inflater`), and these two, the engine reads every general-purpose
@@ -9,72 +14,39 @@ package graft.operators
   * and Parquet's default compression codecs, so Kafka message batches
   * and foreign Parquet pages stop being opaque at the byte level.
   *
-  * Validation follows the zstd discipline: golden vectors from REAL
-  * reference encoders (pyarrow's bundled lz4/snappy via
-  * `tools/gen_lz4_snappy_vectors.py`, committed under
-  * `src/test/resources/lz4/` and `/snappy/`) decode byte-exactly —
-  * decoder-vs-reference-encoder, no bug cancellation. The XXH32
-  * implementation is pinned three ways: the spec's empty-input vector
-  * (0x02CC5D05), every golden LZ4 frame's header-checksum byte (HC =
-  * bits 15-8 of XXH32 over the descriptor), and content checksums
-  * where frames carry them.
+  * Snappy blocks decode with aircompressor and the encoder's block
+  * parse and every XXH32 checksum come from lz4-java, both of which
+  * Spark ships. The LZ4 frame walk and its block decoder stay here:
+  * the reference encoder's default frame makes blocks DEPENDENT (a
+  * match may reach into earlier blocks), which lz4-java's frame reader
+  * rejects, and commons-compress decodes such frames about 50x slower
+  * than the ~50-line block loop below.
+  *
+  * Validation: golden vectors from REAL reference encoders (pyarrow's
+  * bundled lz4/snappy via `tools/gen_lz4_snappy_vectors.py`, committed
+  * under `src/test/resources/lz4/` and `/snappy/`) decode byte-exactly
+  * — decoder-vs-reference-encoder, no bug cancellation. Every golden
+  * LZ4 frame's header-checksum byte (HC = bits 15-8 of XXH32 over the
+  * descriptor) and content checksum verify.
   *
   * All reads bounds-checked; any violation returns None. Output capped
-  * at 64 MiB (decompression-bomb guard).
+  * at 64 MiB ([[CodecCap]]).
   */
 object Lz4Snappy {
 
-  private val MaxOutput = 1 << 26 // 64 MiB
+  // lz4-java's fastest instances: its JNI build of liblz4 where that
+  // loads (as for Spark's own LZ4 codec), its Java port otherwise. The
+  // Java fast compressor allocates a 16 KiB hash table per call, which
+  // costs more than the whole JNI compression of a small record.
 
-  // ---- XXH32 (xxHash spec, seed 0 unless stated) ---------------------
+  /** XXH32, the LZ4 frame checksum (seed 0). */
+  private[graft] val xxHash32: XXHash32 =
+    XXHashFactory.fastestInstance().hash32()
 
-  private val P1 = 0x9e3779b1
-  private val P2 = 0x85ebca77
-  private val P3 = 0xc2b2ae3d
-  private val P4 = 0x27d4eb2f
-  private val P5 = 0x165667b1
+  private val blockCompressor = LZ4Factory.fastestInstance()
+    .fastCompressor()
 
-  /** XXH32 over `b[off, off+len)` — LZ4 frame checksums (xxHash spec;
-    * the empty-input vector 0x02CC5D05 is spec-pinned). */
-  private[graft] def xxh32(b: Array[Byte], off: Int, len: Int,
-      seed: Int): Int = {
-    def u32(p: Int): Int =
-      (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8) |
-        ((b(p + 2) & 0xff) << 16) | ((b(p + 3) & 0xff) << 24)
-    var p = off
-    val end = off + len
-    var h = 0
-    if (len >= 16) {
-      var v1 = seed + P1 + P2
-      var v2 = seed + P2
-      var v3 = seed
-      var v4 = seed - P1
-      while (p + 16 <= end) {
-        v1 = Integer.rotateLeft(v1 + u32(p) * P2, 13) * P1
-        v2 = Integer.rotateLeft(v2 + u32(p + 4) * P2, 13) * P1
-        v3 = Integer.rotateLeft(v3 + u32(p + 8) * P2, 13) * P1
-        v4 = Integer.rotateLeft(v4 + u32(p + 12) * P2, 13) * P1
-        p += 16
-      }
-      h = Integer.rotateLeft(v1, 1) + Integer.rotateLeft(v2, 7) +
-        Integer.rotateLeft(v3, 12) + Integer.rotateLeft(v4, 18)
-    } else h = seed + P5
-    h += len
-    while (p + 4 <= end) {
-      h = Integer.rotateLeft(h + u32(p) * P3, 17) * P4
-      p += 4
-    }
-    while (p < end) {
-      h = Integer.rotateLeft(h + (b(p) & 0xff) * P5, 11) * P1
-      p += 1
-    }
-    h ^= h >>> 15
-    h *= P2
-    h ^= h >>> 13
-    h *= P3
-    h ^= h >>> 16
-    h
-  }
+  private val snappy = new SnappyDecompressor()
 
   // ---- LZ4 block format ----------------------------------------------
 
@@ -134,96 +106,18 @@ object Lz4Snappy {
     w
   }
 
-  // ---- LZ4 ENCODING (round 15) ----------------------------------------
-
-  /** Greedy LZ4 block compression of `src[from, until)` — 4-byte
-    * hash-table match finder, token/extension emission per the block
-    * spec, with the format's end-of-block rules honored: the last 5
-    * bytes stay literal, the last match starts ≥ 12 bytes before the
-    * block end, offsets ≤ 65535 and within the block (independent
-    * blocks). Returns null when the block doesn't shrink — the frame
-    * layer then stores it uncompressed, so output never inflates past
-    * the 4-byte block headers. */
-  private[graft] def lz4CompressBlock(src: Array[Byte], from: Int,
-      until: Int): Array[Byte] = {
-    val len = until - from
-    if (len < 13) return null // end-rules leave nothing to match
-    val out = new java.io.ByteArrayOutputStream(len)
-    val hashLog = math.min(14, math.max(8,
-      32 - Integer.numberOfLeadingZeros(math.max(1, len))))
-    val shift = 32 - hashLog
-    val tab = new Array[Int](1 << hashLog)
-    java.util.Arrays.fill(tab, -1)
-    @inline def v4(p: Int): Int =
-      (src(p) & 0xff) | ((src(p + 1) & 0xff) << 8) |
-        ((src(p + 2) & 0xff) << 16) | ((src(p + 3) & 0xff) << 24)
-    @inline def h(v: Int): Int = (v * 0x9e3779b1) >>> shift
-    def ext(v0: Int): Unit = { // 255-chunked length extension
-      var v = v0
-      while (v >= 255) { out.write(255); v -= 255 }
-      out.write(v)
-    }
-    def emit(litFrom: Int, litLen: Int, matchLen: Int,
-        offset: Int): Unit = {
-      val lt = math.min(litLen, 15)
-      val mt = if (matchLen < 0) 0 else math.min(matchLen - 4, 15)
-      out.write((lt << 4) | mt)
-      if (litLen >= 15) ext(litLen - 15)
-      out.write(src, litFrom, litLen)
-      if (matchLen >= 0) {
-        out.write(offset & 0xff); out.write((offset >> 8) & 0xff)
-        if (matchLen - 4 >= 15) ext(matchLen - 4 - 15)
-      }
-    }
-    val mfLimit = until - 12 // last match starts before this
-    val matchEnd = until - 5 // last 5 bytes stay literal
-    var i = from
-    var anchor = from
-    var miss = 0
-    while (i < mfLimit) {
-      val v = v4(i)
-      val slot = h(v)
-      val cand = tab(slot)
-      tab(slot) = i
-      var took = false
-      if (cand >= from && cand < i && i - cand <= 65535 &&
-        v4(cand) == v) {
-        var mlen = 4
-        val lim = matchEnd - i
-        while (mlen < lim && src(cand + mlen) == src(i + mlen)) mlen += 1
-        if (mlen >= 4) {
-          // extend backward into pending literals
-          var s = i
-          var m = cand
-          while (s > anchor && m > from && src(s - 1) == src(m - 1)) {
-            s -= 1; m -= 1; mlen += 1
-          }
-          emit(anchor, s - anchor, mlen, s - m)
-          anchor = s + mlen
-          i = s + mlen
-          took = true
-          miss = 0
-        }
-      }
-      if (!took) {
-        miss += 1
-        i += 1 + (miss >> 6)
-      }
-    }
-    emit(anchor, until - anchor, -1, 0) // trailing literals-only
-    if (out.size() >= len) null else out.toByteArray
-  }
+  // ---- LZ4 encoding ----------------------------------------------------
 
   /** One LZ4 FRAME (v1.6.1 frame spec): magic, FLG with independent
     * 64 KiB blocks + exact content size + content checksum, XXH32
-    * header checksum byte, compressed blocks where they shrink
-    * (stored otherwise, high-bit size flag), EndMark — byte-compatible
-    * with the `lz4` CLI and with [[lz4Decompress]], the golden-pinned
-    * arbiter. The cheap-CPU export codec next to
-    * [[ZstdEncode.compress]]. */
+    * header checksum byte, blocks compressed by lz4-java's fast
+    * compressor where they shrink (stored otherwise, high-bit size
+    * flag), EndMark — byte-compatible with the `lz4` CLI and with
+    * [[lz4Decompress]], the golden-pinned arbiter. The cheap-CPU export
+    * codec next to [[ZstdEncode.compress]]. */
   def lz4Compress(content: Array[Byte]): Array[Byte] = {
-    require(content.length <= MaxOutput,
-      s"content ${content.length} exceeds $MaxOutput")
+    require(content.length <= CodecCap.MaxBytes,
+      s"content ${content.length} exceeds ${CodecCap.MaxBytes}")
     val out = new java.io.ByteArrayOutputStream(content.length / 2 + 32)
     def u32le(v: Long): Unit = {
       out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
@@ -240,15 +134,18 @@ object Lz4Snappy {
       k += 1
     }
     out.write(hdr, 0, 10)
-    out.write((xxh32(hdr, 0, 10, 0) >> 8) & 0xff)
+    out.write((xxHash32.hash(hdr, 0, 10, 0) >> 8) & 0xff)
     val blockMax = 1 << 16
+    val comp = new Array[Byte](blockCompressor.maxCompressedLength(
+      math.min(blockMax, content.length)))
     var p = 0
     while (p < content.length) {
       val take = math.min(blockMax, content.length - p)
-      val comp = lz4CompressBlock(content, p, p + take)
-      if (comp != null && comp.length < take) {
-        u32le(comp.length.toLong)
-        out.write(comp, 0, comp.length)
+      val n = blockCompressor.compress(content, p, take, comp, 0,
+        comp.length)
+      if (n < take) {
+        u32le(n.toLong)
+        out.write(comp, 0, n)
       } else {
         u32le(take.toLong | 0x80000000L)
         out.write(content, p, take)
@@ -256,7 +153,7 @@ object Lz4Snappy {
       p += take
     }
     u32le(0L) // EndMark
-    u32le(xxh32(content, 0, content.length, 0) & 0xffffffffL)
+    u32le(xxHash32.hash(content, 0, content.length, 0) & 0xffffffffL)
     out.toByteArray
   }
 
@@ -325,12 +222,12 @@ object Lz4Snappy {
           q += 8
         }
         if (hasDictId) return empty // external dictionary — decline
-        if (contentSize > MaxOutput) return empty
+        if (contentSize > CodecCap.MaxBytes) return empty
         // HC: bits 15-8 of XXH32 over FLG..dictID
         if (q >= b.length) return empty
         val hc = b(q) & 0xff
         var checksumOk: java.lang.Boolean = java.lang.Boolean.valueOf(
-          ((xxh32(b, p + 4, q - (p + 4), 0) >> 8) & 0xff) == hc)
+          ((xxHash32.hash(b, p + 4, q - (p + 4), 0) >> 8) & 0xff) == hc)
         q += 1
         // ONE shared output buffer for the whole frame: with
         // B.Indep=0 (the reference encoder's default) match offsets
@@ -339,7 +236,7 @@ object Lz4Snappy {
         // decode identically (we are merely lenient about the
         // boundary they promise not to cross).
         var frameBuf = new Array[Byte](math.min(blockMax.toLong * 2,
-          MaxOutput.toLong).toInt)
+          CodecCap.MaxBytes.toLong).toInt)
         var w = 0
         var nBlocks = 0L
         var done = false
@@ -353,11 +250,11 @@ object Lz4Snappy {
             val size = (bs & 0x7fffffffL).toInt
             if (size > blockMax || q + size > b.length) return empty
             nBlocks += 1
-            if (w.toLong + blockMax > MaxOutput) return empty
+            if (w.toLong + blockMax > CodecCap.MaxBytes) return empty
             if (w + blockMax > frameBuf.length)
               frameBuf = java.util.Arrays.copyOf(frameBuf,
                 math.min(math.max(frameBuf.length.toLong * 2,
-                  w.toLong + blockMax), MaxOutput.toLong).toInt)
+                  w.toLong + blockMax), CodecCap.MaxBytes.toLong).toInt)
             if (uncompressed) {
               System.arraycopy(b, q, frameBuf, w, size)
               w += size
@@ -368,7 +265,7 @@ object Lz4Snappy {
             }
             if (blockChecksum) {
               if (q + size + 4 > b.length) return empty
-              if ((xxh32(b, q, size, 0) & 0xffffffffL) != u32(q + size))
+              if ((xxHash32.hash(b, q, size, 0) & 0xffffffffL) != u32(q + size))
                 checksumOk = java.lang.Boolean.FALSE
               q += size + 4
             } else q += size
@@ -378,7 +275,7 @@ object Lz4Snappy {
         if (contentSize >= 0 && contentSize != c.length) return empty
         if (contentChecksum) {
           if (q + 4 > b.length) return empty
-          if ((xxh32(c, 0, c.length, 0) & 0xffffffffL) != u32(q))
+          if ((xxHash32.hash(c, 0, c.length, 0) & 0xffffffffL) != u32(q))
             checksumOk = java.lang.Boolean.FALSE
           q += 4
         }
@@ -410,88 +307,18 @@ object Lz4Snappy {
 
   /** Decode a raw-format Snappy block (the Parquet/Kafka codec): a
     * varint32 uncompressed length, then literal / copy1 / copy2 /
-    * copy4 tagged elements; copies may self-overlap. None on any
-    * violation, including a length prefix the elements don't exactly
-    * regenerate. */
+    * copy4 tagged elements. The declared length is checked against the
+    * cap before allocating; None on any violation, including a block
+    * whose elements (every input byte of them) do not regenerate
+    * exactly the declared length. */
   def snappyDecompress(b: Array[Byte]): Option[Array[Byte]] = {
     if (b == null || b.length == 0) return None
-    var p = 0
-    // varint32 uncompressed length
-    var ulen = 0L
-    var shift = 0
-    var more = true
-    while (more) {
-      if (p >= b.length || shift > 31) return None
-      val v = b(p) & 0xff
-      p += 1
-      ulen |= (v & 0x7fL) << shift
-      shift += 7
-      more = (v & 0x80) != 0
-    }
-    if (ulen > MaxOutput) return None
-    val out = new Array[Byte](ulen.toInt)
-    var w = 0
-    while (p < b.length) {
-      val tag = b(p) & 0xff
-      p += 1
-      (tag & 3) match {
-        case 0 => // literal
-          var len = (tag >> 2) + 1
-          if (len > 60) {
-            val extra = len - 60 // 1..4 length bytes
-            if (p + extra > b.length) return None
-            len = 0
-            var i = 0
-            while (i < extra) {
-              len |= (b(p + i) & 0xff) << (8 * i); i += 1
-            }
-            len += 1
-            p += extra
-          }
-          if (len < 0 || p + len > b.length || w + len > out.length)
-            return None
-          System.arraycopy(b, p, out, w, len)
-          p += len
-          w += len
-        case 1 => // copy, 1-byte offset tail
-          if (p >= b.length) return None
-          val len = ((tag >> 2) & 7) + 4
-          val offset = ((tag >> 5) << 8) | (b(p) & 0xff)
-          p += 1
-          if (!copy(out, w, offset, len)) return None
-          w += len
-        case 2 => // copy, 2-byte offset
-          if (p + 2 > b.length) return None
-          val len = (tag >> 2) + 1
-          val offset = (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8)
-          p += 2
-          if (!copy(out, w, offset, len)) return None
-          w += len
-        case _ => // copy, 4-byte offset
-          if (p + 4 > b.length) return None
-          val len = (tag >> 2) + 1
-          val offL = (b(p) & 0xffL) | ((b(p + 1) & 0xffL) << 8) |
-            ((b(p + 2) & 0xffL) << 16) | ((b(p + 3) & 0xffL) << 24)
-          p += 4
-          if (offL > Int.MaxValue) return None
-          if (!copy(out, w, offL.toInt, len)) return None
-          w += len
-      }
-    }
-    if (w != out.length) return None
-    Some(out)
-  }
-
-  private def copy(out: Array[Byte], w: Int, offset: Int,
-      len: Int): Boolean = {
-    if (offset <= 0 || offset > w || w + len > out.length) return false
-    var src = w - offset
-    var i = 0
-    while (i < len) {
-      out(w + i) = out(src)
-      src += 1
-      i += 1
-    }
-    true
+    try {
+      val n = SnappyDecompressor.getUncompressedLength(b, 0)
+      if (n < 0 || n > CodecCap.MaxBytes) return None
+      val out = new Array[Byte](n)
+      if (snappy.decompress(b, 0, b.length, out, 0, n) == n) Some(out)
+      else None
+    } catch { case _: MalformedInputException => None }
   }
 }

@@ -3544,7 +3544,7 @@ object Multimodal {
       // slices, DEFLATED inflates (raw deflate — the gzip machinery)
       var recovered: Array[Byte] = null
       if ((method == 0L || method == 8L) && localOff >= 0 &&
-        usize <= (1L << 26) && localOff + 30 <= b.length &&
+        usize <= CodecCap.MaxBytes && localOff + 30 <= b.length &&
         b(localOff.toInt) == 'P' && b(localOff.toInt + 1) == 'K' &&
         b(localOff.toInt + 2) == 3 && b(localOff.toInt + 3) == 4) {
         val lp = localOff.toInt
@@ -3708,7 +3708,7 @@ object Multimodal {
         val n = inf.inflate(chunk)
         if (n > 0) {
           total += n
-          if (total > (1L << 26)) return null
+          if (total > CodecCap.MaxBytes) return null
           out.write(chunk, 0, n)
         } else if (!inf.finished()) return null // truncated/needs dict
       }
@@ -3765,7 +3765,8 @@ object Multimodal {
           return null
         val n = try java.lang.Long.parseLong(hexPart, 16)
           catch { case _: NumberFormatException => return null }
-        if (n < 0 || n > (1L << 26) || buf.size + n > (1L << 26)) return null
+        if (n < 0 || n > CodecCap.MaxBytes ||
+          buf.size + n > CodecCap.MaxBytes) return null
         q = nq
         if (n == 0L) {
           // trailer section: header lines until one empty line
@@ -4161,7 +4162,7 @@ object Multimodal {
           val n = inf.inflate(chunk)
           if (n > 0) {
             totalOut += n
-            if (totalOut > (1L << 26)) return None
+            if (totalOut > CodecCap.MaxBytes) return None
             buf.write(chunk, 0, n)
           } else if (!inf.finished()) clean = false // needs input: truncated
         }
@@ -4222,7 +4223,7 @@ object Multimodal {
     gzipWalkJvm(b) match {
       case Some(ms) if ms.nonEmpty && ms.forall(_._5) =>
         val total = ms.map(_._4.length.toLong).sum
-        if (total > (1L << 26)) Vector.empty
+        if (total > CodecCap.MaxBytes) Vector.empty
         else {
           val buf = new Array[Byte](total.toInt)
           var off = 0
@@ -4273,7 +4274,8 @@ object Multimodal {
     crc_ok: Boolean, compressed_len: Long)
 
   /** Batch multi-stream bzip2 walk (native array-kernel expression,
-    * one output row per stream member; golden-pinned decoder). */
+    * one output row per stream member; commons-compress decodes, the
+    * libbz2 golden vectors pin the bytes). */
   def extractBz2Members(df: DataFrame, idCol: String,
       blobCol: String = "blob"): Dataset[Bz2MemberRow] = {
     val spark = df.sparkSession
@@ -4656,7 +4658,8 @@ object Multimodal {
   final case class SnappyRow(doc_id: Long, usize: Long, content: String)
 
   /** Batch Snappy raw-block decode (native-expression projection, NULL
-    * struct for undecodable payloads; golden-pinned decoder). */
+    * struct for undecodable payloads; aircompressor decodes, the
+    * reference-encoder golden vectors pin the bytes). */
   def extractSnappy(df: DataFrame, idCol: String,
       blobCol: String = "blob"): Dataset[SnappyRow] = {
     val spark = df.sparkSession

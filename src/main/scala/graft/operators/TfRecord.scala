@@ -21,8 +21,6 @@ package graft.operators
   */
 object TfRecord {
 
-  private val MaxOutput = 1 << 26 // decompression-bomb-style guard
-
   /** One framed record: (length, data_crc_ok, payload bytes — null
     * when the data CRC fails). */
   final case class Rec(length: Long, dataCrcOk: Boolean,
@@ -51,11 +49,11 @@ object TfRecord {
       var i = 0
       while (i < 8) { len |= (b(p + i) & 0xffL) << (8 * i); i += 1 }
       if (maskedCrc(b, p, 8) != le32(p + 8)) return Vector.empty
-      if (len < 0 || len > MaxOutput) return Vector.empty
+      if (len < 0 || len > CodecCap.MaxBytes) return Vector.empty
       val dataOff = p + 12
       if (dataOff + len + 4 > b.length) return Vector.empty
       total += len
-      if (total > MaxOutput) return Vector.empty
+      if (total > CodecCap.MaxBytes) return Vector.empty
       val ok = maskedCrc(b, dataOff, len.toInt) ==
         le32(dataOff + len.toInt)
       out += Rec(len, ok,

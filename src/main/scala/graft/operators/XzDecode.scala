@@ -18,12 +18,9 @@ import org.tukaani.xz.{BasicArrayCache, SingleXZInputStream}
   */
 object XzDecode {
 
-  /** Hard cap on regenerated output (decompression-bomb guard). */
-  private val MaxOutput = 1 << 26 // 64 MiB
-
   /** The library's memory limit (KiB): room for a 64 MiB LZMA2
     * dictionary; a stream declaring a larger one is declined. */
-  private val MemoryLimitKiB = (MaxOutput >> 10) + 1024
+  private val MemoryLimitKiB = (CodecCap.MaxBytes >> 10) + 1024
 
   /** One decoded XZ stream of a concatenated blob: check-type name,
     * block count, decoded bytes, check verdict (always true on Some —
@@ -66,7 +63,7 @@ object XzDecode {
     val src = new java.io.ByteArrayInputStream(b, off, b.length - off)
     val in = new SingleXZInputStream(src, MemoryLimitKiB, true,
       BasicArrayCache.getInstance())
-    val content = try ZstdDecode.readCapped(in, cap) finally in.close()
+    val content = try CodecCap.readCapped(in, cap) finally in.close()
     content.map { c =>
       val end = b.length - src.available()
       Member(CheckNames(in.getCheckType),
@@ -91,7 +88,7 @@ object XzDecode {
             b(off + 3) != 0) return if (any) out.result() else Vector.empty
           off += 4
         } else if (b(off) == 0xfd.toByte) {
-          streamAt(b, off, MaxOutput - total) match {
+          streamAt(b, off, CodecCap.MaxBytes - total) match {
             case Some(m) =>
               total += m.content.length
               out += m

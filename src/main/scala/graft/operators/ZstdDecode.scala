@@ -20,16 +20,13 @@ import com.github.luben.zstd.{Zstd, ZstdDecompressCtx, ZstdException,
   * Contract: malformed input returns None and never throws — only
   * libzstd's decode errors (`ZstdException`, `IOException`) are
   * caught, so a native library that fails to load fails the query
-  * instead of nulling every row. Output is capped at 64 MiB per call:
-  * a frame declaring more is declined before allocation, and a frame
-  * of unknown size is read as a stream that stops at the cap. The
-  * committed libzstd golden vectors (`ZstdGoldenSpec`,
-  * `ZstdDictGoldenSpec`) pin the decoded bytes.
+  * instead of nulling every row. Output is capped at 64 MiB per call
+  * ([[CodecCap]]): a frame declaring more is declined before
+  * allocation, and a frame of unknown size is read as a stream that
+  * stops at the cap. The committed libzstd golden vectors
+  * (`ZstdGoldenSpec`, `ZstdDictGoldenSpec`) pin the decoded bytes.
   */
 object ZstdDecode {
-
-  /** Hard cap on regenerated output (decompression-bomb guard). */
-  private val MaxOutput = 1 << 26 // 64 MiB
 
   private val FrameMagic = 0xfd2fb528L
   private val DictMagic = 0xec30a437L
@@ -37,35 +34,6 @@ object ZstdDecode {
   private def u32(b: Array[Byte], p: Int): Long =
     (b(p) & 0xffL) | ((b(p + 1) & 0xffL) << 8) |
       ((b(p + 2) & 0xffL) << 16) | ((b(p + 3) & 0xffL) << 24)
-
-  /** All of `in`, or None when it yields more than `cap` bytes. Reads
-    * chunks of 8 KiB doubling to 1 MiB and assembles them only on
-    * success, so a stream past the cap costs about `cap` bytes of
-    * allocation and a small one little more than its size. */
-  private[operators] def readCapped(in: java.io.InputStream,
-      cap: Int): Option[Array[Byte]] = {
-    val chunks = Vector.newBuilder[Array[Byte]]
-    var total = 0L
-    var size = 1 << 13
-    var full = true
-    while (full) {
-      val c = new Array[Byte](size)
-      val n = in.readNBytes(c, 0, c.length)
-      total += n
-      if (total > cap) return None
-      chunks += c
-      full = n == c.length
-      size = math.min(size * 2, 1 << 20)
-    }
-    val out = new Array[Byte](total.toInt)
-    var p = 0
-    chunks.result().foreach { c =>
-      val n = math.min(c.length, out.length - p)
-      System.arraycopy(c, 0, out, p, n)
-      p += n
-    }
-    Some(out)
-  }
 
   // ---- dictionaries (RFC 8878 §5) ------------------------------------
 
@@ -79,7 +47,7 @@ object ZstdDecode {
     * LE32 non-zero id is structured, a blob without the magic is
     * raw-content. Its tables are checked when libzstd loads it. */
   private def dictHeader(b: Array[Byte]): Option[ZDict] =
-    if (b == null || b.length == 0 || b.length > MaxOutput) None
+    if (b == null || b.length == 0 || b.length > CodecCap.MaxBytes) None
     else if (b.length < 8 || u32(b, 0) != DictMagic) Some(new ZDict(0L, b))
     else Some(new ZDict(u32(b, 4), b))
       .filter(_.id != 0L) // structured dicts carry a real id
@@ -131,7 +99,7 @@ object ZstdDecode {
       new java.io.ByteArrayInputStream(b, off, len))
     try {
       if (dict != null) in.setDict(dict.bytes)
-      readCapped(in, cap).map(c => (c, len))
+      CodecCap.readCapped(in, cap).map(c => (c, len))
     } finally in.close()
   }
 
@@ -141,7 +109,7 @@ object ZstdDecode {
   def decodeFrame(b: Array[Byte], off: Int): Option[(Array[Byte], Int)] = {
     if (b == null || off < 0) return None
     val ctx = new ZstdDecompressCtx()
-    try frameAt(ctx, null, b, off, MaxOutput)
+    try frameAt(ctx, null, b, off, CodecCap.MaxBytes)
     catch { case _: ZstdException | _: java.io.IOException => None }
     finally ctx.close()
   }
@@ -203,7 +171,7 @@ object ZstdDecode {
             ctx.loadDict(dict.bytes)
           }
           p += (8 + n).toInt
-        } else frameAt(ctx, dict, b, p, MaxOutput - total) match {
+        } else frameAt(ctx, dict, b, p, CodecCap.MaxBytes - total) match {
           case Some((c, consumed)) =>
             parts += c
             total += c.length

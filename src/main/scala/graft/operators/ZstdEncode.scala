@@ -11,9 +11,6 @@ import com.github.luben.zstd.ZstdCompressCtx
   */
 object ZstdEncode {
 
-  /** Hard cap on input (mirrors the decoder's bomb guard). */
-  private val MaxInput = 1 << 26 // 64 MiB
-
   /** Why 5: per-record frames of the sf0.1 `documents` text compress
     * to 0.556 of their size (0.393 with a 2 KiB trained dictionary) at
     * 16 MB/s on one Xeon core; libzstd's default 3 gives 0.577 / 0.453,
@@ -36,9 +33,9 @@ object ZstdEncode {
     * [[ZstdDecode.parseDict]] there. */
   def compress(content: Array[Byte],
       prefix: Array[Byte]): Array[Byte] = {
-    require(content.length.toLong + prefix.length <= MaxInput,
+    require(content.length.toLong + prefix.length <= CodecCap.MaxBytes,
       s"frame content ${content.length} + prefix ${prefix.length} " +
-        s"exceeds $MaxInput")
+        s"exceeds ${CodecCap.MaxBytes}")
     val ctx = new ZstdCompressCtx()
     try {
       ctx.setLevel(Level).setChecksum(true).setContentSize(true)

@@ -583,7 +583,7 @@ object MediaArrayKernel {
     * libzstd): one RFC 8878 frame with content size + checksum. NULL
     * when the input exceeds the 64 MiB frame guard. */
   def zstdCompress(b: Array[Byte]): Array[Byte] =
-    if (b.length > (1 << 26)) null
+    if (b.length > graft.operators.CodecCap.MaxBytes) null
     else graft.operators.ZstdEncode.compress(b)
 
   /** Full-stream zstd decompression as a scalar column (dict-aware —
@@ -603,7 +603,7 @@ object MediaArrayKernel {
     * independent 64 KiB blocks, content size + XXH32 checksums. NULL
     * past the 64 MiB guard. */
   def lz4Compress(b: Array[Byte]): Array[Byte] =
-    if (b.length > (1 << 26)) null
+    if (b.length > graft.operators.CodecCap.MaxBytes) null
     else graft.operators.Lz4Snappy.lz4Compress(b)
 
   /** Full LZ4 frame-stream decompression as a scalar column; NULL on
@@ -926,7 +926,8 @@ case class GzipMembers(child: Expression) extends MediaArrayExpression {
 
 /** `bz2_members(blob)` -> one struct per stream of a concatenated
   * multi-stream bzip2 blob (the Wikipedia-multistream layout), fully
-  * decoded and CRC-verified (golden-pinned against libbz2);
+  * decoded and CRC-verified by commons-compress (golden vectors from
+  * libbz2 pin the bytes);
   * structural violations yield an empty array. */
 case class Bz2Members(child: Expression) extends MediaArrayExpression {
   override protected def structSchema: StructType =

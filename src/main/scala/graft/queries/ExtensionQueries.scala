@@ -5004,7 +5004,7 @@ object ExtensionQueries {
 
     // LZ4 ENCODE (round 15) — the WRITE half of the lz4 story (the
     // cheap-CPU export codec next to zstd): every document body
-    // through graft_lz4_compress (greedy block parse, independent
+    // through graft_lz4_compress (lz4-java block parse, independent
     // 64 KiB blocks, XXH32 header/content checksums) then back
     // through the golden-pinned frame walk, one codegen'd projection;
     // same decoder-anchored identity discipline as source_zstd_encode

@@ -52,8 +52,7 @@ class PinSpec extends SparkFunSuite {
   private def withReliablePins(f: String => Unit): Unit = {
     val sc = spark.sparkContext
     val prevDir = sc.getCheckpointDir
-    val ckDir = java.nio.file.Files
-      .createTempDirectory("graft_pin_spec").toString
+    val ckDir = graft.TestPaths.dir("graft_pin_spec").toString
     sc.setCheckpointDir(ckDir)
     spark.conf.set("spark.graft.pin.reliable", "true")
     try f(ckDir)

@@ -213,7 +213,7 @@ class ArrowWriteSpec extends AnyFunSuite {
         Vector(Seq("a", 10L), null)),
       ACol("props", AMap(AString, ALong),
         Vector(Seq(("k1", 1L), ("k2", 2L)), Seq()))))
-    val f = java.io.File.createTempFile("graft_arrow16", ".arrows")
+    val f = graft.TestPaths.file("graft_arrow16", ".arrows").toFile
     try {
       java.nio.file.Files.write(f.toPath, bytes)
       val py =

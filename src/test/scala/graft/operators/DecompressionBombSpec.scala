@@ -2,11 +2,12 @@ package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The 64 MiB output cap of the zstd and xz decoders: inputs that
+/** The 64 MiB output cap ([[CodecCap]]) of every decoder: inputs that
   * expand past it (or declare that they will) decode to None, and the
   * decoding thread's allocation stays bounded while it finds out. The
   * bombs are built here with the reference encoders (zstd-jni's
-  * libzstd and tukaani xz). */
+  * libzstd, tukaani xz, commons-compress bzip2, lz4-java, the JDK's
+  * gzip). */
 class DecompressionBombSpec extends AnyFunSuite {
 
   private val Cap = 1L << 26
@@ -78,6 +79,50 @@ class DecompressionBombSpec extends AnyFunSuite {
     val (got, allocated) = allocatedBy(XzDecode.decompress(stream))
     assert(got.isEmpty)
     assert(XzDecode.membersJvm(stream).isEmpty)
+    assert(allocated < 4 * Cap, s"allocated $allocated bytes")
+  }
+
+  test("a bzip2 stream of 65 MiB zeros stops at the cap") {
+    val bos = new java.io.ByteArrayOutputStream()
+    val bo = new org.apache.commons.compress.compressors.bzip2
+      .BZip2CompressorOutputStream(bos)
+    try bo.write(zeros) finally bo.close()
+    val stream = bos.toByteArray
+    val (got, allocated) = allocatedBy(Bzip2Decode.decompress(stream))
+    assert(got.isEmpty)
+    assert(Bzip2Decode.membersJvm(stream).isEmpty)
+    assert(allocated < 4 * Cap, s"allocated $allocated bytes")
+  }
+
+  test("an lz4 frame of 65 MiB zeros with no declared content size " +
+      "stops at the cap") {
+    val bos = new java.io.ByteArrayOutputStream()
+    val lo = new net.jpountz.lz4.LZ4FrameOutputStream(bos)
+    try lo.write(zeros) finally lo.close()
+    val frame = bos.toByteArray
+    assert((frame(4) & 0x08) == 0, "the frame must not declare its size")
+    val (got, allocated) = allocatedBy(Lz4Snappy.lz4Decompress(frame))
+    assert(got.isEmpty)
+    assert(Lz4Snappy.lz4FramesJvm(frame).isEmpty)
+    assert(allocated < 4 * Cap, s"allocated $allocated bytes")
+  }
+
+  test("a snappy block declaring 2^26+1 bytes is declined before " +
+      "decoding") {
+    // varint32 length 2^26 + 1, then one literal byte
+    val block = Array[Byte](0x81.toByte, 0x80.toByte, 0x80.toByte,
+      0x20, 0, 'a')
+    val (got, allocated) = allocatedBy(Lz4Snappy.snappyDecompress(block))
+    assert(got.isEmpty)
+    assert(allocated < (16L << 20), s"allocated $allocated bytes")
+  }
+
+  test("a kafka batch whose gzip records expand past 65 MiB yields no " +
+      "records") {
+    val batch = KafkaSegment.buildBatchV2(0L, 0L,
+      Seq((null, zeros)), codec = 1)
+    val (got, allocated) = allocatedBy(KafkaSegment.recordsJvm(batch))
+    assert(got.isEmpty)
     assert(allocated < 4 * Cap, s"allocated $allocated bytes")
   }
 }

@@ -9,12 +9,8 @@ import graft.sources.DeltaSnapshot
   * unreplayable logs. */
 class DeltaSnapshotSpec extends SparkFunSuite {
 
-  private def freshDir(tag: String): String = {
-    val d = java.nio.file.Files
-      .createTempDirectory(s"graft_delta_$tag").toFile
-    d.deleteOnExit()
-    d.toString
-  }
+  private def freshDir(tag: String): String =
+    graft.TestPaths.dir(s"graft_delta_$tag").toString
 
   private val want = Seq(
     ("c0.parquet", 1000L, "checkpoint"),

@@ -89,8 +89,7 @@ class LayoutSpec extends SparkFunSuite {
   }
 
   test("co-bucketed join plan has zero exchanges and zero sorts") {
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_bucket_spec").toString
+    val tmp = graft.TestPaths.dir("graft_bucket_spec").toString
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
     val ord = spark.read.parquet(s"$sfDir/orders.parquet")
     Layout.writeBucketed(li, "spec_li_b", s"$tmp/li", 4, "l_orderkey")
@@ -130,8 +129,7 @@ class LayoutSpec extends SparkFunSuite {
   }
 
   test("compact shrinks the file count and preserves every row") {
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_compact_spec").toString
+    val tmp = graft.TestPaths.dir("graft_compact_spec").toString
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     docs.repartition(20).write.parquet(s"$tmp/small")
     val (before, after) =
@@ -205,8 +203,7 @@ class LayoutSpec extends SparkFunSuite {
 
   test("writeRangePartitioned: labels partition the value range; " +
       "partition dirs prune a range predicate") {
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_range_spec").toString
+    val tmp = graft.TestPaths.dir("graft_range_spec").toString
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val bs = Layout.rangeBoundaries(docs, "n_chars", Seq(25, 50, 75))
     Layout.writeRangePartitioned(docs, tmp, "n_chars", bs)
@@ -230,8 +227,7 @@ class LayoutSpec extends SparkFunSuite {
   }
 
   test("compact with a huge target lands exactly one file") {
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_compact_one").toString
+    val tmp = graft.TestPaths.dir("graft_compact_one").toString
     spark.read.parquet(s"$sfDir/documents.parquet").repartition(7)
       .write.parquet(s"$tmp/small")
     val (_, after) =

@@ -7,7 +7,7 @@ import graft.SparkFunSuite
 class LshIndexSpec extends SparkFunSuite {
 
   private def tmpPath(tag: String) =
-    s"${System.getProperty("java.io.tmpdir")}/graft_lsh_spec_${tag}_" +
+    s"${graft.TestPaths.root}/graft_lsh_spec_${tag}_" +
       ProcessHandle.current().pid()
 
   private def corpus = {

@@ -43,12 +43,14 @@ class Lz4SnappyGoldenSpec extends AnyFunSuite {
 
   test("XXH32 spec vectors: empty input and the golden frames' own " +
       "header-checksum bytes pin the hash") {
-    assert(Lz4Snappy.xxh32(Array.empty, 0, 0, 0) == 0x02cc5d05)
+    assert(Lz4Snappy.xxHash32.hash(Array.empty[Byte], 0, 0, 0) ==
+      0x02cc5d05)
     // every golden frame's HC byte = bits 15-8 of XXH32(FLG..dictID):
     // verified implicitly by lz4FramesJvm flagging checksum_ok=true,
     // pinned explicitly here on one frame
     val f = vector("/lz4/rep.lz4")
-    assert(((Lz4Snappy.xxh32(f, 4, 2, 0) >> 8) & 0xff) == (f(6) & 0xff))
+    assert(((Lz4Snappy.xxHash32.hash(f, 4, 2, 0) >> 8) & 0xff) ==
+      (f(6) & 0xff))
   }
 
   for ((name, data) <- plaintexts) {
@@ -120,5 +122,12 @@ class Lz4SnappyGoldenSpec extends AnyFunSuite {
     assert(Lz4Snappy.snappyDecompress(s.take(s.length / 2)).isEmpty)
     assert(Lz4Snappy.snappyDecompress(Array[Byte](5, 0)).isEmpty,
       "length prefix the elements don't regenerate")
+  }
+
+  test("a snappy block followed by trailing bytes is declined: every " +
+      "input byte must belong to the declared length") {
+    val s = vector("/snappy/rep.snappy")
+    assert(Lz4Snappy.snappyDecompress(s).isDefined)
+    assert(Lz4Snappy.snappyDecompress(s ++ Array[Byte](0, 1, 2)).isEmpty)
   }
 }

@@ -44,7 +44,7 @@ class DedupSpec extends SparkFunSuite {
       .map(i => (i, s"document body number $i with content"))
       .toDF("doc_id", "text")
     val index = Dedup.buildDigestIndexBucketed(corpus, "text",
-      s"${System.getProperty("java.io.tmpdir")}/graft_digest_spec_" +
+      s"${graft.TestPaths.root}/graft_digest_spec_" +
         ProcessHandle.current().pid(), nBuckets = 64)
     // delta: 3 re-crawls (suppressed) + 2 novel docs + 1 within-delta dup
     val delta = Seq(
@@ -423,7 +423,7 @@ class SimilaritySpec extends SparkFunSuite {
     val inline = Similarity.ivfTopK(emb, queries, 5, nlist = 8, nprobe = 2)
       .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Int]("rank"),
         r.getAs[Long]("neighbor_id"))).toSeq
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf").toString
+    val dir = graft.TestPaths.dir("graft_ivf").toString
     val index = Similarity.buildIvfIndex(emb, dir, nlist = 8)
     val indexedDf = Similarity.ivfTopKIndexed(index, queries, 5, nprobe = 2)
     val indexed = indexedDf.collect()
@@ -446,7 +446,7 @@ class SimilaritySpec extends SparkFunSuite {
       "probes over the grown index equal inline IVF over the full corpus") {
     val base = emb.filter(col("vec_id") < 400)
     val delta = emb.filter(col("vec_id") >= 400)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_app").toString
+    val dir = graft.TestPaths.dir("graft_ivf_app").toString
     val index = Similarity.buildIvfIndex(base, dir, nlist = 8)
     Similarity.appendToIvfIndex(index, delta)
     val queries = emb.filter(col("vec_id") < 5)
@@ -463,7 +463,7 @@ class SimilaritySpec extends SparkFunSuite {
     assert(grown.exists(_._3 >= 400) == inline.exists(_._3 >= 400))
     // appending under DIFFERENT source column names must not fork the
     // on-disk schema — the writer normalizes to (id, vec, cell)
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_ivf_mx").toString
+    val dir2 = graft.TestPaths.dir("graft_ivf_mx").toString
     val index2 = Similarity.buildIvfIndex(base, dir2, nlist = 8)
     Similarity.appendToIvfIndex(index2,
       delta.select(col("vec_id").as("row_id"), col("embedding").as("e")),
@@ -3373,7 +3373,7 @@ class InvertedIndexSpec extends SparkFunSuite {
       (2L, "window functions and spark"),
       (3L, "unrelated words entirely"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_tix").toString
+    val dir = graft.TestPaths.dir("graft_tix").toString
     val index = InvertedIndex.build(docs, "text", "doc_id", dir, nBuckets = 16)
     val probe = InvertedIndex.lookup(spark, index, Seq("spark", "window"))
     val got = probe.collect()
@@ -3398,7 +3398,7 @@ class InvertedIndexSpec extends SparkFunSuite {
       (3L, "joins joins everywhere"), // joins only
       (4L, "spark joins spark joins")) // both, higher tf
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_tixa").toString
+    val dir = graft.TestPaths.dir("graft_tixa").toString
     val index = InvertedIndex.build(docs, "text", "doc_id", dir,
       nBuckets = 16)
     val got = InvertedIndex
@@ -3419,7 +3419,7 @@ class InvertedIndexSpec extends SparkFunSuite {
       (4L, "echo echo echo"),            // "echo echo" twice (overlap)
       (5L, "big data big data big"))     // "big data big" twice
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_pix").toString
+    val dir = graft.TestPaths.dir("graft_pix").toString
     val index = InvertedIndex.buildPositional(docs, "text", "doc_id", dir,
       nBuckets = 16)
     def run(p: String*) = InvertedIndex.phraseQuery(spark, index, p)
@@ -3893,7 +3893,7 @@ class SourceRoundTripSpec extends SparkFunSuite {
       "per partition, and rich types fail loud") {
     val s = spark
     import s.implicits._
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_avrospec_" +
+    val path = s"${graft.TestPaths.root}/graft_avrospec_" +
       ProcessHandle.current().pid()
     val df = Seq(
       (1L, Some("plain"), Some(1.5), Some(42), Some(true),
@@ -3947,7 +3947,7 @@ class SourceRoundTripSpec extends SparkFunSuite {
       "date) and arrays round-trip losslessly") {
     val s = spark
     import s.implicits._
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_avrolt_" +
+    val path = s"${graft.TestPaths.root}/graft_avrolt_" +
       ProcessHandle.current().pid()
     val df = s.sql(
       """SELECT id,
@@ -3975,7 +3975,7 @@ class SourceRoundTripSpec extends SparkFunSuite {
       "split boundaries") {
     val s = spark
     import s.implicits._
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_avrosp_" +
+    val path = s"${graft.TestPaths.root}/graft_avrosp_" +
       ProcessHandle.current().pid()
     val n = 5000
     val df = s.range(0, n)
@@ -3999,7 +3999,7 @@ class SourceRoundTripSpec extends SparkFunSuite {
     val s = spark
     import s.implicits._
     for (codec <- Seq("deflate", "snappy")) {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_avrocc_" +
+      val path = s"${graft.TestPaths.root}/graft_avrocc_" +
         codec + "_" + ProcessHandle.current().pid()
       val n = 3000
       val df = s.range(0, n)
@@ -4021,7 +4021,7 @@ class SourceRoundTripSpec extends SparkFunSuite {
       "schema (no positional column swap)") {
     val s = spark
     import s.implicits._
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_avrore_" +
+    val path = s"${graft.TestPaths.root}/graft_avrore_" +
       ProcessHandle.current().pid()
     // two writes into the same dir with reordered columns; file naming
     // sorts part-00000 of the first write ahead, but which file wins
@@ -4053,8 +4053,7 @@ class SourceRoundTripSpec extends SparkFunSuite {
       (10L, Some("")))
       .toDF("doc_id", "text")
     def roundTrip(fmt: String): Seq[(Long, String)] = {
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft_rt_$fmt").toString
+      val dir = graft.TestPaths.dir(s"graft_rt_$fmt").toString
       val w = nasty.write.mode("overwrite")
       val r = s.read.schema("doc_id LONG, text STRING")
       val back = fmt match {

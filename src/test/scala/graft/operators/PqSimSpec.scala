@@ -123,8 +123,7 @@ class PqSimSpec extends SparkFunSuite {
 
   test("written IVF-PQ index probe equals the inline composition " +
       "(same parameters, same arithmetic over stored codes)") {
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_ivfpq_spec").toString
+    val tmp = graft.TestPaths.dir("graft_ivfpq_spec").toString
     val q = vecs.filter(col("vec_id") < 2)
     val index = Similarity.buildIvfPqIndex(vecs, s"$tmp/idx",
       nlist = 4, m = 2, ksub = 4, iters = 1)
@@ -158,8 +157,7 @@ class PqSimSpec extends SparkFunSuite {
       "per cell at a fresh path with bit-identical probe results") {
     val s = spark
     import s.implicits._
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_ivfpq_compact").toString
+    val tmp = graft.TestPaths.dir("graft_ivfpq_compact").toString
     val index = Similarity.buildIvfPqIndex(vecs, s"$tmp/idx",
       nlist = 4, m = 2, ksub = 4, iters = 1)
     // simulate the streaming ingest: several small appends
@@ -191,8 +189,7 @@ class PqSimSpec extends SparkFunSuite {
       "inline composition over the union with BASE-trained books") {
     val s = spark
     import s.implicits._
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_ivfpq_append").toString
+    val tmp = graft.TestPaths.dir("graft_ivfpq_append").toString
     val index = Similarity.buildIvfPqIndex(vecs, s"$tmp/idx",
       nlist = 4, m = 2, ksub = 4, iters = 1)
     // delta: shifted-id near-twins of vectors 0 and 2

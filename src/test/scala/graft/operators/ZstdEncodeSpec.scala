@@ -274,7 +274,7 @@ class ZstdEncodeSpec extends AnyFunSuite {
     for (n <- Seq(2000, 4000)) { // 1-stream and 4-stream Huffman forms
       val in = skewedText(n)
       val enc = ZstdEncode.compress(in)
-      val f = java.io.File.createTempFile("graft16", ".zst")
+      val f = graft.TestPaths.file("graft16", ".zst").toFile
       try {
         java.nio.file.Files.write(f.toPath, enc)
         val pb = new ProcessBuilder(zstd.get, "-d", "-c", f.getPath)
@@ -291,8 +291,8 @@ class ZstdEncodeSpec extends AnyFunSuite {
     val rec = ("WARC/1.0\r\nWARC-Type: resource\r\n" +
       "WARC-Target-URI: http://corpus.local/doc/42\r\n" +
       "Content-Length: 11\r\n\r\nhello world\r\n\r\n").getBytes("UTF-8")
-    val f = java.io.File.createTempFile("graft16", ".zst")
-    val d = java.io.File.createTempFile("graft16", ".dict")
+    val f = graft.TestPaths.file("graft16", ".zst").toFile
+    val d = graft.TestPaths.file("graft16", ".dict").toFile
     try {
       java.nio.file.Files.write(f.toPath, ZstdEncode.compress(rec, dict))
       java.nio.file.Files.write(d.toPath, dict)

@@ -43,9 +43,8 @@ class ZstdSeekableSpec extends SparkFunSuite {
     val frames = dictFrame +: (0 until n).map(i => recs(i % 8))
     val dsizes = 0L +: (0 until n).map(i => dictRecord(i % 8).length.toLong)
     val blob = ZstdSeekable.assemble(frames, dsizes)
-    val f = java.nio.file.Files.createTempFile("graft_seek", ".warczst")
+    val f = graft.TestPaths.file("graft_seek", ".warczst")
     java.nio.file.Files.write(f, blob)
-    f.toFile.deleteOnExit()
     (f.toString, n)
   }
 
@@ -122,8 +121,7 @@ class ZstdSeekableSpec extends SparkFunSuite {
     val docs = (0L until 50L)
       .map(i => (i, s"body-$i " * (1 + (i % 5)).toInt))
       .toDF("doc_id", "text").repartition(3)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_warczst_export").toString
+    val dir = graft.TestPaths.dir("graft_warczst_export").toString
     ZstdSeekable.writeWarcZstShards(docs, dir)
     val shards = new java.io.File(dir).listFiles()
       .filter(_.getName.endsWith(".warczst"))
@@ -149,9 +147,8 @@ class ZstdSeekableSpec extends SparkFunSuite {
     val bytes = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(path))
     def writeTmp(b: Array[Byte]): String = {
-      val f = java.nio.file.Files.createTempFile("graft_seekbad", ".z")
+      val f = graft.TestPaths.file("graft_seekbad", ".z")
       java.nio.file.Files.write(f, b)
-      f.toFile.deleteOnExit()
       f.toString
     }
     val noMagic = bytes.clone(); noMagic(bytes.length - 1) = 0x00

@@ -13,7 +13,7 @@ class JaccardLengthPruningSpec extends SparkFunSuite {
   private lazy val pairs = {
     val s = spark
     import s.implicits._
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_jacprune_fixture"
+    val path = s"${graft.TestPaths.root}/graft_jacprune_fixture"
     Seq(
       (1L, Seq(1L, 2L, 3L, 4L), Seq(1L, 2L, 3L, 4L)), // j = 1.0
       (2L, Seq(1L, 2L, 3L, 4L), Seq(1L, 2L)),         // sizes 4:2 → pruned

@@ -25,7 +25,7 @@ class KernelPlacementSpec extends SparkFunSuite {
   /** `Q.t`-readable table `<dir>/<name>.parquet` written as `files`
     * files of one row group each. */
   private def table(name: String, files: Int): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_kp").toString
+    val dir = graft.TestPaths.dir("graft_kp").toString
     spark.range(0, 400, 1, files).selectExpr("id", "cast(id as string) s")
       .write.parquet(s"$dir/$name.parquet")
     dir

@@ -26,8 +26,7 @@ class TfRecordShardsSpec extends SparkFunSuite {
     val docs = (0L until 30L)
       .map(i => (i, s"doc-$i body", 100L + i))
       .toDF("doc_id", "text", "n_chars").repartition(3)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_tfrecord_export").toString
+    val dir = graft.TestPaths.dir("graft_tfrecord_export").toString
     TfRecordShards.writeExampleShards(docs, dir)
     val shards = new java.io.File(dir).listFiles()
       .filter(_.getName.endsWith(".tfrecord"))

@@ -29,8 +29,7 @@ class WarcGzSpec extends SparkFunSuite {
     val docs = (0L until 50L)
       .map(i => (i, s"body-$i " * (1 + (i % 5)).toInt))
       .toDF("doc_id", "text").repartition(3)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_warcgz_export").toString
+    val dir = graft.TestPaths.dir("graft_warcgz_export").toString
     WarcGz.writeWarcGzShards(docs, dir)
     val files = new java.io.File(dir).listFiles()
     assert(files.count(_.getName.endsWith(".warc.gz")) == 3,
@@ -74,8 +73,7 @@ class WarcGzSpec extends SparkFunSuite {
     import s.implicits._
     val docs = (0L until 40L).map(i => (i, s"d$i")).toDF("doc_id", "text")
       .coalesce(1)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_warcgz_split").toString
+    val dir = graft.TestPaths.dir("graft_warcgz_split").toString
     WarcGz.writeWarcGzShards(docs, dir)
     val shard = new java.io.File(dir).listFiles()
       .filter(_.getName.endsWith(".warc.gz")).head.toString
@@ -87,8 +85,7 @@ class WarcGzSpec extends SparkFunSuite {
   test("corrupt sidecars fail loud: malformed line, missing idx") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_warcgz_bad").toString
+    val dir = graft.TestPaths.dir("graft_warcgz_bad").toString
     WarcGz.writeWarcGzShards(
       (0L until 4L).map(i => (i, "x")).toDF("doc_id", "text")
         .coalesce(1), dir)

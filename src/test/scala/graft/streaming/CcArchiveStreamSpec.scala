@@ -33,8 +33,7 @@ class CcArchiveStreamSpec extends SparkFunSuite {
       "replays no-op") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_cc_stream").toString
+    val dir = graft.TestPaths.dir("graft_cc_stream").toString
     val index = s"$dir/digests"
     var sinkCalls = 0
     var survivors: Seq[String] = Nil
@@ -78,8 +77,7 @@ class CcArchiveStreamSpec extends SparkFunSuite {
       "are identical to the round-15 whole-blob batch; replay no-ops") {
     val s = spark
     import s.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_cc_seekable")
+    val root = graft.TestPaths.dir("graft_cc_seekable")
     // one seekable archive holding 5 record frames (each fixture blob
     // is one complete zstd frame of a mini WARC)
     val rows = Seq(
@@ -130,8 +128,7 @@ class CcArchiveStreamSpec extends SparkFunSuite {
       "binaryFile.maxLength below the file size, a path-only scan " +
       "succeeds while a content scan throws") {
     val s = spark
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_cc_prune")
+    val root = graft.TestPaths.dir("graft_cc_prune")
     java.nio.file.Files.write(root.resolve("big.warc.zst"),
       new Array[Byte](4096))
     val key = "spark.sql.sources.binaryFile.maxLength"
@@ -160,8 +157,7 @@ class CcArchiveStreamSpec extends SparkFunSuite {
       "directory") {
     val s = spark
     import s.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_cc_stream_e2e")
+    val root = graft.TestPaths.dir("graft_cc_stream_e2e")
     val archives = root.resolve("archives")
     java.nio.file.Files.createDirectories(archives)
     val index = root.resolve("digests").toString

@@ -11,7 +11,7 @@ import graft.SparkFunSuite
 class IngestLedgerSpec extends SparkFunSuite {
 
   private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    graft.TestPaths.dir(prefix).toString
 
   test("near-dup ingest: replaying an applied (queryId, batchId) " +
       "no-ops — index contents and later probes are identical") {

@@ -49,8 +49,7 @@ class PdfIngestStreamSpec extends SparkFunSuite {
       "short docs, dedup collapses within and across batches, " +
       "replays no-op") {
     val s = spark
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_pdf_ingest")
+    val root = graft.TestPaths.dir("graft_pdf_ingest")
     val index = root.resolve("digests").toString
     def drop(name: String, pages: Seq[String]): String = {
       val p = root.resolve(name)
@@ -88,8 +87,7 @@ class PdfIngestStreamSpec extends SparkFunSuite {
 
   test("end-to-end stream over a growing pdf directory") {
     val s = spark
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_pdf_stream")
+    val root = graft.TestPaths.dir("graft_pdf_stream")
     val pdfs = root.resolve("pdfs")
     java.nio.file.Files.createDirectories(pdfs)
     val index = root.resolve("digests").toString

@@ -272,7 +272,7 @@ class StreamingSpec extends SparkFunSuite {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest")
+    val dir = graft.TestPaths.dir("graft_ingest")
       .toString + "/digests"
     val emitted = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
     def run(batches: Seq[Seq[(Long, String)]]): Unit = {
@@ -306,8 +306,7 @@ class StreamingSpec extends SparkFunSuite {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_stream_export").toString
+    val out = graft.TestPaths.dir("graft_stream_export").toString
     val input = MemoryStream[(Long, String)]
     val q = StreamingPipelines.exportWarcZstStream(
       input.toDF().toDF("doc_id", "text"), out)
@@ -347,7 +346,7 @@ class StreamingSpec extends SparkFunSuite {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_cdcs")
+    val dir = graft.TestPaths.dir("graft_cdcs")
       .toString + "/snap"
     var last: Map[Long, (String, Long)] = Map.empty
     def run(batches: Seq[Seq[(Long, String, Long, Boolean)]]): Unit = {
@@ -382,7 +381,7 @@ class StreamingSpec extends SparkFunSuite {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_cdcc")
+    val dir = graft.TestPaths.dir("graft_cdcc")
       .toString + "/snap"
     var rows: Seq[(Long, String, Long)] = Nil
     def run(batches: Seq[Seq[(Long, String, Long, Boolean)]]): Unit = {
@@ -432,7 +431,7 @@ class StreamingSpec extends SparkFunSuite {
     fs.delete(junk, true)
     // pre-round-7 layout migration: a snapshot dir holding only
     // `current/` must seed the merge, not silently restart from empty
-    val dirOld = java.nio.file.Files.createTempDirectory("graft_cdcm")
+    val dirOld = graft.TestPaths.dir("graft_cdcm")
       .toString + "/snap"
     Seq((10L, "ten", 1L, false)).toDF("doc_id", "text", "version",
         "deleted")
@@ -472,7 +471,7 @@ class StreamingSpec extends SparkFunSuite {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_cdci")
+    val dir = graft.TestPaths.dir("graft_cdci")
       .toString + "/snap"
     def run(batches: Seq[Seq[(Long, String, Long, Boolean)]]): Unit = {
       val input = MemoryStream[(Long, String, Long, Boolean)]
@@ -525,7 +524,7 @@ class StreamingSpec extends SparkFunSuite {
       "non-idempotent delta; ANONYMOUS publishes get no replay guard") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_snapx")
+    val dir = graft.TestPaths.dir("graft_snapx")
       .toString + "/store"
     def pub(batchId: Long, who: String = "job-a"): Unit =
       BucketedSnapshotStore.publish(s, dir, batchId,
@@ -564,7 +563,7 @@ class StreamingSpec extends SparkFunSuite {
       "data, no manifest) must not shadow the legacy monolithic corpus") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_snapo")
+    val dir = graft.TestPaths.dir("graft_snapo")
       .toString + "/store"
     // round-9 layout: complete monolithic v5 + pointer
     Seq((1L, "one"), (2L, "two")).toDF("k", "v")
@@ -610,7 +609,7 @@ class StreamingSpec extends SparkFunSuite {
     val base = frame(0L until 24L)
     val b1 = (24L until 32L).toSeq
     val b2 = (32L until 40L).toSeq
-    val root = java.nio.file.Files.createTempDirectory("graft_ivfpq_s")
+    val root = graft.TestPaths.dir("graft_ivfpq_s")
       .toString
     // streaming run
     val sIdx = graft.operators.Similarity.buildIvfPqIndex(base,
@@ -692,7 +691,7 @@ class StreamingSpec extends SparkFunSuite {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_neardup_ing")
+    val dir = graft.TestPaths.dir("graft_neardup_ing")
       .toString + "/lsh"
     val base = "the quick brown fox jumps over the lazy dog again today"
     val emitted = scala.collection.mutable.ArrayBuffer[(Long, Long, Double)]()
@@ -1041,7 +1040,7 @@ class StreamingQualityMonitorSpec extends graft.SparkFunSuite {
         math.rint(r.getAs[Double]("jaccard") * 1e9) / 1e9)).toSet
 
     // hand-driven batch sequence: seed corpus, probe+append h1, probe h2
-    val tmp = java.nio.file.Files.createTempDirectory("graft_replay")
+    val tmp = graft.TestPaths.dir("graft_replay")
     val refPath = s"$tmp/ref_lsh"
     val refIdx = graft.operators.Dedup.buildLshIndex(corpus, "text",
       "doc_id", refPath)
@@ -1132,8 +1131,7 @@ class StreamingQualityMonitorSpec extends graft.SparkFunSuite {
       ev(2, 1500, 3, 30))
     val b2 = Seq(ev(1, 9000, 4, 10), ev(2, 8000, 5, 40),
       ev(3, 8500, 6, 50), ev(1, 9500, 7, 20))
-    val edgePath = java.nio.file.Files
-      .createTempDirectory("graft_edges_snap").toString
+    val edgePath = graft.TestPaths.dir("graft_edges_snap").toString
     val input = MemoryStream[NodeEvent]
     val q = StreamingPipelines.maintainEdgesStream(input.toDS(), edgePath)()
     try {

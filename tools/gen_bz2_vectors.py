@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Golden-vector generator for graft's pure-JVM bzip2 decoder
+"""Golden-vector generator for graft's bzip2 decoder
 (`operators/Bzip2Decode.scala`): deterministic plaintexts -> REAL
 libbz2 streams (via CPython's stdlib bz2 binding), written to
 src/test/resources/bz2/<name>.bz2.

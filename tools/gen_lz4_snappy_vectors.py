@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Golden vectors for the pure-JVM LZ4 frame and Snappy raw decoders
+"""Golden vectors for the LZ4 frame and Snappy raw decoders
 (`operators/Lz4Snappy.scala`), produced by REAL reference encoders
 (pyarrow's bundled lz4/snappy). Same discipline as
 gen_zstd_vectors.py: plaintext recipes have byte-identical twins in
