@@ -4,9 +4,9 @@ import java.io.IOException
 
 import org.apache.avro.AvroRuntimeException
 
-/** Shared per-record decode kernel used by both the ScalaUDF path (v0) and
-  * the native Catalyst expression (M3, `graft.plans.AvroDecodeEnvelope`) —
-  * one implementation of the reference semantics, two execution surfaces.
+/** Per-record decode kernel behind the native Catalyst expression
+  * `graft.plans.AvroDecodeEnvelope`: the one implementation of the
+  * reference semantics.
   */
 object DecodeKernel {
 

@@ -4427,8 +4427,8 @@ object Multimodal {
     n_blocks: Long, compressed_len: Long, has_checksum: Boolean,
     content: String, checksum_ok: java.lang.Boolean)
 
-  /** Zstandard frame walk (RFC 8878) WITHOUT decompression — the
-    * `.warc.zst` routing/splitting story: Common Crawl's zstd layout
+  /** Zstandard frame walk (RFC 8878) — the `.warc.zst`
+    * routing/splitting story: Common Crawl's zstd layout
     * concatenates skippable frames (shared-dictionary carrier) with
     * data frames, and a 100 TB ingest wants frame boundaries, window
     * sizes, dictionary ids, and declared content sizes BEFORE

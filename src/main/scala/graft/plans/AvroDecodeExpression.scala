@@ -10,14 +10,13 @@ import graft.avro.{AvroDecoderState, DecodeKernel, SchemaProvider}
   * wire-parse → registry-lookup → Avro-decode → JSON-envelope kernel
   * (SURVEY.md §4.3 #1 / §7.1 M3 — the UDF→Expression promotion).
   *
-  * vs. the v0 ScalaUDF: no `ScalaUDF` wrapper (no catalyst-to-scala
-  * converters, no extra null boxing), and codegen embeds a direct virtual
-  * call via [[doGenCode]] — the expression participates in whole-stage
-  * codegen as a leaf call instead of forcing a fallback projection for the
-  * whole operator subtree. Executor-side state (the schema LRU with each
-  * schema's compiled transcoder) is resolved lazily from the JVM-wide
-  * registry keyed by the provider's cache token, exactly like the UDF
-  * path — the reference's two-level cache design
+  * No `ScalaUDF` wrapper (no catalyst-to-scala converters, no extra null
+  * boxing): codegen embeds a direct virtual call via [[doGenCode]], so the
+  * expression participates in whole-stage codegen as a leaf call instead
+  * of forcing a fallback projection for the whole operator subtree.
+  * Executor-side state (the schema LRU with each schema's compiled
+  * transcoder) is resolved lazily from the JVM-wide registry keyed by the
+  * provider's cache token — the reference's two-level cache design
   * (`AvroTransform.java:108-109`) relocated per executor.
   *
   * Null semantics: null input → null output (tombstone passthrough,

@@ -1,142 +1,19 @@
 package graft.plans
 
-import java.nio.ByteBuffer
-
 import scala.jdk.CollectionConverters._
 
 import org.apache.avro.Schema
-import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericFixed, GenericRecord}
+import org.apache.avro.generic.{GenericDatumReader, GenericDatumWriter}
 import org.apache.avro.io.{BinaryDecoder, BinaryEncoder, DecoderFactory, EncoderFactory}
 
+import org.apache.spark.sql.avro.SchemaConverters
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
+import org.apache.spark.sql.graftbridge.AvroBridge
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.avro.{DecodeKernel, SchemaLookupException, WireFormat}
-
-/** Avro writer-schema → Catalyst type mapping + value converters for the
-  * fixed-schema typed decode fast path ([[AvroDecodeFixed]]).
-  *
-  * Supported: records (nested), `["null", T]` unions (→ nullable),
-  * string/enum → string, bytes/fixed → binary, int/long/float/double/
-  * boolean, arrays, string-keyed maps. Multi-branch unions are rejected at
-  * construction (they have no faithful static Catalyst type; the dynamic
-  * JSON-envelope path handles them — `AvroComplexTypesSpec`). Logical
-  * types decode as their underlying base type (documented deviation; the
-  * reference's JSON path does the same via Avro's `JsonEncoder`).
-  */
-object AvroCatalyst {
-
-  private def nonNull(s: Schema): Schema =
-    if (s.getType != Schema.Type.UNION) s
-    else {
-      val nn = s.getTypes.asScala.filter(_.getType != Schema.Type.NULL)
-      if (nn.size == 1) nn.head
-      else throw new IllegalArgumentException(
-        s"Unsupported Avro union for typed decode (use the dynamic JSON " +
-          s"envelope path instead): $s")
-    }
-
-  private def isNullable(s: Schema): Boolean =
-    s.getType == Schema.Type.UNION &&
-      s.getTypes.asScala.exists(_.getType == Schema.Type.NULL)
-
-  def toSparkType(s: Schema): DataType = {
-    val base = nonNull(s)
-    base.getType match {
-      case Schema.Type.RECORD => StructType(base.getFields.asScala.map(f =>
-        StructField(f.name, toSparkType(f.schema), isNullable(f.schema))).toSeq)
-      case Schema.Type.STRING | Schema.Type.ENUM => StringType
-      case Schema.Type.BYTES | Schema.Type.FIXED => BinaryType
-      case Schema.Type.INT => IntegerType
-      case Schema.Type.LONG => LongType
-      case Schema.Type.FLOAT => FloatType
-      case Schema.Type.DOUBLE => DoubleType
-      case Schema.Type.BOOLEAN => BooleanType
-      case Schema.Type.ARRAY =>
-        ArrayType(toSparkType(base.getElementType),
-          isNullable(base.getElementType))
-      case Schema.Type.MAP =>
-        MapType(StringType, toSparkType(base.getValueType),
-          isNullable(base.getValueType))
-      case other => throw new IllegalArgumentException(
-        s"Unsupported Avro type for typed decode: $other")
-    }
-  }
-
-  /** Null-safe-outside converter from an Avro runtime value to the
-    * Catalyst internal value of [[toSparkType]]. Built ONCE per schema —
-    * per-row work is a direct function call, no type dispatch. */
-  def converter(s: Schema): AnyRef => Any = {
-    val base = nonNull(s)
-    base.getType match {
-      case Schema.Type.RECORD =>
-        val fieldConvs =
-          base.getFields.asScala.map(f => converter(f.schema)).toArray
-        v => {
-          val rec = v.asInstanceOf[GenericRecord]
-          val vals = new Array[Any](fieldConvs.length)
-          var i = 0
-          while (i < fieldConvs.length) {
-            val fv = rec.get(i)
-            vals(i) = if (fv == null) null else fieldConvs(i)(fv.asInstanceOf[AnyRef])
-            i += 1
-          }
-          new GenericInternalRow(vals)
-        }
-      case Schema.Type.STRING | Schema.Type.ENUM => {
-        case u: org.apache.avro.util.Utf8 =>
-          UTF8String.fromBytes(u.getBytes, 0, u.getByteLength)
-        case other => UTF8String.fromString(other.toString)
-      }
-      case Schema.Type.BYTES => v => {
-        val bb = v.asInstanceOf[ByteBuffer]
-        val out = new Array[Byte](bb.remaining())
-        bb.duplicate().get(out)
-        out
-      }
-      case Schema.Type.FIXED => v => v.asInstanceOf[GenericFixed].bytes().clone()
-      case Schema.Type.INT | Schema.Type.LONG | Schema.Type.FLOAT |
-           Schema.Type.DOUBLE | Schema.Type.BOOLEAN => v => v
-      case Schema.Type.ARRAY =>
-        val ec = converter(base.getElementType)
-        v => {
-          val in = v.asInstanceOf[java.util.Collection[AnyRef]]
-          val out = new Array[Any](in.size)
-          var i = 0
-          val it = in.iterator()
-          while (it.hasNext) {
-            val e = it.next()
-            out(i) = if (e == null) null else ec(e)
-            i += 1
-          }
-          new GenericArrayData(out)
-        }
-      case Schema.Type.MAP =>
-        val vc = converter(base.getValueType)
-        v => {
-          val in = v.asInstanceOf[java.util.Map[AnyRef, AnyRef]]
-          val keys = new Array[Any](in.size)
-          val vals = new Array[Any](in.size)
-          var i = 0
-          val it = in.entrySet().iterator()
-          while (it.hasNext) {
-            val e = it.next()
-            keys(i) = UTF8String.fromString(e.getKey.toString)
-            vals(i) = if (e.getValue == null) null else vc(e.getValue)
-            i += 1
-          }
-          new ArrayBasedMapData(
-            new GenericArrayData(keys), new GenericArrayData(vals))
-        }
-      case other => throw new IllegalArgumentException(
-        s"Unsupported Avro type for typed decode: $other")
-    }
-  }
-}
 
 /** `graft_from_avro(bytes)` — FIXED-schema typed decode fast path
   * (SURVEY.md §7.3): for a topic declared to carry a single writer schema,
@@ -145,10 +22,15 @@ object AvroCatalyst {
   * vs. the dynamic path ([[AvroDecodeEnvelope]]): no per-row schema-id
   * lookup, no GenericRecord→JSON→parse round-trip, and the output is a
   * first-class struct column (`.select($"e.field")` prunes/pushes like any
-  * other nested column). This is the API a Spark user reaches for first on
-  * single-schema topics — the engine analogue of `from_avro` (the Avro
-  * connector is not on this classpath, and it could not check the wire
-  * header or schema id anyway).
+  * other nested column). This is Spark's `from_avro` with the Confluent
+  * wire header checked first: the Catalyst type comes from Spark's
+  * `SchemaConverters.toSqlType` and values from its `AvroDeserializer`,
+  * so logical types decode as `from_avro` decodes them (decimal →
+  * `DecimalType`, date → `DateType`, timestamp-micros → `TimestampType`).
+  * Multi-branch unions are rejected when the type is resolved: they have
+  * no faithful static Catalyst type (Spark would invent
+  * `struct<member0,…>`), and the dynamic JSON envelope path handles them
+  * (`AvroComplexTypesSpec`).
   *
   * Wire violations throw in both modes (reference `AvroTransform.java:
   * 173-177`). A frame whose embedded schema id differs from
@@ -177,16 +59,21 @@ case class AvroDecodeFixed(
   @transient private lazy val readerSchema: Schema =
     readerSchemaJson.map(new Schema.Parser().parse(_)).getOrElse(schema)
 
-  override def dataType: DataType = AvroCatalyst.toSparkType(readerSchema)
+  override lazy val dataType: DataType = {
+    AvroDecodeFixed.rejectMultiBranchUnions(readerSchema, Set.empty)
+    SchemaConverters.toSqlType(readerSchema).dataType
+  }
   override def nullable: Boolean = true
 
-  @transient private lazy val conv: AnyRef => Any =
-    AvroCatalyst.converter(readerSchema)
-
-  // GenericDatumReader is not thread-safe; BinaryDecoder is reusable per
-  // thread — same executor-side state shape as AvroDecoderState.
+  // GenericDatumReader and AvroDeserializer are not thread-safe;
+  // BinaryDecoder is reusable per thread — same executor-side state shape
+  // as AvroDecoderState.
   private final class ThreadState {
     val reader = new GenericDatumReader[AnyRef](schema, readerSchema)
+    // a root ["null", T] union decodes as T (a null datum stays null)
+    val toCatalyst: Any => Any =
+      AvroBridge.deserializer(AvroDecodeFixed.nonNullRoot(readerSchema),
+        dataType)
     var decoder: BinaryDecoder = _
   }
   @transient private lazy val local: ThreadLocal[ThreadState] =
@@ -202,7 +89,11 @@ case class AvroDecodeFixed(
     try {
       st.decoder = DecoderFactory.get()
         .binaryDecoder(framed.body, 0, framed.body.length, st.decoder)
-      conv(st.reader.read(null, st.decoder).asInstanceOf[AnyRef])
+      val datum = st.reader.read(null, st.decoder)
+      // the deserializer overwrites its result row on the next call; a
+      // copy keeps each result independent of later ones
+      if (datum == null) null
+      else InternalRow.copyValue(st.toCatalyst(datum))
     } catch {
       case t: Throwable if permissive && DecodeKernel.isDecodeFailure(t) =>
         null
@@ -226,104 +117,43 @@ case class AvroDecodeFixed(
   override def prettyName: String = "graft_from_avro"
 }
 
-/** Catalyst → Avro value converters (the encode mirror of
-  * [[AvroCatalyst.converter]]); same supported type lattice. Built once
-  * per schema; per-row work is direct function calls. */
-object AvroCatalystEncode {
-  import scala.jdk.CollectionConverters._
+object AvroDecodeFixed {
 
-  private def nonNull(s: Schema): Schema =
-    if (s.getType != Schema.Type.UNION) s
-    else {
-      val nn = s.getTypes.asScala.filter(_.getType != Schema.Type.NULL)
-      if (nn.size == 1) nn.head
-      else throw new IllegalArgumentException(
-        s"Unsupported Avro union for typed encode: $s")
-    }
+  private def nonNull(s: Schema): Seq[Schema] =
+    s.getTypes.asScala.toSeq.filter(_.getType != Schema.Type.NULL)
 
-  /** Converter from the Catalyst internal value of
-    * `AvroCatalyst.toSparkType(s)` to the Avro runtime value `s` expects. */
-  def converter(s: Schema): Any => AnyRef = {
-    val base = nonNull(s)
-    base.getType match {
-      case Schema.Type.RECORD =>
-        val fields = base.getFields.asScala.toArray
-        val sparkTypes = fields.map(f => AvroCatalyst.toSparkType(f.schema))
-        val convs = fields.map(f => converter(f.schema))
-        v => {
-          val row = v.asInstanceOf[InternalRow]
-          val rec = new GenericData.Record(base)
-          var i = 0
-          while (i < fields.length) {
-            val fv =
-              if (row.isNullAt(i)) null
-              else convs(i)(row.get(i, sparkTypes(i)))
-            rec.put(i, fv)
-            i += 1
-          }
-          rec
-        }
-      case Schema.Type.STRING => v => v.asInstanceOf[UTF8String].toString
-      case Schema.Type.ENUM =>
-        v => new GenericData.EnumSymbol(base, v.asInstanceOf[UTF8String].toString)
-      case Schema.Type.BYTES =>
-        v => ByteBuffer.wrap(v.asInstanceOf[Array[Byte]])
-      case Schema.Type.FIXED =>
-        // GenericDatumWriter writes exactly getFixedSize() bytes — an
-        // unchecked oversized array would be SILENTLY truncated
-        v => {
-          val bytes = v.asInstanceOf[Array[Byte]]
-          if (bytes.length != base.getFixedSize)
-            throw new IllegalArgumentException(
-              s"Avro fixed '${base.getName}' requires exactly " +
-                s"${base.getFixedSize} bytes, got ${bytes.length}")
-          new GenericData.Fixed(base, bytes)
-        }
-      case Schema.Type.INT | Schema.Type.LONG | Schema.Type.FLOAT |
-           Schema.Type.DOUBLE | Schema.Type.BOOLEAN =>
-        v => v.asInstanceOf[AnyRef]
-      case Schema.Type.ARRAY =>
-        val et = AvroCatalyst.toSparkType(base.getElementType)
-        val ec = converter(base.getElementType)
-        v => {
-          val in = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-          val out = new java.util.ArrayList[AnyRef](in.numElements())
-          var i = 0
-          while (i < in.numElements()) {
-            out.add(if (in.isNullAt(i)) null else ec(in.get(i, et)))
-            i += 1
-          }
-          out
-        }
-      case Schema.Type.MAP =>
-        val vt = AvroCatalyst.toSparkType(base.getValueType)
-        val vc = converter(base.getValueType)
-        v => {
-          val in = v.asInstanceOf[org.apache.spark.sql.catalyst.util.MapData]
-          val out = new java.util.HashMap[String, AnyRef](in.numElements())
-          val keys = in.keyArray()
-          val vals = in.valueArray()
-          var i = 0
-          while (i < in.numElements()) {
-            out.put(keys.getUTF8String(i).toString,
-              if (vals.isNullAt(i)) null else vc(vals.get(i, vt)))
-            i += 1
-          }
-          out
-        }
-      case other => throw new IllegalArgumentException(
-        s"Unsupported Avro type for typed encode: $other")
+  private def nonNullRoot(s: Schema): Schema =
+    if (s.getType == Schema.Type.UNION && nonNull(s).size == 1) nonNull(s).head
+    else s
+
+  /** Throws on any union with more than one non-null branch, at any
+    * depth (`seen` stops the walk at a recursive record). */
+  private def rejectMultiBranchUnions(s: Schema, seen: Set[String]): Unit =
+    s.getType match {
+      case Schema.Type.UNION =>
+        if (nonNull(s).size > 1) throw new IllegalArgumentException(
+          s"Unsupported Avro union for typed decode (use the dynamic JSON " +
+            s"envelope path instead): $s")
+        nonNull(s).foreach(rejectMultiBranchUnions(_, seen))
+      case Schema.Type.RECORD if !seen(s.getFullName) =>
+        s.getFields.asScala.foreach(f =>
+          rejectMultiBranchUnions(f.schema, seen + s.getFullName))
+      case Schema.Type.ARRAY => rejectMultiBranchUnions(s.getElementType, seen)
+      case Schema.Type.MAP => rejectMultiBranchUnions(s.getValueType, seen)
+      case _ => ()
     }
-  }
 }
 
 /** `graft_to_avro(struct)` — FIXED-schema typed ENCODE: the mirror of
   * [[AvroDecodeFixed]] (and the engine analogue of `to_avro`). Takes a
-  * struct column whose shape matches `AvroCatalyst.toSparkType(schema)`
-  * and emits the Avro binary body. Per-thread writer + encoder reuse (the
-  * reference allocates all three per record — `AvroTransform.java:241-246`);
-  * used by the framed-corpus fixture so the encode side of round-trip
-  * queries is native, not a ScalaUDF. Null input → null. */
+  * struct column whose fields line up, by position, with the schema's and
+  * emits the Avro binary body through Spark's `AvroSerializer` (which
+  * also rejects a FIXED value of the wrong size: the datum writer would
+  * silently truncate it). Per-thread serializer + writer + encoder reuse
+  * (the reference allocates all three per record —
+  * `AvroTransform.java:241-246`); used by the framed-corpus fixture so the
+  * encode side of round-trip queries is native, not a ScalaUDF. Null
+  * input → null. */
 case class AvroEncodeFixed(child: Expression, schemaJson: String)
     extends UnaryExpression {
 
@@ -333,11 +163,10 @@ case class AvroEncodeFixed(child: Expression, schemaJson: String)
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = true
 
-  @transient private lazy val conv: Any => AnyRef =
-    AvroCatalystEncode.converter(schema)
-
   private final class ThreadState {
-    val writer = new GenericDatumWriter[AnyRef](schema)
+    val toAvro: Any => Any =
+      AvroBridge.serializer(child.dataType, schema, child.nullable)
+    val writer = new GenericDatumWriter[Any](schema)
     val out = new java.io.ByteArrayOutputStream(128)
     var encoder: BinaryEncoder = _
   }
@@ -348,7 +177,7 @@ case class AvroEncodeFixed(child: Expression, schemaJson: String)
     val st = local.get()
     st.out.reset()
     st.encoder = EncoderFactory.get().binaryEncoder(st.out, st.encoder)
-    st.writer.write(conv(input), st.encoder)
+    st.writer.write(st.toAvro(input), st.encoder)
     st.encoder.flush()
     st.out.toByteArray
   }

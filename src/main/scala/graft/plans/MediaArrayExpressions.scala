@@ -1053,11 +1053,6 @@ case class WarcGzRecords(child: Expression) extends MediaArrayExpression {
   override def prettyName: String = "graft_warc_gz_records"
 }
 
-/** `zstd_frames(blob)` -> one struct per RFC 8878 frame (zstd or
-  * skippable) of a concatenated stream — header/block-chain metadata
-  * with NO entropy decoding; Raw/RLE-only frames extract content and
-  * verify the XXH64 content checksum; structural violations yield an
-  * empty array. */
 /** `lz4_frames(blob)` -> one struct per LZ4 frame of a concatenated
   * stream, fully decoded (golden-pinned against the reference
   * encoder), every present checksum verified; structural violations
@@ -1190,6 +1185,13 @@ case class WarcZstRecords(child: Expression) extends MediaArrayExpression {
   override def prettyName: String = "graft_warc_zst_records"
 }
 
+/** `zstd_frames(blob)` -> one struct per RFC 8878 frame (zstd or
+  * skippable) of a concatenated stream: header and block-chain metadata,
+  * plus the content (up to 64 KiB). Raw/RLE-only frames are copied out
+  * and their XXH64 content checksum verified; frames with Compressed
+  * blocks are decoded (checksum included) by libzstd, and one that fails
+  * to decode keeps its metadata with NULL content. Structural violations
+  * yield an empty array. */
 case class ZstdFrames(child: Expression) extends MediaArrayExpression {
   override protected def structSchema: StructType =
     MediaArrayKernel.zstdFrameSchema

@@ -1,382 +1,56 @@
 package graft.sources
 
-import scala.collection.JavaConverters._
-
-import org.apache.avro.{LogicalType, LogicalTypes, Schema}
-import org.apache.avro.file.{DataFileReader, DataFileStream, DataFileWriter}
-import org.apache.avro.generic.{GenericData, GenericDatumReader,
-  GenericDatumWriter, GenericRecord}
-import org.apache.hadoop.fs.Path
-
-import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.avro.SchemaConverters
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 /** Avro OBJECT CONTAINER FILES (`.avro` — magic `Obj1`, writer schema
   * in the header, sync-marked blocks) as a batch source AND sink — the
   * at-rest sibling of the engine's Confluent-framed wire format
-  * (`avro/WireFormat.scala` decodes the per-message framing; this reads
-  * the file format the same ecosystems archive to). No connector jar is
-  * shipped in this environment, so the reader/writer sit directly on
-  * avro-core (already a compile-time dependency of the decode kernel).
-  *
-  * Type surface (fail-loud, documented): Spark
-  * long/int/double/float/boolean/string/binary columns map to the
-  * matching Avro primitives; `decimal(p,s)` ↔ Avro `bytes` with the
-  * decimal logical type, `timestamp` ↔ `long`/timestamp-micros,
-  * `date` ↔ `int`/date, arrays map to Avro arrays, and (round 14)
-  * nested STRUCTS ↔ named Avro records and string-keyed MAPS ↔ Avro
-  * maps, each recursively over the same surface. Map keys must be
-  * strings (Avro's rule) and non-string keys fail loud.
-  *
-  * Scale shape: the WRITER emits one container file per partition
-  * (executor-side, streaming row-by-row through the Avro encoder — no
-  * partition materialization); the READER splits every file on Avro
-  * sync markers into `maxSplitBytes`-sized ranges (the same contract
-  * as Hadoop's Avro input format: seek to the first sync after the
-  * split start, read blocks until past the split end), so a corpus
-  * archived as a few huge containers still fans out across the
-  * cluster instead of collapsing to one task per file. Each task
-  * streams blocks through the Avro decoder positionally — no file is
-  * ever materialized whole. Schema resolution is BY NAME against the
-  * first file's header schema (one small driver-side header read):
-  * files with reordered columns or compatible evolution decode
-  * correctly; files whose resolved types disagree fail loud. */
+  * (`avro/WireFormat.scala` decodes the per-message framing). Both
+  * directions are Spark's own Avro file format: one file per non-empty
+  * partition on write; on read, columns resolve BY NAME against the
+  * first file's schema, and files split on sync markers, so a corpus
+  * archived as a few huge containers still fans out across tasks.
+  * Types are Spark's mapping (nested structs ↔ records, string-keyed
+  * maps, decimal / timestamp / timestamp_ntz / date logical types);
+  * dates and timestamps are never rebased. */
 object AvroContainerFiles {
 
-  /** Spark schema → Avro record schema (flat primitives + decimal /
-    * timestamp / date logical types + arrays thereof). */
-  def avroSchemaFor(schema: StructType, name: String = "row"): Schema = {
-    val fields = schema.fields.map { f =>
-      val base = leafAvroType(f.dataType, f.name)
-      val s = if (f.nullable)
-        Schema.createUnion(java.util.Arrays.asList(
-          Schema.create(Schema.Type.NULL), base))
-      else base
-      new Schema.Field(f.name, s, null, null)
-    }
-    Schema.createRecord(name, null, "graft", false,
-      java.util.Arrays.asList(fields: _*))
-  }
+  // the short name "avro" is not registered in spark-sql's service file
+  private val Format = "org.apache.spark.sql.avro.AvroFileFormat"
 
-  private def leafAvroType(dt: DataType, col: String): Schema = dt match {
-    case LongType => Schema.create(Schema.Type.LONG)
-    case IntegerType => Schema.create(Schema.Type.INT)
-    case DoubleType => Schema.create(Schema.Type.DOUBLE)
-    case FloatType => Schema.create(Schema.Type.FLOAT)
-    case BooleanType => Schema.create(Schema.Type.BOOLEAN)
-    case StringType => Schema.create(Schema.Type.STRING)
-    case BinaryType => Schema.create(Schema.Type.BYTES)
-    case d: DecimalType =>
-      LogicalTypes.decimal(d.precision, d.scale)
-        .addToSchema(Schema.create(Schema.Type.BYTES))
-    case TimestampType =>
-      LogicalTypes.timestampMicros()
-        .addToSchema(Schema.create(Schema.Type.LONG))
-    case TimestampNTZType =>
-      LogicalTypes.localTimestampMicros()
-        .addToSchema(Schema.create(Schema.Type.LONG))
-    case DateType =>
-      LogicalTypes.date().addToSchema(Schema.create(Schema.Type.INT))
-    case ArrayType(et, containsNull) =>
-      val elem = leafAvroType(et, s"$col[]")
-      Schema.createArray(
-        if (containsNull)
-          Schema.createUnion(java.util.Arrays.asList(
-            Schema.create(Schema.Type.NULL), elem))
-        else elem)
-    case st: StructType => // nested record (round 14); Avro records
-      // are NAMED — derive a unique, deterministic name from the
-      // column path so sibling structs never collide
-      avroSchemaFor(st, recordName(col))
-    case MapType(StringType, vt, valueContainsNull) =>
-      val v = leafAvroType(vt, s"$col{}")
-      Schema.createMap(
-        if (valueContainsNull)
-          Schema.createUnion(java.util.Arrays.asList(
-            Schema.create(Schema.Type.NULL), v))
-        else v)
-    case MapType(kt, _, _) => throw new IllegalArgumentException(
-      s"column '$col': Avro maps have STRING keys; got key type $kt")
-    case other => throw new IllegalArgumentException(
-      s"AvroContainerFiles supports primitive/logical-type/array/" +
-        s"struct/map columns; column '$col' is $other")
-  }
-
-  /** Avro-legal record name from a column path ("a.b[]" → "a_b__rec"). */
-  private def recordName(col: String): String = {
-    val s = col.map(c => if (c.isLetterOrDigit) c else '_')
-    (if (s.nonEmpty && s.head.isDigit) "r_" + s else s) + "_rec"
-  }
-
-  /** Avro record schema → Spark schema (the inverse surface). */
-  def sparkSchemaFor(schema: Schema): StructType = {
-    require(schema.getType == Schema.Type.RECORD,
-      s"expected a record schema, got ${schema.getType}")
-    StructType(schema.getFields.asScala.toSeq.map { f =>
-      val (s, nullable) = unwrapNullable(f.schema(), f.name)
-      StructField(f.name, leafSparkType(s, f.name), nullable)
-    })
-  }
-
-  private def unwrapNullable(s: Schema, col: String): (Schema, Boolean) =
-    s.getType match {
-      case Schema.Type.UNION =>
-        val ts = s.getTypes.asScala
-        require(ts.size == 2 && ts.exists(_.getType == Schema.Type.NULL),
-          s"field '$col': only union(null, T) is supported")
-        (ts.find(_.getType != Schema.Type.NULL).get, true)
-      case _ => (s, false)
-    }
-
-  private def leafSparkType(s: Schema, col: String): DataType = {
-    val lt: LogicalType = s.getLogicalType
-    (s.getType, lt) match {
-      case (_, d: LogicalTypes.Decimal) =>
-        DecimalType(d.getPrecision, d.getScale)
-      case (_, _: LogicalTypes.TimestampMicros) => TimestampType
-      case (_, _: LogicalTypes.LocalTimestampMicros) => TimestampNTZType
-      case (_, _: LogicalTypes.Date) => DateType
-      case (Schema.Type.LONG, _) => LongType
-      case (Schema.Type.INT, _) => IntegerType
-      case (Schema.Type.DOUBLE, _) => DoubleType
-      case (Schema.Type.FLOAT, _) => FloatType
-      case (Schema.Type.BOOLEAN, _) => BooleanType
-      case (Schema.Type.STRING, _) => StringType
-      case (Schema.Type.BYTES, _) => BinaryType
-      case (Schema.Type.ARRAY, _) =>
-        val (es, en) = unwrapNullable(s.getElementType, s"$col[]")
-        ArrayType(leafSparkType(es, s"$col[]"), containsNull = en)
-      case (Schema.Type.RECORD, _) => sparkSchemaFor(s)
-      case (Schema.Type.MAP, _) =>
-        val (vs, vn) = unwrapNullable(s.getValueType, s"$col{}")
-        MapType(StringType, leafSparkType(vs, s"$col{}"),
-          valueContainsNull = vn)
-      case (other, _) => throw new IllegalArgumentException(
-        s"field '$col': unsupported Avro type $other")
-    }
-  }
-
-  /** Spark external value → Avro datum for the matching type. `sch`
-    * is the field's Avro schema (possibly a nullable union — the
-    * non-null branch drives nested record/array/map construction). */
-  private def toAvro(v: Any, dt: DataType, sch: Schema): Any = {
-    if (v == null) return null
-    lazy val s =
-      if (sch.getType == Schema.Type.UNION)
-        sch.getTypes.asScala.find(_.getType != Schema.Type.NULL).get
-      else sch
-    (v, dt) match {
-      case (s0: String, _) => s0
-      case (b: Array[Byte], BinaryType) => java.nio.ByteBuffer.wrap(b)
-      case (bd: java.math.BigDecimal, d: DecimalType) =>
-        java.nio.ByteBuffer.wrap(
-          bd.setScale(d.scale).unscaledValue().toByteArray)
-      case (ts: java.sql.Timestamp, TimestampType) =>
-        val i = ts.toInstant
-        java.lang.Long.valueOf(
-          Math.addExact(Math.multiplyExact(i.getEpochSecond, 1000000L),
-            (i.getNano / 1000).toLong))
-      case (i: java.time.Instant, TimestampType) =>
-        java.lang.Long.valueOf(
-          Math.addExact(Math.multiplyExact(i.getEpochSecond, 1000000L),
-            (i.getNano / 1000).toLong))
-      case (ldt: java.time.LocalDateTime, TimestampNTZType) =>
-        val i = ldt.toInstant(java.time.ZoneOffset.UTC)
-        java.lang.Long.valueOf(
-          Math.addExact(Math.multiplyExact(i.getEpochSecond, 1000000L),
-            (i.getNano / 1000).toLong))
-      case (d: java.sql.Date, DateType) =>
-        java.lang.Integer.valueOf(d.toLocalDate.toEpochDay.toInt)
-      case (d: java.time.LocalDate, DateType) =>
-        java.lang.Integer.valueOf(d.toEpochDay.toInt)
-      case (seq: scala.collection.Seq[_], ArrayType(et, _)) =>
-        val out = new java.util.ArrayList[Any](seq.length)
-        seq.foreach(e => out.add(toAvro(e, et, s.getElementType)))
-        out
-      case (r: Row, st: StructType) =>
-        val rec = new GenericData.Record(s)
-        var i = 0
-        while (i < st.length) {
-          rec.put(i, toAvro(r.get(i), st(i).dataType,
-            s.getFields.get(i).schema()))
-          i += 1
-        }
-        rec
-      case (m: scala.collection.Map[_, _], MapType(_, vt, _)) =>
-        val out = new java.util.HashMap[String, Any](m.size)
-        m.foreach { case (k, mv) =>
-          out.put(k.toString, toAvro(mv, vt, s.getValueType))
-        }
-        out
-      case (x, _) => x
-    }
-  }
-
-  /** Avro datum → Spark external value for the matching leaf type. */
-  private def toExternal(v: Any, dt: DataType): Any = (v, dt) match {
-    case (null, _) => null
-    case (u: org.apache.avro.util.Utf8, _) => u.toString
-    case (s: String, _) => s
-    case (bb: java.nio.ByteBuffer, d: DecimalType) =>
-      val a = new Array[Byte](bb.remaining()); bb.duplicate().get(a)
-      new java.math.BigDecimal(new java.math.BigInteger(a), d.scale)
-    case (bb: java.nio.ByteBuffer, _) =>
-      val a = new Array[Byte](bb.remaining()); bb.duplicate().get(a); a
-    case (l: java.lang.Long, TimestampType) =>
-      val micros = l.longValue()
-      java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(
-        Math.floorDiv(micros, 1000000L),
-        Math.floorMod(micros, 1000000L) * 1000L))
-    case (l: java.lang.Long, TimestampNTZType) =>
-      val micros = l.longValue()
-      java.time.LocalDateTime.ofInstant(
-        java.time.Instant.ofEpochSecond(
-          Math.floorDiv(micros, 1000000L),
-          Math.floorMod(micros, 1000000L) * 1000L),
-        java.time.ZoneOffset.UTC)
-    case (i: java.lang.Integer, DateType) =>
-      java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(i.longValue()))
-    case (l: java.util.List[_], ArrayType(et, _)) =>
-      l.asScala.map(toExternal(_, et)).toSeq
-    case (rec: GenericRecord, st: StructType) =>
-      // positional: Avro resolution reorders datum fields into the
-      // expected (reader) schema order, which IS st's order
-      Row.fromSeq(st.fields.toSeq.zipWithIndex.map { case (f, i) =>
-        toExternal(rec.get(i), f.dataType)
-      })
-    case (m: java.util.Map[_, _], MapType(_, vt, _)) =>
-      m.asScala.map { case (k, mv) =>
-        k.toString -> toExternal(mv, vt)
-      }.toMap
-    case (x, _) => x
-  }
-
-  /** Write `df` as Avro container files under `path`, one file per
-    * partition (empty partitions emit nothing). `syncInterval` is the
+  /** Append `df` as container files under `path`. `syncInterval` is the
     * approximate block size in bytes — the reader's split granularity
     * (small values force many blocks, used by the split-read specs). */
   def write(df: DataFrame, path: String,
       syncInterval: Int = 64 * 1024, codec: String = "null"): Unit = {
-    val schema = df.schema
-    val avroJson = avroSchemaFor(schema).toString
     require(codec == "null" || codec == "deflate" || codec == "snappy",
       s"unsupported avro codec '$codec' (null | deflate | snappy)")
-    df.foreachPartition { rows: Iterator[Row] =>
-      if (rows.hasNext) {
-        val avroSchema = new Schema.Parser().parse(avroJson)
-        val part = TaskContext.get().partitionId()
-        val p = new Path(path,
-          f"part-$part%05d-${java.util.UUID.randomUUID()}.avro")
-        // executor-side default Hadoop conf (Configuration is not
-        // serializable; the default resolves local/HDFS schemes — the
-        // same assumption the read side makes)
-        val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-        val out = fs.create(p, true)
-        val w = new DataFileWriter[GenericRecord](
-          new GenericDatumWriter[GenericRecord](avroSchema))
-        w.setSyncInterval(syncInterval)
-        // block codec rides in the header; DataFileReader auto-detects
-        // on read, and sync-marker SPLITS still work — markers frame
-        // the compressed blocks, not the raw bytes
-        codec match {
-          case "deflate" =>
-            w.setCodec(org.apache.avro.file.CodecFactory.deflateCodec(6))
-          case "snappy" =>
-            w.setCodec(org.apache.avro.file.CodecFactory.snappyCodec())
-          case _ => ()
-        }
-        w.create(avroSchema, out)
-        try {
-          rows.foreach { row =>
-            val rec = new GenericData.Record(avroSchema)
-            var i = 0
-            while (i < schema.length) {
-              rec.put(i, toAvro(row.get(i), schema(i).dataType,
-                avroSchema.getFields.get(i).schema()))
-              i += 1
-            }
-            w.append(rec)
-          }
-        } finally w.close() // closes the stream, flushes the last block
-      }
-    }
+    try SchemaConverters.toAvroType(df.schema)
+    catch { case e: Exception => throw new IllegalArgumentException(
+      s"cannot write ${df.schema.simpleString} as Avro (map keys must " +
+        s"be strings): ${e.getMessage}", e) }
+    df.write.format(Format).mode("append")
+      .option("compression", if (codec == "null") "uncompressed" else codec)
+      .option("avro.mapred.sync.interval", syncInterval.toLong)
+      .save(path)
   }
 
-  /** Read every `*.avro` container file under `path` back into a
-    * DataFrame. The EXPECTED schema comes from the first file's header
-    * (one small driver-side header read); every file decodes through
-    * Avro schema resolution against it — fields resolve BY NAME, so a
-    * file with the same columns in a different order decodes
-    * correctly, and a file missing a field (or carrying an
-    * incompatible type) fails loud per Avro resolution rules. Files
-    * larger than `maxSplitBytes` (default: the session's
-    * `spark.sql.files.maxPartitionBytes`) are split on sync markers
-    * into independent tasks. */
+  /** Read every `*.avro` file under `path`. Files larger than
+    * `maxSplitBytes` (default: the session's
+    * `spark.sql.files.maxPartitionBytes`) split on sync markers; a set
+    * value is scoped to a child session that otherwise keeps `spark`'s
+    * settings, so neither `spark`'s conf nor its later queries see it. */
   def read(spark: SparkSession, path: String,
       maxSplitBytes: Long = -1L): DataFrame = {
-    val base = new Path(path)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = fs.listStatus(base).toSeq
-      .filter(_.getPath.getName.endsWith(".avro"))
-      .sortBy(_.getPath.getName)
-    require(files.nonEmpty, s"no .avro container files under $path")
-    val headerSchema = {
-      val in = fs.open(files.head.getPath)
-      try {
-        val ds = new DataFileStream[GenericRecord](in,
-          new GenericDatumReader[GenericRecord]())
-        val s = ds.getSchema
-        ds.close()
-        s
-      } finally in.close()
-    }
-    val expectedJson = headerSchema.toString
-    val schema = sparkSchemaFor(headerSchema)
-    val fieldTypes = schema.fields.map(_.dataType)
-    val n = schema.length
-    val splitBytes =
-      if (maxSplitBytes > 0) maxSplitBytes
-      else org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
-    // (file, rangeStart, rangeEnd) splits — the task reads the blocks
-    // whose FIRST sync marker falls inside its range (avro's standard
-    // split contract), so every block is read exactly once.
-    val splits: Seq[(String, Long, Long)] = files.flatMap { st =>
-      val len = st.getLen
-      val p = st.getPath.toString
-      (0L until len by splitBytes).map(s => (p, s, math.min(s + splitBytes, len)))
-    }
-    val rows = spark.sparkContext
-      .parallelize(splits, splits.size)
-      .flatMap { case (file, start, end) =>
-        val conf = new org.apache.hadoop.conf.Configuration()
-        val expected = new Schema.Parser().parse(expectedJson)
-        val in = new org.apache.avro.mapred.FsInput(new Path(file), conf)
-        // DataFileReader sets the file's own header schema as the
-        // WRITER schema; `expected` drives by-name resolution.
-        val reader = new DataFileReader[GenericRecord](in,
-          new GenericDatumReader[GenericRecord](null, expected))
-        new Iterator[Row] {
-          private var closed = false
-          reader.sync(start) // first sync at/after the range start
-          private def step(): Boolean =
-            if (closed) false
-            else if (reader.hasNext && !reader.pastSync(end)) true
-            else { reader.close(); closed = true; false }
-          override def hasNext: Boolean = step()
-          override def next(): Row = {
-            val rec = reader.next()
-            val vals = new Array[Any](n)
-            var i = 0
-            while (i < n) {
-              vals(i) = toExternal(rec.get(i), fieldTypes(i))
-              i += 1
-            }
-            Row.fromSeq(vals.toSeq)
-          }
-        }
+    val session =
+      if (maxSplitBytes <= 0) spark
+      else {
+        val iso = PlanBridge.childSession(spark)
+        iso.conf.set("spark.sql.files.maxPartitionBytes", maxSplitBytes)
+        iso
       }
-    spark.createDataFrame(rows, schema)
+    session.read.format(Format).load(path)
   }
 }

@@ -275,7 +275,7 @@ object ZstdSeekable {
       .parallelize(groups, math.max(groups.size, 1))
       .flatMap { group =>
         // executor-side default Hadoop conf (Configuration is not
-        // serializable — the AvroContainerFiles precedent)
+        // serializable; the default resolves local and HDFS schemes)
         val fp = new Path(path)
         val gfs = fp.getFileSystem(
           new org.apache.hadoop.conf.Configuration())

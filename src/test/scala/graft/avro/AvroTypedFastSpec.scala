@@ -266,6 +266,83 @@ class AvroTypedFastSpec extends SparkFunSuite {
       t.getMessage.contains("union")))
   }
 
+  test("logical types decode as from_avro decodes them: decimal bytes, " +
+      "date and timestamp-micros") {
+    val schemaJson =
+      """{"type":"record","name":"L","fields":[
+        |{"name":"price","type":{"type":"bytes","logicalType":"decimal",
+        |  "precision":9,"scale":2}},
+        |{"name":"day","type":{"type":"int","logicalType":"date"}},
+        |{"name":"at","type":{"type":"long","logicalType":"timestamp-micros"}}
+        |]}""".stripMargin.replace("\n", "")
+    val schema = new Schema.Parser().parse(schemaJson)
+    val rec = new GenericData.Record(schema)
+    rec.put("price", ByteBuffer.wrap(
+      java.math.BigInteger.valueOf(-12345L).toByteArray)) // -123.45
+    rec.put("day", -154498) // 1547-01-01, before the Gregorian switch
+    rec.put("at", 1700000000123456L)
+    val out = new ByteArrayOutputStream()
+    val enc = EncoderFactory.get().binaryEncoder(out, null)
+    new GenericDatumWriter[AnyRef](schema).write(rec, enc)
+    enc.flush()
+    val decoded = valueDf(Seq(WireFormat.frame(5, out.toByteArray)))
+      .select(AvroTransform.fromAvroFixed(schemaJson)(col("value")).as("e"))
+      .select("e.*")
+    import org.apache.spark.sql.types._
+    assert(decoded.schema.map(_.dataType) ==
+      Seq(DecimalType(9, 2), DateType, TimestampType))
+    val row = decoded.selectExpr("CAST(price AS STRING)",
+      "CAST(unix_date(day) AS BIGINT)", "unix_micros(at)").head
+    assert(row.getString(0) == "-123.45")
+    assert(row.getLong(1) == -154498L && row.getLong(2) == 1700000000123456L)
+  }
+
+  test("a root [\"null\", record] schema decodes to the record's struct") {
+    val schemaJson = "[\"null\"," + FullNameSchemaJson + "]"
+    val union = new Schema.Parser().parse(schemaJson)
+    val rec = new GenericData.Record(union.getTypes.get(1))
+    rec.put("first", "u")
+    rec.put("last", "v")
+    val out = new ByteArrayOutputStream()
+    val enc = EncoderFactory.get().binaryEncoder(out, null)
+    new GenericDatumWriter[AnyRef](union).write(rec, enc)
+    new GenericDatumWriter[AnyRef](union).write(null, enc)
+    enc.flush()
+    val bytes = out.toByteArray // record (branch 1), then null (branch 0)
+    val rows = valueDf(Seq(WireFormat.frame(2, bytes.dropRight(1)),
+        WireFormat.frame(2, bytes.takeRight(1))))
+      .select(AvroTransform.fromAvroFixed(schemaJson)(col("value")).as("e"))
+      .select("e.first", "e.last").collect()
+    assert(rows(0).getString(0) == "u" && rows(0).getString(1) == "v")
+    assert(rows(1).isNullAt(0) && rows(1).isNullAt(1))
+  }
+
+  test("typed encode matches struct fields by POSITION, not by name") {
+    val s = spark
+    import s.implicits._
+    val body = Seq(("a", "b")).toDF("x", "y")
+      .select(AvroTransform.toAvroFixed(FullNameSchemaJson)(
+        struct(col("x"), col("y"))).as("body"))
+      .head.getAs[Array[Byte]](0)
+    assert(body.sameElements(encodeFullName("a", "b")))
+  }
+
+  test("typed encode rejects a fixed value of the wrong size instead of " +
+      "truncating it") {
+    val schemaJson = """{"type":"record","name":"F","fields":[
+      |{"name":"h","type":{"type":"fixed","name":"H2","size":2}}]}"""
+      .stripMargin.replace("\n", "")
+    val s = spark
+    import s.implicits._
+    def enc(bytes: Array[Byte]) = Seq(Tuple1(bytes)).toDF("h")
+      .select(AvroTransform.toAvroFixed(schemaJson)(struct(col("h"))))
+      .head.getAs[Array[Byte]](0)
+    assert(enc(Array[Byte](7, 8)).sameElements(Array[Byte](7, 8)))
+    val e = intercept[Throwable](enc(Array[Byte](1, 2, 3)))
+    assert(chain(e).exists(t => t.getMessage != null &&
+      t.getMessage.contains("bytes")), chain(e).map(_.getMessage))
+  }
+
   private def chain(t: Throwable): Seq[Throwable] =
     Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(10).toSeq
 }

@@ -3955,7 +3955,9 @@ class SourceRoundTripSpec extends SparkFunSuite {
         |    AS dec,
         |  timestamp_micros(id * 1000003) AS ts,
         |  cast(timestamp_micros(id * 999983) as timestamp_ntz) AS tsn,
-        |  date_add(date'1970-01-01', cast(id % 1000 as int)) AS d,
+        |  CASE WHEN id = 9 THEN date'1400-03-01'
+        |       ELSE date_add(date'1970-01-01', cast(id % 1000 as int))
+        |  END AS d,
         |  CASE WHEN id = 3 THEN NULL
         |       ELSE array(id, id * 2, NULL) END AS arr
         |FROM range(0, 10) t(id)""".stripMargin)
@@ -3992,6 +3994,28 @@ class SourceRoundTripSpec extends SparkFunSuite {
       s"expected >1 split, got ${back.rdd.getNumPartitions}")
     val ids = back.select("id").as[Long].collect().sorted.toSeq
     assert(ids == (0L until n.toLong), "every row exactly once")
+  }
+
+  test("Avro container files: a split-size read leaves the session's " +
+      "maxPartitionBytes as it was and keeps its runtime settings") {
+    val s = spark
+    val path = s"${graft.TestPaths.root}/graft_avroconf_" +
+      ProcessHandle.current().pid()
+    graft.sources.AvroContainerFiles.write(
+      s.range(0, 2000).selectExpr("id", "repeat('y', 64) AS pad")
+        .repartition(1), path, syncInterval = 2048)
+    val key = "spark.sql.files.maxPartitionBytes"
+    val before = s.conf.get(key)
+    val runtime = "spark.sql.files.ignoreCorruptFiles"
+    s.conf.set(runtime, "true")
+    val back = try graft.sources.AvroContainerFiles.read(s, path,
+      maxSplitBytes = 8 * 1024) finally s.conf.unset(runtime)
+    assert(back.sparkSession.conf.get(runtime) == "true")
+    assert(back.rdd.getNumPartitions > 1)
+    assert(back.count() == 2000L)
+    assert(s.conf.get(key) == before)
+    assert(graft.sources.AvroContainerFiles.read(s, path)
+      .rdd.getNumPartitions == 1, "the default read sees the default size")
   }
 
   test("Avro container files: deflate and snappy block codecs " +
