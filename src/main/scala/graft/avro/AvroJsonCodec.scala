@@ -33,7 +33,11 @@ final class AvroDecoderState(provider: SchemaProvider, capacity: Int) {
     * transcoder and the value envelope's
     * `{"originSchema":"<escaped>","originMessage":"` prefix. */
   final case class CachedSchema(schema: Schema, json: String,
-      transcoder: AvroTranscoder, envelopePrefix: Array[Byte])
+      transcoder: AvroTranscoder, envelopePrefix: Array[Byte]) {
+    /** `json` as the Catalyst string every decoded row carries. */
+    val jsonUtf8: org.apache.spark.unsafe.types.UTF8String =
+      org.apache.spark.unsafe.types.UTF8String.fromString(json)
+  }
 
   // Canonical LRU (capacity semantics parity with the reference's
   // SynchronizedCache(LRUCache), `AvroTransform.java:108`) + a lock-free

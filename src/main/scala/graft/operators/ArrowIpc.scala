@@ -1,538 +1,371 @@
 package graft.operators
 
-/** Arrow IPC reading without the Arrow library — rounds 13/14.
+import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.charset.StandardCharsets.{US_ASCII, UTF_8}
+
+import scala.collection.immutable.ArraySeq
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+
+import org.apache.arrow.compression.CommonsCompressionFactory
+import org.apache.arrow.flatbuf.{Message, MessageHeader}
+import org.apache.arrow.memory.{ArrowBuf, BufferAllocator, RootAllocator}
+import org.apache.arrow.vector.{BaseIntVector, BigIntVector, BitVector,
+  FieldVector, Float4Vector, Float8Vector, IntVector, SmallIntVector,
+  TinyIntVector, ValueVector, VarCharVector}
+import org.apache.arrow.vector.complex.{ListVector, MapVector,
+  NonNullableStructVector}
+import org.apache.arrow.vector.compression.{AbstractCompressionCodec,
+  CompressionCodec, NoCompressionCodec}
+import org.apache.arrow.vector.compression.CompressionUtil.CodecType
+import org.apache.arrow.vector.dictionary.DictionaryProvider
+import org.apache.arrow.vector.ipc.{ArrowReader, ArrowStreamReader,
+  ReadChannel}
+import org.apache.arrow.vector.ipc.message.{MessageChannelReader,
+  MessageResult}
+import org.apache.arrow.vector.util.ByteArrayReadableSeekableByteChannel
+import org.apache.arrow.vector.validate.ValidateVectorBufferVisitor
+
+/** Arrow IPC reading on Arrow Java (`arrow-vector` 18.3, which Spark
+  * ships).
   *
-  * Arrow IPC (`.arrow` / `.arrows` / Feather v2) is the interchange
-  * format datasets increasingly ship in; executors here read the
-  * ENCAPSULATED MESSAGE stream directly: per message a 0xFFFFFFFF
-  * continuation marker, a little-endian flatbuffer length, the
-  * flatbuffer metadata, and the 8-aligned body. A stream is one
-  * Schema message then DictionaryBatch/RecordBatch messages until the
-  * end-of-stream marker; the FILE format wraps the same stream in
-  * `ARROW1\0\0` magic (the trailing footer is an index for seeking —
-  * sequential reads don't need it and this walk skips it).
+  * [[ArrowStreamReader]] reads the stream: one Schema message, then
+  * dictionary and record batches up to the end-of-stream marker. An
+  * Arrow FILE (`ARROW1` magic) is that same stream after the 8-byte
+  * magic, then a footer that indexes it for seeking; a sequential read
+  * does not need the footer and skips it. The library replays
+  * dictionary batches (replacements and deltas) and decompresses the
+  * bodies ([[BodyCodecs]]); this object maps the loaded vectors to
+  * Scala values: signed int 8/16/32/64 → Long, float64 → Double,
+  * float32 → Double (exact binary widening), utf8 → String, bool →
+  * Boolean, list → Seq, struct → Seq of member values (null rows masked
+  * over the children), map → the spec's list<struct<key,value>> layout,
+  * and dictionary-encoded leaf columns (signed int indices, at any
+  * nesting depth) → their values. Anything else — unions, unsigned ints,
+  * half floats, binary, temporal and decimal types — is DECLINED
+  * honestly (empty), never misread, as is anything malformed.
   *
-  * Includes a minimal FLATBUFFERS navigator (soffset→vtable, field
-  * slots, uoffset tables/vectors/strings, inline structs) and the
-  * relevant slices of the public Arrow .fbs schemas: Message
-  * (version/header-union/bodyLength), Schema (fields), Field
-  * (name/nullable/type-union/dictionary), DictionaryEncoding
-  * (id/indexType), Int (bitWidth/signed), FloatingPoint (precision),
-  * RecordBatch (length / FieldNode structs / Buffer structs /
-  * BodyCompression), DictionaryBatch (id/data/isDelta).
-  *
-  * Column types supported: Int 8/16/32/64 signed (→ Long), Float64
-  * (→ Double), Float32 (→ Double, exact binary widening), Utf8
-  * (→ String), Bool (→ Boolean), LIST of any supported type (→ Seq;
-  * `list<float32>` is the layout embedding tables ship in), and
-  * STRUCT of supported types (→ Seq of member values, null rows
-  * masked over the children) — validity bitmaps honoured
-  * (LSB-numbered), nested fields consumed in the spec's depth-first
-  * node/buffer order. DICTIONARY-ENCODED leaf columns (at any
-  * nesting depth) decode through replayed DictionaryBatch messages
-  * (replacement and delta batches both honoured; signed int
-  * 8/16/32/64 indices — pyarrow's default encoding for categorical
-  * strings). BODY COMPRESSION (per-buffer LZ4-frame or zstd, the two
-  * codecs the Arrow spec defines) decompresses through
-  * [[Lz4Snappy]] and [[ZstdDecode]] (libzstd), each buffer under the
-  * 64 MiB [[CodecCap]].
-  * Anything else — unions, maps, unsigned ints, half floats — is
-  * DECLINED honestly (empty), never misread.
+  * Bounds on hostile input: each decode allocates from its own
+  * allocator, limited to the blob's size plus 4 × [[CodecCap.MaxBytes]];
+  * a compressed buffer whose length prefix declares more than
+  * [[CodecCap.MaxBytes]] is declined before it is decompressed; a
+  * message whose metadata or body would run past the blob is declined
+  * before Arrow allocates for it (Arrow sizes a heap buffer from the
+  * declared metadata length).
   *
   * Validation: GOLDEN VECTORS from real pyarrow
   * (`tools/gen_arrow_vectors.py` → committed `.arrows`/`.arrow`
   * resources): multi-batch streams, null runs, empty batches, both
   * container formats, dictionary columns (including delta growth),
-  * LZ4- and zstd-compressed bodies — decoder vs reference encoder.
+  * LZ4- and zstd-compressed bodies, lists, structs and maps.
   */
 object ArrowIpc {
 
   private val MaxRows = 1 << 24
+  private val MaxDepth = 8
+  /** Arrow's stream reader recurses once per dictionary batch that
+    * precedes a record batch. */
+  private val MaxDictionaryRun = 1 << 10
 
   /** One decoded cell value: null | Long | Double | String |
-    * Boolean. A decoded batch is rows × columns. */
+    * Boolean | Seq. A decoded batch is rows × columns. */
   final case class Col(name: String, kind: String,
     values: IndexedSeq[Any])
 
   /** One record batch: (batch_idx, nRows, columns). */
   final case class Batch(idx: Int, nRows: Long, cols: IndexedSeq[Col])
 
-  /** One schema field: value kind, plus dictionary encoding if any
-    * (`dictId` -1 when plain; `indexBits` the signed index width) and
-    * the child field for nested kinds (`list`). */
-  private final case class FieldSpec(name: String, kind: String,
-    dictId: Long, indexBits: Int,
-    children: IndexedSeq[FieldSpec] = Vector.empty)
-
-  // ---- flatbuffers navigation ---------------------------------------
-
-  private final class Fb(val b: Array[Byte]) {
-    def i16(p: Int): Int =
-      (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8)
-    def i32(p: Int): Int =
-      (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8) |
-        ((b(p + 2) & 0xff) << 16) | ((b(p + 3) & 0xff) << 24)
-    def i64(p: Int): Long = {
-      var v = 0L
-      var i = 0
-      while (i < 8) { v |= (b(p + i) & 0xffL) << (8 * i); i += 1 }
-      v
-    }
-    def ok(p: Int, n: Int): Boolean = p >= 0 && p + n <= b.length
-    /** Absolute position of field `slot` in the table at `t`;
-      * -1 if absent. */
-    def field(t: Int, slot: Int): Int = {
-      if (!ok(t, 4)) return -1
-      val vt = t - i32(t)
-      if (!ok(vt, 4)) return -1
-      val vtSize = i16(vt)
-      val fo = 4 + 2 * slot
-      if (fo + 2 > vtSize) return -1
-      val off = i16(vt + fo)
-      if (off == 0) -1 else t + off
-    }
-    def tableAt(p: Int): Int =
-      if (!ok(p, 4)) -1 else p + i32(p)
-    def byteField(t: Int, slot: Int, dflt: Int): Int = {
-      val p = field(t, slot)
-      if (p < 0 || !ok(p, 1)) dflt else b(p) & 0xff
-    }
-    def intField(t: Int, slot: Int, dflt: Int): Int = {
-      val p = field(t, slot)
-      if (p < 0 || !ok(p, 4)) dflt else i32(p)
-    }
-    def shortField(t: Int, slot: Int, dflt: Int): Int = {
-      val p = field(t, slot)
-      if (p < 0 || !ok(p, 2)) dflt else i16(p)
-    }
-    def longField(t: Int, slot: Int, dflt: Long): Long = {
-      val p = field(t, slot)
-      if (p < 0 || !ok(p, 8)) dflt else i64(p)
-    }
-    def tableField(t: Int, slot: Int): Int = {
-      val p = field(t, slot)
-      if (p < 0) -1 else tableAt(p)
-    }
-    def stringField(t: Int, slot: Int): String = {
-      val p = tableField(t, slot)
-      if (p < 0 || !ok(p, 4)) return null
-      val len = i32(p)
-      if (len < 0 || !ok(p + 4, len)) null
-      else new String(b, p + 4, len, "UTF-8")
-    }
-    /** (length, elements start) of a vector field; (-1, -1) absent. */
-    def vectorField(t: Int, slot: Int): (Int, Int) = {
-      val p = tableField(t, slot)
-      if (p < 0 || !ok(p, 4)) return (-1, -1)
-      val len = i32(p)
-      if (len < 0) (-1, -1) else (len, p + 4)
-    }
-  }
-
-  /** One materialized batch buffer: either a window into the message
-    * body or a freshly decompressed array. */
-  private final class BufView(val b: Array[Byte], val off: Int,
-      val len: Int) {
-    def i16(p: Int): Int =
-      (b(off + p) & 0xff) | ((b(off + p + 1) & 0xff) << 8)
-    def i32(p: Int): Int =
-      (b(off + p) & 0xff) | ((b(off + p + 1) & 0xff) << 8) |
-        ((b(off + p + 2) & 0xff) << 16) | ((b(off + p + 3) & 0xff) << 24)
-    def i64(p: Int): Long = {
-      var v = 0L
-      var i = 0
-      while (i < 8) { v |= (b(off + p + i) & 0xffL) << (8 * i); i += 1 }
-      v
-    }
-    def byteAt(p: Int): Byte = b(off + p)
-    def bit(i: Long): Boolean =
-      (b(off + (i >> 3).toInt) & (1 << (i & 7).toInt)) != 0
-  }
-
-  // ---- the walk ------------------------------------------------------
-
   /** All record batches of an Arrow IPC stream or file blob; empty on
     * anything malformed, unsupported, or inconsistent. */
   def batchesJvm(blob: Array[Byte]): IndexedSeq[Batch] = {
     if (blob == null || blob.length < 8) return Vector.empty
-    // file format: ARROW1\0\0 then the stream
-    val start =
-      if (blob(0) == 'A' && blob(1) == 'R' && blob(2) == 'R' &&
-        blob(3) == 'O' && blob(4) == 'W' && blob(5) == '1') 8
-      else 0
-    val fbAll = new Fb(blob)
-    var p = start
-    var schema: IndexedSeq[FieldSpec] = null
-    val dicts = scala.collection.mutable.Map.empty[Long, IndexedSeq[Any]]
-    val out = Vector.newBuilder[Batch]
-    var batchIdx = 0
-    var done = false
-    while (!done) {
-      if (p + 8 > blob.length) return if (start == 8) out.result()
-      else Vector.empty // stream must hit the EOS marker
-      var metaLen = fbAll.i32(p)
-      if (metaLen == -1) { // continuation marker (format v>=0.15)
-        metaLen = fbAll.i32(p + 4)
-        p += 8
-      } else p += 4 // legacy framing
-      if (metaLen == 0) { done = true }
-      else {
-        // long arithmetic: a hostile metaLen near Int.MaxValue wraps
-        // p + metaLen negative, sails past an int check, and OOMs in
-        // copyOfRange (2 GB allocation)
-        if (metaLen < 0 || p.toLong + metaLen > blob.length)
-          return Vector.empty
-        val msg = new Fb(java.util.Arrays.copyOfRange(blob, p,
-          p + metaLen))
-        val root = msg.tableAt(0)
-        val headerType = msg.byteField(root, 1, 0)
-        val header = msg.tableField(root, 2)
-        val bodyLen = msg.longField(root, 3, 0L)
-        val bodyStart = p + metaLen
-        if (bodyLen < 0 || bodyStart + bodyLen > blob.length)
-          return Vector.empty
-        headerType match {
-          case 1 => // Schema
-            if (schema != null) return Vector.empty
-            schema = parseSchema(msg, header)
-            if (schema == null) return Vector.empty
-          case 2 => // DictionaryBatch
-            if (schema == null) return Vector.empty
-            if (!applyDictBatch(msg, header, blob, bodyStart.toInt,
-              schema, dicts)) return Vector.empty
-          case 3 => // RecordBatch
-            if (schema == null) return Vector.empty
-            val batch = parseBatch(msg, header, blob, bodyStart.toInt,
-              schema, dicts)
-            if (batch == null) return Vector.empty
-            out += Batch(batchIdx, batch._1, batch._2)
-            batchIdx += 1
-          case _ => return Vector.empty
-        }
-        p = bodyStart + bodyLen.toInt
-      }
+    val start = if (new String(blob, 0, 6, US_ASCII) == "ARROW1") 8 else 0
+    // a root of its own: children of one shared root register in a
+    // synchronized map that concurrent decodes contend on
+    val alloc = new RootAllocator(blob.length + 4L * CodecCap.MaxBytes)
+    val held = new Held
+    try {
+      val reader = new ArrowStreamReader(
+        new BoundedMessages(blob, start, alloc, held), alloc,
+        new CappedCodecs(held))
+      try read(reader) finally reader.close()
+    } catch {
+      // a cyclic flatbuffer sends Arrow's recursive field conversion
+      // into unbounded recursion
+      case NonFatal(_) | _: StackOverflowError => Vector.empty
+    } finally {
+      held.release()
+      alloc.close()
     }
-    if (schema == null) Vector.empty else out.result()
   }
 
-  /** Field list → specs with kind ∈ long/double/float32/string/bool/
-    * list and the dictionary encoding when present; null on
-    * unsupported. */
-  private def parseSchema(msg: Fb,
-      schemaT: Int): IndexedSeq[FieldSpec] = {
-    if (schemaT < 0) return null
-    val (n, elems) = msg.vectorField(schemaT, 1) // fields
-    if (n < 0) return null
-    if (elems < 0 || elems + 4L * n > msg.b.length) return null
-    val out = Vector.newBuilder[FieldSpec]
-    var i = 0
-    while (i < n) {
-      val spec = parseField(msg, msg.tableAt(elems + 4 * i), 0)
-      if (spec == null) return null
-      out += spec
-      i += 1
+  private def read(reader: ArrowReader): IndexedSeq[Batch] = {
+    val root = reader.getVectorSchemaRoot
+    val out = Vector.newBuilder[Batch]
+    var idx = 0
+    while (reader.loadNextBatch()) {
+      require(root.getRowCount <= MaxRows, "too many rows")
+      root.getFieldVectors.forEach(validate)
+      val cols = root.getFieldVectors.asScala.toVector.map { v =>
+        val (kind, values) = convert(v, reader, 0)
+        Col(v.getName, kind, values)
+      }
+      out += Batch(idx, root.getRowCount, cols)
+      idx += 1
     }
     out.result()
   }
 
-  /** One Field table → spec, recursing into `children` (slot 5) for
-    * list types; null on unsupported. */
-  private def parseField(msg: Fb, f: Int, depth: Int): FieldSpec = {
-    if (f < 0 || depth > 8) return null
-    val name = msg.stringField(f, 0)
-    if (name == null) return null
-    val typeType = msg.byteField(f, 2, 0)
-    val typeT = msg.tableField(f, 3)
-    var children: IndexedSeq[FieldSpec] = Vector.empty
-    val kind = typeType match {
-      case 2 => // Int
-        val bits = msg.intField(typeT, 0, 0)
-        val signed = msg.byteField(typeT, 1, 0) != 0
-        if (!signed || (bits != 8 && bits != 16 && bits != 32 &&
-          bits != 64)) return null
-        s"int$bits"
-      case 3 => // FloatingPoint (precision is a SHORT: 1=SINGLE 2=DOUBLE)
-        msg.shortField(typeT, 0, 0) match {
-          case 1 => "float32" // exact-widened to Double on read
-          case 2 => "double"
-          case _ => return null // HALF unsupported
-        }
-      case 5 => "string" // Utf8
-      case 6 => "bool"
-      case 12 => // List — exactly one child field (the element)
-        val (cn, celems) = msg.vectorField(f, 5)
-        if (cn != 1 || celems < 0 ||
-          celems + 4L > msg.b.length) return null
-        val child = parseField(msg, msg.tableAt(celems), depth + 1)
-        if (child == null) return null
-        children = Vector(child)
-        "list"
-      case 17 => // Map (round 15) — physically list<struct<key,value>>:
-        // same offsets buffer + child struct as List, so the cursor
-        // walk reads it unchanged and rows surface as entry structs
-        // (the layout the spec itself defines Map as). The entries
-        // struct must have exactly two children.
-        val (cn, celems) = msg.vectorField(f, 5)
-        if (cn != 1 || celems < 0 ||
-          celems + 4L > msg.b.length) return null
-        val entries = parseField(msg, msg.tableAt(celems), depth + 1)
-        if (entries == null || entries.kind != "struct" ||
-          entries.children.size != 2) return null
-        children = Vector(entries)
-        "list"
-      case 13 => // Struct — one child field per member
-        val (cn, celems) = msg.vectorField(f, 5)
-        if (cn < 1 || celems < 0 ||
-          celems + 4L * cn > msg.b.length) return null
-        val cs = Vector.newBuilder[FieldSpec]
-        var ci = 0
-        while (ci < cn) {
-          val child = parseField(msg, msg.tableAt(celems + 4 * ci),
-            depth + 1)
-          if (child == null) return null
-          cs += child
-          ci += 1
-        }
-        children = cs.result()
-        "struct"
-      case _ => return null
+  /** Arrow's buffer checks: each buffer as large as the vector's length
+    * needs. [[physical]] checks the offsets it reads. (Arrow's data
+    * visitor would check them too, and validate the UTF-8 of every
+    * string, which costs a sixth of a small stream's decode; a string
+    * is decoded with replacement characters instead.) */
+  private def validate(v: ValueVector): Unit =
+    v.accept(new ValidateVectorBufferVisitor, null)
+
+  /** (kind, values) of one loaded vector; throws on a type that is not
+    * mapped. */
+  private def convert(v: FieldVector, dicts: DictionaryProvider,
+      depth: Int): (String, IndexedSeq[Any]) = {
+    // only int vectors carry dictionary indices (and a nested vector
+    // builds its field anew on every call)
+    val enc = v match {
+      case _: BaseIntVector => v.getField.getDictionary
+      case _ => null
     }
-    // DictionaryEncoding (slot 4): id + index Int type (the data
-    // buffers then carry indices of that width; default int32) —
-    // leaf kinds only
-    var dictId = -1L
-    var indexBits = 32
-    val dt = msg.tableField(f, 4)
-    if (msg.field(f, 4) >= 0) {
-      if (dt < 0 || kind == "list" || kind == "struct") return null
-      dictId = msg.longField(dt, 0, 0L)
-      val it = msg.tableField(dt, 1)
-      if (it >= 0) {
-        val bits = msg.intField(it, 0, 32)
-        val signed = msg.byteField(it, 1, 0) != 0
-        if (!signed || (bits != 8 && bits != 16 && bits != 32 &&
-          bits != 64)) return null
-        indexBits = bits
-      }
-      if (dictId < 0) return null
+    if (enc == null) physical(v, dicts, depth)
+    else {
+      val dict = dicts.lookup(enc.getId)
+      require(dict != null, s"no dictionary ${enc.getId}")
+      validate(dict.getVector)
+      // the dictionary's values are converted once and shared by every
+      // row that indexes them
+      val (kind, values) = convert(dict.getVector, dicts, depth)
+      require(!kind.contains('<'), "dictionary of nested values")
+      // the indices are a signed int vector (unsigned ones are not
+      // mapped), so they read as longs
+      val (_, indices) = physical(v, dicts, depth)
+      (kind, indices.map {
+        case null => null
+        case k: Long =>
+          require(k >= 0 && k < values.size, "dictionary index out of range")
+          values(k.toInt)
+      })
     }
-    FieldSpec(name, kind, dictId, indexBits, children)
   }
 
-  /** Replay one DictionaryBatch into the id→values map: its payload is
-    * a 1-column RecordBatch of the VALUE type; `isDelta` appends,
-    * otherwise the dictionary is replaced (both legal in streams). */
-  private def applyDictBatch(msg: Fb, dbT: Int, blob: Array[Byte],
-      body: Int, schema: IndexedSeq[FieldSpec],
-      dicts: scala.collection.mutable.Map[Long, IndexedSeq[Any]])
-      : Boolean = {
-    if (dbT < 0) return false
-    val id = msg.longField(dbT, 0, 0L)
-    val data = msg.tableField(dbT, 1)
-    val isDelta = msg.byteField(dbT, 2, 0) != 0
-    // the value kind comes from the field(s) encoded against this id
-    // (dictionary-encoded fields may sit at any nesting depth)
-    def findKind(ss: IndexedSeq[FieldSpec]): Option[String] =
-      ss.collectFirst { case s if s.dictId == id => s.kind }
-        .orElse(ss.flatMap(s => findKind(s.children)).headOption)
-    val kind = findKind(schema).orNull
-    if (kind == null) return false
-    val synthetic = Vector(FieldSpec("values", kind, -1L, 32))
-    val parsed = parseBatch(msg, data, blob, body, synthetic, dicts)
-    if (parsed == null) return false
-    val values = parsed._2.head.values
-    dicts(id) =
-      if (isDelta) dicts.getOrElse(id, Vector.empty) ++ values
-      else values
-    true
+  /** [[convert]] of `v`'s own layout, its dictionary encoding ignored.
+    * Values are read from heap copies of the vector's buffers, which
+    * [[validate]] has sized: Arrow's per-value getters check the
+    * buffer's reference count and bounds on every call. */
+  private def physical(v: FieldVector, dicts: DictionaryProvider,
+      depth: Int): (String, IndexedSeq[Any]) = {
+    val n = v.getValueCount
+    require(depth <= MaxDepth && n <= MaxRows, "too deep or too long")
+    val valid =
+      if (v.getNullCount == 0) null else heap(v.getValidityBuffer, (n + 7) / 8)
+    def cells(f: Int => Any): IndexedSeq[Any] =
+      ArraySeq.unsafeWrapArray(Array.tabulate[Any](n)(i =>
+        if (valid != null && !bit(valid, i)) null else f(i)))
+    /** A fixed-width vector: `get(data, byte offset)` reads one value. */
+    def fixed(kind: String, width: Int)(get: (ByteBuffer, Int) => Any) = {
+      val d = heap(v.getDataBuffer, width.toLong * n)
+      (kind, cells(i => get(d, width * i)))
+    }
+    /** The n + 1 offsets of a string or list vector, checked to run in
+      * order from 0 or more up to at most `limit`. */
+    def offsets(limit: Long): ByteBuffer = {
+      val o = heap(v.getOffsetBuffer, if (n == 0) 0 else 4L * (n + 1))
+      require(n == 0 || o.getInt(0) >= 0 && o.getInt(4 * n) <= limit &&
+        (0 until n).forall(i => o.getInt(4 * i) <= o.getInt(4 * i + 4)),
+        "offsets out of order")
+      o
+    }
+    v match {
+      case _: TinyIntVector => fixed("long", 1)(_.get(_).toLong)
+      case _: SmallIntVector => fixed("long", 2)(_.getShort(_).toLong)
+      case _: IntVector => fixed("long", 4)(_.getInt(_).toLong)
+      case _: BigIntVector => fixed("long", 8)(_.getLong(_))
+      case _: Float4Vector => fixed("double", 4)(_.getFloat(_).toDouble)
+      case _: Float8Vector => fixed("double", 8)(_.getDouble(_))
+      case _: VarCharVector =>
+        val o = offsets(v.getDataBuffer.capacity)
+        val chars =
+          heap(v.getDataBuffer, if (n == 0) 0 else o.getInt(4 * n)).array
+        ("string", cells { i =>
+          val at = o.getInt(4 * i)
+          new String(chars, at, o.getInt(4 * i + 4) - at, UTF_8)
+        })
+      case _: BitVector =>
+        val d = heap(v.getDataBuffer, (n + 7) / 8)
+        ("bool", cells(bit(d, _)))
+      case x: ListVector => // a MapVector too: its entries are a struct
+        x match {
+          case m: MapVector => require(m.getDataVector match {
+            case s: NonNullableStructVector => s.size == 2
+            case _ => false
+          }, "map entries must be a key/value struct")
+          case _ => ()
+        }
+        val (kind, items) = convert(x.getDataVector, dicts, depth + 1)
+        val o = offsets(items.size)
+        (s"array<$kind>", cells(i => items.slice(o.getInt(4 * i),
+          o.getInt(4 * i + 4))))
+      case x: NonNullableStructVector if x.size > 0 =>
+        val kids = x.getChildrenFromFields.asScala.toVector.map { c =>
+          val (kind, values) = convert(c, dicts, depth + 1)
+          require(values.size == n, "struct member length")
+          (s"${c.getName}:$kind", values)
+        }
+        (kids.map(_._1).mkString("struct<", ",", ">"),
+          cells(i => kids.map(_._2(i))))
+      case _ => throw new IllegalArgumentException(
+        s"unmapped Arrow type ${v.getField.getType}")
+    }
   }
 
-  /** RecordBatch → (nRows, cols); null on violation. */
-  private def parseBatch(msg: Fb, rbT: Int, blob: Array[Byte],
-      body: Int, specs: IndexedSeq[FieldSpec],
-      dicts: scala.collection.mutable.Map[Long, IndexedSeq[Any]])
-      : (Long, IndexedSeq[Col]) = {
-    if (rbT < 0) return null
-    // flatbuffers OMITS default-valued fields: an absent length slot
-    // means 0 rows (the empty-batch shape), not corruption
-    val nRows = msg.longField(rbT, 0, 0L)
-    if (nRows < 0 || nRows > MaxRows) return null
-    // BodyCompression (slot 3): codec 0 = LZ4_FRAME, 1 = ZSTD; method
-    // must be BUFFER (0). Each non-empty buffer is then framed as
-    // [int64 LE uncompressed length | -1 = stored raw][payload].
-    var codec = -1
-    if (msg.field(rbT, 3) >= 0) {
-      val ct = msg.tableField(rbT, 3)
-      if (ct < 0) return null
-      codec = msg.byteField(ct, 0, 0)
-      if (codec != 0 && codec != 1) return null
-      if (msg.byteField(ct, 1, 0) != 0) return null // method != BUFFER
-    }
-    val (nNodes, nodesAt) = msg.vectorField(rbT, 1)
-    val (nBufs, bufsAt) = msg.vectorField(rbT, 2)
-    // nested fields contribute their own nodes/buffers, so nNodes may
-    // exceed the top-level field count; the cursor walk checks the
-    // exact consumption at the end
-    if (nNodes < 0 || nBufs < 0) return null
-    // corrupt metadata can declare more inline structs than the
-    // flatbuffer holds — bound BOTH vectors before any i64 read
-    if (nodesAt < 0 || nodesAt + 16L * nNodes > msg.b.length ||
-      bufsAt < 0 || bufsAt + 16L * nBufs > msg.b.length) return null
-    def node(i: Int): (Long, Long) = // FieldNode: length, null_count
-      (msg.i64(nodesAt + 16 * i), msg.i64(nodesAt + 16 * i + 8))
-    def buf(i: Int): (Long, Long) = // Buffer: offset, length
-      (msg.i64(bufsAt + 16 * i), msg.i64(bufsAt + 16 * i + 8))
-    /** Materialize buffer `i`: a window into the body, or the
-      * decompressed bytes when the batch declares body compression.
-      * null = violation. */
-    def view(i: Int): BufView = {
-      val (o, l) = buf(i)
-      if (o < 0 || l < 0 || body + o + l > blob.length) return null
-      val at = (body + o).toInt
-      val n = l.toInt
-      if (codec < 0 || n == 0) return new BufView(blob, at, n)
-      if (n < 8) return null
-      var want = 0L
-      var k = 0
-      while (k < 8) { want |= (blob(at + k) & 0xffL) << (8 * k); k += 1 }
-      if (want == -1L) // stored uncompressed (incompressible buffer)
-        return new BufView(blob, at + 8, n - 8)
-      if (want < 0 || want > CodecCap.MaxBytes) return null
-      val comp = java.util.Arrays.copyOfRange(blob, at + 8, at + n)
-      val plain = (if (codec == 0) Lz4Snappy.lz4Decompress(comp)
-        else ZstdDecode.decompress(comp)).orNull
-      if (plain == null || plain.length != want) return null
-      new BufView(plain, 0, plain.length)
-    }
-    // Cursor-based recursive reader: FieldNodes and Buffers appear in
-    // DEPTH-FIRST field order (a list column contributes its own node
-    // + validity/offsets buffers, then its child's). A local control
-    // throwable turns nested violations into the method's null.
-    object ParseFail extends scala.util.control.ControlThrowable
-    def fail(): Nothing = throw ParseFail
-    var ni = 0
-    var bi = 0
-    def nextNode(): (Long, Long) = {
-      if (ni >= nNodes) fail()
-      val r = node(ni); ni += 1; r
-    }
-    def peekNodeLen(): Long =
-      if (ni >= nNodes) -1L else node(ni)._1
-    def nextView(): BufView = {
-      if (bi >= nBufs) fail()
-      val r = view(bi); bi += 1; r
-    }
-    def readCol(spec: FieldSpec, expectRows: Long): IndexedSeq[Any] = {
-      val (len, nullCount) = nextNode()
-      if (len != expectRows || len < 0 || len > MaxRows) fail()
-      val n = len.toInt
-      val encoded = spec.dictId >= 0
-      // dictionary-encoded columns physically carry indices (fixed
-      // width), whatever the logical value kind
-      val physKind = if (encoded) s"int${spec.indexBits}" else spec.kind
-      val v = nextView()
-      val hasValidity = nullCount > 0
-      if (hasValidity && (v == null || v.len * 8L < len)) fail()
-      @inline def isNull(i: Int): Boolean =
-        hasValidity && !v.bit(i)
-      val values: IndexedSeq[Any] = physKind match {
-        case "list" =>
-          val ov = nextView()
-          if (n > 0 && (ov == null || ov.len < 4L * (n + 1))) fail()
-          val child = readCol(spec.children.head, peekNodeLen())
-          if (n == 0) Vector.empty
-          else Vector.tabulate(n) { i =>
-            if (isNull(i)) null
-            else {
-              val s = ov.i32(4 * i)
-              val e = ov.i32(4 * (i + 1))
-              if (s < 0 || e < s || e > child.size) fail()
-              child.slice(s, e)
-            }
-          }
-        case "struct" =>
-          // validity buffer only, then each child column in order
-          // (children have their OWN validity — a null struct row may
-          // carry arbitrary child values, masked here)
-          val kids = spec.children.map(c => readCol(c, len))
-          Vector.tabulate(n) { i =>
-            if (isNull(i)) null else kids.map(_(i))
-          }
-        case "string" =>
-          val ov = nextView()
-          val dv = nextView()
-          if (n == 0) Vector.empty
-          else {
-            if (ov == null || dv == null || ov.len < 4L * (n + 1))
-              fail()
-            Vector.tabulate(n) { i =>
-              if (isNull(i)) null
-              else {
-                val s = ov.i32(4 * i)
-                val e = ov.i32(4 * (i + 1))
-                if (s < 0 || e < s || e > dv.len) fail()
-                new String(dv.b, dv.off + s, e - s, "UTF-8")
-              }
-            }
-          }
-        case "bool" =>
-          val dv = nextView()
-          if (dv == null || dv.len * 8L < len) fail()
-          Vector.tabulate(n)(i => if (isNull(i)) null else dv.bit(i))
-        case "double" =>
-          val dv = nextView()
-          if (dv == null || dv.len < 8L * len) fail()
-          Vector.tabulate(n)(i =>
-            if (isNull(i)) null
-            else java.lang.Double.longBitsToDouble(dv.i64(8 * i)))
-        case "float32" => // exact binary widening to Double
-          val dv = nextView()
-          if (dv == null || dv.len < 4L * len) fail()
-          Vector.tabulate(n)(i =>
-            if (isNull(i)) null
-            else java.lang.Float.intBitsToFloat(dv.i32(4 * i)).toDouble)
-        case ik => // int8/16/32/64 → Long
-          val w = ik.drop(3).toInt / 8
-          val dv = nextView()
-          if (dv == null || dv.len < w.toLong * len) fail()
-          Vector.tabulate(n) { i =>
-            if (isNull(i)) null
-            else w match {
-              case 1 => dv.byteAt(i).toLong
-              case 2 => dv.i16(2 * i).toShort.toLong
-              case 4 => dv.i32(4 * i).toLong
-              case 8 => dv.i64(8 * i)
-            }
-          }
+  /** The first `len` bytes of `buf`, copied to a little-endian heap
+    * buffer with one checked read. */
+  private def heap(buf: ArrowBuf, len: Long): ByteBuffer = {
+    val b = new Array[Byte](Math.toIntExact(len))
+    buf.getBytes(0, b)
+    ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN)
+  }
+
+  /** Bit `i` of an Arrow bitmap (least significant bit first). */
+  private def bit(bitmap: ByteBuffer, i: Int): Boolean =
+    (bitmap.get(i >> 3) >> (i & 7) & 1) != 0
+
+  /** Arrow's message reader from `blob` at `start`, behind three checks
+    * of each message made before Arrow allocates for it: the 8 bytes of
+    * a message prefix or end-of-stream marker remain (a stream must end
+    * with its marker), the metadata and body the message declares lie
+    * inside the blob, and it is not the [[MaxDictionaryRun]]+1-th
+    * dictionary batch in a row. */
+  private final class BoundedMessages(blob: Array[Byte], start: Int,
+      alloc: BufferAllocator, held: Held) extends MessageChannelReader(
+      new ReadChannel(
+        new ByteArrayReadableSeekableByteChannel(blob).position(start)),
+      alloc) {
+    private val le = ByteBuffer.wrap(blob).order(ByteOrder.LITTLE_ENDIAN)
+    private var dictionaryRun = 0
+
+    override def readNext(): MessageResult = {
+      val p = start + in.bytesRead()
+      require(p + 8 <= blob.length, "no end-of-stream marker")
+      // a continuation marker, then the length (pre-0.15 framing: the
+      // length alone)
+      val (at, len) =
+        if (le.getInt(p.toInt) == -1) (p + 8, le.getInt(p.toInt + 4))
+        else (p + 4, le.getInt(p.toInt))
+      if (len != 0) {
+        require(len > 0 && at + len <= blob.length, "metadata past the end")
+        val msg = Message.getRootAsMessage(
+          ByteBuffer.wrap(blob, at.toInt, len).slice())
+        require(msg.bodyLength >= 0 &&
+          at + len + msg.bodyLength <= blob.length, "body past the end")
+        dictionaryRun =
+          if (msg.headerType == MessageHeader.DictionaryBatch)
+            dictionaryRun + 1
+          else 0
+        require(dictionaryRun <= MaxDictionaryRun,
+          "too many dictionary batches in a row")
       }
-      if (!encoded) values
-      else dicts.get(spec.dictId) match {
-        case None => fail() // batch before its dictionary
-        case Some(dv) =>
-          values.map {
-            case null => null
-            case idx: Long =>
-              if (idx < 0 || idx >= dv.size) fail()
-              else dv(idx.toInt)
-            case _ => fail()
-          }
-      }
+      val r = super.readNext()
+      if (r != null) held(r.getBodyBuffer)
+      r
     }
-    def outKind(spec: FieldSpec): String = spec.kind match {
-      case k if k.startsWith("int") => "long"
-      case "float32" => "double"
-      case "list" => s"array<${outKind(spec.children.head)}>"
-      case "struct" => "struct<" + spec.children
-        .map(c => s"${c.name}:${outKind(c)}").mkString(",") + ">"
-      case k => k
+  }
+
+  /** The body codecs, for reading and writing: LZ4 frames through
+    * [[Lz4Body]], zstd through Arrow's libzstd codec. (Compression
+    * levels are not used.) */
+  private[graft] object BodyCodecs extends CompressionCodec.Factory {
+    def createCodec(t: CodecType): CompressionCodec = t match {
+      case CodecType.LZ4_FRAME => Lz4Body
+      case CodecType.NO_COMPRESSION => NoCompressionCodec.INSTANCE
+      case _ => CommonsCompressionFactory.INSTANCE.createCodec(t)
     }
-    try {
-      val cols = Vector.newBuilder[Col]
-      specs.foreach { spec =>
-        cols += Col(spec.name, outKind(spec), readCol(spec, nRows))
+    def createCodec(t: CodecType, level: Int): CompressionCodec =
+      createCodec(t)
+  }
+
+  /** LZ4-frame bodies on [[Lz4Snappy]]: frames of 64 KiB blocks, decoded
+    * under the cap. Arrow's own LZ4 codec writes 4 MiB blocks, for which
+    * the frame decoder allocates 8 MiB per buffer, and copies however
+    * much a frame expands to. */
+  private object Lz4Body extends AbstractCompressionCodec {
+    def getCodecType: CodecType = CodecType.LZ4_FRAME
+
+    private def bytes(buf: ArrowBuf, from: Int): Array[Byte] = {
+      val b = new Array[Byte]((buf.writerIndex - from).toInt)
+      buf.getBytes(from, b)
+      b
+    }
+
+    /** `b` after 8 bytes that [[compress]] fills with the length. */
+    private def prefixed(a: BufferAllocator, b: Array[Byte]): ArrowBuf = {
+      val out = a.buffer(8L + b.length)
+      out.setBytes(8, b)
+      out.writerIndex(8L + b.length)
+      out
+    }
+
+    protected def doCompress(a: BufferAllocator, plain: ArrowBuf): ArrowBuf =
+      prefixed(a, Lz4Snappy.lz4Compress(bytes(plain, 0)))
+
+    protected def doDecompress(a: BufferAllocator,
+        comp: ArrowBuf): ArrowBuf = {
+      val want = readUncompressedLength(comp)
+      val plain = Lz4Snappy.lz4Decompress(bytes(comp, 8))
+        .filter(_.length == want)
+        .getOrElse(throw new IllegalArgumentException("bad LZ4 body"))
+      val out = a.buffer(want)
+      out.setBytes(0, plain)
+      out.writerIndex(want)
+      out
+    }
+  }
+
+  /** [[BodyCodecs]] behind the [[CodecCap]]: a buffer whose 8-byte
+    * uncompressed-length prefix declares more than [[CodecCap.MaxBytes]]
+    * is declined before it is decompressed. */
+  private final class CappedCodecs(held: Held)
+      extends CompressionCodec.Factory {
+    def createCodec(t: CodecType): CompressionCodec =
+      capped(BodyCodecs.createCodec(t))
+    def createCodec(t: CodecType, level: Int): CompressionCodec =
+      createCodec(t)
+
+    private def capped(c: CompressionCodec): CompressionCodec =
+      new CompressionCodec {
+        def getCodecType: CodecType = c.getCodecType
+        def compress(a: BufferAllocator, buf: ArrowBuf): ArrowBuf =
+          c.compress(a, buf)
+        def decompress(a: BufferAllocator, buf: ArrowBuf): ArrowBuf = {
+          val want = if (buf.writerIndex < 8) 0L else buf.getLong(0)
+          require(want <= CodecCap.MaxBytes, s"buffer declares $want bytes")
+          held(c.decompress(a, buf))
+        }
       }
-      if (bi != nBufs || ni != nNodes) return null
-      (nRows, cols.result())
-    } catch { case ParseFail => null }
+  }
+
+  /** The message bodies and decompressed buffers of one decode. Arrow's
+    * reader drops some unreleased when it fails on malformed input: the
+    * body of a message it cannot deserialize, the decompressed buffers
+    * of a vector whose next buffer fails to decompress. After the reader
+    * is closed, which releases all it still uses, [[release]] frees
+    * what is left. */
+  private final class Held {
+    private val bufs = scala.collection.mutable.ArrayBuffer[ArrowBuf]()
+    def apply(b: ArrowBuf): ArrowBuf = {
+      if (b != null) bufs += b
+      b
+    }
+    def release(): Unit = bufs.foreach { b =>
+      val n = b.refCnt
+      if (n > 0) b.getReferenceManager.release(n)
+    }
   }
 }

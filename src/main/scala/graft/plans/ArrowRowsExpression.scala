@@ -12,9 +12,10 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.operators.ArrowIpc
 
 /** `arrow_rows(blob)` → one struct per DATA ROW of an Arrow IPC
-  * stream/file blob (batch_idx, row_idx, then the caller-declared
-  * columns — kinds `long`/`double`/`string`/`bool`, matched BY NAME
-  * against the stream's own schema). A blob whose schema doesn't
+  * stream/file blob, as [[ArrowIpc]] reads it (batch_idx, row_idx, then
+  * the caller-declared columns — kinds `long`/`double`/`string`/`bool`,
+  * `array<…>` and `struct<name:kind,…>`, matched BY NAME against the
+  * stream's own schema). A blob whose schema doesn't
   * carry every declared column at the declared kind yields an EMPTY
   * array (PERMISSIVE), as does anything malformed — the
   * [[ProtoDecodeStruct]] discipline with the array-explode shape of

@@ -97,7 +97,7 @@ case class AvroDecodeStruct(
       org.apache.spark.sql.catalyst.InternalRow(
         id,
         org.apache.spark.unsafe.types.UTF8String.fromBytes(json),
-        org.apache.spark.unsafe.types.UTF8String.fromString(cached.json))
+        cached.jsonUtf8)
     } catch {
       case t: Throwable if permissive && DecodeKernel.isDecodeFailure(t) =>
         state.swallowedErrors.increment()

@@ -1,5 +1,7 @@
 package graft.plans
 
+import java.util.concurrent.ConcurrentHashMap
+
 import scala.jdk.CollectionConverters._
 
 import org.apache.avro.Schema
@@ -150,37 +152,20 @@ object AvroDecodeFixed {
   * emits the Avro binary body through Spark's `AvroSerializer` (which
   * also rejects a FIXED value of the wrong size: the datum writer would
   * silently truncate it). Per-thread serializer + writer + encoder reuse
-  * (the reference allocates all three per record —
+  * for the JVM's life (the reference allocates all three per record —
   * `AvroTransform.java:241-246`); used by the framed-corpus fixture so the
   * encode side of round-trip queries is native, not a ScalaUDF. Null
   * input → null. */
 case class AvroEncodeFixed(child: Expression, schemaJson: String)
     extends UnaryExpression {
 
-  @transient private lazy val schema: Schema =
-    new Schema.Parser().parse(schemaJson)
-
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = true
 
-  private final class ThreadState {
-    val toAvro: Any => Any =
-      AvroBridge.serializer(child.dataType, schema, child.nullable)
-    val writer = new GenericDatumWriter[Any](schema)
-    val out = new java.io.ByteArrayOutputStream(128)
-    var encoder: BinaryEncoder = _
-  }
-  @transient private lazy val local: ThreadLocal[ThreadState] =
-    ThreadLocal.withInitial(() => new ThreadState)
+  @transient private lazy val encoders: ThreadLocal[AvroEncodeFixed.Encoder] =
+    AvroEncodeFixed.encoders(child.dataType, schemaJson, child.nullable)
 
-  override def nullSafeEval(input: Any): Any = {
-    val st = local.get()
-    st.out.reset()
-    st.encoder = EncoderFactory.get().binaryEncoder(st.out, st.encoder)
-    st.writer.write(st.toAvro(input), st.encoder)
-    st.encoder.flush()
-    st.out.toByteArray
-  }
+  override def nullSafeEval(input: Any): Any = encoders.get().encode(input)
 
   override protected def doGenCode(ctx: CodegenContext,
       ev: ExprCode): ExprCode = {
@@ -193,4 +178,47 @@ case class AvroEncodeFixed(child: Expression, schemaJson: String)
   override protected def withNewChildInternal(newChild: Expression)
       : AvroEncodeFixed = copy(child = newChild)
   override def prettyName: String = "graft_to_avro"
+}
+
+object AvroEncodeFixed {
+
+  /** Spark's `AvroSerializer` and an Avro writer over one reused output
+    * buffer; neither is thread-safe. */
+  private final class Encoder(dataType: DataType, schema: Schema,
+      nullable: Boolean) {
+    private val toAvro = AvroBridge.serializer(dataType, schema, nullable)
+    private val writer = new GenericDatumWriter[Any](schema)
+    private val out = new java.io.ByteArrayOutputStream(128)
+    private var encoder: BinaryEncoder = _
+
+    def encode(input: Any): Array[Byte] = {
+      out.reset()
+      encoder = EncoderFactory.get().binaryEncoder(out, encoder)
+      writer.write(toAvro(input), encoder)
+      encoder.flush()
+      out.toByteArray
+    }
+  }
+
+  /** One encoder per (input type, schema, nullability) and thread, kept
+    * for the JVM's life. An expression's own state would be rebuilt by
+    * every deserialized copy of it, once per task, and building Spark's
+    * serializer logs a WARN for each nullable input field that the
+    * schema declares non-null. */
+  private val byKey =
+    new ConcurrentHashMap[(DataType, String, Boolean), ThreadLocal[Encoder]]()
+
+  /** (schema JSON, thread id) of every encoder built, in build order. */
+  private[graft] val builds =
+    new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]()
+
+  private def encoders(dataType: DataType, schemaJson: String,
+      nullable: Boolean): ThreadLocal[Encoder] =
+    byKey.computeIfAbsent((dataType, schemaJson, nullable), _ => {
+      val schema = new Schema.Parser().parse(schemaJson)
+      ThreadLocal.withInitial { () =>
+        builds.add((schemaJson, Thread.currentThread().getId))
+        new Encoder(dataType, schema, nullable)
+      }
+    })
 }

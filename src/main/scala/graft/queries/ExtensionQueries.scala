@@ -5726,10 +5726,10 @@ object ExtensionQueries {
         .orderBy(col("path"))
     }),
 
-    // ARROW IPC ROWS (round 13) — the interchange format read without
-    // the Arrow library: flatbuffer Message/Schema/RecordBatch walk,
-    // validity bitmaps honoured; templates rotate a two-batch and a
-    // one-batch REAL pyarrow stream by doc
+    // ARROW IPC ROWS (round 13) — the interchange format read through
+    // Arrow Java's stream reader (which Spark ships), validity bitmaps
+    // honoured; templates rotate a two-batch and a one-batch REAL
+    // pyarrow stream by doc
     "source_arrow_rows" -> ((s, dir) => {
       val fixture = t(s, dir, "documents")
         .select(col("doc_id"), unhex(element_at(
@@ -5747,10 +5747,10 @@ object ExtensionQueries {
     }),
 
     // ARROW DICTIONARIES + BODY COMPRESSION (round 14) — pyarrow's
-    // default categorical layout: DictionaryBatch replay (delta +
-    // replacement), index→value resolution with validity over the
-    // indices, and per-buffer zstd / LZ4-frame decompression through
-    // ZstdDecode (libzstd) and the golden-pinned Lz4Snappy
+    // default categorical layout: the library replays DictionaryBatches
+    // (delta + replacement); indices resolve with validity over them;
+    // per-buffer zstd (Arrow's libzstd codec) and LZ4-frame (the
+    // golden-pinned Lz4Snappy) decompression, each under the 64 MiB cap
     "source_arrow_dict" -> ((s, dir) => {
       val fixture = t(s, dir, "documents")
         .select(col("doc_id"), unhex(element_at(
@@ -5767,9 +5767,9 @@ object ExtensionQueries {
     }),
 
     // ARROW LIST COLUMNS (round 14) — list<float32> embeddings +
-    // list<int64> tokens read straight off the IPC stream (nested
-    // node/buffer cursor walk, float32 exact-widened), reduced to
-    // closed-form scalars for the gate
+    // list<int64> tokens read straight off the IPC stream (Arrow's list
+    // vectors, float32 exact-widened), reduced to closed-form scalars
+    // for the gate
     "source_arrow_list" -> ((s, dir) => {
       val fixture = t(s, dir, "documents")
         .select(col("doc_id"), unhex(element_at(
@@ -6336,13 +6336,14 @@ object ExtensionQueries {
       // one file per bucket (writeBucketed aligns write tasks to
       // buckets), so the scan may report its sortBy order and the merge
       // join skips BOTH sorts — gated behind this conf since Spark 3.0.
-      // The flag is scoped to an ISOLATED child session (same
-      // SparkContext + shared catalog, own SQLConf): the physical plan
-      // is only built when the caller executes the returned DataFrame,
-      // so a set-then-restore on the shared session would either leak
-      // the legacy flag into every later query or silently lose the
+      // The flag is scoped to a child session (same SparkContext +
+      // shared catalog, own SQLConf that starts as a copy of the
+      // caller's, runtime settings included): the physical plan is only
+      // built when the caller executes the returned DataFrame, so a
+      // set-then-restore on the shared session would either leak the
+      // legacy flag into every later query or silently lose the
       // sort-free plan — the child session does neither.
-      val iso = s.newSession()
+      val iso = org.apache.spark.sql.graftbridge.PlanBridge.childSession(s)
       iso.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering",
         "true")
       iso.table(lt).hint("merge")
@@ -6644,10 +6645,10 @@ object ExtensionQueries {
     }),
 
     // CORPUS EXPORT AS ARROW IPC (round 14) — one .arrows stream per
-    // partition from the in-repo writer (hand-built flatbuffers,
-    // pyarrow-verified at dev time), read back through the
-    // graft_arrow_rows expression to identity. The write half of the
-    // round-13/14 Arrow reader: the GPU-loader interchange layout.
+    // partition (Spark's Catalyst → Arrow writer + Arrow Java's stream
+    // writer, pyarrow-refereed in ArrowWriteSpec), read back through
+    // the graft_arrow_rows expression to identity. The write half of
+    // the round-13/14 Arrow reader: the GPU-loader interchange layout.
     "corpus_export_arrow" -> ((s, dir) => {
       val path = Artifact.memoized("arrow_export", dir) { p =>
         graft.sources.ArrowShards.writeArrowShards(
@@ -6668,11 +6669,11 @@ object ExtensionQueries {
 
     // ... the same export with the round-15 write-side features:
     // DICTIONARY-encoded utf8 (the low-cardinality `source` column
-    // rides as int32 indices + initial/delta DictionaryBatches) and
-    // ZSTD body compression (per-buffer spec framing through the
-    // repo's own RFC 8878 encoder) — read back through the repo's
-    // dict-aware reader to identity; pyarrow is the dev-time referee
-    // (ArrowWriteSpec pins its decode)
+    // rides as int32 indices + a replacement DictionaryBatch whenever
+    // a record batch adds values) and ZSTD body compression (the
+    // spec's per-buffer framing, Arrow's libzstd codec) — read back
+    // through the dict-aware reader to identity; pyarrow is the gated
+    // referee (ArrowWriteSpec)
     "corpus_export_arrow_dict" -> ((s, dir) => {
       val path = Artifact.memoized("arrow_dict_export", dir) { p =>
         graft.sources.ArrowShards.writeArrowShards(
@@ -6691,10 +6692,10 @@ object ExtensionQueries {
         .orderBy(col("doc_id"))
     }),
 
-    // STRUCT columns through the writer (round 16): the writer's new
-    // Struct_ field emission + per-member child arrays, read back by
-    // the repo reader's struct kind to identity; pyarrow is the
-    // gated referee (ArrowWriteSpec)
+    // STRUCT columns through the writer (round 16): a struct column
+    // with per-member child arrays, read back by the repo reader's
+    // struct kind to identity; pyarrow is the gated referee
+    // (ArrowWriteSpec)
     "corpus_export_arrow_struct" -> ((s, dir) => {
       val path = Artifact.memoized("arrow_struct_export", dir) { p =>
         graft.sources.ArrowShards.writeArrowShards(
@@ -6717,9 +6718,9 @@ object ExtensionQueries {
     }),
 
     // MAP columns through the writer (round 16): the spec's
-    // list<struct<key,value>> with non-nullable keys (entries
-    // key-sorted at write so the stream is deterministic), lz4
-    // bodies, exploded back to (doc_id, key, value) scalars
+    // list<struct<key,value>> with non-nullable keys (entries in the
+    // map's own order), lz4 bodies, exploded back to (doc_id, key,
+    // value) scalars
     "corpus_export_arrow_map" -> ((s, dir) => {
       val path = Artifact.memoized("arrow_map_export", dir) { p =>
         graft.sources.ArrowShards.writeArrowShards(

@@ -207,6 +207,26 @@ class AvroTypedFastSpec extends SparkFunSuite {
     assert(round == rows)
   }
 
+  test("typed encode builds one serializer per (schema, thread) for the " +
+      "JVM's life, not one per task") {
+    import scala.jdk.CollectionConverters._
+    val s = spark
+    // a schema no other test encodes with: its builds are this test's
+    val schemaJson = """{"type":"record","name":"EncodeOnce",""" +
+      """"fields":[{"name":"n","type":"long"}]}"""
+    def run(): Unit = s.range(0, 4000, 1, 16)
+      .select(AvroTransform.toAvroFixed(schemaJson)(
+        struct(col("id").as("n"))).as("b"))
+      .write.format("noop").mode("overwrite").save()
+    run()
+    run()
+    val mine = graft.plans.AvroEncodeFixed.builds.asScala.toSeq
+      .filter(_._1 == schemaJson)
+    assert(mine.nonEmpty)
+    assert(mine.distinct.size == mine.size, s"rebuilt on a thread: $mine")
+    assert(mine.size < 32, s"${mine.size} builds for 32 tasks")
+  }
+
   test("property: random records of every supported type round-trip " +
       "encode → frame → decode bit-exactly (ScalaCheck, fixed seeds)") {
     import org.scalacheck.Gen

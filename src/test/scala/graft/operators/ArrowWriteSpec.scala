@@ -1,202 +1,176 @@
 package graft.operators
 
-import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
-import graft.operators.ArrowWrite._
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types._
 
-/** The Arrow IPC stream writer ([[ArrowWrite]], round 14).
+import graft.{SparkFunSuite, TestPaths}
+import graft.sources.ArrowShards
+
+/** The Arrow shard export ([[ArrowShards.writeArrowShards]]: Spark's
+  * Catalyst → Arrow writer and Arrow Java's stream writer).
   *
-  * Verification: every stream round-trips through
+  * Verification: every shard round-trips through
   * [[ArrowIpc.batchesJvm]] (itself golden-pinned against real pyarrow
-  * output), and one deterministic stream is pinned here as
-  * PYARROW-VERIFIED hex — `pyarrow.ipc.open_stream` read these exact
-  * bytes back to the exact values at dev time (pyarrow 16.1.0), so
-  * the flatbuffer layout answers to the reference implementation from
-  * the read direction too. */
-class ArrowWriteSpec extends AnyFunSuite {
+  * output), and the gated referee has real pyarrow decode every export
+  * shape the queries write, so the writer answers to the reference
+  * implementation from the read direction too. */
+class ArrowWriteSpec extends SparkFunSuite {
 
-  private def hex(b: Array[Byte]): String =
-    b.map("%02x".format(_)).mkString
+  private def df(schema: StructType, rows: Seq[Any]*): DataFrame =
+    spark.createDataFrame(rows.map(Row.fromSeq).asJava, schema)
 
-  private def norm(t: AType, v: Any): Any = (t, v) match {
-    case (_, null) => null
-    case (AFloat, f: Float) => f.toDouble
-    case (AList(e), s: Seq[_]) => s.map(x => norm(e, x))
-    case _ => v
+  private def field(name: String, dt: DataType) =
+    StructField(name, dt, nullable = true)
+
+  /** The one shard that exporting `d` as a single partition writes. */
+  private def shard(d: DataFrame, batchRows: Int = 8192,
+      codec: String = null,
+      dictCols: Set[String] = Set.empty): Array[Byte] = {
+    val dir = TestPaths.dir("graft_arrow_write")
+    ArrowShards.writeArrowShards(d.coalesce(1), dir.toString, batchRows,
+      codec, dictCols)
+    val files = dir.toFile.listFiles.filter(_.getName.endsWith(".arrows"))
+    assert(files.length == 1, "one shard per non-empty partition")
+    java.nio.file.Files.readAllBytes(files.head.toPath)
   }
 
-  private def roundTrip(cols: Seq[ACol], batchRows: Int = 65536,
-      codec: String = null): Array[Byte] = {
-    val bytes = ArrowWrite.stream(cols, batchRows, codec)
-    val batches = ArrowIpc.batchesJvm(bytes)
-    val nRows = cols.headOption.map(_.values.length).getOrElse(0)
-    assert(batches.map(_.nRows).sum == nRows,
-      s"row count through the reader")
-    val got = cols.indices.map(ci => batches.flatMap(_.cols(ci).values))
-    val want = cols.map(c => c.values.map(v => norm(c.tpe, v)))
-    assert(got.map(_.toVector) == want.map(_.toVector),
-      "values through the reader")
-    bytes
+  /** A Spark cell as the reader returns it: integers as Long, float32
+    * exact-widened to Double, rows as member Seqs, maps as (key, value)
+    * entry Seqs. */
+  private def norm(v: Any): Any = v match {
+    case null => null
+    case i: Int => i.toLong
+    case s: Short => s.toLong
+    case b: Byte => b.toLong
+    case f: Float => f.toDouble
+    case r: Row => r.toSeq.map(norm)
+    case m: scala.collection.Map[_, _] =>
+      m.toSeq.map { case (k, x) => Seq(norm(k), norm(x)) }
+    case s: scala.collection.Seq[_] => s.map(norm)
+    case other => other
   }
 
-  test("PYARROW-VERIFIED golden: two-column no-null stream, " +
-      "deterministic bytes") {
-    val bytes = ArrowWrite.stream(Seq(
-      ACol("id", ALong, Vector(7L, 8L)),
-      ACol("s", AString, Vector("x", "y"))))
-    assert(hex(bytes) ==
-      "ffffffffb0000000100000000c000c000a000900040000000c000000100000" +
-      "00000104000800080000000400080000000400000002000000500000001800" +
-      "00000000120010000c000b000a000400000000000000120000001800000000" +
-      "00050104000000010000007300000004000600040000000000120010000c00" +
-      "0b000a000400000000000000120000001c0000000000020104000000020000" +
-      "006964000008000c000800070008000000000000014000000000000000ffff" +
-      "ffffc800000014000000000000000c001400120011000c0004000c00000028" +
-      "0000000000000014000000000304000c0018000c000800040000000c000000" +
-      "3c000000100000000200000000000000000000000200000002000000000000" +
-      "00000000000000000002000000000000000000000000000000000000000500" +
-      "00000000000000000000000000000000000000000000000000001000000000" +
-      "0000001000000000000000000000000000000010000000000000000c000000" +
-      "00000000200000000000000002000000000000000700000000000000080000" +
-      "0000000000000000000100000002000000000000007879000000000000ffff" +
-      "ffff00000000")
+  /** Exports `d` and checks that the repo reader returns its rows;
+    * the shard's batches. */
+  private def roundTrip(d: DataFrame, batchRows: Int = 8192,
+      codec: String = null,
+      dictCols: Set[String] = Set.empty): IndexedSeq[ArrowIpc.Batch] = {
+    val batches = ArrowIpc.batchesJvm(shard(d, batchRows, codec, dictCols))
+    val rows = d.collect()
+    assert(batches.map(_.nRows).sum == rows.length, "row count")
+    d.schema.fields.indices.foreach { ci =>
+      assert(batches.flatMap(_.cols(ci).values) ==
+        rows.toVector.map(r => norm(r.get(ci))),
+        s"values of ${d.schema(ci).name}")
+    }
+    batches
   }
 
   test("round-trip matrix: primitives with nulls, lists, nested " +
       "lists, multi-batch, empty, no-null fast path") {
-    roundTrip(Seq(
-      ACol("id", ALong, Vector(1L, 2L, null, 4L)),
-      ACol("x", ADouble, Vector(1.5, null, 3.25, -0.0)),
-      ACol("f", AFloat, Vector(1.5f, 2.5f, null, 0.125f)),
-      ACol("s", AString, Vector("a", null, "héllo", "")),
-      ACol("b", ABool, Vector(true, false, null, true))))
-    roundTrip(Seq(
-      ACol("id", ALong, Vector(1L, 2L, 3L)),
-      ACol("emb", AList(AFloat), Vector(
-        Seq(1.0f, 2.0f), null, Seq.empty[Float]))))
-    roundTrip(Seq(
-      ACol("ll", AList(AList(ALong)), Vector(
-        Seq(Seq(1L, 2L), Seq(3L)), Seq.empty[Seq[Long]], null))))
-    val multi = roundTrip(Seq(
-      ACol("id", ALong, Vector.tabulate(1000)(i => i.toLong)),
-      ACol("s", AString, Vector.tabulate(1000)(i => s"row-$i"))),
+    val prims = roundTrip(df(StructType(Seq(
+        field("id", LongType), field("x", DoubleType),
+        field("f", FloatType), field("s", StringType),
+        field("b", BooleanType), field("i", IntegerType),
+        field("h", ShortType), field("y", ByteType))),
+      Seq(1L, 1.5, 1.5f, "a", true, 7, 3.toShort, (-2).toByte),
+      Seq(2L, null, 2.5f, null, false, null, null, null),
+      Seq(null, 3.25, null, "héllo", null, -1, (-3).toShort, 127.toByte),
+      Seq(4L, -0.0, 0.125f, "", true, Int.MaxValue, Short.MinValue,
+        Byte.MinValue)))
+    // integral columns of every width arrive as int64
+    assert(prims.head.cols.map(_.kind) == Seq("long", "double", "double",
+      "string", "bool", "long", "long", "long"))
+    roundTrip(df(StructType(Seq(field("id", LongType),
+        field("emb", ArrayType(FloatType)))),
+      Seq(1L, Seq(1.0f, 2.0f)), Seq(2L, null), Seq(3L, Seq())))
+    roundTrip(df(StructType(Seq(
+        field("ll", ArrayType(ArrayType(LongType))))),
+      Seq(Seq(Seq(1L, 2L), Seq(3L))), Seq(Seq()), Seq(null)))
+    val multi = roundTrip(df(StructType(Seq(field("id", LongType),
+        field("s", StringType))),
+      (0 until 1000).map(i => Seq(i.toLong, s"row-$i")): _*),
       batchRows = 128)
-    assert(ArrowIpc.batchesJvm(multi).size == 8, "ceil(1000/128)")
-    roundTrip(Seq(
-      ACol("id", ALong, Vector.empty),
-      ACol("s", AString, Vector.empty)))
+    assert(multi.size == 8, "ceil(1000/128)")
+    // an empty partition writes no shard
+    val dir = TestPaths.dir("graft_arrow_empty")
+    ArrowShards.writeArrowShards(df(StructType(Seq(field("id", LongType)))),
+      dir.toString)
+    assert(!dir.toFile.listFiles.exists(_.getName.endsWith(".arrows")))
   }
 
-  test("writer is deterministic; ragged and schema-mismatched " +
-      "batches fail loud") {
-    val cols = Seq(ACol("a", ALong, Vector(1L)),
-      ACol("b", AString, Vector("z")))
-    assert(java.util.Arrays.equals(ArrowWrite.stream(cols),
-      ArrowWrite.stream(cols)))
+  test("writer is deterministic; unsupported types, codecs and " +
+      "dictionary columns fail loud") {
+    val d = df(StructType(Seq(field("a", LongType), field("b", StringType))),
+      Seq(1L, "z"), Seq(2L, "z"))
+    assert(java.util.Arrays.equals(shard(d, codec = "zstd",
+      dictCols = Set("b")), shard(d, codec = "zstd", dictCols = Set("b"))))
+    val dir = TestPaths.dir("graft_arrow_fail").toString
     intercept[IllegalArgumentException] {
-      ArrowWrite.stream(Seq(ACol("a", ALong, Vector(1L, 2L)),
-        ACol("b", AString, Vector("z"))))
+      ArrowShards.writeArrowShards(d, dir, codec = "lzma")
     }
-    val bos = new java.io.ByteArrayOutputStream()
-    val w = new ArrowWrite.StreamWriter(bos,
-      Seq("a" -> ALong))
     intercept[IllegalArgumentException] {
-      w.addBatch(Seq(ACol("a", ADouble, Vector(1.0))))
+      ArrowShards.writeArrowShards(d, dir, dictCols = Set("a"))
+    }
+    intercept[IllegalArgumentException] {
+      ArrowShards.writeArrowShards(
+        df(StructType(Seq(field("t", DateType))), Seq(null)), dir)
     }
   }
 
-  test("PYARROW-VERIFIED golden (round 15): dictionary-encoded utf8 " +
-      "column — DictionaryBatch before the record batch, int32 " +
-      "indices on the wire") {
-    val bytes = ArrowWrite.stream(Seq(
-      ACol("id", ALong, Vector(1L, 2L, 3L)),
-      ACol("src", ADictString, Vector("a", "b", "a"))))
-    // pyarrow 16.1.0 read these exact bytes back as
-    // dictionary<values=string, indices=int32>: ids [1,2,3],
-    // src ['a','b','a'] (dev-time verification, round 15)
-    assert(hex(bytes) ==
-      "ffffffffd8000000100000000c000c000a000900040000000c000000100000" +
-      "000001040008000800000004000800000004000000020000007c0000001800" +
-      "000000001200140010000f000e000800040000000000120000002c00000018" +
-      "0000000000050104000000030000007372630004000400040000000c000800" +
-      "00000400000000000c0000000c00000008000e0008000700080000000000" +
-      "0001200000000000120010000c000b000a00040000000000000012000000" +
-      "1c0000000000020104000000020000006964000008000c0008000700080000" +
-      "000000000140000000ffffffffb000000014000000000000000c001a001800" +
-      "1700100004000c000000180000000000000000000000140000000000000204" +
-      "000a0008000000040000000a000000100000000c0018000c00080004000000" +
-      "0c0000002c0000001000000002000000000000000000000001000000020000" +
-      "0000000000000000000000000000000000030000000000000000000000" +
-      "000000000000000000000000000000000c000000000000001000000000" +
-      "0000000200000000000000000000000100000002000000000000006162" +
-      "000000000000ffffffffb800000014000000000000000c00140012001100" +
-      "0c0004000c000000280000000000000014000000000304000c0018000c0008" +
-      "00040000000c0000003c000000100000000300000000000000000000000200" +
-      "000003000000000000000000000000000000030000000000000000000000" +
-      "000000000000000004000000000000000000000000000000000000000000" +
-      "00000000000018000000000000001800000000000000000000000000000018" +
-      "000000000000000c000000000000000100000000000000020000000000" +
-      "0000030000000000000000000000010000000000000000000000ffffffff" +
-      "00000000")
-  }
-
-  test("round 15 round-trip matrix: dictionary columns (delta " +
-      "batches across record batches, nulls, all-null), zstd body " +
-      "compression, and both together") {
-    // values spread across batches so DELTA dictionary batches fire
-    roundTrip(Seq(
-      ACol("id", ALong, Vector.tabulate(300)(i => i.toLong)),
-      ACol("lang", ADictString, Vector.tabulate(300)(i =>
-        if (i % 11 == 0) null else s"lang-${i % 5 + i / 100}"))),
-      batchRows = 64)
-    // all-null dictionary column still emits its (empty) dictionary
-    roundTrip(Seq(
-      ACol("id", ALong, Vector(1L, 2L)),
-      ACol("d", ADictString, Vector(null, null))))
-    // zstd bodies: every buffer framed, incompressible buffers raw
-    val plain = roundTrip(Seq(
-      ACol("id", ALong, Vector.tabulate(500)(i => i.toLong)),
-      ACol("s", AString, Vector.tabulate(500)(i => s"text-${i % 7} " * 8))))
-    val comp = roundTrip(Seq(
-      ACol("id", ALong, Vector.tabulate(500)(i => i.toLong)),
-      ACol("s", AString, Vector.tabulate(500)(i => s"text-${i % 7} " * 8))),
-      codec = "zstd")
+  test("dictionary columns (replacement batches across record " +
+      "batches, nulls, all-null), zstd body compression, and both " +
+      "together") {
+    // new values in later record batches grow the dictionary, which
+    // goes out again as a replacement DictionaryBatch
+    val langs = df(StructType(Seq(field("id", LongType),
+        field("lang", StringType))),
+      (0 until 300).map(i => Seq(i.toLong,
+        if (i % 11 == 0) null else s"lang-${i % 5 + i / 100}")): _*)
+    val b = roundTrip(langs, batchRows = 64, dictCols = Set("lang"))
+    assert(b.size == 5 && b.head.cols(1).kind == "string")
+    // an all-null dictionary column still writes its (empty) dictionary
+    roundTrip(df(StructType(Seq(field("id", LongType),
+        field("d", StringType))), Seq(1L, null), Seq(2L, null)),
+      dictCols = Set("d"))
+    // zstd bodies
+    val text = df(StructType(Seq(field("id", LongType),
+        field("s", StringType))),
+      (0 until 500).map(i => Seq(i.toLong, s"text-${i % 7} " * 8)): _*)
+    roundTrip(text)
+    roundTrip(text, codec = "zstd")
+    val plain = shard(text)
+    val comp = shard(text, codec = "zstd")
     assert(comp.length < plain.length / 2,
       s"repetitive text must compress: ${comp.length} vs ${plain.length}")
     // dict + zstd compose
-    roundTrip(Seq(
-      ACol("id", ALong, Vector.tabulate(300)(i => i.toLong)),
-      ACol("src", ADictString, Vector.tabulate(300)(i => s"crawl-${i % 3}")),
-      ACol("txt", AString, Vector.tabulate(300)(i => s"body $i " * 6))),
-      batchRows = 100, codec = "zstd")
-    // unknown codec fails loud
-    intercept[IllegalArgumentException] {
-      ArrowWrite.stream(Seq(ACol("a", ALong, Vector(1L))),
-        codec = "lzma")
-    }
+    roundTrip(df(StructType(Seq(field("id", LongType),
+        field("src", StringType), field("txt", StringType))),
+      (0 until 300).map(i => Seq(i.toLong, s"crawl-${i % 3}",
+        s"body $i " * 6)): _*),
+      batchRows = 100, codec = "zstd", dictCols = Set("src"))
   }
 
   test("round 16: struct and map columns round-trip through the " +
       "repo reader (map surfaces as the spec's list<struct<key," +
       "value>>), nulls at every level, zstd bodies included") {
-    val idC = ACol("id", ALong, Vector(1L, 2L, 3L, 4L))
-    val stC = ACol("meta", AStruct(Seq("s" -> AString, "n" -> ALong)),
-      Vector(Seq("a", 10L), null, Seq(null, 30L), Seq("d", null)))
-    val mpC = ACol("props", AMap(AString, ALong), Vector(
-      Seq(("k1", 1L), ("k2", 2L)), null, Seq(),
-      Seq(("z", null))))
-    for (codec <- Seq(null, "zstd")) {
-      val bytes = ArrowWrite.stream(Seq(idC, stC, mpC), codec = codec)
-      val b = ArrowIpc.batchesJvm(bytes)
+    val d = df(StructType(Seq(field("id", LongType),
+        field("meta", StructType(Seq(field("s", StringType),
+          field("n", IntegerType)))),
+        field("props", MapType(StringType, LongType)))),
+      Seq(1L, Row("a", 10), Map("k1" -> 1L, "k2" -> 2L)),
+      Seq(2L, null, null),
+      Seq(3L, Row(null, 30), Map()),
+      Seq(4L, Row("d", null), Map("z" -> null)))
+    for (codec <- Seq(null, "zstd", "lz4")) {
+      val b = roundTrip(d, codec = codec)
       assert(b.size == 1 && b.head.nRows == 4)
-      val cols = b.head.cols
-      assert(cols.map(_.name) == Seq("id", "meta", "props"))
-      assert(cols(1).values == Vector(
-        Seq("a", 10L), null, Seq(null, 30L), Seq("d", null)))
-      // map rows read back as entry structs (key, value)
-      assert(cols(2).values == Vector(
-        Seq(Seq("k1", 1L), Seq("k2", 2L)), null, Seq(),
-        Seq(Seq("z", null))))
+      assert(b.head.cols.map(_.kind) == Seq("long",
+        "struct<s:string,n:long>", "array<struct<key:string,value:long>>"))
+      assert(b.head.cols(2).values == Vector(
+        Seq(Seq("k1", 1L), Seq("k2", 2L)), null, Seq(), Seq(Seq("z", null))))
     }
   }
 
@@ -207,42 +181,70 @@ class ArrowWriteSpec extends AnyFunSuite {
         .start().waitFor() == 0
     } catch { case _: Exception => false }
     assume(probe, "no python3/pyarrow on this host")
-    val bytes = ArrowWrite.stream(Seq(
-      ACol("id", ALong, Vector(1L, 2L)),
-      ACol("meta", AStruct(Seq("s" -> AString, "n" -> ALong)),
-        Vector(Seq("a", 10L), null)),
-      ACol("props", AMap(AString, ALong),
-        Vector(Seq(("k1", 1L), ("k2", 2L)), Seq()))))
-    val f = graft.TestPaths.file("graft_arrow16", ".arrows").toFile
-    try {
-      java.nio.file.Files.write(f.toPath, bytes)
-      val py =
-        """import pyarrow.ipc as ipc
-          |t = ipc.open_stream(open(r'%s','rb')).read_all()
-          |print(t.column('id').to_pylist())
-          |print(t.column('meta').to_pylist())
-          |print(t.column('props').to_pylist())
-          |""".stripMargin.format(f.getPath)
-      val pb = new ProcessBuilder("python3", "-c", py)
-      pb.redirectErrorStream(true)
-      val proc = pb.start()
-      val out = new String(proc.getInputStream.readAllBytes(), "UTF-8")
-      assert(proc.waitFor() == 0, s"pyarrow failed:\n$out")
-      val lines = out.trim.split("\n")
-      assert(lines(0) == "[1, 2]", out)
-      assert(lines(1) ==
-        "[{'s': 'a', 'n': 10}, None]", out)
-      assert(lines(2) ==
-        "[[('k1', 1), ('k2', 2)], []]", out)
-    } finally f.delete()
+    // every export shape the corpus_export_arrow_* queries write
+    val shapes = Seq(
+      "plain" -> shard(df(StructType(Seq(field("id", LongType),
+          field("s", StringType), field("x", DoubleType),
+          field("b", BooleanType))),
+        Seq(1L, "a", 0.5, true), Seq(2L, null, null, false))),
+      "dict+zstd" -> shard(df(StructType(Seq(field("id", LongType),
+          field("src", StringType))),
+        Seq(1L, "x"), Seq(2L, "y"), Seq(3L, "z"), Seq(4L, "x")),
+        batchRows = 2, codec = "zstd", dictCols = Set("src")),
+      "struct" -> shard(df(StructType(Seq(field("id", LongType),
+          field("meta", StructType(Seq(field("s", StringType),
+            field("n", LongType)))))),
+        Seq(1L, Row("a", 10L)), Seq(2L, null))),
+      "map+lz4" -> shard(df(StructType(Seq(field("id", LongType),
+          field("props", MapType(StringType, StringType)))),
+        Seq(1L, Map("k1" -> "v1", "k2" -> "v2")), Seq(2L, Map())),
+        codec = "lz4"),
+      "list<float32>" -> shard(df(StructType(Seq(field("vec_id", LongType),
+          field("emb", ArrayType(FloatType)))),
+        Seq(1L, Seq(0.5f, 1.25f)), Seq(2L, null), Seq(3L, Seq()))))
+    val files = shapes.map { case (_, bytes) =>
+      val f = TestPaths.file("graft_arrow_referee", ".arrows")
+      java.nio.file.Files.write(f, bytes)
+      f.toString
+    }
+    val py =
+      """import json, sys
+        |import pyarrow.ipc as ipc
+        |for path in sys.argv[1:]:
+        |    t = ipc.open_stream(open(path, 'rb')).read_all()
+        |    print(json.dumps(t.to_pylist(), sort_keys=True))
+        |    print(';'.join(str(f.type) for f in t.schema))
+        |""".stripMargin
+    val pb = new ProcessBuilder((Seq("python3", "-c", py) ++ files).asJava)
+    pb.redirectErrorStream(true)
+    val proc = pb.start()
+    val out = new String(proc.getInputStream.readAllBytes(), "UTF-8")
+    assert(proc.waitFor() == 0, s"pyarrow failed:\n$out")
+    val want = Seq(
+      """[{"b": true, "id": 1, "s": "a", "x": 0.5}, """ +
+        """{"b": false, "id": 2, "s": null, "x": null}]""",
+      "int64;string;double;bool",
+      """[{"id": 1, "src": "x"}, {"id": 2, "src": "y"}, """ +
+        """{"id": 3, "src": "z"}, {"id": 4, "src": "x"}]""",
+      "int64;dictionary<values=string, indices=int32, ordered=0>",
+      """[{"id": 1, "meta": {"n": 10, "s": "a"}}, """ +
+        """{"id": 2, "meta": null}]""",
+      "int64;struct<s: string, n: int64>",
+      """[{"id": 1, "props": [["k1", "v1"], ["k2", "v2"]]}, """ +
+        """{"id": 2, "props": []}]""",
+      "int64;map<string, string>",
+      """[{"emb": [0.5, 1.25], "vec_id": 1}, {"emb": null, "vec_id": 2}, """ +
+        """{"emb": [], "vec_id": 3}]""",
+      "int64;list<$data$: float>")
+    assert(out.trim.split("\n").toSeq == want, out)
   }
 
   test("float32 cells survive byte-exactly (widen-to-double is the " +
       "reader's exact binary widening)") {
-    val vals = Vector(0.1f, 1e-40f, Float.MinPositiveValue,
-      3.4028235e38f, -0.0f)
-    val bytes = ArrowWrite.stream(Seq(ACol("f", AFloat, vals)))
-    val got = ArrowIpc.batchesJvm(bytes).head.cols.head.values
+    val vals = Seq(0.1f, 1e-40f, Float.MinPositiveValue, 3.4028235e38f,
+      -0.0f)
+    val got = ArrowIpc.batchesJvm(shard(df(StructType(Seq(
+      field("f", FloatType))), vals.map(Seq(_)): _*))).head.cols.head.values
     vals.zip(got).foreach { case (f, d: Double) =>
       assert(java.lang.Float.floatToRawIntBits(f) ==
         java.lang.Float.floatToRawIntBits(d.toFloat))

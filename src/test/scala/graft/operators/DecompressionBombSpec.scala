@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * decoding thread's allocation stays bounded while it finds out. The
   * bombs are built here with the reference encoders (zstd-jni's
   * libzstd, tukaani xz, commons-compress bzip2, lz4-java, the JDK's
-  * gzip). */
+  * gzip, Arrow Java's stream writer). */
 class DecompressionBombSpec extends AnyFunSuite {
 
   private val Cap = 1L << 26
@@ -113,6 +113,51 @@ class DecompressionBombSpec extends AnyFunSuite {
     val block = Array[Byte](0x81.toByte, 0x80.toByte, 0x80.toByte,
       0x20, 0, 'a')
     val (got, allocated) = allocatedBy(Lz4Snappy.snappyDecompress(block))
+    assert(got.isEmpty)
+    assert(allocated < (16L << 20), s"allocated $allocated bytes")
+  }
+
+  test("an Arrow stream whose zstd body buffer declares 65 MiB is " +
+      "declined before it is decompressed") {
+    import org.apache.arrow.vector.{BigIntVector, VectorSchemaRoot}
+    val n = (65 << 20) / 8
+    val alloc = new org.apache.arrow.memory.RootAllocator()
+    val v = new BigIntVector("z", alloc)
+    v.allocateNew(n) // zero-filled
+    (0 until n).foreach(v.setIndexDefined)
+    v.setValueCount(n)
+    val root = VectorSchemaRoot.of(v)
+    val bos = new java.io.ByteArrayOutputStream()
+    val w = new org.apache.arrow.vector.ipc.ArrowStreamWriter(root, null,
+      java.nio.channels.Channels.newChannel(bos),
+      org.apache.arrow.vector.ipc.message.IpcOption.DEFAULT,
+      org.apache.arrow.compression.CommonsCompressionFactory.INSTANCE,
+      org.apache.arrow.vector.compression.CompressionUtil.CodecType.ZSTD)
+    try {
+      w.start()
+      w.writeBatch()
+      w.end()
+    } finally {
+      w.close()
+      root.close()
+      alloc.close()
+    }
+    val stream = bos.toByteArray
+    // the data buffer's 8-byte length prefix: 65 MiB, little-endian
+    val prefix = java.nio.ByteBuffer.allocate(8)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN).putLong(65L << 20).array()
+    assert(stream.sliding(8).exists(_.sameElements(prefix)))
+    val (got, allocated) = allocatedBy(ArrowIpc.batchesJvm(stream))
+    assert(got.isEmpty)
+    assert(allocated < (16L << 20), s"allocated $allocated bytes")
+  }
+
+  test("an Arrow stream whose metadata length prefix is 0x7FFFFFF0 is " +
+      "declined without allocating that size") {
+    // continuation marker, then the length, then a few bytes of padding
+    val stream = Array[Byte](-1, -1, -1, -1, 0xf0.toByte, -1, -1, 0x7f) ++
+      new Array[Byte](64)
+    val (got, allocated) = allocatedBy(ArrowIpc.batchesJvm(stream))
     assert(got.isEmpty)
     assert(allocated < (16L << 20), s"allocated $allocated bytes")
   }

@@ -88,6 +88,19 @@ class LayoutSpec extends SparkFunSuite {
         s" vs ${natural.getAs[Long]("rows_scanned")}")
   }
 
+  test("layout_bucket_join keeps the caller's runtime settings and " +
+      "scopes its bucketed-scan flag to its own session") {
+    val flag = "spark.sql.legacy.bucketedTableScan.outputOrdering"
+    val runtime = "spark.sql.files.ignoreCorruptFiles"
+    spark.conf.set(runtime, "true")
+    val q = try graft.SparkEntry.queries("layout_bucket_join")(spark, sfDir)
+      finally spark.conf.unset(runtime)
+    assert(q.sparkSession.conf.get(runtime) == "true")
+    assert(q.sparkSession.conf.get(flag) == "true")
+    assert(!spark.conf.getOption(flag).contains("true"))
+    assert(q.collect().nonEmpty)
+  }
+
   test("co-bucketed join plan has zero exchanges and zero sorts") {
     val tmp = graft.TestPaths.dir("graft_bucket_spec").toString
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")

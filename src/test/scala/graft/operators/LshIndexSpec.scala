@@ -230,12 +230,16 @@ class LshIndexSpec extends SparkFunSuite {
       tmpPath("noshuffle_src"))
     Dedup.appendToLshIndex(index, c.select($"doc_id" + 500L as "doc_id",
       $"text"), "text", "doc_id")
+    val dst = tmpPath("noshuffle_dst")
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution,
           durationNs: Long): Unit = {
-        plans.add(qe.executedPlan.toString); ()
+        // delivery is async: the append above can still arrive here
+        val p = qe.executedPlan.toString
+        if (p.contains(dst)) plans.add(p)
+        ()
       }
       override def onFailure(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution,
@@ -243,8 +247,7 @@ class LshIndexSpec extends SparkFunSuite {
     }
     s.listenerManager.register(listener)
     try {
-      Dedup.compactLshIndex(s, index, tmpPath("noshuffle_dst"),
-        filesPerRelation = 1)
+      Dedup.compactLshIndex(s, index, dst, filesPerRelation = 1)
       // listener delivery is async — poll for both write plans
       val deadline = System.nanoTime() + 10_000_000_000L
       while (plans.size() < 2 && System.nanoTime() < deadline)

@@ -87,16 +87,26 @@ class Lz4EncodeSpec extends AnyFunSuite {
 
   test("Arrow writer lz4 codec: bodies framed as LZ4 frames, the " +
       "reader round-trips") {
-    import graft.operators.ArrowWrite._
-    val cols = Seq(
-      ACol("id", ALong, Vector.tabulate(500)(i => i.toLong)),
-      ACol("s", AString, Vector.tabulate(500)(i => s"text-${i % 7} " * 8)))
-    val plain = ArrowWrite.stream(cols)
-    val comp = ArrowWrite.stream(cols, codec = "lz4")
+    val spark = graft.SparkTestBase.spark
+    import spark.implicits._
+    val texts = Vector.tabulate(500)(i => s"text-${i % 7} " * 8)
+    val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("id", "s").coalesce(1)
+    def shard(codec: String): Array[Byte] = {
+      val dir = graft.TestPaths.dir("graft_arrow_lz4")
+      graft.sources.ArrowShards.writeArrowShards(df, dir.toString,
+        codec = codec)
+      val f = dir.toFile.listFiles.filter(_.getName.endsWith(".arrows"))
+      java.nio.file.Files.readAllBytes(f.head.toPath)
+    }
+    val plain = shard(null)
+    val comp = shard("lz4")
+    // the LZ4 frame magic 0x184D2204, little-endian
+    assert(comp.sliding(4).exists(_.sameElements(
+      Array[Byte](0x04, 0x22, 0x4d, 0x18))), "LZ4 frames in the body")
     val batches = ArrowIpc.batchesJvm(comp)
     assert(batches.map(_.nRows).sum == 500)
-    assert(batches.flatMap(_.cols(1).values) ==
-      Vector.tabulate(500)(i => s"text-${i % 7} " * 8))
+    assert(batches.flatMap(_.cols(1).values) == texts)
     assert(comp.length < plain.length / 2, "lz4 bodies must shrink")
   }
 }
